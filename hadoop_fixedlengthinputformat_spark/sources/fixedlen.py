@@ -621,35 +621,70 @@ def _plan_file(
     # TRUE file positions (the first data record sits at header*rl).
     lo = min(opts.skip_header * rl, usable)
     hi = max(usable - opts.skip_trailer * rl, lo)
-    if hi <= lo:
+    return _split_range(path, lo, hi, rl, opts.max_partition_bytes)
+
+
+def _split_range(
+    path: str, lo: int, hi: int, rl: int, max_partition_bytes: int
+) -> list[FixedLenPartition]:
+    """Record-aligned partitions tiling ``[lo, hi)`` of one file.
+
+    The split size is ``(target // rl) * rl``, bumped to at least one
+    record (FLIF:283-292), and sets the split count; the records are then
+    spread evenly over that many splits, so sizes differ by at most one
+    record and no split exceeds the target — no runt tail split."""
+    n = (hi - lo) // rl
+    if n <= 0:
         return []
-    # (target // rl) * rl, bumped to at least one record (FLIF:283-292)
-    split = max(rl, (opts.max_partition_bytes // rl) * rl)
-    return [
-        FixedLenPartition(path, s, min(s + split, hi))
-        for s in range(lo, hi, split)
-    ]
+    cap = max(1, max_partition_bytes // rl)
+    k = -(-n // cap)
+    bounds = [lo + (i * n // k) * rl for i in range(k + 1)]
+    return [FixedLenPartition(path, s, e) for s, e in zip(bounds, bounds[1:])]
 
 
-def _read_aligned(f, start: int, end: int, chunk_records: int, rl: int) -> Iterator[bytes]:
+def split_bytes_per_core(size: int, record_length: int, cores: int) -> int:
+    """``maxPartitionBytes`` that plans one split per core for a file of
+    ``size`` bytes: ``min(cores, records)`` splits of
+    ``ceil(records / splits)`` whole records each."""
+    n = size // record_length
+    splits = max(1, min(cores, n))
+    return max(1, -(-n // splits)) * record_length
+
+
+def _read_aligned(
+    f, start: int, end: int, chunk_records: int, rl: int
+) -> Iterator[bytearray]:
     """Yield record-aligned byte chunks in [start, end); short-read-safe
     (port of the read loop FixedLengthRecordReader.java:221-243 — kept for
-    object-store streams where read(n) may return fewer bytes)."""
+    object-store streams where read(n) may return fewer bytes).
+
+    Each chunk is read straight into a fresh ``bytearray`` (one copy out
+    of the file); a fresh one per chunk because decoded batches keep
+    ``np.frombuffer`` views of it.  File objects without ``readinto``
+    fall back to ``read``."""
     f.seek(start)
+    readinto = getattr(f, "readinto", None)
     pos = start
     while pos < end:
         want = min(chunk_records * rl, end - pos)
-        buf = bytearray()
-        while len(buf) < want:
-            got = f.read(want - len(buf))
-            if not got:
-                raise IOError(
-                    f"fixedlen: unexpected EOF at {pos + len(buf)} "
-                    f"(mid-record; cf. FixedLengthRecordReader.java:231-235)"
-                )
-            buf += got
+        buf = bytearray(want)
+        with memoryview(buf) as view:
+            filled = 0
+            while filled < want:
+                if readinto is not None:
+                    got = readinto(view[filled:])
+                else:
+                    data = f.read(want - filled)
+                    got = len(data)
+                    view[filled : filled + got] = data
+                if not got:
+                    raise IOError(
+                        f"fixedlen: unexpected EOF at {pos + filled} "
+                        f"(mid-record; cf. FixedLengthRecordReader.java:231-235)"
+                    )
+                filled += got
         pos += want
-        yield bytes(buf)
+        yield buf
 
 
 def _read_codec_stream(
@@ -1591,12 +1626,9 @@ class FixedLenPartitionedStreamReader(DataSourceStreamReader):
         lo, hi = start["pos"], end["pos"]
         if hi <= lo:
             return [FixedLenPartition("", 0, 0)]
-        rl = self.opts.stride
-        split = max(rl, (self.opts.max_partition_bytes // rl) * rl)
-        return [
-            FixedLenPartition(self.path, s, min(s + split, hi))
-            for s in range(lo, hi, split)
-        ]
+        return _split_range(
+            self.path, lo, hi, self.opts.stride, self.opts.max_partition_bytes
+        )
 
     def read(self, partition: FixedLenPartition):
         # executor-side: identical decode path to the batch reader
@@ -1654,7 +1686,6 @@ class FixedLenDirectoryStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         rl = self.opts.stride
-        split = max(rl, (self.opts.max_partition_bytes // rl) * rl)
         seen = start.get("files", {})
         parts: list[FixedLenPartition] = []
         for p, hi in end.get("files", {}).items():
@@ -1667,8 +1698,7 @@ class FixedLenDirectoryStreamReader(DataSourceStreamReader):
             # checkpoints a truncated offset, and resuming from it would emit
             # banner records as data once the file grows
             lo = max(seen.get(p, 0), self.opts.skip_header * rl)
-            for s in range(lo, hi, split):
-                parts.append(FixedLenPartition(p, s, min(s + split, hi)))
+            parts += _split_range(p, lo, hi, rl, self.opts.max_partition_bytes)
         return parts or [FixedLenPartition("", 0, 0)]
 
     def read(self, partition: FixedLenPartition):

@@ -24,6 +24,9 @@ here), strip the Initial Plan section, and pin
     run-length) per-row re-scan shape r14 removed.  (UNBOUNDED
     PRECEDING .. UNBOUNDED FOLLOWING stays legal: Spark evaluates the
     whole-partition frame once per partition, not per row.)
+
+It also pins a ceiling on the tasks of the fixed-width full scan: one
+split per core, so a constant split target cannot creep back in.
 """
 
 from __future__ import annotations
@@ -111,4 +114,30 @@ def test_no_quadratic_window_frame(spark, name):
         f"{name}: window frame runs to UNBOUNDED FOLLOWING from a "
         f"non-initial bound — per-row partition re-scan, the quadratic "
         f"shape r14 removed ({m.group(0)!r})\n{plan}"
+    )
+
+
+def test_fixedlen_scan_tasks_ceiling(spark):
+    """The scan stage of scan_fixedlen_wide runs at most one task per
+    core (``read_fixed`` plans one record-aligned split per core; a
+    constant 32-way target ran 33 Python tasks on 4 cores)."""
+    from hadoop_fixedlengthinputformat_spark import registry
+
+    registry.load_all()
+    sc = spark.sparkContext
+    group = "pin_scan_fixedlen_wide_tasks"
+    sc.setJobGroup(group, "executed-plan pin")
+    try:
+        registry.QUERIES["scan_fixedlen_wide"](spark, SF).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert tasks and max(tasks) <= sc.defaultParallelism, (
+        f"scan_fixedlen_wide ran stages of {tasks} tasks on "
+        f"{sc.defaultParallelism} cores"
     )
