@@ -25,7 +25,32 @@ magnitude.  Found via agg_corr_matrix (stats_extras._corr_expr).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
+
+
+def running_counts(
+    per: DataFrame, group: str | list[str], value: str, cnt: str = "cnt"
+) -> DataFrame:
+    """The exact-quantile "value ladder": ``per`` plus ``cw`` and ``n``.
+
+    ``cw = sum(cnt) over (partition by group order by value)`` and
+    ``n = sum(cnt) over (partition by group)``; ``group=[]`` is the
+    global window.  ``value`` sorts ascending with NULLs first.
+
+    Contract: ``per`` holds ONE row per ``(group, value)`` (a collapse
+    ``groupBy(group, value).agg(count)``), so ``cw`` counts the rows at
+    or below ``value``, ``cw - cnt`` the rows strictly below it, and
+    ``2*cw - cnt + 1`` is twice the 1-based midrank of its ties.  The
+    smallest value with ``100*cw >= p*n`` is the exact lower p-th
+    percentile.  A window the caller never reads is pruned by Spark,
+    so an unused ``n`` costs nothing.
+    """
+    group = [group] if isinstance(group, str) else list(group)
+    return per.select(
+        "*",
+        F.sum(cnt).over(Window.partitionBy(*group).orderBy(value)).alias("cw"),
+        F.sum(cnt).over(Window.partitionBy(*group)).alias("n"),
+    )
 
 
 def snap(col: Column, digits: int = 4) -> Column:

@@ -689,6 +689,77 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Undirected ``(u, v)`` edges (u < v) of the part co-purchase
+    graph: two parts co-ordered in >= 2 distinct orders (the oracles'
+    ``_COPURCHASE_CTES`` ``e``).  Every graph query reads the edge list
+    several times, so it is checkpointed here: the pair self-join runs
+    once per query and never recomputes."""
+    li = load_table(spark, sf_dir, "lineitem").where(
+        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
+    )
+    po = li.select(
+        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+    ).distinct()
+    a, b = po.alias("a"), po.alias("b")
+    support = (
+        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
+        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    e = support.where(F.col("cnt") >= 2).select("u", "v")
+    return e.localCheckpoint(eager=True)
+
+
+def degrees(edges: DataFrame) -> DataFrame:
+    """``(node, d)``: the degree of every endpoint of ``edges``."""
+    return (
+        edges.select(F.col("u").alias("node"))
+        .unionAll(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def triangles(edges: DataFrame, deg: DataFrame) -> DataFrame:
+    """One row per triangle of ``edges``, corners in ``s``, ``t1``,
+    ``t2`` (graph_triangles' ORIENTATION and COUNT).  Each edge is
+    directed from its lower-(degree, id) endpoint ``s`` to ``t``, with
+    ``dd`` = t's degree; that list is read three times, so it is
+    checkpointed.  Wedges s -> t1, s -> t2 (t1 before t2 in orientation
+    order) closed by the edge t1 -> t2 find each triangle exactly
+    once."""
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+    eo = (
+        edges.join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.when(F.col("du") <= F.col("dv"), F.col("u"))
+            .otherwise(F.col("v"))
+            .alias("s"),
+            F.when(F.col("du") <= F.col("dv"), F.col("dv"))
+            .otherwise(F.col("du"))
+            .alias("dd"),
+            F.when(F.col("du") <= F.col("dv"), F.col("v"))
+            .otherwise(F.col("u"))
+            .alias("t"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    e1 = eo.select(F.col("s"), F.col("dd").alias("dd1"), F.col("t").alias("t1"))
+    e2 = eo.select(F.col("s"), F.col("dd").alias("dd2"), F.col("t").alias("t2"))
+    closing = eo.select(F.col("s").alias("t1"), F.col("t").alias("t2"))
+    return (
+        e1.join(e2, "s")
+        .where(
+            (F.col("dd1") < F.col("dd2"))
+            | ((F.col("dd1") == F.col("dd2")) & (F.col("t1") < F.col("t2")))
+        )
+        .join(closing, ["t1", "t2"])
+    )
+
+
 @query(
     "graph_triangles",
     oracle="""
@@ -763,60 +834,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     3T / sum(C(deg,2)) is one double division of int64-exact casts,
     snapped to 4 (+0), bounded in [0,1].  Overflow budget: sum of
     d*(d-1)/2 <= m * max_deg <= m^1.5 — int64 past 4e12 edges."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
-    )
-    po = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = po.alias("a"), po.alias("b")
-    support = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    e = support.where(F.col("cnt") >= 2).select("u", "v")
-    # edge list consumed four times (deg, orientation, wedge x2): cut
-    # lineage once so the pair join never recomputes
-    e = e.localCheckpoint(eager=True)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    eo = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(F.col("du") <= F.col("dv"), F.col("u"))
-            .otherwise(F.col("v"))
-            .alias("s"),
-            F.when(F.col("du") <= F.col("dv"), F.col("dv"))
-            .otherwise(F.col("du"))
-            .alias("dd"),
-            F.when(F.col("du") <= F.col("dv"), F.col("v"))
-            .otherwise(F.col("u"))
-            .alias("t"),
-        )
-        .localCheckpoint(eager=True)  # consumed three times below
-    )
-    e1 = eo.select(
-        F.col("s"), F.col("dd").alias("dd1"), F.col("t").alias("t1")
-    )
-    e2 = eo.select(
-        F.col("s"), F.col("dd").alias("dd2"), F.col("t").alias("t2")
-    )
-    wedges = e1.join(e2, "s").where(
-        (F.col("dd1") < F.col("dd2"))
-        | ((F.col("dd1") == F.col("dd2")) & (F.col("t1") < F.col("t2")))
-    )
-    closing = eo.select(
-        F.col("s").alias("t1"), F.col("t").alias("t2")
-    )
-    tri = wedges.join(closing, ["t1", "t2"]).agg(
+    e = copurchase_edges(spark, sf_dir)
+    deg = degrees(e)
+    tri = triangles(e, deg).agg(
         F.count(F.lit(1)).alias("n_triangles")
     )
     gstats = deg.agg(
@@ -915,29 +935,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     size); each round's exchanges carry only edge/node keys, and the
     shrinking survivor sets are localCheckpointed so no round replays
     the pair join."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
-    )
-    po = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = po.alias("a"), po.alias("b")
-    support = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    e = support.where(F.col("cnt") >= 2).select("u", "v")
-    e = e.localCheckpoint(eager=True)
-
-    def degrees(edges: DataFrame) -> DataFrame:
-        return (
-            edges.select(F.col("u").alias("node"))
-            .unionAll(edges.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-
+    e = copurchase_edges(spark, sf_dir)
     rounds = []
     d = degrees(e)
     rounds.append(
@@ -1043,28 +1041,7 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     support-thresholded ids; convergence depth is small (<= peel
     rounds of the degeneracy ordering), every exchange carries 16-byte
     edge keys, and no round replays the pair join."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
-    )
-    po = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = po.alias("a"), po.alias("b")
-    support = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    cur = support.where(F.col("cnt") >= 2).select("u", "v")
-    cur = cur.localCheckpoint(eager=True)
-
-    def degrees(edges: DataFrame) -> DataFrame:
-        return (
-            edges.select(F.col("u").alias("node"))
-            .unionAll(edges.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
+    cur = copurchase_edges(spark, sf_dir)
 
     def peel_once(edges: DataFrame) -> DataFrame:
         alive = degrees(edges).where(F.col("d") >= 3).select("node")
@@ -1173,26 +1150,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins the |nodes|-row degree table twice on node keys (AQE
     handles the small side unhinted), then one map-side-combined
     1-row aggregate."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
-    )
-    po = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = po.alias("a"), po.alias("b")
-    support = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    e = support.where(F.col("cnt") >= 2).select("u", "v")
-    e = e.localCheckpoint(eager=True)  # consumed by deg + pair join
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    e = copurchase_edges(spark, sf_dir)
+    deg = degrees(e)
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("dx"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dy"))
     pairs = e.join(du, "u").join(dv, "v")
@@ -1269,55 +1228,11 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapped to 4 (+0).  Scale: same plan skeleton as graph_triangles
     (sf1-measured 1.2x at 10x input) plus one |triangles·3|-row
     explode — linear in the triangle count."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
-    )
-    po = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = po.alias("a"), po.alias("b")
-    support = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    e = support.where(F.col("cnt") >= 2).select("u", "v")
-    e = e.localCheckpoint(eager=True)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)  # consumed by orientation + output
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    eo = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(F.col("du") <= F.col("dv"), F.col("u"))
-            .otherwise(F.col("v"))
-            .alias("s"),
-            F.when(F.col("du") <= F.col("dv"), F.col("dv"))
-            .otherwise(F.col("du"))
-            .alias("dd"),
-            F.when(F.col("du") <= F.col("dv"), F.col("v"))
-            .otherwise(F.col("u"))
-            .alias("t"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    e1 = eo.select(F.col("s"), F.col("dd").alias("dd1"), F.col("t").alias("t1"))
-    e2 = eo.select(F.col("s"), F.col("dd").alias("dd2"), F.col("t").alias("t2"))
-    closing = eo.select(F.col("s").alias("t1"), F.col("t").alias("t2"))
+    e = copurchase_edges(spark, sf_dir)
+    # consumed by orientation + output
+    deg = degrees(e).localCheckpoint(eager=True)
     tri = (
-        e1.join(e2, "s")
-        .where(
-            (F.col("dd1") < F.col("dd2"))
-            | ((F.col("dd1") == F.col("dd2")) & (F.col("t1") < F.col("t2")))
-        )
-        .join(closing, ["t1", "t2"])
+        triangles(e, deg)
         .select(
             F.col("s").alias("a"), F.col("t1").alias("b"), F.col("t2").alias("c")
         )
@@ -1423,55 +1338,13 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     with common = 0 via the left join (COALESCE'd on both sides,
     round-4 rule).  All equi-joins, no hints; the edge list and
     triangle table are localCheckpointed (each consumed 3+ times)."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
-    )
-    po = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = po.alias("a"), po.alias("b")
-    support = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    e = support.where(F.col("cnt") >= 2).select("u", "v")
-    e = e.localCheckpoint(eager=True)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)  # consumed 3x (orientation + 2 joins)
-    )
+    e = copurchase_edges(spark, sf_dir)
+    # consumed 3x (orientation + 2 joins)
+    deg = degrees(e).localCheckpoint(eager=True)
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    eo = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(F.col("du") <= F.col("dv"), F.col("u"))
-            .otherwise(F.col("v"))
-            .alias("s"),
-            F.when(F.col("du") <= F.col("dv"), F.col("dv"))
-            .otherwise(F.col("du"))
-            .alias("dd"),
-            F.when(F.col("du") <= F.col("dv"), F.col("v"))
-            .otherwise(F.col("u"))
-            .alias("t"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    e1 = eo.select(F.col("s"), F.col("dd").alias("dd1"), F.col("t").alias("t1"))
-    e2 = eo.select(F.col("s"), F.col("dd").alias("dd2"), F.col("t").alias("t2"))
-    closing = eo.select(F.col("s").alias("t1"), F.col("t").alias("t2"))
     tri = (
-        e1.join(e2, "s")
-        .where(
-            (F.col("dd1") < F.col("dd2"))
-            | ((F.col("dd1") == F.col("dd2")) & (F.col("t1") < F.col("t2")))
-        )
-        .join(closing, ["t1", "t2"])
+        triangles(e, deg)
         .select(F.col("s").alias("x"), F.col("t1").alias("y"), F.col("t2").alias("z"))
         .localCheckpoint(eager=True)  # consumed 3x (one per edge of the triangle)
     )
@@ -1602,55 +1475,13 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     to graph_common_neighbors plus one broadcast-sized degree join on
     the witness column; edge list, degrees, and triangles are
     localCheckpointed (each consumed ≥ 2x)."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
-    )
-    po = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = po.alias("a"), po.alias("b")
-    support = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    e = support.where(F.col("cnt") >= 2).select("u", "v")
-    e = e.localCheckpoint(eager=True)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)  # consumed 4x (orientation, u, v, witness)
-    )
+    e = copurchase_edges(spark, sf_dir)
+    # consumed 4x (orientation, u, v, witness)
+    deg = degrees(e).localCheckpoint(eager=True)
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    eo = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(F.col("du") <= F.col("dv"), F.col("u"))
-            .otherwise(F.col("v"))
-            .alias("s"),
-            F.when(F.col("du") <= F.col("dv"), F.col("dv"))
-            .otherwise(F.col("du"))
-            .alias("dd"),
-            F.when(F.col("du") <= F.col("dv"), F.col("v"))
-            .otherwise(F.col("u"))
-            .alias("t"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    e1 = eo.select(F.col("s"), F.col("dd").alias("dd1"), F.col("t").alias("t1"))
-    e2 = eo.select(F.col("s"), F.col("dd").alias("dd2"), F.col("t").alias("t2"))
-    closing = eo.select(F.col("s").alias("t1"), F.col("t").alias("t2"))
     tri = (
-        e1.join(e2, "s")
-        .where(
-            (F.col("dd1") < F.col("dd2"))
-            | ((F.col("dd1") == F.col("dd2")) & (F.col("t1") < F.col("t2")))
-        )
-        .join(closing, ["t1", "t2"])
+        triangles(e, deg)
         .select(F.col("s").alias("x"), F.col("t1").alias("y"), F.col("t2").alias("z"))
         .localCheckpoint(eager=True)  # consumed 3x (one witness per edge)
     )
@@ -1773,57 +1604,9 @@ def graph_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline collapses to ONE row — a count, not a materialized
     triangle list; the n·(n−1)/2 halving uses integer div (operands
     nonnegative, `div`/`//` agree)."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_orderkey").isNotNull() & F.col("l_partkey").isNotNull()
-    )
-    po = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a, b = po.alias("a"), po.alias("b")
-    support = (
-        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") < F.col("b.p")))
-        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    e = support.where(F.col("cnt") >= 2).select("u", "v")
-    e = e.localCheckpoint(eager=True)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True)
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    eo = (
-        e.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(F.col("du") <= F.col("dv"), F.col("u"))
-            .otherwise(F.col("v"))
-            .alias("s"),
-            F.when(F.col("du") <= F.col("dv"), F.col("dv"))
-            .otherwise(F.col("du"))
-            .alias("dd"),
-            F.when(F.col("du") <= F.col("dv"), F.col("v"))
-            .otherwise(F.col("u"))
-            .alias("t"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    e1 = eo.select(F.col("s"), F.col("dd").alias("dd1"), F.col("t").alias("t1"))
-    e2 = eo.select(F.col("s"), F.col("dd").alias("dd2"), F.col("t").alias("t2"))
-    closing = eo.select(F.col("s").alias("t1"), F.col("t").alias("t2"))
-    tcnt = (
-        e1.join(e2, "s")
-        .where(
-            (F.col("dd1") < F.col("dd2"))
-            | ((F.col("dd1") == F.col("dd2")) & (F.col("t1") < F.col("t2")))
-        )
-        .join(closing, ["t1", "t2"])
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
+    e = copurchase_edges(spark, sf_dir)
+    deg = degrees(e).localCheckpoint(eager=True)
+    tcnt = triangles(e, deg).agg(F.count(F.lit(1)).alias("n_triangles"))
     gstat = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.expr("CAST(SUM(d * (d - 1)) AS BIGINT) div 2").alias("n_wedges"),

@@ -11,7 +11,7 @@ reconciliation.
 Determinism recipes (CLAUDE.md rounds 3–8): NULLs are excluded from
 domain checks on BOTH sides (dbt accepted_values semantics); ratios
 divide by greatest(n, 1); medians/MADs use the integer-rank
-min-value-at-threshold pick (agg_percentile_exact shape); money flows
+min-value-at-threshold pick over ``running_counts``; money flows
 through exact integer micro-dollar units (money_units); the only
 doubles are final snapped ratios.
 """
@@ -19,10 +19,11 @@ doubles are final snapped ratios.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_fixedlengthinputformat_spark.functions.num import (
     money_units,
+    running_counts,
     snap,
     snap_sql,
 )
@@ -243,7 +244,7 @@ def dq_row_count_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     The corpus collapses to |days| rows in ONE map-side-combined
     groupBy (epoch integer day buckets — the calendar-seam rule);
     median and MAD are integer-rank picks over that small table (two
-    collapse+running-count windows, the agg_percentile_exact shape);
+    collapses over ``running_counts``);
     deviation stays exact int64 and only the final z ratio is a
     snapped double (MAD floored to 1 against degenerate all-equal
     rolls, identical both sides)."""
@@ -264,13 +265,7 @@ def dq_row_count_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # windowed input = |distinct per-day counts| <= |days| (fixed
         # by the time span) — single-partition is bounded
-        w_run = Window.orderBy("v")
-        w_all = Window.partitionBy()
-        cum = perv.select(
-            "v",
-            F.sum("k").over(w_run).alias("cw"),
-            F.sum("k").over(w_all).alias("n"),
-        )
+        cum = running_counts(perv, [], "v", cnt="k")
         return cum.where(2 * F.col("cw") >= F.col("n")).agg(
             F.min("v").alias(out)
         )

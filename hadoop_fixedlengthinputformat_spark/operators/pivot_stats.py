@@ -25,7 +25,11 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from hadoop_fixedlengthinputformat_spark.functions.num import money_units, snap
+from hadoop_fixedlengthinputformat_spark.functions.num import (
+    money_units,
+    running_counts,
+    snap,
+)
 from hadoop_fixedlengthinputformat_spark.registry import query
 from hadoop_fixedlengthinputformat_spark.tables import load_table
 
@@ -588,7 +592,8 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the group total.  Everything stays EXACT int64 (floored quantity and
     price, the agg_moments technique): the per-value pre-aggregation
     collapses the running sum's input to |distinct values| rows per
-    group, so the rank window is tiny regardless of corpus size, and
+    group (``running_counts`` with the weight sum as its count), so
+    the rank window is tiny regardless of corpus size, and
     integer sums are merge-order-free — no snap, no double drift.
     Shuffle shape: one (flag, qi) groupBy with map-side partials, then
     a flag-keyed window over the collapsed rows."""
@@ -601,22 +606,15 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("l_extendedprice").cast("long").alias("w"),
     )
     per = base.groupBy("l_returnflag", "qi").agg(F.sum("w").alias("wsum"))
-    w_run = Window.partitionBy("l_returnflag").orderBy("qi")
-    w_all = Window.partitionBy("l_returnflag")
-    cum = per.select(
-        "l_returnflag",
-        "qi",
-        F.sum("wsum").over(w_run).alias("cw"),
-        F.sum("wsum").over(w_all).alias("total"),
-    )
+    cum = running_counts(per, "l_returnflag", "qi", cnt="wsum")
     return (
-        cum.where(2 * F.col("cw") >= F.col("total"))
-        .groupBy("l_returnflag", "total")
+        cum.where(2 * F.col("cw") >= F.col("n"))
+        .groupBy("l_returnflag", "n")
         .agg(F.min("qi").alias("wmedian_qty"))
         .select(
             "l_returnflag",
             "wmedian_qty",
-            F.col("total").alias("total_w"),
+            F.col("n").alias("total_w"),
         )
     )
 
@@ -1014,18 +1012,13 @@ def agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("c")
     ).localCheckpoint(eager=False)
 
-    def value_x(col: str, cw_col):
-        w_run = (
-            Window.partitionBy("flag")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
+    def value_x(col: str, x_col: str):
         per_val = pairs.groupBy("flag", col).agg(F.sum("c").alias("cnt"))
-        return per_val.select(
+        return running_counts(per_val, "flag", col).select(
             "flag",
             col,
             "cnt",
-            (2 * F.sum("cnt").over(w_run) - F.col("cnt") + 1).alias(cw_col),
+            (2 * F.col("cw") - F.col("cnt") + 1).alias(x_col),
         )
 
     qx = value_x("q", "x")
@@ -1173,15 +1166,11 @@ def agg_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long").alias("cnta"),
     )
     # windowed input = |distinct floor(quantity)| buckets (TPC-H: <=50)
-    wrun = Window.orderBy("qi").rowsBetween(Window.unboundedPreceding, -1)
-    cum = per.select(
-        "qi", "cnt", "cnta",
-        F.coalesce(F.sum("cnt").over(wrun), F.lit(0)).alias("less"),
-    )
+    cum = running_counts(per, [], "qi")
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = cum.agg(
         F.sum(
-            dec(F.col("cnta")) * (2 * F.col("less") + F.col("cnt") + 1)
+            dec(F.col("cnta")) * (2 * F.col("cw") - F.col("cnt") + 1)
         ).alias("r2a"),
         F.sum("cnta").alias("na"),
         F.sum("cnt").alias("nn"),
@@ -1454,11 +1443,8 @@ def agg_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
         ccount("A", "ca"), ccount("N", "cn"), ccount("R", "cr"),
     )
     # windowed input = |distinct floor(quantity)| buckets (TPC-H: <=50)
-    wrun = Window.orderBy("qi").rowsBetween(Window.unboundedPreceding, -1)
-    cum = per.select(
-        "*", F.coalesce(F.sum("cnt").over(wrun), F.lit(0)).alias("less")
-    )
-    mid = 2 * F.col("less") + F.col("cnt") + 1
+    cum = running_counts(per, [], "qi")
+    mid = 2 * F.col("cw") - F.col("cnt") + 1
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     s = cum.agg(
         F.sum(dec(F.col("ca")) * mid).alias("r2a"),
@@ -1681,8 +1667,8 @@ def agg_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Brown-Forsythe (median-centered Levene) over the three return-flag
-# classes: lower medians come from the agg_weighted_median per-value
-# collapse (exact ints), |x - med| is exact int64, and the one-way
+# classes: lower medians come from the per-value collapse over
+# running_counts (exact ints), |x - med| is exact int64, and the one-way
 # ANOVA F over those deviations is the agg_anova fixed-order tree with
 # k=3.  Zero floating point until the final shared expression.
 _BF_SSQ = (
@@ -1755,12 +1741,12 @@ def agg_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe variance-equality statistic (median-centered
     Levene) across the three return-flag classes — the robust companion
     to agg_anova's mean test.  Lower medians per class come from the
-    agg_weighted_median per-value collapse (exact int64, engine-order
-    free); absolute deviations |x − med| stay integer; the one-way
-    ANOVA F over the deviations is the fixed-order shared double tree
-    (k=3), snapped to 4.  The Brown-Forsythe choice of the LOWER median
-    (not the interpolated one) is deliberate: it keeps every
-    intermediate exact.  Shuffle shape: one (cls, qi) groupBy, a
+    per-value collapse over ``running_counts`` (exact int64,
+    engine-order free); absolute deviations |x − med| stay integer;
+    the one-way ANOVA F over the deviations is the fixed-order shared
+    double tree (k=3), snapped to 4.  The Brown-Forsythe choice of
+    the LOWER median (not the interpolated one) is deliberate: it keeps
+    every intermediate exact.  Shuffle shape: one (cls, qi) groupBy, a
     cls-keyed window over the collapsed rows, a 3-row broadcast join
     back, one global conditional aggregate."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -1774,15 +1760,9 @@ def agg_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = base.groupBy("cls", "qi").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    w_run = Window.partitionBy("cls").orderBy("qi")
-    w_all = Window.partitionBy("cls")
-    cum = per.select(
-        "cls", "qi", "cnt",
-        F.sum("cnt").over(w_run).alias("cw"),
-        F.sum("cnt").over(w_all).alias("ncls"),
-    )
     med = (
-        cum.where(2 * F.col("cw") >= F.col("ncls"))
+        running_counts(per, "cls", "qi")
+        .where(2 * F.col("cw") >= F.col("n"))
         .groupBy("cls").agg(F.min("qi").alias("qm"))
     )
     z = per.join(F.broadcast(med), "cls").select(

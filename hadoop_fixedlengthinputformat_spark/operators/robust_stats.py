@@ -11,9 +11,9 @@ Bartlett (normal-theory) and Brown–Forsythe (median-centered Levene).
 Determinism recipes (CLAUDE.md rounds 5–8):
   * inputs floor/round to exact int64 units (dollars for anything
     squared — the agg_cohens_d overflow budget; cents where linear);
-  * quartiles/medians use the per-value-collapse + running-count
-    integer-rank construction (agg_percentile_exact /
-    agg_weighted_median shape) — no interpolation;
+  * quartiles/medians are integer-rank picks over the per-value
+    collapse's ``functions.num.running_counts`` — no interpolation;
+    the collapsed revenue-cents input is ``stats_extras.flag_cents``;
   * the |groups| dimension is PIVOTED into one row by conditional
     aggregation over the fixed TPC-H flag domain (the agg_cohens_d
     shape), so every cross-group combination is ONE explicitly
@@ -28,11 +28,15 @@ Determinism recipes (CLAUDE.md rounds 5–8):
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_fixedlengthinputformat_spark.functions.num import (
     money_units,
+    running_counts,
     snap_sql,
+)
+from hadoop_fixedlengthinputformat_spark.operators.stats_extras import (
+    flag_cents,
 )
 from hadoop_fixedlengthinputformat_spark.registry import query
 from hadoop_fixedlengthinputformat_spark.tables import load_table
@@ -86,22 +90,7 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shuffle shape: one map-side-combined (flag, pc) groupBy and one
     flag-partitioned running window — identical to the winsorized
     plan; the corpus is read once."""
-    li = load_table(spark, sf_dir, "lineitem")
-    base = li.where(
-        F.col("l_extendedprice").isNotNull()
-        & F.col("l_returnflag").isNotNull()
-    ).select(
-        F.col("l_returnflag").alias("flag"),
-        money_units(F.col("l_extendedprice"), 2).alias("pc"),
-    )
-    per = base.groupBy("flag", "pc").agg(F.count(F.lit(1)).alias("cnt"))
-    w_run = Window.partitionBy("flag").orderBy("pc")
-    w_all = Window.partitionBy("flag")
-    cum = per.select(
-        "flag", "pc", "cnt",
-        F.sum("cnt").over(w_run).alias("cw"),
-        F.sum("cnt").over(w_all).alias("n"),
-    )
+    cum = running_counts(flag_cents(spark, sf_dir), "flag", "pc")
     k = F.floor(F.col("n") / 10).cast("long")
     kept_cnt = F.greatest(
         F.least(F.col("cw"), F.col("n") - k)
@@ -243,8 +232,8 @@ _BOWLEY = snap_sql(
 def agg_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bowley's quartile skewness (q3 + q1 − 2·q2)/(q3 − q1) of revenue
     cents per return flag — the robust shape statistic built entirely
-    from exact integer-rank quartiles (the agg_percentile_exact pick:
-    smallest value whose running count reaches ceil(p·n/100), pure
+    from exact integer-rank quartiles over ``running_counts``
+    (smallest value whose running count reaches ceil(p·n/100), pure
     integer predicate 100·cw ≥ p·n).  Numerator and denominator are
     EXPOSED as exact BIGINTs (the agg_cohen_kappa integer-fraction
     convention — zero floating point in the primary result); the
@@ -253,22 +242,7 @@ def agg_bowley_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic is undefined there, gated identically both sides.
     Shuffle shape: one (flag, pc) collapse + one flag window; corpus
     read once."""
-    li = load_table(spark, sf_dir, "lineitem")
-    base = li.where(
-        F.col("l_extendedprice").isNotNull()
-        & F.col("l_returnflag").isNotNull()
-    ).select(
-        F.col("l_returnflag").alias("flag"),
-        money_units(F.col("l_extendedprice"), 2).alias("pc"),
-    )
-    per = base.groupBy("flag", "pc").agg(F.count(F.lit(1)).alias("cnt"))
-    w_run = Window.partitionBy("flag").orderBy("pc")
-    w_all = Window.partitionBy("flag")
-    cum = per.select(
-        "flag", "pc",
-        F.sum("cnt").over(w_run).alias("cw"),
-        F.sum("cnt").over(w_all).alias("n"),
-    )
+    cum = running_counts(flag_cents(spark, sf_dir), "flag", "pc")
 
     def pick(p: int, name: str):
         return F.min(
@@ -488,8 +462,8 @@ def agg_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the robust variance-homogeneity companion to agg_bartlett (and to
     the mean-centered agg_levene), preferred when normality is in
     doubt.  Three exact stages: (1) per-group LOWER MEDIAN from the
-    per-value-collapse running-count construction (integer predicate
-    2·cw ≥ n — the agg_weighted_median shape); (2) absolute deviations
+    per-value collapse over ``running_counts`` (integer predicate
+    2·cw ≥ n); (2) absolute deviations
     z = |d − med| as exact int64 (a |flags|-row join-back AQE handles
     unhinted); (3) the one-way ANOVA F on z from one pivoted
     conditional-aggregate row of exact (n, Σz, Σz²) per group, the
@@ -509,14 +483,7 @@ def agg_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("l_extendedprice").cast("long").alias("d"),
     )
     per = base.groupBy("flag", "d").agg(F.count(F.lit(1)).alias("cnt"))
-    w_run = Window.partitionBy("flag").orderBy("d")
-    w_all = Window.partitionBy("flag")
-    cum = per.select(
-        "flag", "d",
-        F.sum("cnt").over(w_run).alias("cw"),
-        F.sum("cnt").over(w_all).alias("n"),
-    )
-    med = cum.groupBy("flag").agg(
+    med = running_counts(per, "flag", "d").groupBy("flag").agg(
         F.min(
             F.when(2 * F.col("cw") >= F.col("n"), F.col("d"))
         ).alias("md")

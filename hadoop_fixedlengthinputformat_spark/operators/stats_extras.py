@@ -16,9 +16,11 @@ Determinism follows the CLAUDE.md round-5/6 statistics recipes:
   * where a statistic is a pure ratio of integers (kappa, tau-a) the
     exact numerator/denominator are ALSO exposed as BIGINT columns —
     zero floating point in the primary result;
-  * medians use the per-value-collapse + running-count "lower median"
-    construction (the agg_weighted_median shape) — no percentile
-    interpolation, no double ordering ambiguity.
+  * medians collapse to one row per value, then read the "lower
+    median" off ``functions.num.running_counts`` (2*cw >= n) — no
+    percentile interpolation, no double ordering ambiguity.  The
+    revenue-cents quantiles share their collapsed ``(flag, pc, cnt)``
+    input, :func:`flag_cents`, with robust_stats.
 
 Scale notes:
   * pairwise ops (tau, Theil–Sen) self-join WITHIN a bounded group
@@ -39,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from hadoop_fixedlengthinputformat_spark.functions.num import (
     money_units,
+    running_counts,
     snap_sql,
 )
 from hadoop_fixedlengthinputformat_spark.registry import query
@@ -558,21 +561,14 @@ def _theil_sen_df(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     per = slopes.groupBy("user_id", "slope").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    w_run = Window.partitionBy("user_id").orderBy("slope")
-    w_all = Window.partitionBy("user_id")
-    cum = per.select(
-        "user_id",
-        "slope",
-        F.sum("cnt").over(w_run).alias("cw"),
-        F.sum("cnt").over(w_all).alias("total"),
-    )
+    cum = running_counts(per, "user_id", "slope")
     return (
-        cum.where(2 * F.col("cw") >= F.col("total"))
-        .groupBy("user_id", "total")
+        cum.where(2 * F.col("cw") >= F.col("n"))
+        .groupBy("user_id", "n")
         .agg(F.min("slope").alias("med"))
         .select(
             "user_id",
-            F.col("total").alias("n_pairs"),
+            F.col("n").alias("n_pairs"),
             (F.expr(snap_sql("med", 4)) + F.lit(0.0)).alias("sen_slope"),
         )
     )
@@ -593,12 +589,12 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator there.  Every slope is one exact IEEE division of exact
     int64 cents by exact int64 seconds (identical bits both engines;
     same-timestamp pairs are excluded, so no zero division and no
-    -0.0), and the median uses the per-value-collapse + running-count
-    LOWER-median construction (agg_weighted_median shape) — no
-    percentile interpolation.  Scale: ONE user_id exchange shared by
-    the recency window (rank-filter → WindowGroupLimit pre-shuffle),
-    the pair self-join and the median windows; the median runs over
-    the collapsed |distinct slopes| rows, not the raw pairs."""
+    -0.0), and the median is the per-value-collapse LOWER median
+    over ``running_counts`` — no percentile interpolation.  Scale:
+    ONE user_id exchange shared by the recency window (rank-filter →
+    WindowGroupLimit pre-shuffle), the pair self-join and the median
+    windows; the median runs over the collapsed |distinct slopes|
+    rows, not the raw pairs."""
     return _theil_sen_df(spark, sf_dir, _TS_FULL_K)
 
 
@@ -734,6 +730,22 @@ def agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def flag_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(flag, pc, cnt)``: lineitem collapsed to one row per return
+    flag and extended price in exact integer cents, with its row count
+    (rows with either NULL dropped) — the input of the revenue-cents
+    quantile family, the oracles' ``base`` + ``per`` CTEs."""
+    li = load_table(spark, sf_dir, "lineitem")
+    base = li.where(
+        F.col("l_extendedprice").isNotNull()
+        & F.col("l_returnflag").isNotNull()
+    ).select(
+        F.col("l_returnflag").alias("flag"),
+        money_units(F.col("l_extendedprice"), 2).alias("pc"),
+    )
+    return base.groupBy("flag", "pc").agg(F.count(F.lit(1)).alias("cnt"))
+
+
 @query(
     "agg_percentile_exact",
     oracle="""
@@ -767,30 +779,15 @@ def agg_percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-rank companion to agg_approx_percentile: the p-th
     percentile is the smallest value whose running count reaches
     ceil(p/100 * n), selected with the pure-integer predicate
-    100*cw >= p*n (the agg_weighted_median collapse construction — no
-    interpolation, no doubles anywhere, so nothing to snap).  All
+    100*cw >= p*n over ``running_counts`` (no interpolation, no
+    doubles anywhere, so nothing to snap).  All
     three percentiles read off ONE running-count window via
     conditional MINs.  Shuffle shape: one map-side-combined (flag,
     value) groupBy collapses the corpus to |distinct cents| rows per
     group, then a flag-keyed window over the collapsed rows and a
     tiny final groupBy.  Overflow: 100*cw <= 100n — int64 to ~9e16
     rows."""
-    li = load_table(spark, sf_dir, "lineitem")
-    base = li.where(
-        F.col("l_extendedprice").isNotNull()
-        & F.col("l_returnflag").isNotNull()
-    ).select(
-        F.col("l_returnflag").alias("flag"),
-        money_units(F.col("l_extendedprice"), 2).alias("pc"),
-    )
-    per = base.groupBy("flag", "pc").agg(F.count(F.lit(1)).alias("cnt"))
-    w_run = Window.partitionBy("flag").orderBy("pc")
-    w_all = Window.partitionBy("flag")
-    cum = per.select(
-        "flag", "pc",
-        F.sum("cnt").over(w_run).alias("cw"),
-        F.sum("cnt").over(w_all).alias("n"),
-    )
+    cum = running_counts(flag_cents(spark, sf_dir), "flag", "pc")
 
     def pick(p: int, name: str):
         return F.min(
@@ -862,7 +859,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median-absolute-deviation robust outlier census per user — the
     quality-monitoring primitive that survives the heavy tails z-scores
     choke on.  EXACT int64 end to end: cent values, LOWER median via
-    the per-value-collapse running-count construction, absolute
+    the per-value collapse over ``running_counts``, absolute
     deviations (ints), LOWER median of deviations (MAD, same
     construction), and the outlier predicate |v - med| > 3*MAD — zero
     doubles anywhere, nothing to snap (ties make MAD=0 degrade
@@ -889,13 +886,7 @@ def ts_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def lower_median(df: DataFrame, col: str, out: str) -> DataFrame:
         per = df.groupBy("user_id", col).agg(F.count(F.lit(1)).alias("cnt"))
-        w_run = Window.partitionBy("user_id").orderBy(col)
-        w_all = Window.partitionBy("user_id")
-        cum = per.select(
-            "user_id", col,
-            F.sum("cnt").over(w_run).alias("cw"),
-            F.sum("cnt").over(w_all).alias("n"),
-        )
+        cum = running_counts(per, "user_id", col)
         return (
             cum.where(2 * F.col("cw") >= F.col("n"))
             .groupBy("user_id", "n")
@@ -973,9 +964,9 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     location estimator curation pipelines prefer over trimming when the
     sample count must stay constant: values below the exact p10 are
     clamped UP to it and values above the exact p90 clamped DOWN, then
-    the plain mean.  Thresholds come from the agg_percentile_exact
-    integer-rank construction (smallest value whose running count
-    reaches ceil(p/100*n), pure-integer predicate 100*cw >= p*n);
+    the plain mean.  Thresholds are integer-rank picks over
+    ``running_counts`` (smallest value whose running count reaches
+    ceil(p/100*n), pure-integer predicate 100*cw >= p*n);
     the clamped sum is evaluated on the COLLAPSED (flag, value, cnt)
     table — Σ cnt·clamp(pc) — so both the thresholds and the sum reuse
     one flag partitioning and the corpus is read once.  Exact int64 end
@@ -986,22 +977,8 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     |flags|-row threshold join-back that AQE broadcasts (unhinted —
     the r10 hint rule; it is flag-cardinality, provably tiny here but
     the rule is uniform)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    base = li.where(
-        F.col("l_extendedprice").isNotNull()
-        & F.col("l_returnflag").isNotNull()
-    ).select(
-        F.col("l_returnflag").alias("flag"),
-        money_units(F.col("l_extendedprice"), 2).alias("pc"),
-    )
-    per = base.groupBy("flag", "pc").agg(F.count(F.lit(1)).alias("cnt"))
-    w_run = Window.partitionBy("flag").orderBy("pc")
-    w_all = Window.partitionBy("flag")
-    cum = per.select(
-        "flag", "pc", "cnt",
-        F.sum("cnt").over(w_run).alias("cw"),
-        F.sum("cnt").over(w_all).alias("n"),
-    ).localCheckpoint(eager=True)  # per/cum consumed twice (thresholds + sum)
+    cum = running_counts(flag_cents(spark, sf_dir), "flag", "pc")
+    cum = cum.localCheckpoint(eager=True)  # consumed twice (thresholds + sum)
     thr = (
         cum.groupBy("flag", "n")
         .agg(
@@ -1198,7 +1175,7 @@ def agg_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (beyond q1 − 1.5·IQR / q3 + 1.5·IQR) that data-quality dashboards
     run before trusting a mean.  ZERO floating point anywhere: exact
     lower quartiles via the integer-rank predicate (4·cw ≥ n /
-    4·cw ≥ 3n, the agg_percentile_exact construction), and the
+    4·cw ≥ 3n over ``running_counts``), and the
     half-unit fence compare doubles both sides — 2·pc vs 2·q1 − 3·IQR
     — so the 1.5 factor never leaves int64 (the agg_ks_test
     cross-multiplication discipline).  The census evaluates on the
@@ -1208,22 +1185,8 @@ def agg_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     |flags|-row quartile join-back that AQE broadcasts (unhinted —
     the r10 hint rule).  Overflow: 2·pc ≤ 2e7, 2q1+3·IQR ≤ 1e8 —
     nowhere near the cliff."""
-    li = load_table(spark, sf_dir, "lineitem")
-    base = li.where(
-        F.col("l_extendedprice").isNotNull()
-        & F.col("l_returnflag").isNotNull()
-    ).select(
-        F.col("l_returnflag").alias("flag"),
-        money_units(F.col("l_extendedprice"), 2).alias("pc"),
-    )
-    per = base.groupBy("flag", "pc").agg(F.count(F.lit(1)).alias("cnt"))
-    w_run = Window.partitionBy("flag").orderBy("pc")
-    w_all = Window.partitionBy("flag")
-    cum = per.select(
-        "flag", "pc", "cnt",
-        F.sum("cnt").over(w_run).alias("cw"),
-        F.sum("cnt").over(w_all).alias("n"),
-    ).localCheckpoint(eager=True)  # consumed twice (quartiles + census)
+    cum = running_counts(flag_cents(spark, sf_dir), "flag", "pc")
+    cum = cum.localCheckpoint(eager=True)  # consumed twice (quartiles + census)
     q = cum.groupBy("flag", "n").agg(
         F.min(
             F.when(4 * F.col("cw") >= F.col("n"), F.col("pc"))
@@ -1368,18 +1331,10 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("long")
         .alias("cntp"),
     )
-    wrun = (
-        Window.partitionBy("user_id")
-        .orderBy("ad")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum = per.select(
-        "user_id", "ad", "cnt", "cntp",
-        F.coalesce(F.sum("cnt").over(wrun), F.lit(0)).alias("less"),
-    )
+    cum = running_counts(per, "user_id", "ad")
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     g = cum.groupBy("user_id").agg(
-        F.sum(dec(F.col("cntp")) * (2 * F.col("less") + F.col("cnt") + 1))
+        F.sum(dec(F.col("cntp")) * (2 * F.col("cw") - F.col("cnt") + 1))
         .cast("long")
         .alias("w2"),
         F.sum("cnt").alias("n"),

@@ -26,7 +26,10 @@ here), strip the Initial Plan section, and pin
     whole-partition frame once per partition, not per row.)
 
 It also pins a ceiling on the tasks of the fixed-width full scan: one
-split per core, so a constant split target cannot creep back in.
+split per core, so a constant split target cannot creep back in, and
+ceilings on the Window and Exchange nodes of the queries built on the
+shared ladder / co-purchase primitives, so an edit to one primitive
+cannot add a window or a shuffle to every caller at once.
 """
 
 from __future__ import annotations
@@ -83,6 +86,27 @@ def _parquet_scans(plan: str) -> int:
     return plan.count("Scan parquet")
 
 
+# query -> (max Window nodes, max Exchange + BroadcastExchange nodes) in
+# the FINAL adaptive plan at sf0.001 on the local[8] fixture.  Values =
+# the counts measured before functions.num.running_counts and
+# analytics_extras.copurchase_edges replaced the hand-written copies
+# (unchanged after): percentile_exact 2/2, iqr_outliers 0/2 (its
+# window runs inside the cum checkpoint), mannwhitney 1/2, spearman
+# 4/10, graph_triangles 0/10 (edges and orientation are checkpoints).
+# ReusedExchange nodes re-read an existing exchange and are not counted.
+LADDER_CEILINGS = {
+    "agg_percentile_exact": (2, 2),
+    "agg_iqr_outliers": (0, 2),
+    "agg_mannwhitney": (1, 2),
+    "agg_spearman": (4, 10),
+    "graph_triangles": (0, 10),
+}
+
+
+def _plan_nodes(plan: str) -> list[str]:
+    return re.findall(r"^[\s:+\-*()]*(\w+)", plan, re.M)
+
+
 @pytest.mark.parametrize("name", sorted(SCAN_CEILINGS))
 def test_executed_scan_ceiling(spark, name):
     plan = _final_plan(spark, name)
@@ -91,6 +115,21 @@ def test_executed_scan_ceiling(spark, name):
         f"{name}: {n} parquet scans in the final adaptive plan, ceiling "
         f"{SCAN_CEILINGS[name]} — a shared subtree was probably forked "
         f"(see plans/r14 and OPTIMIZATION_r14.md)\n{plan}"
+    )
+
+
+@pytest.mark.parametrize("name", sorted(LADDER_CEILINGS))
+def test_executed_window_exchange_ceiling(spark, name):
+    plan = _final_plan(spark, name)
+    nodes = _plan_nodes(plan)
+    windows = nodes.count("Window")
+    exchanges = nodes.count("Exchange") + nodes.count("BroadcastExchange")
+    max_w, max_x = LADDER_CEILINGS[name]
+    assert windows <= max_w and exchanges <= max_x, (
+        f"{name}: {windows} Window / {exchanges} Exchange nodes in the "
+        f"final adaptive plan, ceilings {max_w} / {max_x} — a shared "
+        f"primitive (running_counts, copurchase_edges) grew a window or "
+        f"a shuffle\n{plan}"
     )
 
 
