@@ -60,7 +60,7 @@ mid-chunk all raise with the image offset.
 
 from __future__ import annotations
 
-import glob as _glob
+import codecs
 import os
 import struct
 from dataclasses import dataclass
@@ -74,7 +74,6 @@ from pyspark.sql.datasource import (
     DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 from pyspark.sql.types import (
     BinaryType,
@@ -84,10 +83,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hadoop_fixedlengthinputformat_spark.sources.fixedlen import _visible
+from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
+    _CommitMessage,
+    _clear_parts,
+    _list_files,
+    _part_paths,
+    _promote,
+    _remove_tmps,
+    _single_byte_encoding,
+    _visible,
+)
 from hadoop_fixedlengthinputformat_spark.sources.layout import (
     FieldSpec,
-    decode_chunk,
+    decode_framed,
     encode_rows,
     layout_schema,
     parse_layout,
@@ -98,6 +106,7 @@ _F1_NEWREC = 0x80
 _F1_ENDREC = 0x20
 _F1_TAPEMARK = 0x40
 _MAX_CHUNK = 0xFFFF
+BATCH_TARGET = 1 << 22  # block bytes per emitted Arrow batch / stream read
 
 
 @dataclass
@@ -191,18 +200,9 @@ class _TOptions:
             raise ValueError(
                 f"awstape: tailColumn {tail_column!r} clashes with a layout field"
             )
-        import codecs
-
-        enc_raw = options.get("encoding", "utf-8")
-        try:
-            info = codecs.lookup(enc_raw)
-            probe = "0A ".encode(info.name)
-        except LookupError:
-            raise ValueError(f"awstape: unknown encoding {enc_raw!r}")
-        if len(probe) != 3:
-            raise ValueError(
-                f"awstape: encoding {enc_raw!r} is not a single-byte charset"
-            )
+        encoding = _single_byte_encoding(
+            options.get("encoding", "utf-8"), "awstape"
+        )
         chunk_size = int(options.get("chunksize", "4096"))
         if not (1 <= chunk_size <= _MAX_CHUNK):
             raise ValueError(
@@ -258,7 +258,7 @@ class _TOptions:
             )
         return cls(
             recfm, record_length, prefix_length, fields, with_offset,
-            with_file, with_tail, tail_column, info.name, chunk_size,
+            with_file, with_tail, tail_column, encoding, chunk_size,
             block_size, labels, dataset, file_seq, volser, label_encoding,
         )
 
@@ -286,16 +286,27 @@ class _TOptions:
 
         return to_arrow_schema(self.spark_schema())
 
-
-def _list_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(filter(_visible, _glob.glob(os.path.join(path, "*"))))
-    elif os.path.isfile(path):
-        return [path]
-    names = sorted(filter(_visible, _glob.glob(path)))
-    if not names:
-        raise FileNotFoundError(f"awstape: no input files at {path!r}")
-    return names
+    def framed_batch(
+        self, files: list[int], offsets: list[int], fixed: bytearray,
+        tails: list[bytes],
+    ) -> pa.RecordBatch:
+        """The Arrow batch of the records a read loop collected: U
+        records as prefix + tail, F records whole in ``fixed``."""
+        return decode_framed(
+            offsets, fixed, tails,
+            prefix_length=(
+                self.record_length if self.recfm == "F" else self.prefix_length
+            ),
+            fields=self.fields,
+            layout_arrow=(
+                self.layout_arrow_schema() if self.fields is not None else None
+            ),
+            arrow_schema=self.arrow_schema(),
+            encoding=self.encoding,
+            with_offset=self.with_offset,
+            with_tail=self.recfm == "U" and self.with_tail,
+            files=files if self.with_file else None,
+        )
 
 
 def iter_blocks(
@@ -623,14 +634,12 @@ class AwsTapeReader(DataSourceReader):
     """One partition per image (chunk headers chain — no random entry);
     fleets of images parallelize across tasks."""
 
-    BATCH_TARGET = 1 << 22
-
     def __init__(self, opts: _TOptions, path: str):
         self.opts = opts
         self.path = path
 
     def partitions(self):
-        files = _list_files(self.path)
+        files = _list_files(self.path, _visible, "awstape")
         return [TapePartition(p) for p in files] or [TapePartition("")]
 
     def read(self, partition: TapePartition):
@@ -638,32 +647,7 @@ class AwsTapeReader(DataSourceReader):
         if not partition.path:
             return iter(())
 
-        full_schema = o.arrow_schema()
-        layout_arrow = o.layout_arrow_schema() if o.fields is not None else None
-
-        def build_batch(
-            files: list[int], offsets: list[int], fixed: bytearray,
-            tails: list[bytes], rl: int,
-        ) -> pa.RecordBatch:
-            cols: list[pa.Array] = []
-            if o.with_file:
-                cols.append(pa.array(files, type=pa.int32()))
-            if o.with_offset:
-                cols.append(pa.array(offsets, type=pa.int64()))
-            if o.fields is None:
-                cols.append(pa.array(tails, type=pa.binary()))
-            else:
-                layout_batch = decode_chunk(
-                    bytes(fixed), rl, o.fields, 0, False, None,
-                    layout_arrow, encoding=o.encoding,
-                )
-                cols.extend(layout_batch.columns)
-                if o.recfm == "U" and o.with_tail:
-                    cols.append(pa.array(tails, type=pa.binary()))
-            return pa.RecordBatch.from_arrays(cols, schema=full_schema)
-
         def gen():
-            rl = o.record_length if o.recfm == "F" else o.prefix_length
             files: list[int] = []
             offsets: list[int] = []
             fixed = bytearray()
@@ -708,12 +692,12 @@ class AwsTapeReader(DataSourceReader):
                             fixed.extend(block[: o.prefix_length])
                             tails.append(block[o.prefix_length :])
                     pending += len(block)
-                    if pending >= self.BATCH_TARGET:
-                        yield build_batch(files, offsets, fixed, tails, rl)
+                    if pending >= BATCH_TARGET:
+                        yield o.framed_batch(files, offsets, fixed, tails)
                         files, offsets, fixed, tails = [], [], bytearray(), []
                         pending = 0
             if offsets:
-                yield build_batch(files, offsets, fixed, tails, rl)
+                yield o.framed_batch(files, offsets, fixed, tails)
 
         return gen()
 
@@ -728,8 +712,6 @@ class AwsTapeStreamReader(SimpleDataSourceStreamReader):
     flight and its entire chain stays unread until the ENDREC chunk
     lands (the whole-record invariant carried to chunked tape blocks).
     A closed tape (double mark) simply stops yielding new rows."""
-
-    BATCH_TARGET = 1 << 22
 
     def __init__(self, opts: _TOptions, path: str):
         self.opts = opts
@@ -768,7 +750,8 @@ class AwsTapeStreamReader(SimpleDataSourceStreamReader):
                     break
         if not recs:
             return [], lo
-        offsets = [off for _tf, off, _ in recs]
+        files = [tf for tf, _off, _b in recs]
+        offsets = [off for _tf, off, _b in recs]
         prefixes = bytearray()
         tails: list[bytes] = []
         for _tf, _off, block in recs:
@@ -777,31 +760,14 @@ class AwsTapeStreamReader(SimpleDataSourceStreamReader):
             else:
                 prefixes.extend(block[: o.prefix_length])
                 tails.append(block[o.prefix_length :])
-        cols: list[pa.Array] = []
-        if o.with_file:
-            cols.append(
-                pa.array([tf for tf, _off, _b in recs], type=pa.int32())
-            )
-        if o.with_offset:
-            cols.append(pa.array(offsets, type=pa.int64()))
-        if o.fields is None:
-            cols.append(pa.array(tails, type=pa.binary()))
-        else:
-            layout_batch = decode_chunk(
-                bytes(prefixes), o.prefix_length, o.fields, 0, False, None,
-                o.layout_arrow_schema(), encoding=o.encoding,
-            )
-            cols.extend(layout_batch.columns)
-            if o.with_tail:
-                cols.append(pa.array(tails, type=pa.binary()))
-        batch = pa.RecordBatch.from_arrays(cols, schema=o.arrow_schema())
+        batch = o.framed_batch(files, offsets, prefixes, tails)
         return [tuple(r.values()) for r in batch.to_pylist()], end
 
     def read(self, start: dict):
         # cap the per-batch span so a large backlog drains across
         # micro-batches instead of materializing at once (ADVICE r3)
         rows, pos = self._rows(
-            start, None, stop_on_partial=True, max_bytes=self.BATCH_TARGET
+            start, None, stop_on_partial=True, max_bytes=BATCH_TARGET
         )
         return iter(rows), pos
 
@@ -815,20 +781,12 @@ class AwsTapeStreamReader(SimpleDataSourceStreamReader):
         pass
 
 
-class _TCommitMessage(WriterCommitMessage):
-    def __init__(self, outputs: list[tuple[str, str]], n_records: int):
-        self.outputs = outputs
-        self.n_records = n_records
-
-
 class AwsTapeWriter(DataSourceWriter):
     """One ``.aws`` image per input partition, each a complete tape:
     data blocks, tapemark, end-of-tape tapemark.
 
     ``stream_mode`` (set by :class:`AwsTapeStreamWriter`) defers final
-    naming to commit time: parts encode into hidden attempt-unique
-    tmps and the commit message carries the partition id so the
-    streaming sink can promote them to batch-id-keyed names."""
+    naming to commit time (see ``fixedlen._part_paths``)."""
 
     stream_mode = False
 
@@ -840,24 +798,10 @@ class AwsTapeWriter(DataSourceWriter):
 
         self.token = uuid.uuid4().hex[:10]
 
-    def write(self, iterator) -> _TCommitMessage:
-        from pyspark import TaskContext
-
+    def write(self, iterator) -> _CommitMessage:
         os.makedirs(self.path, exist_ok=True)
-        ctx = TaskContext.get()
         o = self.opts
-        if self.stream_mode:
-            final = None
-            tmp = os.path.join(
-                self.path,
-                f".tmp-stream-{self.token}-{ctx.taskAttemptId()}",
-            )
-        else:
-            final = os.path.join(
-                self.path, f"part-{ctx.partitionId():05d}-{self.token}.aws"
-            )
-            tmp = f"{final}.tmp-{ctx.taskAttemptId()}"
-        n = 0
+        tmp, final = _part_paths(self.path, ".aws", self.token, self.stream_mode)
         n_blocks = 0
         prev_len = 0
         out: list[bytes] = []
@@ -945,7 +889,6 @@ class AwsTapeWriter(DataSourceWriter):
                         "tapemark)"
                     )
                 emit_block(payload)
-            n += 1
         if block:
             emit_block(bytes(block))
         if o.labels == "SL":
@@ -974,70 +917,37 @@ class AwsTapeWriter(DataSourceWriter):
         tapemark()
         with open(tmp, "wb") as f:
             f.write(b"".join(out))
-        msg = _TCommitMessage([(tmp, final)], n)
-        msg.partition_id = ctx.partitionId()
-        return msg
+        return _CommitMessage([(tmp, final, None, None)])
 
     def commit(self, messages):
-        if self.overwrite and os.path.isdir(self.path):
-            for fn in os.listdir(self.path):
-                if (
-                    fn.startswith("part-")
-                    and fn.endswith(".aws")
-                    and f"-{self.token}." not in fn
-                ):
-                    os.remove(os.path.join(self.path, fn))
-        for m in messages:
-            if m is not None:
-                for tmp, final in m.outputs:
-                    os.replace(tmp, final)
+        if self.overwrite:
+            _clear_parts(self.path, self.token, (".aws",), recursive=False)
+        _promote(messages)
 
     def abort(self, messages):
-        for m in messages:
-            if m is not None:
-                for tmp, _final in m.outputs:
-                    if os.path.exists(tmp):
-                        os.remove(tmp)
+        _remove_tmps(messages)
 
 
 class AwsTapeStreamWriter(DataSourceStreamWriter):
-    """Streaming AWS-tape SINK, completing the tape source matrix
-    (batch read/write + stream read already exist) and mirroring
-    ``FixedLengthStreamWriter``'s idempotent-replay contract: each
-    micro-batch partition encodes a complete tape image (data blocks,
-    labels if requested, tapemarks) into a hidden attempt-unique tmp
-    via the batch writer in ``stream_mode``; ``commit(messages,
-    batchId)`` promotes them to BATCH-ID-KEYED final names
-    (``batch-{id}-part-{p}.aws``), so a replayed micro-batch after a
-    crash overwrites its own images instead of duplicating records —
-    exactly-once on top of the checkpoint's batch-id replay."""
+    """Streaming AWS-tape SINK: the batch writer in ``stream_mode``, so
+    each micro-batch partition encodes a complete tape image (data
+    blocks, labels if requested, tapemarks), committed by the sink
+    protocol the three fixed-width sources share (``fixedlen._promote``
+    with the micro-batch id, so images land as
+    ``batch-{id}-part-{p}.aws``)."""
 
     def __init__(self, opts: _TOptions, path: str):
         self._inner = AwsTapeWriter(opts, path, overwrite=False)
         self._inner.stream_mode = True
-        self.path = path
 
-    def write(self, iterator) -> _TCommitMessage:
+    def write(self, iterator) -> _CommitMessage:
         return self._inner.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for tmp, _final in m.outputs:
-                final = os.path.join(
-                    self.path,
-                    f"batch-{batchId:08d}-part-{m.partition_id:05d}.aws",
-                )
-                os.replace(tmp, final)
+        _promote(messages, batchId)
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for tmp, _final in m.outputs:
-                if os.path.exists(tmp):
-                    os.remove(tmp)
+        _remove_tmps(messages)
 
 
 class AwsTapeDataSource(DataSource):

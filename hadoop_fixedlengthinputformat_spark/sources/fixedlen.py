@@ -281,17 +281,9 @@ class _Options:
             )
         if compression == "zstd":
             _zstd_module()  # fail at option parse, not mid-write
-        enc_raw = options.get("encoding", "utf-8")
-        try:
-            info = codecs.lookup(enc_raw)
-            # single-byte charsets only: the record matrix is byte-indexed
-            probe = "0A ".encode(info.name)
-        except LookupError:
-            raise ValueError(f"fixedlen: unknown encoding {enc_raw!r}")
-        if len(probe) != 3:
-            raise ValueError(
-                f"fixedlen: encoding {enc_raw!r} is not a single-byte charset"
-            )
+        encoding = _single_byte_encoding(
+            options.get("encoding", "utf-8"), "fixedlen"
+        )
         skip_header = int(options.get("skipheaderrecords", "0"))
         skip_trailer = int(options.get("skiptrailerrecords", "0"))
         if skip_header < 0 or skip_trailer < 0:
@@ -365,7 +357,7 @@ class _Options:
                 )
         return cls(
             record_length, key_bounds, fields, with_offset, malformed, mpb,
-            mode, pruned, compression, info.name,
+            mode, pruned, compression, encoding,
             multitype, union_fields, type_bounds,
             skip_header, skip_trailer, stats_sidecar, stats_block,
             corrupt_col, line_sep, (), partition_by,
@@ -424,6 +416,21 @@ class _Options:
         return pa.schema(cols)
 
 
+def _single_byte_encoding(enc_raw: str, source: str) -> str:
+    """Canonical codec name of ``enc_raw``.  Only single-byte charsets
+    are accepted: the record matrix is byte-indexed."""
+    try:
+        name = codecs.lookup(enc_raw).name
+        probe = "0A ".encode(name)
+    except LookupError:
+        raise ValueError(f"{source}: unknown encoding {enc_raw!r}")
+    if len(probe) != 3:
+        raise ValueError(
+            f"{source}: encoding {enc_raw!r} is not a single-byte charset"
+        )
+    return name
+
+
 def _visible(p: str) -> bool:
     # skip _SUCCESS / .part-*.crc marker files, uncommitted writer tmps
     # (crashed-job leftovers), and stats sidecars, for both directory
@@ -436,19 +443,21 @@ def _visible(p: str) -> bool:
     return os.path.isfile(p)
 
 
-def _list_files(path: str) -> list[str]:
+def _list_files(
+    path: str, visible=_visible, source: str = "fixedlen"
+) -> list[str]:
+    """Input files of a directory, a single file or a glob, filtered by
+    the source's ``visible`` predicate."""
     if os.path.isdir(path):
-        names = sorted(filter(_visible, _glob.glob(os.path.join(path, "*"))))
         # an existing directory with no part files is an EMPTY dataset
         # (e.g. a committed write of an empty partitioned DataFrame), not
         # a user error — a missing path/glob still raises below
-        return names
+        return sorted(filter(visible, _glob.glob(os.path.join(path, "*"))))
     elif os.path.isfile(path):
-        names = [path]
-    else:
-        names = sorted(filter(_visible, _glob.glob(path)))
+        return [path]
+    names = sorted(filter(visible, _glob.glob(path)))
     if not names:
-        raise FileNotFoundError(f"fixedlen: no input files at {path!r}")
+        raise FileNotFoundError(f"{source}: no input files at {path!r}")
     return names
 
 
@@ -1211,26 +1220,113 @@ class FixedLengthReader(DataSourceReader):
 
 
 class _CommitMessage(WriterCommitMessage):
-    """One message per task: every (tmp, final) pair the task produced —
-    several when partitionBy routes rows to multiple directories."""
+    """One message per task, shared by the fixedlen, varlen and awstape
+    sinks: every part the task produced — several when partitionBy
+    routes rows to multiple directories.  Each output is ``(tmp, final,
+    sidecar_tmp, sidecar_final)``; the sidecar pair is ``None`` for a
+    part without a ``.stats.json`` / ``.rdx.json`` sidecar."""
 
     def __init__(
-        self,
-        outputs: list[tuple[str, str, str | None, str | None]],
-        n_records: int,
+        self, outputs: list[tuple[str, str, str | None, str | None]]
     ):
-        self.outputs = outputs  # (tmp, final, stats_tmp, stats_final)
-        self.n_records = n_records
+        self.outputs = outputs
+
+
+# The sink commit protocol of all three fixed-width sources.  Tasks
+# write hidden, attempt-unique tmps; the job commit renames them only
+# once every task has succeeded, so a failed job commits nothing and leaves
+# the earlier dataset in place.  A stream part's final name is a
+# template that the micro-batch id prefixes at commit: a replayed batch
+# overwrites its own files instead of duplicating records — exactly-once
+# on top of the checkpoint's batch-id replay.  Local-FS rename here; on
+# a cluster the same protocol runs against a shared store.
+
+
+def _part_paths(
+    d: str, ext: str, token: str, stream_mode: bool
+) -> tuple[str, str]:
+    """``(tmp, final)`` for the running task's part file in ``d``.
+    ``token`` is unique per write job: unique final names make append
+    mode additive, and tmp names collision-free across attempts."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    if stream_mode:
+        return (
+            os.path.join(d, f".tmp-stream-{token}-{ctx.taskAttemptId()}"),
+            os.path.join(d, f"part-{ctx.partitionId():05d}{ext}"),
+        )
+    final = os.path.join(d, f"part-{ctx.partitionId():05d}-{token}{ext}")
+    return f"{final}.tmp-{ctx.taskAttemptId()}", final
+
+
+def _promote(messages, batch_id: int | None = None) -> None:
+    """Rename every tmp and its sidecar tmp to the final name; a stream
+    commit passes its ``batch_id`` and the final names become
+    ``batch-{id:08d}-part-{p:05d}{ext}`` in the part's own directory."""
+    for m in messages:
+        if m is None:
+            continue
+        for tmp, final, side_tmp, side_final in m.outputs:
+            for src, dst in ((tmp, final), (side_tmp, side_final)):
+                if src is None:
+                    continue
+                if batch_id is not None:
+                    d, base = os.path.split(dst)
+                    dst = os.path.join(d, f"batch-{batch_id:08d}-{base}")
+                os.replace(src, dst)
+
+
+def _clear_parts(
+    path: str, token: str, suffixes: tuple[str, ...], recursive: bool
+) -> None:
+    """Overwrite: remove the earlier jobs' ``part-*`` files that end in
+    one of ``suffixes``, keeping this job's (``token``) and every other
+    file.  ``recursive`` also clears partitionBy subdirectories."""
+    if not os.path.isdir(path):
+        return
+    walk = os.walk(path) if recursive else [next(os.walk(path))]
+    for root, _dirs, files in walk:
+        for fn in files:
+            if (
+                fn.startswith("part-")
+                and fn.endswith(suffixes)
+                and f"-{token}." not in fn
+            ):
+                os.remove(os.path.join(root, fn))
+
+
+def _remove_tmps(messages) -> None:
+    """Abort: remove every tmp and sidecar tmp the tasks reported."""
+    for m in messages:
+        if m is None:
+            continue
+        for tmp, _final, side_tmp, _side_final in m.outputs:
+            for p in (tmp, side_tmp):
+                if p and os.path.exists(p):
+                    os.remove(p)
 
 
 class FixedLengthWriter(DataSourceWriter):
     """Engine extension: the reference has no OutputFormat at all
     (SURVEY.md §2.2) — this sink closes the round-trip.  One file per
-    input partition, records encoded via the layout."""
+    input partition, records encoded via the layout.
+
+    ``stream_mode`` (set by :class:`FixedLengthStreamWriter`) defers
+    final naming to commit time (see ``_part_paths``)."""
 
     # rows encoded + flushed per slice of this size so the worker never
     # holds a whole partition's rows AND its encoded bytes at once
     WRITE_BATCH_ROWS = 10_000
+
+    stream_mode = False
+
+    # overwrite clears data parts, codec members and stats sidecars
+    _PART_SUFFIXES = (
+        ".fixed",
+        *(".fixed" + e for e in _CODEC_EXTS.values()),
+        stats.sidecar_path(""),
+    )
 
     def __init__(self, opts: _Options, path: str, overwrite: bool):
         # no layout => RAW mode: rows carry a 'value' binary column of
@@ -1245,19 +1341,14 @@ class FixedLengthWriter(DataSourceWriter):
         self.opts = opts
         self.path = path
         self.overwrite = overwrite
-        # one token per WRITE JOB: unique final names make append mode
-        # additive (never truncates an earlier dataset's part files) and
-        # tmp names collision-free across attempts
         import uuid
 
         self.token = uuid.uuid4().hex[:10]
 
     def write(self, iterator) -> _CommitMessage:
-        from pyspark import TaskContext
         from urllib.parse import quote
 
         os.makedirs(self.path, exist_ok=True)
-        ctx = TaskContext.get()
         o = self.opts
         ext = ".fixed" + _CODEC_EXTS.get(o.compression, "")
         rl, sep = o.record_length, o.line_sep
@@ -1302,9 +1393,7 @@ class FixedLengthWriter(DataSourceWriter):
             return out.tobytes()
 
         # one sink per partitionBy value combination (a single sink with
-        # key () when unpartitioned); task-attempt-unique tmps mean a
-        # speculative/zombie attempt never interleaves bytes with the
-        # winner; commit() promotes atomically
+        # key () when unpartitioned)
         sinks: dict[tuple, dict] = {}
 
         def sink_for(vals: tuple) -> dict:
@@ -1318,14 +1407,11 @@ class FixedLengthWriter(DataSourceWriter):
                     ))
                     d = os.path.join(self.path, sub)
                     os.makedirs(d, exist_ok=True)
-                final = os.path.join(
-                    d, f"part-{ctx.partitionId():05d}-{self.token}{ext}"
-                )
-                tmp = f"{final}.tmp-{ctx.taskAttemptId()}"
+                tmp, final = _part_paths(d, ext, self.token, self.stream_mode)
                 f, raw = open_sink(tmp)
                 s = {
                     "final": final, "tmp": tmp, "f": f, "raw": raw,
-                    "batch": [], "n": 0,
+                    "batch": [],
                     "coll": (
                         stats.StatsCollector(o.fields, o.stats_block_records)
                         if o.stats_sidecar and o.fields is not None
@@ -1342,7 +1428,6 @@ class FixedLengthWriter(DataSourceWriter):
                         s["batch"], o.fields, rl, encoding=o.encoding,
                     ))
                 )
-                s["n"] += len(s["batch"])
                 s["batch"] = []
 
         try:
@@ -1356,7 +1441,6 @@ class FixedLengthWriter(DataSourceWriter):
                             f"expected recordLength={rl}"
                         )
                     s["f"].write(b + sep)
-                    s["n"] += 1
             else:
                 if not o.partition_by:
                     # eager default sink: a task with an empty iterator must
@@ -1391,126 +1475,43 @@ class FixedLengthWriter(DataSourceWriter):
                     s2["raw"].close()
 
         outputs: list[tuple[str, str, str | None, str | None]] = []
-        total = 0
         for s2 in sinks.values():
             stats_tmp = stats_final = None
             if s2["coll"] is not None:
                 stats_final = stats.sidecar_path(s2["final"])
-                stats_tmp = f"{stats_final}.tmp-{ctx.taskAttemptId()}"
+                stats_tmp = stats.sidecar_path(s2["tmp"])
                 stats.write_sidecar(stats_tmp, s2["coll"].payload())
             outputs.append((s2["tmp"], s2["final"], stats_tmp, stats_final))
-            total += s2["n"]
-        return _CommitMessage(outputs, total)
+        return _CommitMessage(outputs)
 
     def commit(self, messages):
-        # all tasks succeeded — NOW clear the old dataset (an aborted job
-        # must leave it untouched), then promote tmps atomically.  The
-        # walk covers partitionBy subdirectories too.
-        if self.overwrite and os.path.isdir(self.path):
-            for root, _dirs, files in os.walk(self.path):
-                for fn in files:
-                    if (
-                        fn.startswith("part-")
-                        and (
-                            fn.endswith(".fixed")
-                            or any(
-                                fn.endswith(".fixed" + e)
-                                for e in _CODEC_EXTS.values()
-                            )
-                            or stats.is_sidecar(fn)
-                        )
-                        and f"-{self.token}." not in fn
-                    ):
-                        os.remove(os.path.join(root, fn))
-        for m in messages:
-            if m is not None:
-                for tmp, final, stats_tmp, stats_final in m.outputs:
-                    os.replace(tmp, final)
-                    if stats_tmp is not None:
-                        os.replace(stats_tmp, stats_final)
+        if self.overwrite:
+            _clear_parts(
+                self.path, self.token, self._PART_SUFFIXES, recursive=True
+            )
+        _promote(messages)
 
     def abort(self, messages):
-        for m in messages:
-            if m is not None:
-                for tmp, _final, stats_tmp, _sf in m.outputs:
-                    for p in (tmp, stats_tmp):
-                        if p and os.path.exists(p):
-                            os.remove(p)
-
-
-class _StreamCommitMessage(WriterCommitMessage):
-    def __init__(self, tmp_path: str, partition_id: int, n_records: int):
-        self.tmp_path = tmp_path
-        self.partition_id = partition_id
-        self.n_records = n_records
+        _remove_tmps(messages)
 
 
 class FixedLengthStreamWriter(DataSourceStreamWriter):
-    """Streaming fixed-width SINK — completes the source matrix (batch
-    read/write + stream read already exist).  Tasks write to hidden
-    attempt-unique tmps; ``commit(messages, batchId)`` promotes them to
-    BATCH-ID-KEYED final names (``batch-{id}-part-{p}.fixed``), so a
-    replayed micro-batch after a crash overwrites its own files instead
-    of duplicating records — idempotent exactly-once on top of the
-    checkpoint's batch-id replay contract.  Local-FS rename here; on a
-    cluster the same protocol runs against a shared store (same
-    assumption as the batch writer)."""
+    """Streaming fixed-width SINK: the batch writer in ``stream_mode``,
+    so it takes every write option the batch sink takes, committed by
+    the shared protocol (``_promote`` with the micro-batch id)."""
 
     def __init__(self, opts: _Options, path: str):
-        if opts.fields is None:
-            raise ValueError("fixedlen write requires a 'layout' option")
-        if opts.pruned:
-            raise ValueError(
-                "fixedlen write does not accept 'columns' — write the full layout"
-            )
-        self.opts = opts
-        self.path = path
+        self._inner = FixedLengthWriter(opts, path, overwrite=False)
+        self._inner.stream_mode = True
 
-    def write(self, iterator) -> _StreamCommitMessage:
-        import uuid
-
-        from pyspark import TaskContext
-
-        os.makedirs(self.path, exist_ok=True)
-        ctx = TaskContext.get()
-        tmp = os.path.join(self.path, f".tmp-stream-{uuid.uuid4().hex}")
-        n = 0
-        with open(tmp, "wb") as f:
-            batch: list[dict] = []
-            for row in iterator:
-                batch.append(row.asDict())
-                if len(batch) >= FixedLengthWriter.WRITE_BATCH_ROWS:
-                    f.write(
-                        encode_rows(
-                            batch, self.opts.fields, self.opts.record_length,
-                            encoding=self.opts.encoding,
-                        )
-                    )
-                    n += len(batch)
-                    batch = []
-            if batch:
-                f.write(
-                    encode_rows(
-                            batch, self.opts.fields, self.opts.record_length,
-                            encoding=self.opts.encoding,
-                        )
-                )
-                n += len(batch)
-        return _StreamCommitMessage(tmp, ctx.partitionId(), n)
+    def write(self, iterator) -> _CommitMessage:
+        return self._inner.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None:
-                final = os.path.join(
-                    self.path,
-                    f"batch-{batchId:08d}-part-{m.partition_id:05d}.fixed",
-                )
-                os.replace(m.tmp_path, final)
+        _promote(messages, batchId)
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
+        _remove_tmps(messages)
 
 
 class FixedLenStreamReader(SimpleDataSourceStreamReader):

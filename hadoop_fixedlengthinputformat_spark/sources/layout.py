@@ -669,6 +669,49 @@ def decode_chunk(
     return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
+def decode_framed(
+    offsets: list[int],
+    prefixes: bytearray,
+    tails: list[bytes],
+    *,
+    prefix_length: int,
+    fields: list[FieldSpec] | None,
+    layout_arrow: pa.Schema | None,
+    arrow_schema: pa.Schema,
+    encoding: str,
+    with_offset: bool,
+    with_tail: bool,
+    files: list[int] | None = None,
+) -> pa.RecordBatch:
+    """One Arrow batch of framed records (the varlen and awstape readers)
+    from the per-record pieces a read loop collected: ``offsets``, the
+    concatenated fixed ``prefixes`` (``prefix_length`` bytes each) and
+    the variable ``tails``.  With no layout, ``tails`` holds each whole
+    payload and becomes the ``value`` column.
+
+    Column order matches ``arrow_schema``: [``tape_file`` from ``files``]
+    [``record_offset``?] then ``value``, or the layout columns decoded
+    by :func:`decode_chunk` and the tail column (``with_tail``).  A
+    reader of whole fixed-length records (awstape's recfm=F) passes them
+    as ``prefixes`` with ``with_tail=False``."""
+    cols: list[pa.Array] = []
+    if files is not None:
+        cols.append(pa.array(files, type=pa.int32()))
+    if with_offset:
+        cols.append(pa.array(offsets, type=pa.int64()))
+    if fields is None:
+        cols.append(pa.array(tails, type=pa.binary()))
+    else:
+        layout_batch = decode_chunk(
+            bytes(prefixes), prefix_length, fields, 0, False, None,
+            layout_arrow, encoding=encoding,
+        )
+        cols.extend(layout_batch.columns)
+        if with_tail:
+            cols.append(pa.array(tails, type=pa.binary()))
+    return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+
 # ---------------------------------------------------------------------------
 # Encode (fixture generation + the fixedlen sink)
 

@@ -44,12 +44,11 @@ the fixedlen source.  Writer output is always uncompressed + indexed.
 
 from __future__ import annotations
 
-import codecs
-import glob as _glob
 import json
 import os
 import struct
 from dataclasses import dataclass
+from functools import partial
 from typing import Iterator
 
 import pyarrow as pa
@@ -61,7 +60,6 @@ from pyspark.sql.datasource import (
     DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 from pyspark.sql.types import (
     BinaryType,
@@ -70,15 +68,22 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hadoop_fixedlengthinputformat_spark.sources import fixedlen
 from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
     READ_CHUNK_TARGET,
     _codec_of,
     _codec_open_read,
+    _CommitMessage,
+    _clear_parts,
+    _part_paths,
+    _promote,
+    _remove_tmps,
+    _single_byte_encoding,
     _visible,
 )
 from hadoop_fixedlengthinputformat_spark.sources.layout import (
     FieldSpec,
-    decode_chunk,
+    decode_framed,
     encode_rows,
     layout_schema,
     parse_layout,
@@ -160,16 +165,9 @@ class _VOptions:
             raise ValueError(
                 f"varlen: tailColumn {tail_column!r} clashes with a layout field"
             )
-        enc_raw = options.get("encoding", "utf-8")
-        try:
-            info = codecs.lookup(enc_raw)
-            probe = "0A ".encode(info.name)  # single-byte charsets only
-        except LookupError:
-            raise ValueError(f"varlen: unknown encoding {enc_raw!r}")
-        if len(probe) != 3:
-            raise ValueError(
-                f"varlen: encoding {enc_raw!r} is not a single-byte charset"
-            )
+        encoding = _single_byte_encoding(
+            options.get("encoding", "utf-8"), "varlen"
+        )
         mpb = int(options.get("maxpartitionbytes", 128 * 1024 * 1024))
         index_every = int(options.get("indexevery", "4096"))
         if index_every < 0:
@@ -226,7 +224,7 @@ class _VOptions:
             )
         return cls(
             prefix_length, fields, with_offset, with_tail, tail_column,
-            info.name, mpb, index_every, recfm, block_size, segment_size,
+            encoding, mpb, index_every, recfm, block_size, segment_size,
         )
 
     def spark_schema(self) -> StructType:
@@ -253,6 +251,23 @@ class _VOptions:
 
         return to_arrow_schema(self.spark_schema())
 
+    def framed_batch(
+        self, offsets: list[int], prefixes: bytearray, tails: list[bytes]
+    ) -> pa.RecordBatch:
+        """The Arrow batch of the records a read loop collected."""
+        return decode_framed(
+            offsets, prefixes, tails,
+            prefix_length=self.prefix_length,
+            fields=self.fields,
+            layout_arrow=(
+                self.layout_arrow_schema() if self.fields is not None else None
+            ),
+            arrow_schema=self.arrow_schema(),
+            encoding=self.encoding,
+            with_offset=self.with_offset,
+            with_tail=self.with_tail,
+        )
+
 
 def _index_path(data_path: str) -> str:
     return data_path + _INDEX_SUFFIX
@@ -262,15 +277,9 @@ def _v_visible(p: str) -> bool:
     return _visible(p) and not p.endswith(_INDEX_SUFFIX)
 
 
-def _list_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        return sorted(filter(_v_visible, _glob.glob(os.path.join(path, "*"))))
-    elif os.path.isfile(path):
-        return [path]
-    names = sorted(filter(_v_visible, _glob.glob(path)))
-    if not names:
-        raise FileNotFoundError(f"varlen: no input files at {path!r}")
-    return names
+_list_files = partial(
+    fixedlen._list_files, visible=_v_visible, source="varlen"
+)
 
 
 class VarLenPartition(InputPartition):
@@ -832,35 +841,6 @@ class VarLenReader(DataSourceReader):
         if partition.end != _WHOLE_FILE and partition.end <= partition.start:
             return iter(())
 
-        full_schema = o.arrow_schema()
-        layout_schema_arrow = (
-            o.layout_arrow_schema() if o.fields is not None else None
-        )
-
-        def build_batch(
-            offsets: list[int], prefixes: bytearray, tails: list[bytes]
-        ) -> pa.RecordBatch:
-            cols: list[pa.Array] = []
-            if o.with_offset:
-                cols.append(pa.array(offsets, type=pa.int64()))
-            if o.fields is None:
-                cols.append(pa.array(tails, type=pa.binary()))
-            else:
-                layout_batch = decode_chunk(
-                    bytes(prefixes),
-                    o.prefix_length,
-                    o.fields,
-                    0,
-                    False,
-                    None,
-                    layout_schema_arrow,
-                    encoding=o.encoding,
-                )
-                cols.extend(layout_batch.columns)
-                if o.with_tail:
-                    cols.append(pa.array(tails, type=pa.binary()))
-            return pa.RecordBatch.from_arrays(cols, schema=full_schema)
-
         def gen():
             codec = _codec_of(partition.path)
             if codec:
@@ -886,11 +866,11 @@ class VarLenReader(DataSourceReader):
                         tails.append(payload[o.prefix_length :])
                     pending += RDW_LEN + len(payload)
                     if pending >= READ_CHUNK_TARGET:
-                        yield build_batch(offsets, prefixes, tails)
+                        yield o.framed_batch(offsets, prefixes, tails)
                         offsets, prefixes, tails = [], bytearray(), []
                         pending = 0
                 if offsets:
-                    yield build_batch(offsets, prefixes, tails)
+                    yield o.framed_batch(offsets, prefixes, tails)
             finally:
                 fobj.close()
 
@@ -965,20 +945,7 @@ class VarLenStreamReader(SimpleDataSourceStreamReader):
             else:
                 prefixes.extend(payload[: o.prefix_length])
                 tails.append(payload[o.prefix_length :])
-        cols: list[pa.Array] = []
-        if o.with_offset:
-            cols.append(pa.array(offsets, type=pa.int64()))
-        if o.fields is None:
-            cols.append(pa.array(tails, type=pa.binary()))
-        else:
-            layout_batch = decode_chunk(
-                bytes(prefixes), o.prefix_length, o.fields, 0, False, None,
-                o.layout_arrow_schema(), encoding=o.encoding,
-            )
-            cols.extend(layout_batch.columns)
-            if o.with_tail:
-                cols.append(pa.array(tails, type=pa.binary()))
-        batch = pa.RecordBatch.from_arrays(cols, schema=o.arrow_schema())
+        batch = o.framed_batch(offsets, prefixes, tails)
         return [tuple(r.values()) for r in batch.to_pylist()], pos
 
     def read(self, start: dict):
@@ -1345,22 +1312,13 @@ class VarLenDirectoryStreamReader(DataSourceStreamReader):
         pass
 
 
-class _VCommitMessage(WriterCommitMessage):
-    def __init__(self, outputs: list[tuple[str, str, str | None, str | None]],
-                 n_records: int):
-        self.outputs = outputs  # (tmp, final, idx_tmp, idx_final)
-        self.n_records = n_records
-
-
 class VarLenWriter(DataSourceWriter):
     """One ``.rdw`` part file per input partition plus (when
     ``indexEvery`` > 0) the record-index sidecar that makes the output
     splittable — the property foreign V-format files lack.
 
     ``stream_mode`` (set by :class:`VarLenStreamWriter`) defers final
-    naming to commit time: parts encode into hidden attempt-unique
-    tmps and the commit message carries the partition id so the
-    streaming sink can promote them to batch-id-keyed names."""
+    naming to commit time (see ``fixedlen._part_paths``)."""
 
     WRITE_BATCH_ROWS = 10_000
 
@@ -1374,23 +1332,10 @@ class VarLenWriter(DataSourceWriter):
 
         self.token = uuid.uuid4().hex[:10]
 
-    def write(self, iterator) -> _VCommitMessage:
-        from pyspark import TaskContext
-
+    def write(self, iterator) -> _CommitMessage:
         os.makedirs(self.path, exist_ok=True)
-        ctx = TaskContext.get()
         o = self.opts
-        if self.stream_mode:
-            final = None
-            tmp = os.path.join(
-                self.path,
-                f".tmp-stream-{self.token}-{ctx.taskAttemptId()}",
-            )
-        else:
-            final = os.path.join(
-                self.path, f"part-{ctx.partitionId():05d}-{self.token}.rdw"
-            )
-            tmp = f"{final}.tmp-{ctx.taskAttemptId()}"
+        tmp, final = _part_paths(self.path, ".rdw", self.token, self.stream_mode)
         index: list[int] = []
         n = 0
         written = 0
@@ -1616,11 +1561,7 @@ class VarLenWriter(DataSourceWriter):
 
         idx_tmp = idx_final = None
         if o.index_every:
-            if self.stream_mode:
-                idx_tmp = f"{tmp}.idx"  # final name chosen at commit
-            else:
-                idx_final = _index_path(final)
-                idx_tmp = f"{idx_final}.tmp-{ctx.taskAttemptId()}"
+            idx_tmp, idx_final = _index_path(tmp), _index_path(final)
             with open(idx_tmp, "w") as f:
                 json.dump(
                     {
@@ -1633,78 +1574,39 @@ class VarLenWriter(DataSourceWriter):
                     },
                     f,
                 )
-        msg = _VCommitMessage([(tmp, final, idx_tmp, idx_final)], n)
-        msg.partition_id = ctx.partitionId()
-        return msg
+        return _CommitMessage([(tmp, final, idx_tmp, idx_final)])
 
     def commit(self, messages):
-        if self.overwrite and os.path.isdir(self.path):
-            for fn in os.listdir(self.path):
-                if (
-                    fn.startswith("part-")
-                    and (fn.endswith(".rdw") or fn.endswith(".rdw" + _INDEX_SUFFIX))
-                    and f"-{self.token}." not in fn
-                ):
-                    os.remove(os.path.join(self.path, fn))
-        for m in messages:
-            if m is not None:
-                for tmp, final, idx_tmp, idx_final in m.outputs:
-                    os.replace(tmp, final)
-                    if idx_tmp is not None:
-                        os.replace(idx_tmp, idx_final)
+        if self.overwrite:
+            _clear_parts(
+                self.path, self.token, (".rdw", ".rdw" + _INDEX_SUFFIX),
+                recursive=False,
+            )
+        _promote(messages)
 
     def abort(self, messages):
-        for m in messages:
-            if m is not None:
-                for tmp, _final, idx_tmp, _idx_final in m.outputs:
-                    for p in (tmp, idx_tmp):
-                        if p and os.path.exists(p):
-                            os.remove(p)
+        _remove_tmps(messages)
 
 
 class VarLenStreamWriter(DataSourceStreamWriter):
-    """Streaming RDW/variable-length SINK, completing the varlen source
-    matrix (batch read/write + stream read already exist) and mirroring
-    ``FixedLengthStreamWriter``'s idempotent-replay contract: tasks
-    encode into hidden attempt-unique tmps (all recfm variants + the
-    splittability index sidecar, via the batch writer in
-    ``stream_mode``); ``commit(messages, batchId)`` promotes them to
-    BATCH-ID-KEYED final names (``batch-{id}-part-{p}.rdw``), so a
-    replayed micro-batch after a crash overwrites its own files instead
-    of duplicating records — exactly-once on top of the checkpoint's
-    batch-id replay.  Local-FS rename here; on a cluster the same
-    protocol runs against a shared store (same assumption as the batch
-    writer)."""
+    """Streaming RDW/variable-length SINK: the batch writer in
+    ``stream_mode`` (every recfm variant and the splittability index
+    sidecar), committed by the sink protocol the three fixed-width
+    sources share (``fixedlen._promote`` with the micro-batch id, so
+    parts land as ``batch-{id}-part-{p}.rdw``)."""
 
     def __init__(self, opts: _VOptions, path: str):
         self._inner = VarLenWriter(opts, path, overwrite=False)
         self._inner.stream_mode = True
-        self.path = path
 
-    def write(self, iterator) -> _VCommitMessage:
+    def write(self, iterator) -> _CommitMessage:
         return self._inner.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for tmp, _final, idx_tmp, _idx_final in m.outputs:
-                final = os.path.join(
-                    self.path,
-                    f"batch-{batchId:08d}-part-{m.partition_id:05d}.rdw",
-                )
-                os.replace(tmp, final)
-                if idx_tmp is not None:
-                    os.replace(idx_tmp, _index_path(final))
+        _promote(messages, batchId)
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for tmp, _final, idx_tmp, _idx_final in m.outputs:
-                for p in (tmp, idx_tmp):
-                    if p and os.path.exists(p):
-                        os.remove(p)
+        _remove_tmps(messages)
 
 
 class VarLenDataSource(DataSource):

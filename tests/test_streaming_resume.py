@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def _write_chunk(spark, d, lo, hi):
@@ -185,6 +186,91 @@ def test_stream_awstape_sink_restart_is_idempotent(spark, tmp_path):
     _sink_restart_roundtrip(
         spark, tmp_path, "awstape", {"chunkSize": "64"}
     )
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["lineSep", "compression", "statsSidecar", "partitionBy", "raw"],
+)
+def test_stream_fixedlen_sink_honors_write_options(spark, tmp_path, case):
+    """The fixedlen streaming sink runs the batch writer, so every write
+    option the batch sink accepts reaches the streamed part files: line
+    terminators, codecs, stats sidecars, hive partition directories and
+    raw ``value`` rows.  Each case reads back the source rows with the
+    same options it wrote with."""
+    from hadoop_fixedlengthinputformat_spark.sources import fixedlen
+
+    fixedlen.register(spark)
+    src = str(tmp_path / "src")
+    (
+        spark.range(20)
+        .select(F.col("id").alias("k"), (F.col("id") % 2).alias("g"))
+        .coalesce(1)
+        .write.parquet(src)
+    )
+    out = str(tmp_path / "out")
+    opts = {"recordLength": "6", "layout": "k:0:6:long"}
+    cols = [F.col("k")]
+    want = {(i,) for i in range(20)}
+    if case == "lineSep":
+        opts["lineSep"] = "\n"
+    elif case == "compression":
+        opts["compression"] = "gzip"
+    elif case == "statsSidecar":
+        opts["statsSidecar"] = "true"
+    elif case == "partitionBy":
+        opts["partitionBy"] = "g"
+        cols.append(F.col("g"))
+        want = {(i, str(i % 2)) for i in range(20)}
+    else:
+        del opts["layout"]
+        cols = [F.format_string("%06d", "k").cast("binary").alias("value")]
+        want = {(f"{i:06d}".encode(),) for i in range(20)}
+
+    w = (
+        spark.readStream.schema("k long, g long").parquet(src)
+        .select(*cols)
+        .writeStream.format("fixedlen")
+    )
+    for k, v in opts.items():
+        w = w.option(k, v)
+    q = (
+        w.option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start(out)
+    )
+    q.awaitTermination()
+
+    r = spark.read.format("fixedlen").option("includeOffset", "false")
+    for k, v in opts.items():
+        r = r.option(k, v)
+    got = [
+        tuple(bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in row)
+        for row in r.load(out).collect()
+    ]
+    assert sorted(got) == sorted(want)
+
+    parts = [
+        os.path.join(root, fn)
+        for root, _dirs, files in os.walk(out)
+        for fn in files
+        if fn.startswith("batch-") and ".stats." not in fn
+    ]
+    assert parts
+    if case == "lineSep":
+        assert sum(os.path.getsize(p) for p in parts) == 20 * 7
+    elif case == "compression":
+        assert all(p.endswith(".fixed.gz") for p in parts), parts
+    elif case == "statsSidecar":
+        assert all(os.path.exists(p + ".stats.json") for p in parts), parts
+    elif case == "partitionBy":
+        assert sorted(
+            d for d in os.listdir(out) if not d.startswith((".", "_"))
+        ) == ["g=0", "g=1"]
+        assert all(
+            os.path.basename(os.path.dirname(p)) in ("g=0", "g=1")
+            for p in parts
+        ), parts
 
 
 def _write_event_chunk(spark, d, lo, hi):
