@@ -18,8 +18,8 @@ stdout line is now CAPPED — metric/value/unit/queries/sf/cpus plus a
 few scalar factors, compact separators, asserted < 1900 chars — and
 every per-query diagnostic dict (normalized values, vs-baseline
 ratios, the gated/strict gate dicts, probe brackets) moves to a
-sidecar written next to this file (BENCH_DETAIL.json, override with
-$BENCH_DETAIL_PATH) and is also echoed to stderr.  Nothing about the
+sidecar written next to this file (BENCH_DETAIL_c{cpus}.json, override
+with $BENCH_DETAIL_PATH) and is also echoed to stderr.  Nothing about the
 timed region, the normalization, or the gate FORMULA changed — the
 same numbers are computed, they just live in the sidecar.
 
@@ -272,6 +272,17 @@ SF1_BASELINES: dict[str, tuple[float, float]] = {
     "pipeline_corpus_release": (7.932, 1.192),
     "stream_custom_stateful": (4.979, 1.192),
 }
+
+
+def detail_path(cpus: int) -> str:
+    """The sidecar path: $BENCH_DETAIL_PATH, else BENCH_DETAIL_c{cpus}.json
+    next to this file, so runs at different core counts keep their own
+    record."""
+    return os.environ.get(
+        "BENCH_DETAIL_PATH",
+        os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                     f"BENCH_DETAIL_c{cpus}.json"),
+    )
 
 
 def force(df) -> None:
@@ -574,12 +585,8 @@ def main() -> None:
     }
     if sf1_block:
         line_obj["sf1_total_median_sec"] = sf1_block["total_median_sec"]
-    detail_path = os.environ.get(
-        "BENCH_DETAIL_PATH",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "BENCH_DETAIL.json"),
-    )
-    line_obj["detail_file"] = os.path.basename(detail_path)
+    detail_file = detail_path(CPUS)
+    line_obj["detail_file"] = os.path.basename(detail_file)
     detail = dict(line_obj)
     detail.update(
         {
@@ -613,7 +620,7 @@ def main() -> None:
     )
     if sf1_block:
         detail["sf1"] = sf1_block
-    with open(detail_path, "w") as f:
+    with open(detail_file, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=False)
     print("# detail: " + json.dumps(detail, separators=(",", ":")),
           file=sys.stderr)

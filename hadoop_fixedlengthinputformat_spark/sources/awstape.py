@@ -96,7 +96,7 @@ from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
 from hadoop_fixedlengthinputformat_spark.sources.layout import (
     FieldSpec,
     decode_framed,
-    encode_rows,
+    encode_framed,
     layout_schema,
     parse_layout,
 )
@@ -829,23 +829,14 @@ class AwsTapeWriter(DataSourceWriter):
                     break
 
         def payload_bytes(row) -> bytes:
-            if o.fields is None:
-                return bytes(row["value"])
-            d = row.asDict()
             if o.recfm == "F":
-                return encode_rows(
-                    [d], o.fields, o.record_length, encoding=o.encoding
+                return encode_framed(
+                    row, o.fields, o.record_length, encoding=o.encoding,
+                    tail_column=None,
                 )
-            tail = d.get(o.tail_column) if o.with_tail else b""
-            if tail is None:
-                tail = b""
-            elif isinstance(tail, str):
-                tail = tail.encode("utf-8")
-            else:
-                tail = bytes(tail)
-            return (
-                encode_rows([d], o.fields, o.prefix_length, encoding=o.encoding)
-                + tail
+            return encode_framed(
+                row, o.fields, o.prefix_length, encoding=o.encoding,
+                tail_column=o.tail_column if o.with_tail else None,
             )
 
         def tapemark() -> None:

@@ -1430,6 +1430,7 @@ class FixedLengthWriter(DataSourceWriter):
                 )
                 s["batch"] = []
 
+        outputs: list[tuple[str, str, str | None, str | None]] = []
         try:
             if o.fields is None:
                 s = sink_for(())
@@ -1468,20 +1469,23 @@ class FixedLengthWriter(DataSourceWriter):
                         pending = 0
                 for s2 in sinks.values():
                     flush(s2)
+            for s2 in sinks.values():
+                stats_tmp = stats_final = None
+                if s2["coll"] is not None:
+                    stats_final = stats.sidecar_path(s2["final"])
+                    stats_tmp = stats.sidecar_path(s2["tmp"])
+                    stats.write_sidecar(stats_tmp, s2["coll"].payload())
+                outputs.append((s2["tmp"], s2["final"], stats_tmp, stats_final))
         finally:
             for s2 in sinks.values():
                 s2["f"].close()
                 if s2["raw"] is not s2["f"]:
                     s2["raw"].close()
-
-        outputs: list[tuple[str, str, str | None, str | None]] = []
-        for s2 in sinks.values():
-            stats_tmp = stats_final = None
-            if s2["coll"] is not None:
-                stats_final = stats.sidecar_path(s2["final"])
-                stats_tmp = stats.sidecar_path(s2["tmp"])
-                stats.write_sidecar(stats_tmp, s2["coll"].payload())
-            outputs.append((s2["tmp"], s2["final"], stats_tmp, stats_final))
+            if len(outputs) < len(sinks):  # a failed task leaves no tmp
+                _remove_tmps([_CommitMessage([
+                    (s2["tmp"], s2["final"], stats.sidecar_path(s2["tmp"]), None)
+                    for s2 in sinks.values()
+                ])])
         return _CommitMessage(outputs)
 
     def commit(self, messages):

@@ -712,6 +712,30 @@ def decode_framed(
     return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
+def encode_framed(
+    row,
+    fields: list[FieldSpec] | None,
+    prefix_length: int,
+    *,
+    encoding: str,
+    tail_column: str | None,
+) -> bytes:
+    """One record's payload for a framed sink (varlen, awstape), the
+    inverse of :func:`decode_framed`: the raw ``value`` column with no
+    layout, else the encoded prefix followed by ``tail_column`` (None:
+    no tail; a NULL tail is empty, a string tail is UTF-8)."""
+    if fields is None:
+        return bytes(row["value"])
+    d = row.asDict()
+    prefix = encode_rows([d], fields, prefix_length, encoding=encoding)
+    tail = d.get(tail_column) if tail_column is not None else None
+    if tail is None:
+        return prefix
+    if isinstance(tail, str):
+        return prefix + tail.encode("utf-8")
+    return prefix + bytes(tail)
+
+
 # ---------------------------------------------------------------------------
 # Encode (fixture generation + the fixedlen sink)
 

@@ -12,10 +12,14 @@ packed into BDW blocks), ``VS`` (spanned: logical records split into
 SDW segments, codes 1/3/2 = first/middle/last), ``VBS`` (spanned +
 blocked — segments fill blocks exactly and a record continues across
 blocks, so logical records have NO size ceiling: neither the 16-bit
-descriptor limit nor the block size), and ``D`` (ANSI/ISO interchange
+descriptor limit nor the block size), ``D`` (ANSI/ISO interchange
 variable-length: a 4-byte count field of decimal ASCII digits,
-X3.27's sibling of the RDW, 9999-byte ceiling).  This module closes that family
-gap with the same engine contract as ``fixedlen``:
+X3.27's sibling of the RDW, 9999-byte ceiling) and ``DB`` (D records
+packed into blocks behind a 4-digit decimal block prefix).  Each RECFM
+is one entry of the ``_RECFMS`` framing table, from which the reader,
+the tail reader, ``build_index``, the writer and the option bounds all
+derive.  This module closes that family gap with the same engine
+contract as ``fixedlen``:
 
   * a typed ``layout`` decodes the fixed PREFIX every record must carry
     (the COBOL fixed part before any OCCURS DEPENDING ON tail), reusing
@@ -84,15 +88,16 @@ from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
 from hadoop_fixedlengthinputformat_spark.sources.layout import (
     FieldSpec,
     decode_framed,
-    encode_rows,
+    encode_framed,
     layout_schema,
     parse_layout,
 )
 
-RDW_LEN = 4
-BDW_LEN = 4  # RECFM=VB Block Descriptor Word: >H block total incl. BDW, >H zero
+WORD_LEN = 4  # every descriptor word: RDW/SDW/BDW, ANSI count or block prefix
+_HBB = struct.Struct(">HBB")
 _MAX_RECORD = 0xFFFF  # RDW length field is an unsigned 16-bit total
 _MAX_D_RECORD = 9999  # ANSI D count field is 4 decimal ASCII digits
+_WRITE_BATCH_BYTES = 1 << 22  # sink bytes gathered per write
 _WHOLE_FILE = -1  # partition.end sentinel: compressed stream, read to EOF
 _INDEX_SUFFIX = ".rdx.json"
 
@@ -107,9 +112,13 @@ class _VOptions:
     encoding: str
     max_partition_bytes: int
     index_every: int  # writer sidecar stride; 0 disables
-    recfm: str  # "V" | "VB" | "VS" | "VBS" | "D" (ANSI) | "DB" (blocked D)
-    block_size: int  # VB(S) writer target block bytes (incl. the 4-byte BDW)
+    recfm: str  # a key of _RECFMS
+    block_size: int  # blocked writer target block bytes (incl. block word)
     segment_size: int = _MAX_RECORD  # VS/VBS max segment bytes incl. SDW
+
+    @property
+    def framing(self) -> "_Framing":
+        return _RECFMS[self.recfm]
 
     @classmethod
     def parse(cls, options) -> "_VOptions":
@@ -129,6 +138,14 @@ class _VOptions:
 
             layout_raw, cpy_pl = copybook_to_layout(cpy_raw)
             options.setdefault("prefixlength", str(cpy_pl))
+        recfm = options.get("recfm", "v").upper()
+        framing = _RECFMS.get(recfm)
+        if framing is None:
+            raise ValueError(
+                f"varlen: recfm must be one of {', '.join(_RECFMS)}, "
+                f"got {recfm!r}"
+            )
+        rw, bw = framing.record_word, framing.block_word
         fields = None
         prefix_length = 0
         if layout_raw is None and options.get("prefixlength") is not None:
@@ -152,10 +169,10 @@ class _VOptions:
                 raise ValueError(
                     f"varlen: prefixLength must be > 0, got {prefix_length}"
                 )
-            if RDW_LEN + prefix_length > _MAX_RECORD:
+            if WORD_LEN + prefix_length > rw.ceiling:
                 raise ValueError(
                     f"varlen: prefixLength {prefix_length} cannot fit a "
-                    f"{_MAX_RECORD}-byte RDW record"
+                    f"{rw.ceiling}-byte RECFM={recfm} record"
                 )
             fields = parse_layout(layout_raw, prefix_length)
         with_offset = options.get("includeoffset", "true").lower() == "true"
@@ -172,55 +189,22 @@ class _VOptions:
         index_every = int(options.get("indexevery", "4096"))
         if index_every < 0:
             raise ValueError("varlen: indexEvery must be >= 0 (0 disables)")
-        recfm = options.get("recfm", "v").upper()
-        if recfm not in ("V", "VB", "VS", "VBS", "D", "DB"):
-            raise ValueError(
-                f"varlen: recfm must be one of V, VB, VS, VBS, D, DB, "
-                f"got {recfm!r}"
-            )
-        if recfm in ("D", "DB") and RDW_LEN + prefix_length > _MAX_D_RECORD:
-            raise ValueError(
-                f"varlen: prefixLength {prefix_length} cannot fit a "
-                f"{_MAX_D_RECORD}-byte ANSI D record"
-            )
-        # classic max BLKSIZE; ANSI DB defaults to the historical 2048
-        # (its 4-digit decimal prefix caps any block at 9999 anyway)
         block_size = int(
-            options.get("blocksize", "2048" if recfm == "DB" else "32760")
+            options.get("blocksize", str(framing.default_block_size))
         )
-        if recfm == "VB" and not (
-            BDW_LEN + RDW_LEN + prefix_length <= block_size <= _MAX_RECORD
-        ):
-            raise ValueError(
-                f"varlen: blockSize {block_size} must fit one minimal record "
-                f"({BDW_LEN + RDW_LEN + prefix_length}..{_MAX_RECORD})"
-            )
-        if recfm == "DB" and not (
-            RDW_LEN + RDW_LEN + prefix_length <= block_size <= _MAX_D_RECORD
-        ):
-            # ANSI blocked D: 4-digit decimal block prefix (buffer
-            # offset, BUFOFF=L form) caps the whole block at 9999 bytes
+        # a block must fit one minimal frame: a whole record, or one
+        # data byte of a spanned segment
+        lo = 2 * WORD_LEN + (1 if framing.spanned else prefix_length)
+        if bw is not None and not lo <= block_size <= bw.ceiling:
             raise ValueError(
                 f"varlen: blockSize {block_size} must fit one minimal "
-                f"ANSI DB record "
-                f"({RDW_LEN + RDW_LEN + prefix_length}..{_MAX_D_RECORD})"
+                f"RECFM={recfm} frame ({lo}..{bw.ceiling})"
             )
-        if recfm == "VBS" and not (
-            BDW_LEN + RDW_LEN + 1 <= block_size <= _MAX_RECORD
-        ):
-            # spanned blocks only need room for one minimal SEGMENT —
-            # records larger than a block are the point of VBS
-            raise ValueError(
-                f"varlen: blockSize {block_size} must fit one minimal "
-                f"segment ({BDW_LEN + RDW_LEN + 1}..{_MAX_RECORD})"
-            )
-        segment_size = int(options.get("segmentsize", str(_MAX_RECORD)))
-        if recfm in ("VS", "VBS") and not (
-            RDW_LEN + 1 <= segment_size <= _MAX_RECORD
-        ):
+        segment_size = int(options.get("segmentsize", str(rw.ceiling)))
+        if framing.spanned and not WORD_LEN + 1 <= segment_size <= rw.ceiling:
             raise ValueError(
                 f"varlen: segmentSize {segment_size} must be in "
-                f"{RDW_LEN + 1}..{_MAX_RECORD} (SDW + at least 1 data byte)"
+                f"{WORD_LEN + 1}..{rw.ceiling} (SDW + at least 1 data byte)"
             )
         return cls(
             prefix_length, fields, with_offset, with_tail, tail_column,
@@ -266,6 +250,13 @@ class _VOptions:
             encoding=self.encoding,
             with_offset=self.with_offset,
             with_tail=self.with_tail,
+        )
+
+    def framed_payload(self, row) -> bytes:
+        """One row's record payload for the sink."""
+        return encode_framed(
+            row, self.fields, self.prefix_length, encoding=self.encoding,
+            tail_column=self.tail_column if self.with_tail else None,
         )
 
 
@@ -320,116 +311,43 @@ def _plan_file(path: str, opts: _VOptions) -> list[VarLenPartition]:
     return parts
 
 
-def _iter_segments(
-    fobj, start: int, end: int | None, path: str,
-    stop_on_partial: bool = False, spanned: bool = False,
-) -> Iterator[tuple[int, int, bytes]]:
-    """Walk descriptor-word frames from ``start``; yield
-    ``(offset, segment_code, payload bytes)``.
+@dataclass(frozen=True)
+class _Word:
+    """A 4-byte descriptor word whose length counts the word itself:
+    binary ``>HBB`` (length, segment-control code, reserved zero byte)
+    with a 0xFFFF ceiling, or ANSI's 4 decimal ASCII digits with a 9999
+    ceiling (X3.27's sibling of the RDW)."""
 
-    Each frame is 4 bytes: ``>H`` total length including the word, one
-    segment-control byte (0 complete / 1 first / 2 last / 3 middle),
-    one reserved zero byte.  With ``spanned=False`` any nonzero segment
-    code raises (plain RECFM=V framing, where the word is the RDW);
-    with ``spanned=True`` codes 0-3 pass through for assembly
-    (RECFM=VS, where it is the SDW).  ``end`` is an exclusive byte
-    bound that MUST be a frame start; ``None`` reads to EOF (compressed
-    streams).  ``stop_on_partial`` turns EOF-truncation errors into a
-    clean stop — the tailing-stream case, where a half-written frame at
-    EOF is growth in flight, not corruption.
-    """
-    buf = bytearray()
-    pos = start
-    eof = False
+    name: str  # as error messages call it
+    decimal: bool
 
-    def fill(want: int) -> None:
-        nonlocal eof
-        while not eof and len(buf) < want:
-            got = fobj.read(max(1 << 22, want - len(buf)))
-            if not got:
-                eof = True
-            else:
-                buf.extend(got)
+    @property
+    def ceiling(self) -> int:
+        return _MAX_D_RECORD if self.decimal else _MAX_RECORD
 
-    cur = 0
-    while True:
-        if end is not None and pos >= end:
-            return
-        if len(buf) - cur < RDW_LEN:
-            del buf[:cur]
-            cur = 0
-            fill(RDW_LEN)
-            if len(buf) == 0:
-                if end is not None and pos < end:
-                    raise IOError(
-                        f"varlen: {path!r} ends at {pos} before the planned "
-                        f"partition bound {end} (stale index sidecar?)"
-                    )
-                return
-            if len(buf) < RDW_LEN:
-                if stop_on_partial:
-                    return
-                raise IOError(
-                    f"varlen: {path!r} ends mid-RDW at offset {pos} "
-                    f"({len(buf)} trailing bytes)"
+    def pack(self, total: int, code: int = 0) -> bytes:
+        if self.decimal:
+            return b"%04d" % total
+        return _HBB.pack(total, code, 0)
+
+    def unpack(self, buf, cur: int, pos: int, path: str) -> tuple[int, int]:
+        """``(total, segment code)`` of the word at ``buf[cur:]``, which
+        sits at file offset ``pos``."""
+        if self.decimal:
+            hdr = bytes(buf[cur : cur + WORD_LEN])
+            if not hdr.isdigit():
+                raise ValueError(
+                    f"varlen: ANSI {self.name} at offset {pos} in {path!r} "
+                    f"is not 4 decimal digits ({hdr!r})"
                 )
-        total, code, reserved = struct.unpack_from(">HBB", buf, cur)
+            return int(hdr), 0
+        total, code, reserved = _HBB.unpack_from(buf, cur)
         if reserved != 0:
             raise ValueError(
-                f"varlen: nonzero RDW reserved byte at offset {pos} "
+                f"varlen: nonzero {self.name} reserved byte at offset {pos} "
                 f"in {path!r}"
             )
-        if code != 0 and not spanned:
-            raise ValueError(
-                f"varlen: segment-control code {code} at offset {pos} in "
-                f"{path!r} — a spanned file must be read with recfm='VS' "
-                "(or 'VBS' if blocked)"
-            )
-        if code > 3:
-            raise ValueError(
-                f"varlen: invalid segment-control code {code} at offset "
-                f"{pos} in {path!r}"
-            )
-        if total < RDW_LEN:
-            raise ValueError(
-                f"varlen: frame at offset {pos} in {path!r} is {total} "
-                f"bytes total, shorter than its descriptor word"
-            )
-        if len(buf) - cur < total:
-            del buf[:cur]
-            cur = 0
-            fill(total)
-            if len(buf) < total:
-                if stop_on_partial:
-                    return
-                raise IOError(
-                    f"varlen: {path!r} ends mid-record at offset {pos} "
-                    f"(RDW claims {total} bytes, {len(buf)} available)"
-                )
-        yield pos, code, bytes(buf[cur + RDW_LEN : cur + total])
-        cur += total
-        pos += total
-
-
-def _iter_records(
-    fobj, start: int, end: int | None, prefix_min: int, path: str,
-    stop_on_partial: bool = False,
-) -> Iterator[tuple[int, bytes, int]]:
-    """Walk plain RDW records from ``start``; yield
-    ``(offset, payload bytes, resume_pos)`` where ``resume_pos`` is the
-    byte position after the record — always a safe re-entry point in an
-    unblocked stream.  Validation mirrors the fixedlen contract: a
-    record too short for the declared prefix raises."""
-    for pos, _code, payload in _iter_segments(
-        fobj, start, end, path, stop_on_partial, spanned=False
-    ):
-        total = RDW_LEN + len(payload)
-        if len(payload) < prefix_min:
-            raise ValueError(
-                f"varlen: record at offset {pos} in {path!r} is {total} bytes "
-                f"total, shorter than RDW+prefix ({RDW_LEN + prefix_min})"
-            )
-        yield pos, payload, pos + total
+        return total, code
 
 
 # Guard for assembled spanned records: a corrupt stream that never
@@ -454,7 +372,7 @@ class _SegmentAssembler:
     def idle(self) -> bool:
         return self.first_off is None
 
-    def _finish(self, pos: int) -> tuple[int, bytes]:
+    def _finish(self) -> tuple[int, bytes]:
         payload = b"".join(self.parts)
         first = self.first_off
         self.first_off, self.parts, self.size = None, [], 0
@@ -476,11 +394,8 @@ class _SegmentAssembler:
                     f"{self.path!r} while the record starting at "
                     f"{self.first_off} is still open"
                 )
-            if code == 0:
-                self.first_off, self.parts, self.size = pos, [payload], len(payload)
-                return self._finish(pos)
             self.first_off, self.parts, self.size = pos, [payload], len(payload)
-            return None
+            return self._finish() if code == 0 else None
         # 2 = last, 3 = middle
         if self.idle:
             raise ValueError(
@@ -494,334 +409,310 @@ class _SegmentAssembler:
                 f"varlen: spanned record starting at {self.first_off} in "
                 f"{self.path!r} exceeds {_MAX_ASSEMBLED} assembled bytes"
             )
-        if code == 2:
-            return self._finish(pos)
-        return None
+        return self._finish() if code == 2 else None
 
 
-def _iter_records_vs(
-    fobj, start: int, end: int | None, prefix_min: int, path: str,
-    stop_on_partial: bool = False,
-) -> Iterator[tuple[int, bytes, int]]:
-    """Walk RECFM=VS spanned records: SDW segments assemble into logical
-    records; yield ``(first_segment_offset, assembled_payload,
-    resume_pos)``.  ``resume_pos`` (position after the record's last
-    segment) is always a safe re-entry point in an unblocked spanned
-    stream.  ``stop_on_partial`` leaves a record whose last segment has
-    not arrived unread (whole-RECORD admission for tailing streams); a
-    mid-record end-of-data with a bound is a stale sidecar and raises."""
-    asm = _SegmentAssembler(path, prefix_min)
-    for pos, code, payload in _iter_segments(
-        fobj, start, end, path, stop_on_partial, spanned=True
-    ):
-        done = asm.feed(pos, code, payload)
-        if done is not None:
-            first, rec = done
-            yield first, rec, pos + RDW_LEN + len(payload)
-    if not asm.idle and not stop_on_partial:
-        raise IOError(
-            f"varlen: {path!r} ends mid-spanned-record (first segment at "
-            f"offset {asm.first_off}, no last segment)"
-        )
+@dataclass(frozen=True)
+class _Framing:
+    """How one RECFM frames its records — the only thing a recfm name
+    chooses.  Records (or, when ``spanned``, SDW segments with codes
+    0 complete / 1 first / 3 middle / 2 last) are framed by
+    ``record_word``; ``block_word`` optionally packs frames into blocks
+    that frames tile exactly.
 
+    A safe re-entry point — a stream resume offset, a sidecar split
+    point — is a unit start (a block start in blocked formats, a frame
+    start otherwise) where no spanned record is open."""
 
-def _read_exact(fobj, want: int) -> bytes:
-    """Read exactly ``want`` bytes unless EOF intervenes (codec streams
-    return short reads)."""
-    parts: list[bytes] = []
-    got = 0
-    while got < want:
-        chunk = fobj.read(want - got)
-        if not chunk:
-            break
-        parts.append(chunk)
-        got += len(chunk)
-    return b"".join(parts)
+    record_word: _Word
+    block_word: _Word | None = None
+    spanned: bool = False
+    default_block_size: int = 32760  # classic max BLKSIZE
 
+    def walk(
+        self,
+        fobj,
+        start: int,
+        end: int | None,
+        prefix_min: int,
+        path: str,
+        stop_on_partial: bool = False,
+        max_bytes: int | None = None,
+        headers_only: bool = False,
+    ) -> Iterator[tuple[int, bytes, int]]:
+        """Walk block → frame → (spanned) assembly from ``start``; yield
+        ``(offset, payload, resume)`` per logical record.  ``offset`` is
+        the record's (first) frame word; ``resume`` is the safe re-entry
+        point right after the record — its own end when unblocked, the
+        block end when it closes its block — or ``-1`` when the point
+        after it is not safe (mid-block, where a resume would misparse
+        record bytes as a block word).
 
-def _iter_records_vb(
-    fobj, start: int, end: int | None, prefix_min: int, path: str,
-    stop_on_partial: bool = False, max_bytes: int | None = None,
-) -> Iterator[tuple[int, bytes, int]]:
-    """Walk RECFM=VB blocks from ``start``: each block is a 4-byte BDW
-    (big-endian total incl. the BDW, 2 zero bytes) wrapping RDW records
-    that must tile the block exactly — a record may NOT span blocks
-    (that would be VBS, rejected like VS).  Yields (absolute RDW offset,
-    payload); each block body is validated by the plain-V record walk
-    bounded to the block span, so every RDW rule applies unchanged.
+        ``end`` is an exclusive bound that MUST be a safe re-entry point
+        (sidecar offsets); ``None`` reads to EOF (compressed streams).
+        ``max_bytes`` stops at the first safe re-entry point at or past
+        ``start + max_bytes``.  ``stop_on_partial`` turns a truncated
+        word, frame or block at EOF into a clean stop — the tailing
+        stream, where a half-written unit is growth in flight and an
+        open spanned record stays unread until its last segment lands;
+        inside a complete block a malformed frame is always corruption.
+        ``headers_only`` (``build_index``) yields empty payloads and
+        seeks past every unblocked payload its read-ahead does not hold.
+        A record shorter than ``prefix_min`` data bytes raises: the
+        fixedlen contract."""
+        rw, bw = self.record_word, self.block_word
+        asm = _SegmentAssembler(path, prefix_min) if self.spanned else None
+        floor = WORD_LEN if asm is not None else WORD_LEN + prefix_min
+        size = os.fstat(fobj.fileno()).st_size if headers_only else 0
+        chunk = 1 << 16 if headers_only else 1 << 22
+        buf = bytearray()
+        cur = 0
+        eof = False
+        pos = start
+        bend = None  # end of the block being walked
 
-    ``end`` must be a BLOCK start (sidecar offsets are block starts in
-    VB mode).  ``stop_on_partial`` stops cleanly at a half-written
-    BDW/block at EOF (whole-BLOCK admission for tailing streams);
-    inside a complete block a malformed RDW is always corruption and
-    raises.  ``max_bytes`` stops before opening a new block once the
-    consumed span reaches it — the resume offset is always a block
-    start, never mid-block (a mid-block resume would misparse record
-    bytes as a BDW).
-    """
-    import io
+        def fill(want: int) -> None:
+            nonlocal cur, eof
+            del buf[:cur]
+            cur = 0
+            while not eof and len(buf) < want:
+                got = fobj.read(max(chunk, want - len(buf)))
+                if got:
+                    buf.extend(got)
+                else:
+                    eof = True
 
-    pos = start
-    while True:
-        if end is not None and pos >= end:
-            return
-        hdr = _read_exact(fobj, BDW_LEN)
-        if not hdr:
-            if end is not None and pos < end:
-                raise IOError(
-                    f"varlen: {path!r} ends at {pos} before the planned "
-                    f"partition bound {end} (stale index sidecar?)"
+        while True:
+            if bend is None or pos == bend:  # a unit boundary
+                bend = None
+                idle = asm is None or asm.idle
+                if end is not None and pos >= end:
+                    if not idle:
+                        raise _open_record_error(path, pos, asm)
+                    return
+                if max_bytes is not None and pos - start >= max_bytes and idle:
+                    return
+                if len(buf) - cur < WORD_LEN:
+                    fill(WORD_LEN)
+                    if len(buf) < WORD_LEN:
+                        word = (bw or rw).name.replace(" ", "-")
+                        if buf and not stop_on_partial:
+                            raise IOError(
+                                f"varlen: {path!r} ends mid-{word} at offset "
+                                f"{pos} ({len(buf)} trailing bytes)"
+                            )
+                        if not buf and end is not None:
+                            raise IOError(
+                                f"varlen: {path!r} ends at {pos} before the "
+                                f"planned partition bound {end} (stale index "
+                                "sidecar?)"
+                            )
+                        if not (idle or stop_on_partial):
+                            raise _open_record_error(path, pos, asm)
+                        return
+                if bw is not None:
+                    btotal, code = bw.unpack(buf, cur, pos, path)
+                    if code != 0:
+                        raise ValueError(
+                            f"varlen: nonzero {bw.name} reserved bytes at "
+                            f"offset {pos} in {path!r}"
+                        )
+                    if btotal < 2 * WORD_LEN:
+                        raise ValueError(
+                            f"varlen: block at offset {pos} in {path!r} is "
+                            f"{btotal} bytes total, too short for one "
+                            f"{bw.name}+{rw.name} frame"
+                        )
+                    if len(buf) - cur < btotal:
+                        fill(btotal)
+                        if len(buf) < btotal:
+                            if stop_on_partial:
+                                return
+                            raise IOError(
+                                f"varlen: {path!r} ends mid-block at offset "
+                                f"{pos} ({bw.name} claims {btotal} bytes, "
+                                f"{len(buf)} available)"
+                            )
+                    bend = pos + btotal
+                    pos += WORD_LEN
+                    cur += WORD_LEN
+            if bend is not None and bend - pos < WORD_LEN:
+                raise ValueError(
+                    f"varlen: block ending at {bend} in {path!r} has "
+                    f"trailing bytes at offset {pos} that are not a frame"
                 )
-            return
-        if len(hdr) < BDW_LEN:
-            if stop_on_partial:
-                return
-            raise IOError(
-                f"varlen: {path!r} ends mid-BDW at offset {pos} "
-                f"({len(hdr)} trailing bytes)"
-            )
-        btotal, breserved = struct.unpack(">HH", hdr)
-        if breserved != 0:
-            raise ValueError(
-                f"varlen: nonzero BDW reserved bytes at offset {pos} in "
-                f"{path!r} — spanned blocks (RECFM=VBS) are not supported"
-            )
-        if btotal < BDW_LEN + RDW_LEN + prefix_min:
-            raise ValueError(
-                f"varlen: block at offset {pos} in {path!r} is {btotal} "
-                f"bytes total, too short for one BDW+RDW+prefix record"
-            )
-        body = _read_exact(fobj, btotal - BDW_LEN)
-        if len(body) < btotal - BDW_LEN:
-            if stop_on_partial:
-                return
-            raise IOError(
-                f"varlen: {path!r} ends mid-block at offset {pos} "
-                f"(BDW claims {btotal} bytes, {BDW_LEN + len(body)} available)"
-            )
-        yield from _iter_records(
-            io.BytesIO(body), pos + BDW_LEN, pos + btotal, prefix_min, path
-        )
-        pos += btotal
-        if max_bytes is not None and pos - start >= max_bytes:
-            return
-
-
-def _iter_records_vbs(
-    fobj, start: int, end: int | None, prefix_min: int, path: str,
-    stop_on_partial: bool = False, max_bytes: int | None = None,
-) -> Iterator[tuple[int, bytes, int]]:
-    """Walk RECFM=VBS: BDW blocks whose SDW segments assemble into
-    logical records that MAY span blocks — the full spanned-blocked
-    format (and the only one that admits logical records larger than a
-    block or the 16-bit descriptor limit).  Yields
-    ``(first_segment_offset, assembled_payload, resume_pos)`` where
-    ``resume_pos`` is the next BLOCK start when the record's last
-    segment closes its block (the only safe re-entry points — a
-    mid-block resume would misparse record bytes as a BDW, and a
-    between-blocks resume inside an open record would orphan its
-    continuation segments), else ``-1``.
-
-    ``end`` must be a safe block start (sidecar offsets).  ``max_bytes``
-    stops before opening a new block once the consumed span reaches it,
-    but never while a record is open across the boundary.
-    ``stop_on_partial`` stops cleanly at a half-written BDW/block at
-    EOF; the open record (if any) stays unread until its last segment
-    lands — whole-record admission carried to spanned blocks."""
-    import io
-
-    asm = _SegmentAssembler(path, prefix_min)
-    pos = start
-    while True:
-        if end is not None and pos >= end:
-            if not asm.idle:
-                raise IOError(
-                    f"varlen: {path!r} partition bound {end} falls inside "
-                    f"the spanned record starting at {asm.first_off} "
-                    "(stale index sidecar?)"
+            total, code = rw.unpack(buf, cur, pos, path)
+            if asm is None:
+                if code != 0:
+                    raise ValueError(
+                        f"varlen: segment-control code {code} at offset "
+                        f"{pos} in {path!r} — a spanned file must be read "
+                        "with recfm='VS' (or 'VBS' if blocked)"
+                    )
+            elif code > 3:
+                raise ValueError(
+                    f"varlen: invalid segment-control code {code} at offset "
+                    f"{pos} in {path!r}"
                 )
-            return
-        hdr = _read_exact(fobj, BDW_LEN)
-        if not hdr:
-            if end is not None and pos < end:
-                raise IOError(
-                    f"varlen: {path!r} ends at {pos} before the planned "
-                    f"partition bound {end} (stale index sidecar?)"
+            if total < floor:
+                raise ValueError(
+                    f"varlen: record at offset {pos} in {path!r} is {total} "
+                    f"bytes total, shorter than {rw.name}"
+                    f"{'' if asm is not None else '+prefix'} ({floor})"
                 )
-            if not asm.idle and not stop_on_partial:
-                raise IOError(
-                    f"varlen: {path!r} ends mid-spanned-record (first "
-                    f"segment at offset {asm.first_off}, no last segment)"
+            fend = pos + total
+            if bend is not None:
+                if fend > bend:
+                    raise ValueError(
+                        f"varlen: frame at offset {pos} in {path!r} "
+                        f"overruns its block (ends {fend}, block ends {bend})"
+                    )
+            elif len(buf) - cur < total:
+                if headers_only and fend <= size:
+                    # seek past the unbuffered payload; the next fill
+                    # (cur past the buffer's end) discards the buffer
+                    fobj.seek(fend)
+                else:
+                    fill(total)
+                    if len(buf) < total:
+                        if stop_on_partial:
+                            return
+                        raise IOError(
+                            f"varlen: {path!r} ends mid-record at offset "
+                            f"{pos} ({rw.name} claims {total} bytes, "
+                            f"{len(buf)} available)"
+                        )
+            payload = (
+                b"" if headers_only else bytes(buf[cur + WORD_LEN : cur + total])
+            )
+            cur += total
+            resume = fend if bend is None or fend == bend else -1
+            if asm is None:
+                yield pos, payload, resume
+            else:
+                done = asm.feed(pos, code, payload)
+                if done is not None:
+                    yield done[0], done[1], resume
+            pos = fend
+
+    def pack(
+        self,
+        f,
+        payloads: Iterator[bytes],
+        *,
+        block_size: int,
+        segment_size: int,
+        index_every: int,
+    ) -> tuple[list[int], int, int]:
+        """Write ``payloads`` to ``f``: frame each record, split it into
+        segments when spanned (a segment fills its block, so a VBS
+        record has no size ceiling), and fill blocks greedily up to
+        ``block_size`` bytes.  Returns ``(index, n_records, bytes)``;
+        ``index`` holds the unit start of every record that opens a unit
+        (a safe re-entry point) and crosses into a new ``index_every``
+        bucket — the offsets ``build_index`` finds on the same file."""
+        rw, bw = self.record_word, self.block_word
+        # unspanned records already fit their word's ceiling: never cut
+        seg_cap = segment_size - WORD_LEN if self.spanned else rw.ceiling
+        room = block_size - 2 * WORD_LEN  # frame payload bytes per empty block
+        out: list[bytes] = []
+        block = bytearray()
+        index: list[int] = []
+        last_bucket = -1
+        n = 0
+        written = flushed = 0
+
+        def emit(b: bytes) -> None:
+            nonlocal written, flushed
+            out.append(b)
+            written += len(b)
+            if written - flushed >= _WRITE_BATCH_BYTES:
+                f.write(b"".join(out))
+                out.clear()
+                flushed = written
+
+        def flush_block() -> None:
+            if block:
+                emit(bw.pack(WORD_LEN + len(block)) + block)
+                block.clear()
+
+        for payload in payloads:
+            if not self.spanned:
+                total = WORD_LEN + len(payload)
+                if total > rw.ceiling:
+                    limit = "ANSI D 4-digit count" if rw.decimal else "RDW 16-bit"
+                    raise ValueError(
+                        f"varlen: record of {total} bytes exceeds the {limit} "
+                        f"limit ({rw.ceiling}); write recfm='VS'/'VBS' to "
+                        "span it across segments"
+                    )
+                if bw is not None and total > room + WORD_LEN:
+                    raise ValueError(
+                        f"varlen: record of {total} bytes cannot fit a "
+                        f"{block_size}-byte block (records may not span "
+                        "blocks; raise blockSize)"
+                    )
+            view = memoryview(payload)
+            first = True
+            while True:
+                avail = room - len(block) if bw is not None else len(view)
+                if avail < (min(1, len(view)) if self.spanned else len(view)):
+                    flush_block()
+                    continue
+                if first and not block and index_every:
+                    bucket = n // index_every
+                    if bucket > last_bucket:
+                        index.append(written)
+                        last_bucket = bucket
+                take = min(len(view), avail, seg_cap)
+                chunk, view = view[:take], view[take:]
+                last = not view
+                code = (
+                    0 if first and last else 1 if first else 2 if last else 3
                 )
-            return
-        if len(hdr) < BDW_LEN:
-            if stop_on_partial:
-                return
-            raise IOError(
-                f"varlen: {path!r} ends mid-BDW at offset {pos} "
-                f"({len(hdr)} trailing bytes)"
-            )
-        btotal, breserved = struct.unpack(">HH", hdr)
-        if breserved != 0:
-            raise ValueError(
-                f"varlen: nonzero BDW reserved bytes at offset {pos} in "
-                f"{path!r}"
-            )
-        if btotal < BDW_LEN + RDW_LEN:
-            raise ValueError(
-                f"varlen: block at offset {pos} in {path!r} is {btotal} "
-                f"bytes total, too short for one BDW+SDW segment"
-            )
-        body = _read_exact(fobj, btotal - BDW_LEN)
-        if len(body) < btotal - BDW_LEN:
-            if stop_on_partial:
-                return
-            raise IOError(
-                f"varlen: {path!r} ends mid-block at offset {pos} "
-                f"(BDW claims {btotal} bytes, {BDW_LEN + len(body)} available)"
-            )
-        bend = pos + btotal
-        segs = list(
-            _iter_segments(
-                io.BytesIO(body), pos + BDW_LEN, bend, path, spanned=True
-            )
-        )
-        for i, (spos, code, payload) in enumerate(segs):
-            done = asm.feed(spos, code, payload)
-            if done is not None:
-                first, rec = done
-                yield first, rec, (bend if i == len(segs) - 1 else -1)
-        pos = bend
-        if max_bytes is not None and pos - start >= max_bytes and asm.idle:
-            return
+                frame = rw.pack(WORD_LEN + take, code) + chunk
+                if bw is not None:
+                    block += frame
+                else:
+                    emit(frame)
+                first = False
+                if last:
+                    break
+            n += 1
+        flush_block()
+        f.write(b"".join(out))
+        return index, n, written
 
 
-def _iter_records_d(
-    fobj, start: int, end: int | None, prefix_min: int, path: str,
-    stop_on_partial: bool = False,
-) -> Iterator[tuple[int, bytes, int]]:
-    """Walk ANSI RECFM=D records (ISO/ANSI interchange tapes, the
-    X3.27 sibling of IBM's RDW): each record is prefixed by a 4-byte
-    count field of decimal ASCII DIGITS giving the total length
-    including the field itself — human-readable framing, 9999-byte
-    ceiling.  Yields ``(offset, payload, resume_pos)``; every record
-    start is a safe re-entry point, exactly like plain V."""
-    pos = start
-    while True:
-        if end is not None and pos >= end:
-            return
-        hdr = _read_exact(fobj, RDW_LEN)
-        if not hdr:
-            if end is not None and pos < end:
-                raise IOError(
-                    f"varlen: {path!r} ends at {pos} before the planned "
-                    f"partition bound {end} (stale index sidecar?)"
-                )
-            return
-        if len(hdr) < RDW_LEN:
-            if stop_on_partial:
-                return
-            raise IOError(
-                f"varlen: {path!r} ends mid-count-field at offset {pos} "
-                f"({len(hdr)} trailing bytes)"
-            )
-        if not hdr.isdigit():
-            raise ValueError(
-                f"varlen: ANSI D count field at offset {pos} in {path!r} "
-                f"is not 4 decimal digits ({hdr!r})"
-            )
-        total = int(hdr)
-        if total < RDW_LEN + prefix_min:
-            raise ValueError(
-                f"varlen: record at offset {pos} in {path!r} is {total} "
-                f"bytes total, shorter than count+prefix "
-                f"({RDW_LEN + prefix_min})"
-            )
-        payload = _read_exact(fobj, total - RDW_LEN)
-        if len(payload) < total - RDW_LEN:
-            if stop_on_partial:
-                return
-            raise IOError(
-                f"varlen: {path!r} ends mid-record at offset {pos} "
-                f"(count field claims {total} bytes, "
-                f"{RDW_LEN + len(payload)} available)"
-            )
-        yield pos, payload, pos + total
-        pos += total
+def _open_record_error(
+    path: str, pos: int, asm: _SegmentAssembler
+) -> IOError:
+    return IOError(
+        f"varlen: {path!r} ends mid-spanned-record at offset {pos} (the "
+        f"record opened at {asm.first_off} has no last segment; stale index "
+        "sidecar?)"
+    )
 
 
-def _iter_records_db(
-    fobj, start: int, end: int | None, prefix_min: int, path: str,
-    stop_on_partial: bool = False, max_bytes: int | None = None,
-) -> Iterator[tuple[int, bytes, int]]:
-    """Walk ANSI blocked-D (RECFM=DB, ISO/ANSI interchange with the
-    BUFOFF=L buffer-offset form): each block opens with a 4-byte
-    DECIMAL ASCII block length (including the prefix itself — the
-    human-readable sibling of VB's binary BDW) wrapping D records that
-    must tile the block exactly; a record may not span blocks (ANSI D
-    has no spanned variant here).  Each block body is validated by the
-    plain-D record walk bounded to the block span, so every count-field
-    rule applies unchanged.  ``end`` must be a BLOCK start; ``max_bytes``
-    stops before opening a new block so a streaming resume offset is
-    always a block start (the VB admission rule)."""
-    import io
+_RDW = _Word("RDW", decimal=False)
+_SDW = _Word("SDW", decimal=False)
+_BDW = _Word("BDW", decimal=False)
+_COUNT = _Word("count field", decimal=True)
 
-    pos = start
-    while True:
-        if end is not None and pos >= end:
-            return
-        hdr = _read_exact(fobj, RDW_LEN)
-        if not hdr:
-            if end is not None and pos < end:
-                raise IOError(
-                    f"varlen: {path!r} ends at {pos} before the planned "
-                    f"partition bound {end} (stale index sidecar?)"
-                )
-            return
-        if len(hdr) < RDW_LEN:
-            if stop_on_partial:
-                return
-            raise IOError(
-                f"varlen: {path!r} ends mid-block-prefix at offset {pos} "
-                f"({len(hdr)} trailing bytes)"
-            )
-        if not hdr.isdigit():
-            raise ValueError(
-                f"varlen: ANSI DB block prefix at offset {pos} in "
-                f"{path!r} is not 4 decimal digits ({hdr!r})"
-            )
-        btotal = int(hdr)
-        if btotal < RDW_LEN + RDW_LEN + prefix_min:
-            raise ValueError(
-                f"varlen: block at offset {pos} in {path!r} is {btotal} "
-                f"bytes total, too short for one prefix+count+data record"
-            )
-        body = _read_exact(fobj, btotal - RDW_LEN)
-        if len(body) < btotal - RDW_LEN:
-            if stop_on_partial:
-                return
-            raise IOError(
-                f"varlen: {path!r} ends mid-block at offset {pos} "
-                f"(block prefix claims {btotal} bytes, "
-                f"{RDW_LEN + len(body)} available)"
-            )
-        yield from _iter_records_d(
-            io.BytesIO(body), pos + RDW_LEN, pos + btotal, prefix_min, path
-        )
-        pos += btotal
-        if max_bytes is not None and pos - start >= max_bytes:
-            return
-
-
-def _record_iter_for(opts: _VOptions):
-    return {
-        "V": _iter_records,
-        "VB": _iter_records_vb,
-        "VS": _iter_records_vs,
-        "VBS": _iter_records_vbs,
-        "D": _iter_records_d,
-        "DB": _iter_records_db,
-    }[opts.recfm]
+# The six RECFMs, each described once; reader, tail reader, build_index,
+# writer and option bounds all derive from these entries.
+_RECFMS = {
+    "V": _Framing(_RDW),
+    "VB": _Framing(_RDW, _BDW),
+    "VS": _Framing(_SDW, spanned=True),
+    "VBS": _Framing(_SDW, _BDW, spanned=True),
+    "D": _Framing(_COUNT),
+    # ANSI blocked D (BUFOFF=L): the 4-digit block prefix caps a block
+    # at 9999 bytes, hence the historical 2048 default
+    "DB": _Framing(
+        _COUNT, _Word("block prefix", decimal=True), default_block_size=2048
+    ),
+}
 
 
 class VarLenReader(DataSourceReader):
@@ -855,7 +746,7 @@ class VarLenReader(DataSourceReader):
                 prefixes = bytearray()
                 tails: list[bytes] = []
                 pending = 0
-                for off, payload, _resume in _record_iter_for(o)(
+                for off, payload, _resume in o.framing.walk(
                     fobj, start, end, o.prefix_length, partition.path
                 ):
                     offsets.append(off)
@@ -864,7 +755,7 @@ class VarLenReader(DataSourceReader):
                     else:
                         prefixes.extend(payload[: o.prefix_length])
                         tails.append(payload[o.prefix_length :])
-                    pending += RDW_LEN + len(payload)
+                    pending += WORD_LEN + len(payload)
                     if pending >= READ_CHUNK_TARGET:
                         yield o.framed_batch(offsets, prefixes, tails)
                         offsets, prefixes, tails = [], bytearray(), []
@@ -882,9 +773,10 @@ class VarLenStreamReader(SimpleDataSourceStreamReader):
     next unread record.  Only WHOLE records are admitted — a
     half-written RDW or payload at EOF is growth in flight and stays
     unread until complete (the fixed-length whole-record invariant
-    carried to variable strides).  Offsets are only ever record starts,
-    so restart replays (`readBetweenOffsets`) re-walk exactly the
-    committed span."""
+    carried to variable strides).  Offsets are only ever safe re-entry
+    points (record starts; block starts in blocked formats, never inside
+    a spanned record), so restart replays (`readBetweenOffsets`) re-walk
+    exactly the committed span."""
 
     def __init__(self, opts: _VOptions, path: str):
         self.opts = opts
@@ -906,30 +798,16 @@ class VarLenStreamReader(SimpleDataSourceStreamReader):
         o = self.opts
         if not os.path.exists(self.path):
             return [], lo
-        # VB/VBS: the byte cap moves INSIDE the iterator so the stop
-        # lands on a block boundary — a mid-block resume offset would
-        # misparse record bytes as a BDW (and in VBS the stop also waits
-        # for any open spanned record to complete).
-        it_kwargs: dict = {"stop_on_partial": stop_on_partial}
-        if o.recfm in ("VB", "VBS", "DB"):
-            it_kwargs["max_bytes"] = max_bytes
-        recs: list[tuple[int, bytes, int]] = []
         with open(self.path, "rb") as f:
             f.seek(lo)
-            for off, payload, resume in _record_iter_for(o)(
-                f, lo, hi, o.prefix_length, self.path, **it_kwargs
-            ):
-                recs.append((off, payload, resume))
-                if (
-                    o.recfm in ("V", "VS", "D")
-                    and max_bytes is not None
-                    and resume - lo >= max_bytes
-                ):
-                    break
-        # admit rows only up to the LAST safe resume point (VBS yields
-        # resume=-1 for records whose last segment ends mid-block; they
-        # replay from the previous block boundary next batch — emitting
-        # them now would double-read them after a restart)
+            recs = list(o.framing.walk(
+                f, lo, hi, o.prefix_length, self.path,
+                stop_on_partial=stop_on_partial, max_bytes=max_bytes,
+            ))
+        # admit rows only up to the LAST safe resume point: a record
+        # whose resume is -1 ends mid-block and replays from the previous
+        # block boundary next batch (emitting it now would double-read it
+        # after a restart)
         while recs and recs[-1][2] == -1:
             recs.pop()
         if not recs:
@@ -974,259 +852,31 @@ class VarLenStreamReader(SimpleDataSourceStreamReader):
 
 
 def build_index(path: str, every: int = 4096, recfm: str = "v") -> dict:
-    """Index a FOREIGN V/VB-format file in place: one sequential
-    descriptor-word walk (only the 4-byte headers are read — payloads
-    are seek-skipped) emits the ``.rdx.json`` sidecar, making every
-    later read splittable.  Index once, split forever.  Run
+    """Index a FOREIGN file of any of the six RECFMs in place: one
+    sequential header-only walk (descriptor words are read, unblocked
+    payloads are seek-skipped) emits the ``.rdx.json`` sidecar, making
+    every later read splittable.  Index once, split forever.  Run
     executor-side for fleets of files
     (``sc.parallelize(files).map(build_index)``); returns the sidecar
-    payload.  For VB the sidecar offsets are BLOCK starts (the only
-    safe split points), emitted when a block's first record crosses the
-    ``every`` stride."""
+    payload.  Offsets are safe re-entry points (block starts in blocked
+    formats, never inside a spanned record), emitted when the record
+    count there crosses into a new ``every`` bucket — the rule the
+    writer's sidecar follows."""
     if every <= 0:
         raise ValueError("varlen: index 'every' must be > 0")
-    recfm = recfm.upper()
+    framing = _VOptions.parse({"recfm": recfm}).framing
     size = os.path.getsize(path)
-    offsets: list[int] = []
+    offsets = [0] if size else []
+    last_bucket = 0
     n = 0
-    pos = 0
     with open(path, "rb") as f:
-        if recfm == "VS":
-            # spanned stream: a safe offset is a record START (segment
-            # code 0 or 1); logical records count completions
-            open_rec = False
-            while pos < size:
-                hdr = f.read(RDW_LEN)
-                if len(hdr) < RDW_LEN:
-                    raise IOError(
-                        f"varlen: {path!r} ends mid-SDW at offset {pos}"
-                    )
-                total, code, res = struct.unpack(">HBB", hdr)
-                if res != 0 or code > 3:
-                    raise ValueError(
-                        f"varlen: invalid SDW at offset {pos} in {path!r} "
-                        f"(code={code}, reserved={res})"
-                    )
-                if total < RDW_LEN or pos + total > size:
-                    raise IOError(
-                        f"varlen: {path!r} segment at offset {pos} overruns "
-                        "EOF"
-                    )
-                if code in (0, 1):
-                    if open_rec:
-                        raise ValueError(
-                            f"varlen: segment code {code} at offset {pos} in "
-                            f"{path!r} while a record is open"
-                        )
-                    if n % every == 0:
-                        offsets.append(pos)
-                    n += 1
-                    open_rec = code == 1
-                else:
-                    if not open_rec:
-                        raise ValueError(
-                            f"varlen: continuation code {code} at offset "
-                            f"{pos} in {path!r} with no record open"
-                        )
-                    if code == 2:
-                        open_rec = False
-                pos += total
-                f.seek(pos)
-            if open_rec:
-                raise IOError(f"varlen: {path!r} ends mid-spanned-record")
-        elif recfm == "VBS":
-            # spanned blocks: a safe offset is a BLOCK whose first
-            # segment starts a new record
-            open_rec = False
-            last_bucket = -1
-            while pos < size:
-                hdr = f.read(BDW_LEN)
-                if len(hdr) < BDW_LEN:
-                    raise IOError(
-                        f"varlen: {path!r} ends mid-BDW at offset {pos}"
-                    )
-                btotal, breserved = struct.unpack(">HH", hdr)
-                if breserved != 0:
-                    raise ValueError(
-                        f"varlen: nonzero BDW reserved bytes at offset "
-                        f"{pos} in {path!r}"
-                    )
-                if btotal < BDW_LEN + RDW_LEN or pos + btotal > size:
-                    raise IOError(
-                        f"varlen: {path!r} block at offset {pos} overruns EOF"
-                    )
-                bpos, bend = pos + BDW_LEN, pos + btotal
-                first_seg = True
-                while bpos < bend:
-                    f.seek(bpos)
-                    rh = f.read(RDW_LEN)
-                    if len(rh) < RDW_LEN or bend - bpos < RDW_LEN:
-                        raise ValueError(
-                            f"varlen: block at offset {pos} in {path!r} has "
-                            "trailing bytes that are not a segment"
-                        )
-                    rtotal, code, res = struct.unpack(">HBB", rh)
-                    if res != 0 or code > 3:
-                        raise ValueError(
-                            f"varlen: invalid SDW at offset {bpos} in "
-                            f"{path!r} (code={code}, reserved={res})"
-                        )
-                    if rtotal < RDW_LEN or bpos + rtotal > bend:
-                        raise ValueError(
-                            f"varlen: segment at offset {bpos} in {path!r} "
-                            "overruns its block"
-                        )
-                    if code in (0, 1):
-                        if open_rec:
-                            raise ValueError(
-                                f"varlen: segment code {code} at offset "
-                                f"{bpos} in {path!r} while a record is open"
-                            )
-                        if first_seg:
-                            bucket = n // every
-                            if bucket > last_bucket:
-                                offsets.append(pos)
-                                last_bucket = bucket
-                        n += 1
-                        open_rec = code == 1
-                    else:
-                        if not open_rec:
-                            raise ValueError(
-                                f"varlen: continuation code {code} at "
-                                f"offset {bpos} in {path!r} with no record "
-                                "open"
-                            )
-                        if code == 2:
-                            open_rec = False
-                    first_seg = False
-                    bpos += rtotal
-                pos += btotal
-                f.seek(pos)
-            if open_rec:
-                raise IOError(f"varlen: {path!r} ends mid-spanned-record")
-        elif recfm == "VB":
-            last_bucket = -1
-            while pos < size:
-                hdr = f.read(BDW_LEN)
-                if len(hdr) < BDW_LEN:
-                    raise IOError(
-                        f"varlen: {path!r} ends mid-BDW at offset {pos}"
-                    )
-                btotal, breserved = struct.unpack(">HH", hdr)
-                if breserved != 0:
-                    raise ValueError(
-                        f"varlen: nonzero BDW reserved bytes at offset "
-                        f"{pos} in {path!r}"
-                    )
-                if btotal < BDW_LEN + RDW_LEN or pos + btotal > size:
-                    raise IOError(
-                        f"varlen: {path!r} block at offset {pos} overruns EOF"
-                    )
-                bucket = n // every
-                if bucket > last_bucket:
-                    offsets.append(pos)
-                    last_bucket = bucket
-                bpos, bend = pos + BDW_LEN, pos + btotal
-                while bpos < bend:
-                    f.seek(bpos)
-                    rh = f.read(RDW_LEN)
-                    if len(rh) < RDW_LEN or bend - bpos < RDW_LEN:
-                        raise ValueError(
-                            f"varlen: block at offset {pos} in {path!r} has "
-                            "trailing bytes that are not a record"
-                        )
-                    rtotal, rres = struct.unpack(">HH", rh)
-                    if rres != 0:
-                        raise ValueError(
-                            f"varlen: nonzero RDW segment-control bytes at "
-                            f"offset {bpos} in {path!r}"
-                        )
-                    if rtotal < RDW_LEN or bpos + rtotal > bend:
-                        raise ValueError(
-                            f"varlen: record at offset {bpos} in {path!r} "
-                            "overruns its block"
-                        )
-                    n += 1
-                    bpos += rtotal
-                pos += btotal
-                f.seek(pos)
-        elif recfm == "DB":
-            last_bucket = -1
-            while pos < size:
-                hdr = f.read(RDW_LEN)
-                if len(hdr) < RDW_LEN:
-                    raise IOError(
-                        f"varlen: {path!r} ends mid-block-prefix at "
-                        f"offset {pos}"
-                    )
-                if not hdr.isdigit():
-                    raise ValueError(
-                        f"varlen: ANSI DB block prefix at offset {pos} in "
-                        f"{path!r} is not 4 decimal digits ({hdr!r})"
-                    )
-                btotal = int(hdr)
-                if btotal < RDW_LEN + RDW_LEN or pos + btotal > size:
-                    raise IOError(
-                        f"varlen: {path!r} block at offset {pos} overruns EOF"
-                    )
-                bucket = n // every
-                if bucket > last_bucket:
-                    offsets.append(pos)
-                    last_bucket = bucket
-                bpos, bend = pos + RDW_LEN, pos + btotal
-                while bpos < bend:
-                    f.seek(bpos)
-                    rh = f.read(RDW_LEN)
-                    if len(rh) < RDW_LEN or bend - bpos < RDW_LEN:
-                        raise ValueError(
-                            f"varlen: block at offset {pos} in {path!r} has "
-                            "trailing bytes that are not a record"
-                        )
-                    if not rh.isdigit():
-                        raise ValueError(
-                            f"varlen: ANSI D count field at offset {bpos} "
-                            f"in {path!r} is not 4 decimal digits ({rh!r})"
-                        )
-                    rtotal = int(rh)
-                    if rtotal < RDW_LEN or bpos + rtotal > bend:
-                        raise ValueError(
-                            f"varlen: record at offset {bpos} in {path!r} "
-                            "overruns its block"
-                        )
-                    n += 1
-                    bpos += rtotal
-                pos += btotal
-                f.seek(pos)
-        else:
-            while pos < size:
-                hdr = f.read(RDW_LEN)
-                if len(hdr) < RDW_LEN:
-                    raise IOError(
-                        f"varlen: {path!r} ends mid-RDW at offset {pos}"
-                    )
-                if recfm == "D":
-                    if not hdr.isdigit():
-                        raise ValueError(
-                            f"varlen: ANSI D count field at offset {pos} "
-                            f"in {path!r} is not 4 decimal digits ({hdr!r})"
-                        )
-                    total = int(hdr)
-                else:
-                    total, reserved = struct.unpack(">HH", hdr)
-                    if reserved != 0:
-                        raise ValueError(
-                            f"varlen: nonzero RDW segment-control bytes at "
-                            f"offset {pos} in {path!r}"
-                        )
-                if total < RDW_LEN or pos + total > size:
-                    raise IOError(
-                        f"varlen: {path!r} record at offset {pos} overruns EOF"
-                    )
-                if n % every == 0:
-                    offsets.append(pos)
-                n += 1
-                pos += total
-                f.seek(pos)
+        for _off, _payload, resume in framing.walk(
+            f, 0, None, 0, path, headers_only=True
+        ):
+            n += 1
+            if resume != -1 and resume < size and n // every > last_bucket:
+                offsets.append(resume)
+                last_bucket = n // every
     payload = {
         "version": 1,
         "every": every,
@@ -1320,8 +970,6 @@ class VarLenWriter(DataSourceWriter):
     ``stream_mode`` (set by :class:`VarLenStreamWriter`) defers final
     naming to commit time (see ``fixedlen._part_paths``)."""
 
-    WRITE_BATCH_ROWS = 10_000
-
     stream_mode = False
 
     def __init__(self, opts: _VOptions, path: str, overwrite: bool):
@@ -1336,245 +984,37 @@ class VarLenWriter(DataSourceWriter):
         os.makedirs(self.path, exist_ok=True)
         o = self.opts
         tmp, final = _part_paths(self.path, ".rdw", self.token, self.stream_mode)
-        index: list[int] = []
-        n = 0
-        written = 0
-
-        def payload_bytes(row) -> bytes:
-            if o.fields is None:
-                return bytes(row["value"])
-            d = row.asDict()
-            tail = d.get(o.tail_column) if o.with_tail else b""
-            if tail is None:
-                tail = b""
-            elif isinstance(tail, str):
-                tail = tail.encode("utf-8")
-            else:
-                tail = bytes(tail)
-            return (
-                encode_rows([d], o.fields, o.prefix_length, encoding=o.encoding)
-                + tail
-            )
-
-        def record_bytes(row) -> bytes:
-            payload = payload_bytes(row)
-            total = RDW_LEN + len(payload)
-            if o.recfm in ("D", "DB"):
-                if total > _MAX_D_RECORD:
-                    raise ValueError(
-                        f"varlen: record of {total} bytes exceeds the ANSI "
-                        f"D 4-digit count limit ({_MAX_D_RECORD}); write "
-                        "recfm='V' (64 KiB) or 'VS'/'VBS' (unbounded)"
-                    )
-                return f"{total:04d}".encode("ascii") + payload
-            if total > _MAX_RECORD:
-                raise ValueError(
-                    f"varlen: record of {total} bytes exceeds the RDW "
-                    f"16-bit limit ({_MAX_RECORD}); write recfm='VS'/'VBS' "
-                    "to span it across segments"
-                )
-            return struct.pack(">HH", total, 0) + payload
-
-        def segments_of(payload: bytes) -> list[bytes]:
-            """Split a logical record into SDW-framed spanned segments
-            (codes: 0 complete, 1 first, 3 middle, 2 last)."""
-            cap = o.segment_size - RDW_LEN
-            chunks = [
-                payload[i : i + cap] for i in range(0, len(payload), cap)
-            ] or [b""]
-            out = []
-            for j, c in enumerate(chunks):
-                if len(chunks) == 1:
-                    code = 0
-                elif j == 0:
-                    code = 1
-                elif j == len(chunks) - 1:
-                    code = 2
-                else:
-                    code = 3
-                out.append(struct.pack(">HBB", RDW_LEN + len(c), code, 0) + c)
-            return out
-
-        with open(tmp, "wb") as f:
-            if o.recfm == "VB":
-                # pack records into BDW blocks of <= blockSize bytes; a
-                # sidecar offset must be a safe split point, which in VB
-                # is a BLOCK start — emitted when a block's first record
-                # crosses the indexEvery stride
-                block = bytearray()
-                last_bucket = -1
-
-                def flush_block():
-                    nonlocal written
-                    if not block:
-                        return
-                    btotal = BDW_LEN + len(block)
-                    f.write(struct.pack(">HH", btotal, 0) + bytes(block))
-                    written += btotal
-                    block.clear()
-
-                for row in iterator:
-                    b = record_bytes(row)
-                    if BDW_LEN + len(b) > o.block_size:
-                        raise ValueError(
-                            f"varlen: record of {len(b)} bytes cannot fit a "
-                            f"{o.block_size}-byte VB block (records may not "
-                            "span blocks; raise blockSize)"
-                        )
-                    if block and BDW_LEN + len(block) + len(b) > o.block_size:
-                        flush_block()
-                    if not block:
-                        bucket = n // o.index_every if o.index_every else -1
-                        if o.index_every and bucket > last_bucket:
-                            index.append(written)
-                            last_bucket = bucket
-                    block.extend(b)
-                    n += 1
-                flush_block()
-            elif o.recfm == "DB":
-                # ANSI blocked D: same greedy packing as VB but the
-                # block prefix is 4 decimal ASCII digits (BUFOFF=L) —
-                # sidecar offsets are block starts, the only safe
-                # split points
-                block = bytearray()
-                last_bucket = -1
-
-                def flush_block():
-                    nonlocal written
-                    if not block:
-                        return
-                    btotal = RDW_LEN + len(block)
-                    f.write(f"{btotal:04d}".encode("ascii") + bytes(block))
-                    written += btotal
-                    block.clear()
-
-                for row in iterator:
-                    b = record_bytes(row)
-                    if RDW_LEN + len(b) > o.block_size:
-                        raise ValueError(
-                            f"varlen: record of {len(b)} bytes cannot fit "
-                            f"a {o.block_size}-byte DB block (records may "
-                            "not span blocks; raise blockSize)"
-                        )
-                    if block and RDW_LEN + len(block) + len(b) > o.block_size:
-                        flush_block()
-                    if not block:
-                        bucket = n // o.index_every if o.index_every else -1
-                        if o.index_every and bucket > last_bucket:
-                            index.append(written)
-                            last_bucket = bucket
-                    block.extend(b)
-                    n += 1
-                flush_block()
-            elif o.recfm == "VS":
-                # spanned, unblocked: records stream as SDW segments;
-                # every record start is a safe split point, so the
-                # sidecar bucket rule matches plain V exactly
-                batch: list[bytes] = []
-                for row in iterator:
-                    segs = segments_of(payload_bytes(row))
-                    if o.index_every and n % o.index_every == 0:
-                        index.append(written)
-                    n += 1
-                    for s in segs:
-                        written += len(s)
-                        batch.append(s)
-                    if len(batch) >= self.WRITE_BATCH_ROWS:
-                        f.write(b"".join(batch))
-                        batch = []
-                if batch:
-                    f.write(b"".join(batch))
-            elif o.recfm == "VBS":
-                # spanned + blocked: segments fill each block to
-                # blockSize and a record continues into the next
-                # block(s) — no per-block slack, no record size ceiling.
-                # A safe split point is a BLOCK whose first segment
-                # starts a new record; only those enter the sidecar.
-                block = bytearray()
-                last_bucket = -1
-
-                def flush_block():
-                    nonlocal written
-                    if not block:
-                        return
-                    btotal = BDW_LEN + len(block)
-                    f.write(struct.pack(">HH", btotal, 0) + bytes(block))
-                    written += btotal
-                    block.clear()
-
-                for row in iterator:
-                    payload = payload_bytes(row)
-                    view = memoryview(payload)
-                    seg_idx = 0
-                    while True:
-                        avail = (
-                            o.block_size - BDW_LEN - len(block) - RDW_LEN
-                        )
-                        need = 1 if len(view) > 0 else 0
-                        if avail < need:
-                            flush_block()
-                            continue
-                        if seg_idx == 0 and not block:
-                            # fresh record opens a fresh block: safe
-                            # split point — same bucket rule as VB
-                            bucket = (
-                                n // o.index_every if o.index_every else -1
-                            )
-                            if o.index_every and bucket > last_bucket:
-                                index.append(written)
-                                last_bucket = bucket
-                        take = min(
-                            len(view), avail, o.segment_size - RDW_LEN
-                        )
-                        chunk = bytes(view[:take])
-                        view = view[take:]
-                        last = len(view) == 0
-                        code = (
-                            0 if (seg_idx == 0 and last)
-                            else 1 if seg_idx == 0
-                            else 2 if last
-                            else 3
-                        )
-                        block.extend(
-                            struct.pack(">HBB", RDW_LEN + len(chunk), code, 0)
-                        )
-                        block.extend(chunk)
-                        seg_idx += 1
-                        if last:
-                            break
-                    n += 1
-                flush_block()
-            else:
-                batch: list[bytes] = []
-                for row in iterator:
-                    b = record_bytes(row)
-                    if o.index_every and n % o.index_every == 0:
-                        index.append(written)
-                    n += 1
-                    written += len(b)
-                    batch.append(b)
-                    if len(batch) >= self.WRITE_BATCH_ROWS:
-                        f.write(b"".join(batch))
-                        batch = []
-                if batch:
-                    f.write(b"".join(batch))
-
         idx_tmp = idx_final = None
         if o.index_every:
             idx_tmp, idx_final = _index_path(tmp), _index_path(final)
-            with open(idx_tmp, "w") as f:
-                json.dump(
-                    {
-                        "version": 1,
-                        "every": o.index_every,
-                        "prefix_length": o.prefix_length,
-                        "offsets": index,
-                        "n_records": n,
-                        "data_bytes": written,
-                    },
-                    f,
+        msg = _CommitMessage([(tmp, final, idx_tmp, idx_final)])
+        done = False
+        try:
+            with open(tmp, "wb") as f:
+                index, n, written = o.framing.pack(
+                    f, (o.framed_payload(row) for row in iterator),
+                    block_size=o.block_size,
+                    segment_size=o.segment_size,
+                    index_every=o.index_every,
                 )
-        return _CommitMessage([(tmp, final, idx_tmp, idx_final)])
+            if idx_tmp is not None:
+                with open(idx_tmp, "w") as f:
+                    json.dump(
+                        {
+                            "version": 1,
+                            "every": o.index_every,
+                            "prefix_length": o.prefix_length,
+                            "offsets": index,
+                            "n_records": n,
+                            "data_bytes": written,
+                        },
+                        f,
+                    )
+            done = True
+        finally:
+            if not done:  # a failed task leaves no hidden tmp behind
+                _remove_tmps([msg])
+        return msg
 
     def commit(self, messages):
         if self.overwrite:

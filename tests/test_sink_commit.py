@@ -131,3 +131,30 @@ def test_sink_overwrite_and_abort(spark, tmp_path, fmt):
     assert _files(out) == now
     assert not [f for f in now if ".tmp-" in f]
     assert read_keys() == list(range(100, 110))
+
+
+@pytest.mark.parametrize("fmt", ["fixedlen", "varlen"])
+def test_failed_write_task_leaves_no_tmp(spark, tmp_path, fmt):
+    """A task that raises after opening its tmp removes that tmp (and
+    its sidecar tmp) itself: the job abort only sees the tmps of tasks
+    that reported, so a failing task is the one case it cannot clean."""
+    from hadoop_fixedlengthinputformat_spark.sources import fixedlen, varlen
+
+    fixedlen.register(spark)
+    varlen.register(spark)
+    out = str(tmp_path / "out")
+    if fmt == "fixedlen":
+        # raw mode: the second record has the wrong length
+        values = [b"abcdef", b"abc"]
+        opts = {"recordLength": "6", "statsSidecar": "true"}
+        error = "expected recordLength=6"
+    else:
+        # recfm=V: good rows, then one record over the 64 KiB RDW limit
+        values = [b"x" * 10, b"y" * 300, b"z" * 70_000]
+        opts = {"recfm": "v", "indexEvery": "1"}
+        error = "16-bit"
+    df = spark.createDataFrame([(v,) for v in values], "value binary")
+    with pytest.raises(Exception, match=error):
+        _write(df.coalesce(1), fmt, opts, out)
+    assert os.path.isdir(out)
+    assert not [f for f in _files(out) if ".tmp-" in f], _files(out)

@@ -652,15 +652,12 @@ def test_spanned_build_index_foreign_file(tmp_path, recfm):
         "prefixlength": "8", "layout": "k:0:8:long", "recfm": recfm,
         "blocksize": "4096",
     })
-    from hadoop_fixedlengthinputformat_spark.sources.varlen import (
-        _record_iter_for,
-    )
     bounds = payload["offsets"] + [payload["data_bytes"]]
     n = 0
     for lo, hi in zip(bounds, bounds[1:]):
         with open(p, "rb") as f:
             f.seek(lo)
-            for _off, _payload, _res in _record_iter_for(opts)(
+            for _off, _payload, _res in opts.framing.walk(
                 f, lo, hi, 8, p
             ):
                 n += 1

@@ -1,4 +1,4 @@
-"""Property tests for the RECFM=VS/VBS spanned-record walk (Sparkless).
+"""Property tests for the varlen record walk (Sparkless).
 
 A randomized reference packer builds spanned files byte-by-byte (random
 record sizes — including zero-length and >64 KiB — random segment caps,
@@ -7,7 +7,8 @@ logical record exactly, from the whole file AND from every sidecar-style
 safe split point.  This pins the assembler against the packing
 combinatorics no hand-written case list covers (records ending exactly
 at block ends, single-segment blocks, first-segments opening blocks,
-etc.).
+etc.).  The unspanned RECFMs (V, VB, D, DB) get the same walk property
+over their own reference packers.
 """
 
 from __future__ import annotations
@@ -15,14 +16,17 @@ from __future__ import annotations
 import io
 import struct
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from hadoop_fixedlengthinputformat_spark.sources.varlen import (
+    _RECFMS,
     _VOptions,
-    _iter_records_vs,
-    _iter_records_vbs,
     build_index,
 )
+
+_iter_records_vs = _RECFMS["VS"].walk
+_iter_records_vbs = _RECFMS["VBS"].walk
 
 
 def _sdw(code: int, data: bytes) -> bytes:
@@ -184,9 +188,7 @@ def test_ansi_d_walk_and_truncation(payloads, cut):
     packer output, every resume position replays the suffix, and a
     byte-truncated stream under stop_on_partial yields a strict prefix
     — never a partial record, never an error."""
-    from hadoop_fixedlengthinputformat_spark.sources.varlen import (
-        _iter_records_d,
-    )
+    _iter_records_d = _RECFMS["D"].walk
 
     img = b"".join(_d_rec(p) for p in payloads)
     got = list(_iter_records_d(io.BytesIO(img), 0, None, 0, "prop.d"))
@@ -202,5 +204,65 @@ def test_ansi_d_walk_and_truncation(payloads, cut):
             io.BytesIO(img[:cut]), 0, None, 0, "prop.d",
             stop_on_partial=True,
         )
+    )
+    assert [p for _, p, _ in part] == payloads[: len(part)]
+
+
+def _unspanned_image(recfm: str, payloads: list[bytes], block_size: int):
+    """Reference packer for V/VB/DB: binary RDW or (DB) decimal count
+    framing, greedily packed into blocks when blocked.  Returns the
+    image and each record's frame offset."""
+    decimal = recfm == "DB"
+
+    def word(total: int) -> bytes:
+        return f"{total:04d}".encode() if decimal else struct.pack(">HH", total, 0)
+
+    recs = [word(4 + len(p)) + p for p in payloads]
+    if recfm == "V":
+        starts, pos = [], 0
+        for r in recs:
+            starts.append(pos)
+            pos += len(r)
+        return b"".join(recs), starts
+    img, block, starts = bytearray(), bytearray(), []
+    for r in recs:
+        if block and 4 + len(block) + len(r) > block_size:
+            img += word(4 + len(block)) + block
+            block.clear()
+        starts.append(len(img) + 4 + len(block))
+        block += r
+    img += word(4 + len(block)) + block
+    return bytes(img), starts
+
+
+@pytest.mark.parametrize("recfm", ["V", "VB", "DB"])
+@settings(max_examples=40, deadline=None)
+@given(
+    payloads=st.lists(st.binary(min_size=0, max_size=300), min_size=1, max_size=30),
+    block_size=st.integers(310, 2000),
+    cut=st.integers(0, 12000),
+)
+def test_unspanned_walk_any_packing(recfm, payloads, block_size, cut):
+    """RECFM=V/VB/DB: the production walk gives back every record at its
+    frame offset from any packing; every safe resume point (a record
+    end, or in blocked formats a block end) replays exactly the suffix;
+    and a truncated image under stop_on_partial yields a strict prefix
+    of the records — never a partial record, never an error."""
+    walk = _RECFMS[recfm].walk
+    img, starts = _unspanned_image(recfm, payloads, block_size)
+    got = list(walk(io.BytesIO(img), 0, None, 0, "prop"))
+    assert [p for _, p, _ in got] == payloads
+    assert [o for o, _, _ in got] == starts
+    for i, (_off, _p, resume) in enumerate(got):
+        if resume == -1:
+            assert recfm != "V"
+            continue
+        bio = io.BytesIO(img)
+        bio.seek(resume)
+        rest = list(walk(bio, resume, None, 0, "prop"))
+        assert [p for _, p, _ in rest] == payloads[i + 1 :]
+    cut = min(cut, len(img))
+    part = list(
+        walk(io.BytesIO(img[:cut]), 0, None, 0, "prop", stop_on_partial=True)
     )
     assert [p for _, p, _ in part] == payloads[: len(part)]
