@@ -15,9 +15,18 @@ Layout:
     functions/  scalar-function families, UDF surface, LLM-pipeline ops
     streaming/  Structured Streaming operators (H family)
     plans/      plan-inspection helpers (pushdown / broadcast assertions)
+
+Importing the package installs ``_zipcache``'s stat-guarded zipimport
+refresh (Python < 3.13): every Spark Python worker that unpickles engine
+code imports this module, so reused workers stop re-reading pyspark.zip
+and the Spark jar on every call.
 """
 
-from hadoop_fixedlengthinputformat_spark.registry import QUERIES, ORACLES, query
+from hadoop_fixedlengthinputformat_spark import _zipcache
+
+_zipcache.install()
+
+from hadoop_fixedlengthinputformat_spark.registry import QUERIES, ORACLES, query  # noqa: E402
 
 __version__ = "0.1.0"
 

@@ -95,6 +95,7 @@ from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
 )
 from hadoop_fixedlengthinputformat_spark.sources.layout import (
     FieldSpec,
+    check_user_schema,
     decode_framed,
     encode_framed,
     layout_schema,
@@ -906,9 +907,14 @@ class AwsTapeWriter(DataSourceWriter):
         # tapemark after the file + end-of-tape mark
         tapemark()
         tapemark()
-        with open(tmp, "wb") as f:
-            f.write(b"".join(out))
-        return _CommitMessage([(tmp, final, None, None)])
+        msg = _CommitMessage([(tmp, final, None, None)])
+        try:
+            with open(tmp, "wb") as f:
+                f.write(b"".join(out))
+        except BaseException:
+            _remove_tmps([msg])  # a failed task leaves no hidden tmp behind
+            raise
+        return msg
 
     def commit(self, messages):
         if self.overwrite:
@@ -957,6 +963,7 @@ class AwsTapeDataSource(DataSource):
         return self.opts.spark_schema()
 
     def reader(self, schema: StructType) -> AwsTapeReader:
+        check_user_schema("awstape", schema, self.opts.spark_schema())
         return AwsTapeReader(self.opts, self.path)
 
     def writer(self, schema: StructType, overwrite: bool) -> AwsTapeWriter:

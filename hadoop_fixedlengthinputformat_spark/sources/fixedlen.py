@@ -65,6 +65,7 @@ from pyspark.sql.types import (
 from hadoop_fixedlengthinputformat_spark.sources import stats
 from hadoop_fixedlengthinputformat_spark.sources.layout import (
     FieldSpec,
+    check_user_schema,
     decode_chunk,
     decode_chunk_multitype,
     encode_rows,
@@ -1762,6 +1763,7 @@ class FixedLengthDataSource(DataSource):
         if not self.path:
             raise ValueError("fixedlen: load(path) is required")
         self._discover_partitions()
+        check_user_schema("fixedlen", schema, self.opts.spark_schema())
         return FixedLengthReader(self.opts, self.path)
 
     def writer(self, schema: StructType, overwrite: bool) -> FixedLengthWriter:

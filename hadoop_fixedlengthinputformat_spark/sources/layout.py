@@ -209,6 +209,38 @@ def layout_schema(fields: list[FieldSpec]) -> StructType:
     return StructType([StructField(f.name, f.spark_type(), True) for f in fields])
 
 
+def check_user_schema(source: str, user: StructType, own: StructType) -> None:
+    """Raise ``ValueError`` naming the first differing field unless the
+    schema Spark hands ``reader()`` — the options' own, or one given with
+    ``.schema(...)`` — has the options' columns, in order, with their
+    types.  Readers emit columns by position, so a retyped column would
+    otherwise fail in the JVM and an unknown one in the worker.
+    Nullability is not compared."""
+    got = {f.name: f.dataType for f in user.fields}
+    want = {f.name: f.dataType for f in own.fields}
+    for name, dtype in want.items():
+        if name not in got:
+            raise ValueError(f"{source}: user schema lacks column {name!r}")
+        if got[name] != dtype:
+            raise ValueError(
+                f"{source}: user schema types column {name!r} as "
+                f"{got[name].simpleString()}; the options decode it as "
+                f"{dtype.simpleString()}"
+            )
+    for name in got:
+        if name not in want:
+            raise ValueError(
+                f"{source}: user schema column {name!r} is not produced by "
+                f"the options (columns: {list(want)})"
+            )
+    for a, b in zip(user.fields, own.fields):
+        if a.name != b.name:
+            raise ValueError(
+                f"{source}: user schema has column {a.name!r} where the "
+                f"options produce {b.name!r}"
+            )
+
+
 @lru_cache(maxsize=8)
 def transcode_table(encoding: str) -> np.ndarray | None:
     """256-entry byte translation table mapping single bytes of

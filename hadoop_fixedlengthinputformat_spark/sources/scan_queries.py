@@ -32,9 +32,10 @@ def read_fixed(
     # One record-aligned split per core: min(defaultParallelism, records)
     # splits of ceil(records / splits) records.  The 128 MB cluster
     # default would put these small fixtures in one partition, and more
-    # splits than cores only add Python tasks, each costing ~0.3 s
-    # against ~0.03 s/MB of decode: on 4 cores the 3.3 MB lineitem full
-    # scan took 3.7 s at a 32-way target (33 tasks) and 1.3 s at 4.
+    # splits than cores only add Python tasks, each costing ~0.08 s of
+    # fixed worker overhead against ~0.03 s/MB of decode: on a 4-core VM
+    # the 6.6 MB sf0.01 lineitem full scan took 0.77 s at a 32-way target
+    # and 0.21 s at 4 (warm session, noop sink).
     mpb = fixedlen.split_bytes_per_core(
         os.path.getsize(path),
         record_length,

@@ -87,6 +87,7 @@ from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
 )
 from hadoop_fixedlengthinputformat_spark.sources.layout import (
     FieldSpec,
+    check_user_schema,
     decode_framed,
     encode_framed,
     layout_schema,
@@ -1065,6 +1066,7 @@ class VarLenDataSource(DataSource):
         return self.opts.spark_schema()
 
     def reader(self, schema: StructType) -> VarLenReader:
+        check_user_schema("varlen", schema, self.opts.spark_schema())
         return VarLenReader(self.opts, self.path)
 
     def writer(self, schema: StructType, overwrite: bool) -> VarLenWriter:

@@ -9,10 +9,13 @@ leaves no ``.tmp-`` file."""
 
 from __future__ import annotations
 
+import errno
 import os
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark import TaskContext
+from pyspark.sql import Row
 
 
 def _files(root: str) -> list[str]:
@@ -133,16 +136,61 @@ def test_sink_overwrite_and_abort(spark, tmp_path, fmt):
     assert read_keys() == list(range(100, 110))
 
 
-@pytest.mark.parametrize("fmt", ["fixedlen", "varlen"])
-def test_failed_write_task_leaves_no_tmp(spark, tmp_path, fmt):
+class _FullDisk:
+    """A file opened for writing whose every write fails."""
+
+    def __init__(self, fh):
+        self.fh = fh
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        self.fh.close()
+
+    def write(self, data):
+        raise OSError(errno.ENOSPC, "No space left on device")
+
+
+@pytest.mark.parametrize("fmt", ["fixedlen", "varlen", "awstape"])
+def test_failed_write_task_leaves_no_tmp(spark, tmp_path, monkeypatch, fmt):
     """A task that raises after opening its tmp removes that tmp (and
     its sidecar tmp) itself: the job abort only sees the tmps of tasks
     that reported, so a failing task is the one case it cannot clean."""
-    from hadoop_fixedlengthinputformat_spark.sources import fixedlen, varlen
+    from hadoop_fixedlengthinputformat_spark.sources import (
+        awstape,
+        fixedlen,
+        varlen,
+    )
 
+    out = str(tmp_path / "out")
+    if fmt == "awstape":
+        # the tape image is built in memory and written in one call, so
+        # no bad row can fail after the tmp opens: fail that write, in
+        # process, with the tmp already created
+        opened: list[str] = []
+
+        def full_disk_open(path, mode="r", *args, **kwargs):
+            opened.append(path)
+            return _FullDisk(open(path, mode, *args, **kwargs))
+
+        class _Task:
+            def partitionId(self):
+                return 0
+
+            def taskAttemptId(self):
+                return 7
+
+        monkeypatch.setattr(TaskContext, "get", staticmethod(_Task))
+        monkeypatch.setattr(awstape, "open", full_disk_open, raising=False)
+        writer = awstape.AwsTapeDataSource({"path": out}).writer(None, False)
+        with pytest.raises(OSError, match="No space left"):
+            writer.write(iter([Row(value=b"abc"), Row(value=b"defg")]))
+        assert len(opened) == 1 and ".tmp-" in opened[0], opened
+        assert os.listdir(out) == []
+        return
     fixedlen.register(spark)
     varlen.register(spark)
-    out = str(tmp_path / "out")
     if fmt == "fixedlen":
         # raw mode: the second record has the wrong length
         values = [b"abcdef", b"abc"]
