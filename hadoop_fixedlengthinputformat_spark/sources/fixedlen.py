@@ -54,6 +54,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -394,27 +395,7 @@ class _Options:
         return StructType(out)
 
     def arrow_schema(self) -> pa.Schema:
-        cols: list[pa.Field] = []
-        if self.with_offset:
-            cols.append(pa.field("record_offset", pa.int64()))
-        if self.key_bounds is not None:
-            cols.append(pa.field("record_key", pa.binary()))
-        if self.multitype is not None:
-            cols.append(pa.field("record_type", pa.string()))
-            cols.extend(
-                pa.field(f.name, f.arrow_type()) for f in self.union_fields
-            )
-            if self.corrupt_col is not None:
-                cols.append(pa.field(self.corrupt_col, pa.binary()))
-        elif self.fields is None:
-            cols.append(pa.field("value", pa.binary()))
-        else:
-            cols.extend(pa.field(f.name, f.arrow_type()) for f in self.fields)
-            if self.corrupt_col is not None:
-                cols.append(pa.field(self.corrupt_col, pa.binary()))
-        for c in self.partition_cols:
-            cols.append(pa.field(c, pa.string()))
-        return pa.schema(cols)
+        return to_arrow_schema(self.spark_schema())
 
 
 def _single_byte_encoding(enc_raw: str, source: str) -> str:

@@ -72,6 +72,16 @@ def layout_for(table: str) -> tuple[int, list[FieldSpec]]:
     return record_length, parse_layout(spec, record_length)
 
 
+def _fill_nulls(rows: list[dict], fields: list[FieldSpec]) -> None:
+    """Fixed-width has no NULL: each missing value becomes its type's
+    filler, blank text or zero (LOW-VALUES); consuming oracles mirror
+    with COALESCE."""
+    for r in rows:
+        for f in fields:
+            if r.get(f.name) is None:
+                r[f.name] = f.kind.filler
+
+
 def fixed_file_for(sf_dir: str, table: str, encoding: str = "utf-8") -> str:
     """Path of the fixed-width serialization of ``sf_dir/table.parquet``,
     generating it (atomically) on first use.  ``encoding`` produces a
@@ -87,14 +97,7 @@ def fixed_file_for(sf_dir: str, table: str, encoding: str = "utf-8") -> str:
     tbl = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
     fields = parse_layout(spec, record_length)
     rows = tbl.sort_by(order_col).to_pylist()
-    # fixed-width has no NULL: blank strings / zero numbers (LOW-VALUES);
-    # consuming oracles mirror with COALESCE
-    num_types = {"int", "long", "double", "implied", "bin", "packed",
-                 "zoned", "zonedl", "signl", "signt", "comp1", "comp2"}
-    for r in rows:
-        for f in fields:
-            if r.get(f.name) is None:
-                r[f.name] = 0 if f.base_type in num_types else ""
+    _fill_nulls(rows, fields)
     payload = encode_rows(rows, fields, record_length, encoding=encoding)
     tmp = out + f".tmp{os.getpid()}"
     with open(tmp, "wb") as f:
@@ -649,13 +652,8 @@ def gdg_dir_for(sf_dir: str) -> str:
     os.makedirs(d, exist_ok=True)
     tbl = pq.read_table(os.path.join(sf_dir, "customer.parquet"))
     fields = parse_layout(spec, record_length)
-    num_types = {"int", "long", "double", "implied", "bin", "packed",
-                 "zoned", "zonedl", "signl", "signt", "comp1", "comp2"}
     rows = tbl.sort_by("c_custkey").to_pylist()
-    for r in rows:
-        for f in fields:
-            if r.get(f.name) is None:
-                r[f.name] = 0 if f.base_type in num_types else ""
+    _fill_nulls(rows, fields)
     members = {
         "CUST.G0001V00.fixed": [r for r in rows if r["c_custkey"] % 3 == 0],
         "CUST.G0002V00.fixed": [
@@ -766,12 +764,7 @@ def sorted_fixed_file_for(sf_dir: str, table: str = "customer") -> str:
     tbl = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
     fields = parse_layout(spec, record_length)
     rows = tbl.to_pylist()
-    num_types = {"int", "long", "double", "implied", "bin", "packed",
-                 "zoned", "zonedl", "signl", "signt", "comp1", "comp2"}
-    for r in rows:
-        for f in fields:
-            if r.get(f.name) is None:
-                r[f.name] = 0 if f.base_type in num_types else ""
+    _fill_nulls(rows, fields)
     rows.sort(key=lambda r: r[order_col])
     payload = encode_rows(rows, fields, record_length)
     tmp = out + f".tmp{os.getpid()}"

@@ -13,6 +13,12 @@ columns.  Decode is vectorized: numpy byte-matrix slicing + Arrow casts —
 the moral equivalent of the reference's zero-alloc buffer reuse
 (FixedLengthRecordReader.java:199-206) for a columnar engine.
 
+Every layout type is one row of ``_FIELD_TYPES``: its Spark type (the
+Arrow type derives from it), width rule, raw-or-transcoded matrix,
+decoder, encoder, permissive-mode pattern and blank filler.  Parsing,
+schemas, decode and encode all dispatch through that table, so a new
+type is one new row.
+
 COBOL-isms supported: OCCURS via ``type[n]`` (n consecutive slots ->
 array column) and REDEFINES implicitly — fields may OVERLAP byte
 ranges (each decodes its own view of the shared bytes; records are
@@ -23,13 +29,17 @@ validation — test_redefines_overlapping_fields asserts it).
 from __future__ import annotations
 
 import codecs
+import datetime
 import re
+import struct
 from dataclasses import dataclass
-from functools import lru_cache
+from functools import lru_cache, partial
+from typing import Callable
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     DataType,
@@ -42,24 +52,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-_TYPES = (
-    "int", "long", "double", "string", "date",
-    "packed", "zoned", "implied", "bin", "comp1", "comp2",
-    "signl", "signt",  # SIGN LEADING/TRAILING SEPARATE: explicit +/- byte
-    "zonedl",  # SIGN LEADING overpunch: sign in the FIRST byte's zone
-    "julian",  # mainframe Julian date: YYDDD (5, windowed century) or YYYYDDD (7)
-)
-
-# fixed widths for types whose byte layout implies them
-_FIXED_WIDTHS = {"comp1": 4, "comp2": 8}
-
 
 @dataclass(frozen=True)
 class FieldSpec:
     name: str
     start: int  # zero-based byte offset in the record
     length: int  # bytes per ELEMENT (= field width when occurs == 1)
-    ftype: str  # one of _TYPES, or "double(scale)" for encode formatting
+    ftype: str  # a _FIELD_TYPES key, or "double(scale)" for encode formatting
     occurs: int = 1  # COBOL OCCURS n: n consecutive elements -> array column
     depends_on: str | None = None  # OCCURS DEPENDING ON: per-row valid
     # element count comes from this earlier int/long field; `occurs`
@@ -68,6 +67,11 @@ class FieldSpec:
     @property
     def base_type(self) -> str:
         return self.ftype.split("(")[0]
+
+    @property
+    def kind(self) -> "_FieldType":
+        """This field's row of the type table."""
+        return _FIELD_TYPES[self.base_type]
 
     @property
     def scale(self) -> int:
@@ -91,53 +95,19 @@ class FieldSpec:
         """The i-th OCCURS slot as a scalar field spec."""
         return FieldSpec(self.name, self.start + i * self.length, self.length, self.ftype)
 
-    def _scalar_spark_type(self) -> DataType:
-        return {
-            "int": IntegerType(),
-            "long": LongType(),
-            "double": DoubleType(),
-            "string": StringType(),
-            "date": DateType(),
-            "julian": DateType(),  # YYDDD / YYYYDDD day-of-year date
-            "packed": DoubleType(),  # COMP-3 BCD, scaled by 10^-scale
-            "zoned": DoubleType(),  # PIC S9 DISPLAY, sign overpunch
-            "zonedl": DoubleType(),  # PIC S9 DISPLAY SIGN LEADING overpunch
-            "signl": DoubleType(),  # SIGN LEADING SEPARATE: '+'/'-' first
-            "signt": DoubleType(),  # SIGN TRAILING SEPARATE: '+'/'-' last
-            "implied": DoubleType(),  # PIC 9(n)V9(s): no point, implied scale
-            "bin": LongType(),  # COMP-4: big-endian two's-complement binary
-            "comp1": DoubleType(),  # COMP-1: BE IEEE float32, widened exactly
-            "comp2": DoubleType(),  # COMP-2: BE IEEE float64
-        }[self.base_type]
-
     def spark_type(self) -> DataType:
         if self.is_array:
-            return ArrayType(self._scalar_spark_type(), True)
-        return self._scalar_spark_type()
-
-    def _scalar_arrow_type(self) -> pa.DataType:
-        return {
-            "int": pa.int32(),
-            "long": pa.int64(),
-            "double": pa.float64(),
-            "string": pa.string(),
-            "date": pa.date32(),
-            "julian": pa.date32(),
-            "packed": pa.float64(),
-            "zoned": pa.float64(),
-            "zonedl": pa.float64(),
-            "signl": pa.float64(),
-            "signt": pa.float64(),
-            "implied": pa.float64(),
-            "bin": pa.int64(),
-            "comp1": pa.float64(),
-            "comp2": pa.float64(),
-        }[self.base_type]
+            return ArrayType(self.kind.spark, True)
+        return self.kind.spark
 
     def arrow_type(self) -> pa.DataType:
-        if self.is_array:
-            return pa.list_(self._scalar_arrow_type())
-        return self._scalar_arrow_type()
+        return to_arrow_type(self.spark_type())
+
+
+def _check_width(f: FieldSpec) -> None:
+    err = f.kind.width(f)
+    if err is not None:
+        raise ValueError(err)
 
 
 def parse_layout(spec: str, record_length: int) -> list[FieldSpec]:
@@ -179,27 +149,18 @@ def parse_layout(spec: str, record_length: int) -> list[FieldSpec]:
                 ftype, occurs = m.group(1), int(m.group(2))
                 if occurs < 1:
                     raise ValueError(f"OCCURS count must be >= 1 in {part!r}")
-        if ftype.split("(")[0] not in _TYPES:
+        if ftype.split("(")[0] not in _FIELD_TYPES:
             raise ValueError(f"unsupported layout type {ftype!r} in {part!r}")
         if start_i < 0 or length_i <= 0:
             raise ValueError(f"bad bounds in layout field {part!r}")
-        want_w = _FIXED_WIDTHS.get(ftype.split("(")[0])
-        if want_w is not None and length_i != want_w:
+        f = FieldSpec(name, start_i, length_i, ftype, occurs, depends_on)
+        _check_width(f)
+        if start_i + f.span > record_length:
             raise ValueError(
-                f"layout field {name!r}: type {ftype!r} is exactly "
-                f"{want_w} bytes, got {length_i}"
-            )
-        if ftype == "julian" and length_i not in (5, 7):
-            raise ValueError(
-                f"layout field {name!r}: julian is 5 (YYDDD) or 7 "
-                f"(YYYYDDD) bytes, got {length_i}"
-            )
-        if start_i + length_i * occurs > record_length:
-            raise ValueError(
-                f"layout field {name!r} [{start_i}, {start_i + length_i * occurs}) "
+                f"layout field {name!r} [{start_i}, {start_i + f.span}) "
                 f"exceeds recordLength={record_length}"
             )
-        fields.append(FieldSpec(name, start_i, length_i, ftype, occurs, depends_on))
+        fields.append(f)
     if len({f.name for f in fields}) != len(fields):
         raise ValueError("duplicate field names in layout")
     return fields
@@ -288,18 +249,210 @@ def _slice_binary(mat: np.ndarray, start: int, length: int) -> pa.Array:
     )
 
 
-# digit bounds keep the int64 parse overflow-free (18 digits < 2^63);
-# '+' excluded — Arrow's string->int cast rejects it, so it's malformed
-_VALID_RE = {
-    "int": r"^-?[0-9]{1,18}$",
-    "long": r"^-?[0-9]{1,18}$",
-    "double": r"^-?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$",
-    "date": r"^[0-9]{4}-(0[1-9]|1[0-2])-(0[1-9]|[12][0-9]|3[01])$",
-    "implied": r"^-?[0-9]{1,18}$",
-    "julian": r"^[0-9]{5}([0-9]{2})?$",  # width re-checked numerically below
-}
+# ---------------------------------------------------------------------------
+# Text decoders: the charset-transcoded matrix, cast to UTF-8 strings
 
 _I32_MIN, _I32_MAX = -(2**31), 2**31 - 1
+
+
+def _text(mat: np.ndarray, f: FieldSpec, permissive: bool):
+    """The field's bytes as an Arrow string column, plus a mask of the
+    rows whose non-printable bytes were blanked (None when none were).
+
+    Robustness order matters: non-printable/non-ASCII bytes are blanked
+    BEFORE the UTF-8 cast (a raw 0xFF would otherwise fail the whole
+    task); the type's pattern then nulls them with other malformed text."""
+    sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
+    bad_bytes = None
+    if permissive:
+        ok = ((sl >= 0x20) & (sl <= 0x7E)).all(axis=1)  # printable ASCII only
+        if not bool(ok.all()):
+            bad_bytes = pa.array(~ok)
+            sl = sl.copy()
+            sl[~ok] = 0x20  # spaces -> rtrim/regex turn them into null below
+    raw = pa.array(sl.view(f"S{f.length}").ravel())
+    return pc.cast(raw, pa.string()), bad_bytes
+
+
+def _trimmed(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    """The field's space-trimmed text; under permissive decode a value
+    that does not match the type's pattern becomes null."""
+    trimmed = pc.utf8_trim(_text(mat, f, permissive)[0], characters=" ")
+    if permissive:
+        mask = pc.match_substring_regex(trimmed, f.kind.valid_re)
+        trimmed = pc.if_else(mask, trimmed, pa.scalar(None, pa.string()))
+    return trimmed
+
+
+def _decode_string(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    # values are right-padded with spaces (FixedLengthInputFormat.java:42-43)
+    s, bad_bytes = _text(mat, f, permissive)
+    out = pc.utf8_rtrim(s, characters=" ")
+    if bad_bytes is not None:
+        out = pc.if_else(bad_bytes, pa.scalar(None, pa.string()), out)
+    return out
+
+
+def _decode_long(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    # failfast: Arrow raises on garbage, '+' signs, and overflow;
+    # permissive: the pattern bounds digits to 18 => the parse cannot raise
+    return pc.cast(_trimmed(mat, f, permissive), pa.int64())
+
+
+def _decode_int(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    if not permissive:
+        return pc.cast(_trimmed(mat, f, permissive), pa.int32())
+    # Arrow's int32 cast raises on overflow: range-check the int64 parse
+    v64 = _decode_long(mat, f, permissive)
+    in_range = pc.and_kleene(
+        pc.greater_equal(v64, _I32_MIN), pc.less_equal(v64, _I32_MAX)
+    )
+    v64 = pc.if_else(
+        pc.fill_null(in_range, False), v64, pa.scalar(None, pa.int64())
+    )
+    return pc.cast(v64, pa.int32())
+
+
+def _decode_double(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    return pc.cast(_trimmed(mat, f, permissive), pa.float64())
+
+
+def _decode_implied(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    # COBOL PIC 9(n)V9(s): digits only, decimal point implied at
+    # ``scale`` places — parse int64-exact, scale once
+    ints = _decode_long(mat, f, permissive)
+    return pc.divide(pc.cast(ints, pa.float64()), pa.scalar(float(10**f.scale)))
+
+
+def _decode_date(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    trimmed = _trimmed(mat, f, permissive)
+    ts = pc.strptime(trimmed, format="%Y-%m-%d", unit="s")
+    # Arrow strptime silently ROLLS OVER calendar-invalid dates
+    # (2021-04-31 -> 2021-05-01); round-trip to catch them
+    back = pc.strftime(ts, format="%Y-%m-%d")
+    bad = pc.and_kleene(pc.invert(pc.equal(back, trimmed)), pc.is_valid(trimmed))
+    if pc.any(bad).as_py():
+        if not permissive:
+            raise ValueError(
+                f"fixedlen: calendar-invalid date in field {f.name!r} "
+                f"(e.g. {trimmed.filter(bad)[0].as_py()!r}); "
+                "use mode=permissive to null malformed values"
+            )
+        ts = pc.if_else(bad, pa.scalar(None, ts.type), ts)
+    return pc.cast(ts, pa.date32())
+
+
+def _decode_julian(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
+    """Mainframe Julian date: YYDDD (windowed century: YY >= 70 -> 19YY
+    else 20YY, the classic COBOL Y2K window) or YYYYDDD.  Decoded by
+    explicit day-of-year arithmetic (portable across Arrow strptime %j
+    quirks): epoch_day(Jan 1, year) + DDD - 1, with DDD validated
+    against the year's real length."""
+    trimmed = _trimmed(mat, f, permissive)
+    w = f.length
+    year_s = pc.utf8_slice_codeunits(trimmed, 0, w - 3)
+    ddd_s = pc.utf8_slice_codeunits(trimmed, w - 3, w)
+    # exact-width check in BOTH modes: an under-width digit run
+    # (e.g. '1234' in a 5-byte field) would otherwise silently
+    # mis-slice into (year='1', ddd='234') instead of honoring
+    # the failfast contract every other numeric type keeps
+    len_ok = pc.equal(pc.utf8_length(trimmed), w)
+    short = pc.and_kleene(pc.is_valid(trimmed), pc.invert(len_ok))
+    if not permissive and pc.any(pc.fill_null(short, False)).as_py():
+        raise ValueError(
+            f"fixedlen: julian value narrower than field width {w} in "
+            f"field {f.name!r} (e.g. "
+            f"{trimmed.filter(pc.fill_null(short, False))[0].as_py()!r}); "
+            "use mode=permissive to null malformed values"
+        )
+    year_s = pc.if_else(len_ok, year_s, pa.scalar(None, pa.string()))
+    ddd_s = pc.if_else(len_ok, ddd_s, pa.scalar(None, pa.string()))
+    year = pc.cast(year_s, pa.int32())  # failfast: raises on garbage
+    ddd = pc.cast(ddd_s, pa.int32())
+    if w == 5:
+        year = pc.add(
+            year,
+            pc.if_else(
+                pc.greater_equal(year, 70),
+                pa.scalar(1900, pa.int32()),
+                pa.scalar(2000, pa.int32()),
+            ),
+        )
+    leap = pc.or_(
+        pc.and_(
+            pc.equal(pc.bit_wise_and(year, 3), 0),
+            pc.not_equal(
+                pc.subtract(year, pc.multiply(pc.divide(year, 100), 100)), 0
+            ),
+        ),
+        pc.equal(pc.subtract(year, pc.multiply(pc.divide(year, 400), 400)), 0),
+    )
+    max_ddd = pc.add(pa.scalar(365, pa.int32()), pc.cast(leap, pa.int32()))
+    bad = pc.and_kleene(
+        pc.is_valid(ddd), pc.or_kleene(pc.less(ddd, 1), pc.greater(ddd, max_ddd))
+    )
+    if pc.any(pc.fill_null(bad, False)).as_py():
+        if not permissive:
+            raise ValueError(
+                f"fixedlen: day-of-year out of range in julian field "
+                f"{f.name!r} (e.g. "
+                f"{trimmed.filter(pc.fill_null(bad, False))[0].as_py()!r}); "
+                "use mode=permissive to null malformed values"
+            )
+        year = pc.if_else(bad, pa.scalar(None, pa.int32()), year)
+        ddd = pc.if_else(bad, pa.scalar(None, pa.int32()), ddd)
+    year4 = pc.utf8_lpad(pc.cast(year, pa.string()), 4, "0")
+    jan1 = pc.strptime(
+        pc.binary_join_element_wise(year4, "01", "01", "-"),
+        format="%Y-%m-%d",
+        unit="s",
+    )
+    epoch_day = pc.cast(pc.cast(jan1, pa.date32()), pa.int32())
+    days = pc.add(epoch_day, pc.subtract(ddd, 1))
+    return pc.cast(pc.cast(days, pa.int32()), pa.date32())
+
+
+def decode_field(mat: np.ndarray, f: FieldSpec, permissive: bool = False) -> pa.Array:
+    """Vectorized decode of one scalar field column from the record
+    matrix (the transcoded one for text types, the raw one for binary
+    types), through its type's decoder.
+
+    permissive=True nulls malformed values instead of the default
+    failfast error — the reference has no notion of malformed fields
+    because it never decodes any (FixedLengthInputFormat.java:38-43).
+    """
+    return f.kind.decode(mat, f, permissive)
+
+
+def _scaled_digits(
+    f: FieldSpec,
+    digits: np.ndarray,
+    negative: np.ndarray,
+    bad: np.ndarray,
+    permissive: bool,
+    what: str,
+) -> pa.Array:
+    """The digit-matrix kernel of packed, zoned and sign-separate
+    decimals: ``digits`` is (n, k) int64 with the most significant digit
+    first, ``negative`` and ``bad`` (sign or zone defects) are per row.
+    A row with a non-digit entry is bad too; bad rows fail (failfast,
+    naming ``what``) or become null (permissive).  The int64 dot product
+    is exact up to 18 digits (the width rule), scaled by 10^-scale once."""
+    _check_width(f)
+    bad = bad | ((digits < 0) | (digits > 9)).any(axis=1)
+    if bool(bad.any()) and not permissive:
+        raise ValueError(
+            f"fixedlen: invalid {what} in field {f.name!r}; "
+            "use mode=permissive to null malformed values"
+        )
+    np.clip(digits, 0, 9, out=digits)  # keep the dot product defined for bad rows
+    powers = 10 ** np.arange(digits.shape[1] - 1, -1, -1, dtype=np.int64)
+    ints = digits @ powers
+    vals = np.where(negative, -ints, ints) / np.float64(10**f.scale)
+    arr = pa.array(vals, type=pa.float64())
+    if bool(bad.any()):
+        arr = pc.if_else(pa.array(bad), pa.scalar(None, pa.float64()), arr)
+    return arr
 
 
 def decode_packed_field(
@@ -310,230 +463,290 @@ def decode_packed_field(
     negative), scaled by 10^-scale.  The mainframe fixed-width staple —
     and inherently BINARY, so it operates on the RAW byte matrix
     (never charset-transcoded) and only exists because records are
-    fixed-length: no delimiter could survive inside BCD bytes.
-
-    Fully vectorized: nibble-split the (n, L) slice, dot the digit
-    matrix with a power-of-ten vector (int64-exact up to 18 digits),
-    apply the sign nibble, scale once.  Invalid digit nibbles (>9) or
-    sign nibbles fail (failfast) / null the value (permissive)."""
+    fixed-length: no delimiter could survive inside BCD bytes."""
     sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
-    n_digits = 2 * f.length - 1
-    if n_digits > 18:
+    nibbles = np.empty((sl.shape[0], 2 * f.length), dtype=np.int64)
+    nibbles[:, 0::2] = sl >> 4
+    nibbles[:, 1::2] = sl & 0x0F
+    sign = nibbles[:, -1]
+    return _scaled_digits(
+        f, nibbles[:, :-1], sign == 0xD, ~np.isin(sign, (0xC, 0xD, 0xF)),
+        permissive, "packed-decimal nibble",
+    )
+
+
+def decode_zoned_field(
+    mat: np.ndarray, f: FieldSpec, permissive: bool = False,
+    leading: bool = False,
+) -> pa.Array:
+    """EBCDIC zoned decimal (COBOL PIC S9(n) DISPLAY): one digit per
+    byte, low nibble the digit, zone nibble 0xF — except the sign byte
+    (LAST by default; FIRST under ``SIGN LEADING`` without SEPARATE,
+    ``leading=True``), whose zone overpunches the sign (0xC/0xF
+    positive, 0xD negative).  Binary-level like packed: decodes the RAW
+    matrix, vectorized."""
+    sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
+    zones = (sl >> 4).astype(np.int64)
+    sign_zone = zones[:, 0] if leading else zones[:, -1]
+    plain_zones = zones[:, 1:] if leading else zones[:, :-1]
+    bad = (plain_zones != 0xF).any(axis=1) | ~np.isin(sign_zone, (0xC, 0xD, 0xF))
+    return _scaled_digits(
+        f, (sl & 0x0F).astype(np.int64), sign_zone == 0xD, bad,
+        permissive, "zoned-decimal byte",
+    )
+
+
+def decode_signsep_field(
+    fmat: np.ndarray, f: FieldSpec, permissive: bool = False,
+    leading: bool = False,
+) -> pa.Array:
+    """COBOL SIGN LEADING/TRAILING SEPARATE (PIC S9(n)[V9(m)] DISPLAY
+    SIGN ... SEPARATE): an explicit '+'/'-' character byte before/after
+    the digit run.  Decodes the TRANSCODED matrix (charset digits, like
+    int/implied), vectorized."""
+    sl = np.ascontiguousarray(fmat[:, f.start : f.start + f.length])
+    sign = sl[:, 0] if leading else sl[:, -1]
+    digit_bytes = sl[:, 1:] if leading else sl[:, :-1]
+    return _scaled_digits(
+        f, digit_bytes.astype(np.int64) - ord("0"), sign == ord("-"),
+        ~np.isin(sign, (ord("+"), ord("-"))), permissive, "sign-separate byte",
+    )
+
+
+def decode_bin_field(
+    mat: np.ndarray, f: FieldSpec, permissive: bool = False
+) -> pa.Array:
+    """Big-endian two's-complement binary integer (COBOL COMP-4 /
+    BINARY; widths 1/2/4/8) — the exact convention the reference uses
+    for its offset key (FixedLengthRecordReader.java:270-278, mirrored
+    by the test helper toLong, TestFixedLengthInputFormat.java:490-505).
+    Decode is a zero-copy numpy big-endian view; binary, so it reads the
+    RAW matrix.  No malformed state exists: every bit pattern is a
+    value, so mode has no effect."""
+    _check_width(f)
+    sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
+    vals = sl.view(f">i{f.length}").ravel().astype(np.int64)
+    return pa.array(vals, type=pa.int64())
+
+
+def decode_float_field(
+    mat: np.ndarray, f: FieldSpec, permissive: bool = False
+) -> pa.Array:
+    """Big-endian IEEE-754 float (COBOL COMP-1 single / COMP-2 double).
+    COMP-1 widens to float64 exactly (every float32 is representable);
+    like ``bin``, every bit pattern is a value (NaNs/infinities pass
+    through), so mode has no effect and the RAW matrix is read."""
+    sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
+    vals = sl.view(f">f{f.length}").ravel().astype(np.float64)
+    return pa.array(vals, type=pa.float64())
+
+
+# ---------------------------------------------------------------------------
+# Encoders: one value -> its field's text (charset-encoded by the caller)
+# or, for the raw types, its bytes.  ``format_value`` rejects NULL first.
+
+
+def _format_date(v, f: FieldSpec) -> str:
+    s = v.strftime("%Y-%m-%d") if hasattr(v, "strftime") else str(v)[:10]
+    return s.ljust(f.length)
+
+
+def _format_julian(v, f: FieldSpec) -> str:
+    if v == "":  # the blank filler
+        return " " * f.length
+    d = v if hasattr(v, "timetuple") else datetime.date.fromisoformat(str(v)[:10])
+    doy = d.timetuple().tm_yday
+    if f.length != 5:
+        return f"{d.year:04d}{doy:03d}"
+    if not (1970 <= d.year <= 2069):
         raise ValueError(
-            f"packed field {f.name!r}: {n_digits} digits exceeds int64-exact 18"
+            f"year {d.year} outside the YYDDD century window "
+            f"(1970-2069) for field {f.name}"
         )
-    hi = (sl >> 4).astype(np.int64)
-    lo = (sl & 0x0F).astype(np.int64)
-    digits = np.empty((sl.shape[0], 2 * f.length), dtype=np.int64)
-    digits[:, 0::2] = hi
-    digits[:, 1::2] = lo
-    sign_nib = digits[:, -1]
-    digits = digits[:, :-1]
-    bad = (digits > 9).any(axis=1) | ~np.isin(sign_nib, (0xC, 0xD, 0xF))
-    if bool(bad.any()) and not permissive:
+    return f"{d.year % 100:02d}{doy:03d}"
+
+
+def _digit_text(value, f: FieldSpec, n_digits: int, kind: str) -> tuple[int, str]:
+    """``value`` scaled by 10^scale, and its magnitude as ``n_digits``
+    zero-padded digits (the inverse of ``_scaled_digits``)."""
+    scaled = round(float(value) * (10**f.scale))
+    digits = f"{abs(scaled):0{n_digits}d}"
+    if len(digits) > n_digits:
         raise ValueError(
-            f"fixedlen: invalid packed-decimal nibble in field {f.name!r}; "
-            "use mode=permissive to null malformed values"
+            f"value {value!r} does not fit {kind} field {f.name} "
+            f"({n_digits} digits)"
         )
-    np.clip(digits, 0, 9, out=digits)  # keep the dot product defined for bad rows
-    powers = 10 ** np.arange(n_digits - 1, -1, -1, dtype=np.int64)
-    ints = digits @ powers
-    ints = np.where(sign_nib == 0xD, -ints, ints)
-    vals = ints / np.float64(10**f.scale)
-    arr = pa.array(vals, type=pa.float64())
-    if bool(bad.any()):
-        arr = pc.if_else(pa.array(bad), pa.scalar(None, pa.float64()), arr)
-    return arr
+    return scaled, digits
 
 
 def encode_packed(value, f: FieldSpec) -> bytes:
     """Encode a number as COMP-3 packed decimal (inverse of
     decode_packed_field; sign nibble 0xC positive / 0xD negative)."""
-    if value is None:
-        raise ValueError(f"fixed-width field {f.name} cannot encode NULL")
-    n_digits = 2 * f.length - 1
-    scaled = round(float(value) * (10**f.scale))
-    digits = f"{abs(scaled):0{n_digits}d}"
-    if len(digits) > n_digits:
-        raise ValueError(
-            f"value {value!r} does not fit packed field {f.name} "
-            f"({n_digits} digits)"
-        )
+    scaled, digits = _digit_text(value, f, 2 * f.length - 1, "packed")
     nibbles = [int(c) for c in digits] + [0xD if scaled < 0 else 0xC]
     return bytes(
         (nibbles[i] << 4) | nibbles[i + 1] for i in range(0, len(nibbles), 2)
     )
 
 
-def decode_field(mat: np.ndarray, f: FieldSpec, permissive: bool = False) -> pa.Array:
-    """Vectorized decode of one field column from the record matrix.
-
-    permissive=True nulls malformed values instead of the default
-    failfast error — the reference has no notion of malformed fields
-    because it never decodes any (FixedLengthInputFormat.java:38-43).
-    Robustness order matters: non-printable/non-ASCII bytes are blanked
-    BEFORE the UTF-8 cast (a raw 0xFF would otherwise fail the whole
-    task), then the regex mask nulls non-numeric text, then int32 gets a
-    range check (Arrow's cast raises on overflow).
-    """
-    sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
-    bad_bytes = None
-    if permissive:
-        ok = ((sl >= 0x20) & (sl <= 0x7E)).all(axis=1)  # printable ASCII only
-        if not bool(ok.all()):
-            bad_bytes = pa.array(~ok)
-            sl = sl.copy()
-            sl[~ok] = 0x20  # spaces -> rtrim/regex turn them into null below
-    raw = pa.array(sl.view(f"S{f.length}").ravel())
-    s = pc.cast(raw, pa.string())
-    base = f.base_type
-    if base == "string":
-        # values are right-padded with spaces (FixedLengthInputFormat.java:42-43)
-        out = pc.utf8_rtrim(s, characters=" ")
-        if bad_bytes is not None:
-            out = pc.if_else(bad_bytes, pa.scalar(None, pa.string()), out)
-        return out
-    trimmed = pc.utf8_trim(s, characters=" ")
-    if permissive:
-        mask = pc.match_substring_regex(trimmed, _VALID_RE[base])
-        trimmed = pc.if_else(mask, trimmed, pa.scalar(None, pa.string()))
-    if base in ("int", "long"):
-        if permissive:
-            # regex bounds digits to 18 => the int64 parse cannot raise
-            v64 = pc.cast(trimmed, pa.int64())
-            if base == "long":
-                return v64
-            in_range = pc.and_kleene(
-                pc.greater_equal(v64, _I32_MIN), pc.less_equal(v64, _I32_MAX)
-            )
-            v64 = pc.if_else(
-                pc.fill_null(in_range, False), v64, pa.scalar(None, pa.int64())
-            )
-            return pc.cast(v64, pa.int32())
-        # failfast: Arrow raises on garbage, '+' signs, and overflow
-        return pc.cast(trimmed, f.arrow_type())
-    if base == "implied":
-        # COBOL PIC 9(n)V9(s): digits only, decimal point implied at
-        # ``scale`` places — parse int64-exact, scale once
-        ints = pc.cast(trimmed, pa.int64())
-        return pc.divide(
-            pc.cast(ints, pa.float64()), pa.scalar(float(10**f.scale))
-        )
-    if base == "double":
-        return pc.cast(trimmed, pa.float64())
-    if base == "julian":
-        # mainframe Julian date: YYDDD (windowed century: YY >= 70 ->
-        # 19YY else 20YY, the classic COBOL Y2K window) or YYYYDDD.
-        # Decoded by explicit day-of-year arithmetic (portable across
-        # Arrow strptime %j quirks): epoch_day(Jan 1, year) + DDD - 1,
-        # with DDD validated against the year's real length.
-        w = f.length
-        year_s = pc.utf8_slice_codeunits(trimmed, 0, w - 3)
-        ddd_s = pc.utf8_slice_codeunits(trimmed, w - 3, w)
-        # exact-width check in BOTH modes: an under-width digit run
-        # (e.g. '1234' in a 5-byte field) would otherwise silently
-        # mis-slice into (year='1', ddd='234') instead of honoring
-        # the failfast contract every other numeric branch keeps
-        len_ok = pc.equal(pc.utf8_length(trimmed), w)
-        short = pc.and_kleene(pc.is_valid(trimmed), pc.invert(len_ok))
-        if not permissive and pc.any(pc.fill_null(short, False)).as_py():
-            raise ValueError(
-                f"fixedlen: julian value narrower than field width {w} in "
-                f"field {f.name!r} (e.g. "
-                f"{trimmed.filter(pc.fill_null(short, False))[0].as_py()!r}); "
-                "use mode=permissive to null malformed values"
-            )
-        year_s = pc.if_else(len_ok, year_s, pa.scalar(None, pa.string()))
-        ddd_s = pc.if_else(len_ok, ddd_s, pa.scalar(None, pa.string()))
-        year = pc.cast(year_s, pa.int32())  # failfast: raises on garbage
-        ddd = pc.cast(ddd_s, pa.int32())
-        if w == 5:
-            year = pc.add(
-                year,
-                pc.if_else(
-                    pc.greater_equal(year, 70),
-                    pa.scalar(1900, pa.int32()),
-                    pa.scalar(2000, pa.int32()),
-                ),
-            )
-        leap = pc.or_(
-            pc.and_(
-                pc.equal(pc.bit_wise_and(year, 3), 0),
-                pc.not_equal(
-                    pc.subtract(year, pc.multiply(pc.divide(year, 100), 100)),
-                    0,
-                ),
-            ),
-            pc.equal(
-                pc.subtract(year, pc.multiply(pc.divide(year, 400), 400)), 0
-            ),
-        )
-        max_ddd = pc.add(pa.scalar(365, pa.int32()), pc.cast(leap, pa.int32()))
-        bad = pc.and_kleene(
-            pc.is_valid(ddd),
-            pc.or_kleene(
-                pc.less(ddd, 1), pc.greater(ddd, max_ddd)
-            ),
-        )
-        if pc.any(pc.fill_null(bad, False)).as_py():
-            if not permissive:
-                raise ValueError(
-                    f"fixedlen: day-of-year out of range in julian field "
-                    f"{f.name!r} (e.g. "
-                    f"{trimmed.filter(pc.fill_null(bad, False))[0].as_py()!r}); "
-                    "use mode=permissive to null malformed values"
-                )
-            year = pc.if_else(bad, pa.scalar(None, pa.int32()), year)
-            ddd = pc.if_else(bad, pa.scalar(None, pa.int32()), ddd)
-        year4 = pc.utf8_lpad(pc.cast(year, pa.string()), 4, "0")
-        jan1 = pc.strptime(
-            pc.binary_join_element_wise(year4, "01", "01", "-"),
-            format="%Y-%m-%d",
-            unit="s",
-        )
-        epoch_day = pc.cast(pc.cast(jan1, pa.date32()), pa.int32())
-        days = pc.add(epoch_day, pc.subtract(ddd, 1))
-        return pc.cast(pc.cast(days, pa.int32()), pa.date32())
-    if base == "date":
-        ts = pc.strptime(trimmed, format="%Y-%m-%d", unit="s")
-        # Arrow strptime silently ROLLS OVER calendar-invalid dates
-        # (2021-04-31 -> 2021-05-01); round-trip to catch them
-        back = pc.strftime(ts, format="%Y-%m-%d")
-        bad = pc.and_kleene(
-            pc.invert(pc.equal(back, trimmed)), pc.is_valid(trimmed)
-        )
-        if pc.any(bad).as_py():
-            if not permissive:
-                raise ValueError(
-                    f"fixedlen: calendar-invalid date in field {f.name!r} "
-                    f"(e.g. {trimmed.filter(bad)[0].as_py()!r}); "
-                    "use mode=permissive to null malformed values"
-                )
-            ts = pc.if_else(bad, pa.scalar(None, ts.type), ts)
-        return pc.cast(ts, pa.date32())
-    raise AssertionError(f"unreachable type {f.ftype}")
+def encode_zoned(value, f: FieldSpec, leading: bool = False) -> bytes:
+    """Encode a number as EBCDIC zoned decimal (inverse of
+    decode_zoned_field; sign overpunched in the last byte's zone, or
+    the first byte's under ``leading=True``)."""
+    scaled, digits = _digit_text(value, f, f.length, "zoned")
+    out = bytearray(0xF0 | int(c) for c in digits)
+    at = 0 if leading else -1
+    out[at] = (0xD0 if scaled < 0 else 0xC0) | int(digits[at])
+    return bytes(out)
 
 
-def _decode_scalar(
+def encode_signsep(value, f: FieldSpec, leading: bool) -> str:
+    """Inverse of decode_signsep_field (charset-encoded by the caller)."""
+    scaled, digits = _digit_text(value, f, f.length - 1, "sign-separate")
+    sign = "-" if scaled < 0 else "+"
+    return sign + digits if leading else digits + sign
+
+
+def encode_bin(value, f: FieldSpec) -> bytes:
+    """Encode an integer as big-endian two's-complement (COMP-4)."""
+    try:
+        return int(value).to_bytes(f.length, "big", signed=True)
+    except OverflowError:
+        raise ValueError(
+            f"value {value!r} does not fit bin field {f.name} "
+            f"({f.length} bytes signed)"
+        )
+
+
+def _encode_float(fmt: str):
+    """Big-endian IEEE float encoder (COMP-1 rounds to nearest-even
+    float32 — the same rounding every engine's double->float cast
+    performs, so round-trips are cross-engine deterministic)."""
+    return lambda value, f: struct.pack(fmt, float(value))
+
+
+def _widths(allowed: tuple[int, ...], what: str):
+    """Width rule: the field must be one of ``allowed`` bytes wide."""
+    return lambda f: (
+        None if f.length in allowed else f"{what.format(f=f)}, got {f.length}"
+    )
+
+
+def _digits(kind: str, count: Callable[[int], int]):
+    """Width rule of a decimal holding ``count(width)`` digits: at
+    least one (only a sign-separate field can have none) and at most 18,
+    the int64-exact bound of the digit kernel."""
+    def rule(f: FieldSpec) -> str | None:
+        n = count(f.length)
+        if n < 1:
+            return f"{kind} field {f.name!r} needs >= 2 bytes (sign + digit)"
+        if n > 18:
+            return f"{kind} field {f.name!r}: {n} digits exceeds int64-exact 18"
+        return None
+    return rule
+
+
+@dataclass(frozen=True)
+class _FieldType:
+    """One layout type: what parsing, schemas, decode and encode know of it."""
+
+    spark: DataType
+    # (matrix, field, permissive) -> scalar column, on the raw matrix
+    # when ``raw``, else on the charset-transcoded one
+    decode: Callable[[np.ndarray, FieldSpec, bool], pa.Array]
+    # (value, field) -> bytes when ``raw``, else text for the charset
+    encode: Callable[[object, FieldSpec], "bytes | str"]
+    raw: bool = False
+    # field -> error text for a width the type cannot hold, else None
+    width: Callable[[FieldSpec], "str | None"] = lambda f: None
+    valid_re: str | None = None  # permissive decode nulls non-matching text
+    filler: object = 0  # for a NULL or an unused ODO slot: blank or zero
+
+
+# digit bounds keep the int64 parse overflow-free (18 digits < 2^63);
+# '+' excluded — Arrow's string->int cast rejects it, so it's malformed
+_INT_RE = r"^-?[0-9]{1,18}$"
+_DOUBLE_RE = r"^-?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$"
+_DATE_RE = r"^[0-9]{4}-(0[1-9]|1[0-2])-(0[1-9]|[12][0-9]|3[01])$"
+_ZONED = _digits("zoned", lambda w: w)
+_SIGNSEP = _digits("sign-separate", lambda w: w - 1)
+
+
+def _int_text(v, f: FieldSpec) -> str:
+    return f"{int(v):0{f.length}d}"
+
+
+_FIELD_TYPES: dict[str, _FieldType] = {
+    "int": _FieldType(IntegerType(), _decode_int, _int_text, valid_re=_INT_RE),
+    "long": _FieldType(LongType(), _decode_long, _int_text, valid_re=_INT_RE),
+    "double": _FieldType(
+        DoubleType(), _decode_double,
+        lambda v, f: f"{float(v):0{f.length}.{f.scale}f}", valid_re=_DOUBLE_RE,
+    ),
+    "string": _FieldType(
+        StringType(), _decode_string, lambda v, f: str(v).ljust(f.length), filler=""
+    ),
+    "date": _FieldType(
+        DateType(), _decode_date, _format_date, valid_re=_DATE_RE, filler=""
+    ),
+    # mainframe Julian date: YYDDD (5, windowed century) or YYYYDDD (7);
+    # the pattern admits both, the decoder re-checks the field's width
+    "julian": _FieldType(
+        DateType(), _decode_julian, _format_julian, filler="",
+        width=_widths(
+            (5, 7), "layout field {f.name!r}: julian is 5 (YYDDD) or 7 (YYYYDDD) bytes"
+        ),
+        valid_re=r"^[0-9]{5}([0-9]{2})?$",
+    ),
+    # PIC 9(n)V9(s): no point, implied scale
+    "implied": _FieldType(
+        DoubleType(), _decode_implied,
+        lambda v, f: f"{round(float(v) * (10 ** f.scale)):0{f.length}d}",
+        valid_re=_INT_RE,
+    ),
+    # COMP-3 BCD, scaled by 10^-scale
+    "packed": _FieldType(
+        DoubleType(), decode_packed_field, encode_packed, raw=True,
+        width=_digits("packed", lambda w: 2 * w - 1),
+    ),
+    # PIC S9 DISPLAY, sign overpunch in the last / (SIGN LEADING) first byte
+    "zoned": _FieldType(DoubleType(), decode_zoned_field, encode_zoned, True, _ZONED),
+    "zonedl": _FieldType(
+        DoubleType(), partial(decode_zoned_field, leading=True),
+        partial(encode_zoned, leading=True), True, _ZONED,
+    ),
+    # SIGN LEADING/TRAILING SEPARATE: explicit '+'/'-' first / last byte
+    "signl": _FieldType(
+        DoubleType(), partial(decode_signsep_field, leading=True),
+        partial(encode_signsep, leading=True), width=_SIGNSEP,
+    ),
+    "signt": _FieldType(
+        DoubleType(), decode_signsep_field,
+        partial(encode_signsep, leading=False), width=_SIGNSEP,
+    ),
+    # COMP-4: big-endian two's-complement binary
+    "bin": _FieldType(
+        LongType(), decode_bin_field, encode_bin, True,
+        _widths((1, 2, 4, 8), "bin field {f.name!r}: width must be 1/2/4/8"),
+    ),
+    # COMP-1 / COMP-2: big-endian IEEE float32 (widened exactly) / float64
+    "comp1": _FieldType(
+        DoubleType(), decode_float_field, _encode_float(">f"), True,
+        _widths((4,), "layout field {f.name!r}: type {f.ftype!r} is exactly 4 bytes"),
+    ),
+    "comp2": _FieldType(
+        DoubleType(), decode_float_field, _encode_float(">d"), True,
+        _widths((8,), "layout field {f.name!r}: type {f.ftype!r} is exactly 8 bytes"),
+    ),
+}
+
+
+def _decode_one(
     mat: np.ndarray, fmat: np.ndarray, f: FieldSpec, permissive: bool
 ) -> pa.Array:
-    """Dispatch one SCALAR field to its decoder (binary types read the
-    raw matrix; text types the charset-transcoded one)."""
-    if f.base_type == "packed":
-        return decode_packed_field(mat, f, permissive=permissive)
-    if f.base_type == "zoned":
-        return decode_zoned_field(mat, f, permissive=permissive)
-    if f.base_type == "zonedl":
-        return decode_zoned_field(mat, f, permissive=permissive, leading=True)
-    if f.base_type in ("signl", "signt"):
-        return decode_signsep_field(
-            fmat, f, leading=f.base_type == "signl", permissive=permissive
-        )
-    if f.base_type == "bin":
-        return decode_bin_field(mat, f)
-    if f.base_type in ("comp1", "comp2"):
-        return decode_float_field(mat, f)
-    return decode_field(fmat, f, permissive=permissive)
+    """One SCALAR field through its type's decoder, on the raw or the
+    charset-transcoded matrix."""
+    return f.kind.decode(mat if f.kind.raw else fmat, f, permissive)
 
 
 def decode_occurs_field(
@@ -557,7 +770,7 @@ def decode_occurs_field(
     whole list (the quarantine convention)."""
     n_elem = f.occurs
     slots = [
-        _decode_scalar(mat, fmat, f.element(i), permissive)
+        _decode_one(mat, fmat, f.element(i), permissive)
         for i in range(n_elem)
     ]
     n_rows = len(slots[0])
@@ -584,23 +797,90 @@ def decode_occurs_field(
             f"{counts[i].as_py()!r})"
         )
     lengths = np.where(bad, 0, cnt).astype(np.int64)
-    offsets = np.concatenate(
-        [[0], np.cumsum(lengths)]
-    ).astype(np.int64)
+    offsets = np.concatenate([[0], np.cumsum(lengths)]).astype(np.int64)
     starts = np.arange(n_rows, dtype=np.int64) * n_elem
     pos_in_row = np.arange(offsets[-1], dtype=np.int64) - np.repeat(
         offsets[:-1], lengths
     )
     taken = row_major.take(pa.array(np.repeat(starts, lengths) + pos_in_row))
     if bad.any():  # permissive: null list per corrupt counter
-        off_list = [None if i < n_rows and bad[i] else int(o)
-                    for i, o in enumerate(offsets)]
-        return pa.ListArray.from_arrays(
-            pa.array(off_list, type=pa.int32()), taken
-        )
-    return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()), taken
-    )
+        offsets = [None if i < n_rows and bad[i] else int(o)
+                   for i, o in enumerate(offsets)]
+    return pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), taken)
+
+
+def _decode_fields(
+    mat: np.ndarray, fmat: np.ndarray, fields: list[FieldSpec], permissive: bool
+) -> list[pa.Array]:
+    """One column per layout field, in layout order; an OCCURS DEPENDING
+    ON field takes its per-row counts from its (earlier) counter."""
+    cols: list[pa.Array] = []
+    scalars: dict[str, pa.Array] = {}
+    for f in fields:
+        if f.is_array:
+            counts = scalars[f.depends_on] if f.depends_on else None
+            cols.append(decode_occurs_field(mat, fmat, f, permissive, counts))
+        else:
+            arr = _decode_one(mat, fmat, f, permissive)
+            scalars[f.name] = arr
+            cols.append(arr)
+    return cols
+
+
+def _null_rows(cols: list[pa.Array]) -> np.ndarray | None:
+    """Rows with a null anywhere in ``cols`` — an OCCURS element or a
+    whole ODO list counts — or None when no column holds a null.  Under
+    permissive decode that marks a malformed field: fixed-width fields
+    cannot be legitimately null (the writer rejects None)."""
+    bad = None
+    for col in cols:
+        if pa.types.is_list(col.type):
+            # ODO lists are variable-length and can themselves be null
+            # (corrupt counter), so walk the offsets instead of reshaping
+            if col.values.null_count == 0 and col.null_count == 0:
+                continue
+            el_null = np.asarray(pc.is_null(col.values))
+            offs = np.asarray(col.offsets.fill_null(0))
+            cs = np.concatenate([[0], np.cumsum(el_null)])
+            m = cs[offs[1:]] - cs[offs[:-1]] > 0
+            if col.null_count:
+                m |= np.asarray(pc.is_null(col))
+        else:
+            if col.null_count == 0:
+                continue
+            m = np.asarray(pc.is_null(col))
+        bad = m if bad is None else bad | m
+    return bad
+
+
+def _record_matrices(chunk: bytes, record_length: int, encoding: str):
+    """The (n, record_length) raw byte matrix and its charset-transcoded
+    view (the same array for ASCII-compatible encodings)."""
+    n = len(chunk) // record_length
+    mat = np.frombuffer(chunk, dtype=np.uint8).reshape(n, record_length)
+    tbl = transcode_table(encoding)
+    return mat, (mat if tbl is None else tbl[mat])
+
+
+def _lead_columns(
+    mat: np.ndarray,
+    base_offset: int,
+    with_offset: bool,
+    key_bounds: tuple[int, int] | None,
+    step: int,
+) -> list[pa.Array]:
+    """[record_offset?] [record_key?]: the file-global byte offset — the
+    reference's default key (FixedLengthRecordReader.java:256-260),
+    decoded from its 8-byte big-endian convention to a plain long — and
+    the raw key slice, zero-based inclusive bounds (FLIF:100-149)."""
+    cols: list[pa.Array] = []
+    if with_offset:
+        offs = base_offset + np.arange(mat.shape[0], dtype=np.int64) * step
+        cols.append(pa.array(offs, type=pa.int64()))
+    if key_bounds is not None:
+        start, end = key_bounds
+        cols.append(_slice_binary(mat, start, end - start + 1))
+    return cols
 
 
 def decode_chunk(
@@ -631,73 +911,23 @@ def decode_chunk(
     carry the original bytes — key fidelity is the reference's contract
     (FixedLengthRecordReader.java:252-254), independent of charset.
     """
-    n = len(chunk) // record_length
-    mat = np.frombuffer(chunk, dtype=np.uint8).reshape(n, record_length)
-    tbl = transcode_table(encoding)
-    fmat = mat if tbl is None else tbl[mat]
-    cols: list[pa.Array] = []
-    if with_offset:
-        # file-global byte offset — the reference's default key
-        # (FixedLengthRecordReader.java:256-260), decoded from its 8-byte
-        # big-endian convention to a plain long column.
-        step = offset_stride if offset_stride is not None else record_length
-        offs = base_offset + np.arange(n, dtype=np.int64) * step
-        cols.append(pa.array(offs, type=pa.int64()))
-    if key_bounds is not None:
-        start, end = key_bounds  # zero-based inclusive (FLIF:100-149)
-        cols.append(_slice_binary(mat, start, end - start + 1))
+    mat, fmat = _record_matrices(chunk, record_length, encoding)
+    step = offset_stride if offset_stride is not None else record_length
+    cols = _lead_columns(mat, base_offset, with_offset, key_bounds, step)
     if fields is None:
         cols.append(_slice_binary(mat, 0, record_length))
-    else:
-        scalar_cache: dict[str, pa.Array] = {}
-        for f in fields:
-            if f.is_array:
-                counts = (
-                    scalar_cache[f.depends_on] if f.depends_on else None
-                )
-                cols.append(
-                    decode_occurs_field(mat, fmat, f, permissive, counts)
-                )
-            else:
-                # binary types (packed BCD etc.) read the RAW matrix
-                arr = _decode_scalar(mat, fmat, f, permissive)
-                scalar_cache[f.name] = arr
-                cols.append(arr)
-        if corrupt_column:
-            # fixed-width fields cannot be legitimately null (the writer
-            # rejects None), so under permissive decode a null ANYWHERE
-            # in a row means a malformed field — capture that row's raw
-            # bytes, parquet-reader-style _corrupt_record
-            bad = None
-            for col in cols[len(cols) - len(fields):]:
-                if pa.types.is_list(col.type):
-                    # OCCURS: element-level nulls -> any-per-row; ODO
-                    # lists are variable-length and can themselves be
-                    # null (corrupt counter), so walk the offsets
-                    # instead of reshaping
-                    if col.values.null_count == 0 and col.null_count == 0:
-                        continue
-                    el_null = np.asarray(pc.is_null(col.values))
-                    offs = np.asarray(col.offsets.fill_null(0))
-                    cs = np.concatenate([[0], np.cumsum(el_null)])
-                    anyel = cs[offs[1:]] - cs[offs[:-1]] > 0
-                    lst_null = (
-                        np.asarray(pc.is_null(col))
-                        if col.null_count
-                        else np.zeros(n, dtype=bool)
-                    )
-                    m = pa.array(anyel | lst_null)
-                else:
-                    if col.null_count == 0:
-                        continue
-                    m = pc.is_null(col)
-                bad = m if bad is None else pc.or_(bad, m)
+        return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+    own = _decode_fields(mat, fmat, fields, permissive)
+    cols.extend(own)
+    if corrupt_column:
+        # a null ANYWHERE in a row captures that row's raw bytes,
+        # parquet-reader-style _corrupt_record
+        bad = _null_rows(own)
+        if bad is None:
+            cols.append(pa.nulls(mat.shape[0], pa.binary()))
+        else:
             raw = _slice_binary(mat, 0, record_length)
-            if bad is None:
-                corrupt = pa.nulls(n, pa.binary())
-            else:
-                corrupt = pc.if_else(bad, raw, pa.scalar(None, pa.binary()))
-            cols.append(corrupt)
+            cols.append(pc.if_else(pa.array(bad), raw, pa.scalar(None, pa.binary())))
     return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
 
 
@@ -772,39 +1002,12 @@ def encode_framed(
 # Encode (fixture generation + the fixedlen sink)
 
 
-def format_value(v, f: FieldSpec) -> str:
+def format_value(v, f: FieldSpec) -> "str | bytes":
+    """One scalar value through its type's encoder: the field's text
+    (bytes for the raw binary types)."""
     if v is None:
         raise ValueError(f"fixed-width field {f.name} cannot encode NULL")
-    base = f.base_type
-    if base in ("int", "long"):
-        s = f"{int(v):0{f.length}d}"
-    elif base == "implied":
-        s = f"{round(float(v) * (10 ** f.scale)):0{f.length}d}"
-    elif base == "double":
-        s = f"{float(v):0{f.length}.{f.scale}f}"
-    elif base == "date":
-        s = v.strftime("%Y-%m-%d") if hasattr(v, "strftime") else str(v)[:10]
-        s = s.ljust(f.length)
-    elif base == "julian":
-        import datetime as _dt
-
-        d = (
-            v
-            if hasattr(v, "timetuple")
-            else _dt.date.fromisoformat(str(v)[:10])
-        )
-        doy = d.timetuple().tm_yday
-        if f.length == 5:
-            if not (1970 <= d.year <= 2069):
-                raise ValueError(
-                    f"year {d.year} outside the YYDDD century window "
-                    f"(1970-2069) for field {f.name}"
-                )
-            s = f"{d.year % 100:02d}{doy:03d}"
-        else:
-            s = f"{d.year:04d}{doy:03d}"
-    else:
-        s = str(v).ljust(f.length)
+    s = f.kind.encode(v, f)
     if len(s) > f.length:
         raise ValueError(
             f"value {v!r} does not fit field {f.name} (width {f.length})"
@@ -821,25 +1024,15 @@ def encode_rows(
     """Encode an iterable of dict-like rows to back-to-back fixed-width
     records — no delimiters, no newlines (FixedLengthInputFormat.java:38-43).
     ``encoding`` produces single-byte charset output (e.g. EBCDIC cp037)
-    symmetric with the reader's decode transcoding; ``packed`` fields
-    emit raw BCD bytes untouched by the charset."""
+    symmetric with the reader's decode transcoding; the raw types
+    (``packed`` BCD etc.) emit bytes untouched by the charset."""
     pad = " ".encode(encoding)
     out = bytearray()
+
     def enc_scalar(v, f: FieldSpec) -> bytes:
-        if f.base_type == "packed":
-            b = encode_packed(v, f)
-        elif f.base_type == "zoned":
-            b = encode_zoned(v, f)
-        elif f.base_type == "zonedl":
-            b = encode_zoned(v, f, leading=True)
-        elif f.base_type in ("signl", "signt"):
-            b = encode_signsep(v, f, f.base_type == "signl").encode(encoding)
-        elif f.base_type == "bin":
-            b = encode_bin(v, f)
-        elif f.base_type in ("comp1", "comp2"):
-            b = encode_float(v, f)
-        else:
-            b = format_value(v, f).encode(encoding)
+        b = format_value(v, f)
+        if isinstance(b, str):
+            b = b.encode(encoding)
         if len(b) != f.length:
             raise ValueError(
                 f"encoded field {f.name} is {len(b)} bytes, expected "
@@ -853,15 +1046,14 @@ def encode_rows(
             if f.is_array:
                 vals = row[f.name]
                 if f.depends_on is not None:
-                    # ODO: up to `occurs` data elements; unused slots are
-                    # zero/blank filler (the record reserves them all)
+                    # ODO: up to `occurs` data elements; unused slots hold
+                    # the type's filler (the record reserves them all)
                     if vals is None or len(vals) > f.occurs:
                         raise ValueError(
                             f"OCCURS DEPENDING ON field {f.name} takes at "
                             f"most {f.occurs} elements, got {vals!r}"
                         )
-                    filler = 0 if f.base_type != "string" else ""
-                    vals = list(vals) + [filler] * (f.occurs - len(vals))
+                    vals = list(vals) + [f.kind.filler] * (f.occurs - len(vals))
                 elif vals is None or len(vals) != f.occurs:
                     raise ValueError(
                         f"OCCURS field {f.name} needs exactly {f.occurs} "
@@ -894,7 +1086,7 @@ def parse_multitype(
         )
     layouts: dict[str, list[FieldSpec]] = {}
     union: list[FieldSpec] = []
-    seen: dict[str, tuple[str, int]] = {}
+    seen: dict[str, tuple[str, int, bool]] = {}
     for part in spec.split(";"):
         part = part.strip()
         if not part or "=" not in part:
@@ -910,15 +1102,15 @@ def parse_multitype(
         fields = parse_layout(sub, record_length)
         layouts[tag] = fields
         for f in fields:
+            kind = (f.base_type, f.occurs, f.is_array)
             if f.name in seen:
-                if seen[f.name] != (f.base_type, f.occurs):
+                if seen[f.name] != kind:
                     raise ValueError(
                         f"multitype: field {f.name!r} has conflicting types "
-                        f"{seen[f.name]!r} vs {(f.base_type, f.occurs)!r} "
-                        "across tags"
+                        f"{seen[f.name]!r} vs {kind!r} across tags"
                     )
             else:
-                seen[f.name] = (f.base_type, f.occurs)
+                seen[f.name] = kind
                 union.append(f)
     if not layouts:
         raise ValueError("multitype: no layouts given")
@@ -942,14 +1134,13 @@ def decode_chunk_multitype(
 ) -> pa.RecordBatch:
     """Decode a record-aligned chunk whose records carry a type
     discriminator: group rows by tag (one vectorized pass), decode each
-    group with its own layout, null-fill union columns the tag lacks,
-    and scatter groups back to file order (stable inverse permutation) —
-    no per-record Python.  Unknown tags fail (failfast) or surface as
+    group with its own layout exactly as :func:`decode_chunk` decodes a
+    single-layout chunk, null-fill union columns the tag lacks, and
+    scatter groups back to file order (stable inverse permutation) — no
+    per-record Python.  Unknown tags fail (failfast) or surface as
     record_type with all-null fields (permissive)."""
-    n = len(chunk) // record_length
-    mat = np.frombuffer(chunk, dtype=np.uint8).reshape(n, record_length)
-    tbl = transcode_table(encoding)
-    fmat = mat if tbl is None else tbl[mat]
+    mat, fmat = _record_matrices(chunk, record_length, encoding)
+    n = mat.shape[0]
     t_start, t_len = type_bounds
     tags = _slice_bytes(fmat, t_start, t_len).astype(f"U{t_len}")
 
@@ -961,245 +1152,47 @@ def decode_chunk_multitype(
             f"{sorted(layouts)}); use mode=permissive to null these rows"
         )
 
-    groups: list[tuple[np.ndarray, list[FieldSpec] | None]] = []
-    for tag, fields in layouts.items():
-        idx = np.nonzero(tags == tag)[0]
-        if len(idx):
-            groups.append((idx, fields))
-    unk = np.nonzero(~known)[0]
-    if len(unk):
-        groups.append((unk, None))
-
-    cat = (
-        np.concatenate([g[0] for g in groups])
-        if groups
-        else np.empty(0, dtype=np.int64)
-    )
+    groups = [(np.nonzero(tags == t)[0], fields) for t, fields in layouts.items()]
+    groups = [g for g in groups + [(np.nonzero(~known)[0], None)] if len(g[0])]
+    cat = np.concatenate([g[0] for g in groups]) if groups else np.empty(0, dtype=np.int64)
     inv = np.empty(n, dtype=np.int64)
     inv[cat] = np.arange(n, dtype=np.int64)
     perm = pa.array(inv)
 
-    cols: list[pa.Array] = []
-    if with_offset:
-        step = offset_stride if offset_stride is not None else record_length
-        offs = base_offset + np.arange(n, dtype=np.int64) * step
-        cols.append(pa.array(offs, type=pa.int64()))
-    if key_bounds is not None:
-        start, end = key_bounds
-        cols.append(_slice_binary(mat, start, end - start + 1))
+    step = offset_stride if offset_stride is not None else record_length
+    cols = _lead_columns(mat, base_offset, with_offset, key_bounds, step)
     cols.append(pa.array(tags))  # record_type (post-transcode text)
 
-    # corrupt tracking: unknown-tag rows are corrupt outright; a known
-    # row is corrupt when a field of ITS OWN layout nulled (union
-    # columns the tag lacks are expected-null, never corrupt)
-    bad_per_group = [
-        np.zeros(len(idx), dtype=bool)
-        if fields is not None
-        else np.ones(len(idx), dtype=bool)
-        for idx, fields in groups
-    ]
+    # per group: its own layout's columns by name, and its corrupt rows —
+    # unknown-tag rows are corrupt outright; a known row is corrupt when
+    # a field of ITS OWN layout nulled (union columns the tag lacks are
+    # expected-null, never corrupt)
+    decoded: list[dict[str, pa.Array]] = []
+    bad_per_group: list[np.ndarray] = []
+    for idx, fields in groups:
+        if fields is None:
+            decoded.append({})
+            bad_per_group.append(np.ones(len(idx), dtype=bool))
+            continue
+        sub = np.ascontiguousarray(mat[idx])
+        sub_txt = sub if fmat is mat else np.ascontiguousarray(fmat[idx])
+        own = _decode_fields(sub, sub_txt, fields, permissive)
+        decoded.append({f.name: col for f, col in zip(fields, own)})
+        bad = _null_rows(own) if corrupt_column else None
+        bad_per_group.append(np.zeros(len(idx), dtype=bool) if bad is None else bad)
     for f in union_fields:
-        chunks: list[pa.Array] = []
-        for gi, (idx, fields) in enumerate(groups):
-            present = fields is not None and any(
-                g.name == f.name for g in fields
-            )
-            if present:
-                sub_raw = np.ascontiguousarray(mat[idx])
-                sub_txt = np.ascontiguousarray(fmat[idx])
-                if f.occurs > 1:
-                    arr = decode_occurs_field(sub_raw, sub_txt, f, permissive)
-                    if corrupt_column and arr.values.null_count:
-                        el = np.asarray(pc.is_null(arr.values))
-                        bad_per_group[gi] |= el.reshape(len(idx), -1).any(axis=1)
-                else:
-                    arr = _decode_scalar(sub_raw, sub_txt, f, permissive)
-                    if corrupt_column and arr.null_count:
-                        bad_per_group[gi] |= np.asarray(
-                            pc.is_null(arr).fill_null(True)
-                        )
-                chunks.append(arr)
-            else:
-                chunks.append(pa.nulls(len(idx), f.arrow_type()))
-        col = (
+        chunks = [
+            d[f.name] if f.name in d else pa.nulls(len(idx), f.arrow_type())
+            for (idx, _), d in zip(groups, decoded)
+        ]
+        cols.append(
             pa.concat_arrays(chunks).take(perm)
             if chunks
             else pa.nulls(0, f.arrow_type())
         )
-        cols.append(col)
     if corrupt_column:
-        bad_cat = (
-            np.concatenate(bad_per_group)
-            if bad_per_group
-            else np.empty(0, dtype=bool)
-        )
+        bad_cat = np.concatenate(bad_per_group) if groups else np.empty(0, dtype=bool)
         bad = pa.array(bad_cat).take(perm)
         raw = _slice_binary(mat, 0, record_length)
         cols.append(pc.if_else(bad, raw, pa.scalar(None, pa.binary())))
     return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-
-
-def decode_zoned_field(
-    mat: np.ndarray, f: FieldSpec, permissive: bool = False,
-    leading: bool = False,
-) -> pa.Array:
-    """EBCDIC zoned decimal (COBOL PIC S9(n) DISPLAY): one digit per
-    byte, low nibble the digit, zone nibble 0xF — except the sign byte
-    (LAST by default; FIRST under ``SIGN LEADING`` without SEPARATE,
-    ``leading=True``), whose zone overpunches the sign (0xC/0xF
-    positive, 0xD negative).  Binary-level like packed: decodes the RAW
-    matrix, vectorized."""
-    sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
-    n_digits = f.length
-    if n_digits > 18:
-        raise ValueError(
-            f"zoned field {f.name!r}: {n_digits} digits exceeds int64-exact 18"
-        )
-    zones = (sl >> 4).astype(np.int64)
-    digits = (sl & 0x0F).astype(np.int64)
-    sign_zone = zones[:, 0] if leading else zones[:, -1]
-    plain_zones = zones[:, 1:] if leading else zones[:, :-1]
-    bad = (
-        (digits > 9).any(axis=1)
-        | (plain_zones != 0xF).any(axis=1)
-        | ~np.isin(sign_zone, (0xC, 0xD, 0xF))
-    )
-    if bool(bad.any()) and not permissive:
-        raise ValueError(
-            f"fixedlen: invalid zoned-decimal byte in field {f.name!r}; "
-            "use mode=permissive to null malformed values"
-        )
-    np.clip(digits, 0, 9, out=digits)
-    powers = 10 ** np.arange(n_digits - 1, -1, -1, dtype=np.int64)
-    ints = digits @ powers
-    ints = np.where(sign_zone == 0xD, -ints, ints)
-    vals = ints / np.float64(10**f.scale)
-    arr = pa.array(vals, type=pa.float64())
-    if bool(bad.any()):
-        arr = pc.if_else(pa.array(bad), pa.scalar(None, pa.float64()), arr)
-    return arr
-
-
-def decode_signsep_field(
-    fmat: np.ndarray, f: FieldSpec, leading: bool, permissive: bool = False
-) -> pa.Array:
-    """COBOL SIGN LEADING/TRAILING SEPARATE (PIC S9(n)[V9(m)] DISPLAY
-    SIGN ... SEPARATE): an explicit '+'/'-' character byte before/after
-    the digit run.  Decodes the TRANSCODED matrix (charset digits, like
-    int/implied), vectorized."""
-    sl = np.ascontiguousarray(fmat[:, f.start : f.start + f.length])
-    n_digits = f.length - 1
-    if n_digits < 1:
-        raise ValueError(
-            f"sign-separate field {f.name!r} needs >= 2 bytes (sign + digit)"
-        )
-    if n_digits > 18:
-        raise ValueError(
-            f"sign-separate field {f.name!r}: {n_digits} digits exceeds "
-            "int64-exact 18"
-        )
-    sign = sl[:, 0] if leading else sl[:, -1]
-    digit_bytes = sl[:, 1:] if leading else sl[:, :-1]
-    d = digit_bytes.astype(np.int64) - ord("0")
-    bad = ((d < 0) | (d > 9)).any(axis=1) | ~np.isin(
-        sign, (ord("+"), ord("-"))
-    )
-    if bool(bad.any()) and not permissive:
-        raise ValueError(
-            f"fixedlen: invalid sign-separate byte in field {f.name!r}; "
-            "use mode=permissive to null malformed values"
-        )
-    np.clip(d, 0, 9, out=d)
-    powers = 10 ** np.arange(n_digits - 1, -1, -1, dtype=np.int64)
-    ints = d @ powers
-    ints = np.where(sign == ord("-"), -ints, ints)
-    vals = ints / np.float64(10**f.scale)
-    arr = pa.array(vals, type=pa.float64())
-    if bool(bad.any()):
-        arr = pc.if_else(pa.array(bad), pa.scalar(None, pa.float64()), arr)
-    return arr
-
-
-def encode_signsep(value, f: FieldSpec, leading: bool) -> str:
-    """Inverse of decode_signsep_field (charset-encoded by the caller)."""
-    if value is None:
-        raise ValueError(f"fixed-width field {f.name} cannot encode NULL")
-    scaled = round(float(value) * (10**f.scale))
-    digits = f"{abs(scaled):0{f.length - 1}d}"
-    if len(digits) > f.length - 1:
-        raise ValueError(
-            f"value {value!r} does not fit sign-separate field {f.name} "
-            f"({f.length - 1} digits)"
-        )
-    sign = "-" if scaled < 0 else "+"
-    return sign + digits if leading else digits + sign
-
-
-def encode_zoned(value, f: FieldSpec, leading: bool = False) -> bytes:
-    """Encode a number as EBCDIC zoned decimal (inverse of
-    decode_zoned_field; sign overpunched in the last byte's zone, or
-    the first byte's under ``leading=True``)."""
-    if value is None:
-        raise ValueError(f"fixed-width field {f.name} cannot encode NULL")
-    scaled = round(float(value) * (10**f.scale))
-    digits = f"{abs(scaled):0{f.length}d}"
-    if len(digits) > f.length:
-        raise ValueError(
-            f"value {value!r} does not fit zoned field {f.name} "
-            f"({f.length} digits)"
-        )
-    out = bytearray(0xF0 | int(c) for c in digits)
-    at = 0 if leading else -1
-    out[at] = (0xD0 if scaled < 0 else 0xC0) | int(digits[at])
-    return bytes(out)
-
-
-def decode_bin_field(mat: np.ndarray, f: FieldSpec) -> pa.Array:
-    """Big-endian two's-complement binary integer (COBOL COMP-4 /
-    BINARY; widths 1/2/4/8) — the exact convention the reference uses
-    for its offset key (FixedLengthRecordReader.java:270-278, mirrored
-    by the test helper toLong, TestFixedLengthInputFormat.java:490-505).
-    Decode is a zero-copy numpy big-endian view; binary, so it reads the
-    RAW matrix.  No malformed state exists: every bit pattern is a
-    value, so mode has no effect."""
-    if f.length not in (1, 2, 4, 8):
-        raise ValueError(
-            f"bin field {f.name!r}: width must be 1/2/4/8, got {f.length}"
-        )
-    sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
-    vals = sl.view(f">i{f.length}").ravel().astype(np.int64)
-    return pa.array(vals, type=pa.int64())
-
-
-def decode_float_field(mat: np.ndarray, f: FieldSpec) -> pa.Array:
-    """Big-endian IEEE-754 float (COBOL COMP-1 single / COMP-2 double).
-    COMP-1 widens to float64 exactly (every float32 is representable);
-    like ``bin``, every bit pattern is a value (NaNs/infinities pass
-    through), so mode has no effect and the RAW matrix is read."""
-    sl = np.ascontiguousarray(mat[:, f.start : f.start + f.length])
-    vals = sl.view(f">f{f.length}").ravel().astype(np.float64)
-    return pa.array(vals, type=pa.float64())
-
-
-def encode_float(value, f: FieldSpec) -> bytes:
-    """Encode big-endian IEEE float (COMP-1 rounds to nearest-even
-    float32 — the same rounding every engine's double->float cast
-    performs, so round-trips are cross-engine deterministic)."""
-    import struct as _struct
-
-    if value is None:
-        raise ValueError(f"fixed-width field {f.name} cannot encode NULL")
-    return _struct.pack(">f" if f.base_type == "comp1" else ">d", float(value))
-
-
-def encode_bin(value, f: FieldSpec) -> bytes:
-    """Encode an integer as big-endian two's-complement (COMP-4)."""
-    if value is None:
-        raise ValueError(f"fixed-width field {f.name} cannot encode NULL")
-    try:
-        return int(value).to_bytes(f.length, "big", signed=True)
-    except OverflowError:
-        raise ValueError(
-            f"value {value!r} does not fit bin field {f.name} "
-            f"({f.length} bytes signed)"
-        )

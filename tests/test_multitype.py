@@ -161,3 +161,113 @@ def test_multitype_corrupt_column_unknown_tag_and_bad_field(spark, tmp_path):
     assert rows[2].record_type == "X" and bytes(rows[2]._bad).startswith(b"X")
     # R row: nk/nm are union-nulls (expected) -> NOT corrupt
     assert rows[3].record_type == "R" and rows[3]._bad is None and rows[3].rk == 99
+
+
+# OCCURS DEPENDING ON inside a multitype layout: the H layout's `vals`
+# holds up to 3 two-byte ints, as many as its `cnt` counter says
+ODO_RL = 12
+
+
+def _odo_decode(layouts_opt, data, permissive=False, corrupt_column=False):
+    import pyarrow as pa
+
+    from hadoop_fixedlengthinputformat_spark.sources.layout import (
+        decode_chunk_multitype,
+        parse_multitype,
+    )
+
+    layouts, union = parse_multitype(layouts_opt, ODO_RL, 0, 1)
+    cols = [pa.field("record_type", pa.string())]
+    cols += [pa.field(f.name, f.arrow_type()) for f in union]
+    if corrupt_column:
+        cols.append(pa.field("_bad", pa.binary()))
+    return decode_chunk_multitype(
+        data, ODO_RL, layouts, union, (0, 1), 0, False, None, pa.schema(cols),
+        permissive=permissive, corrupt_column=corrupt_column,
+    ).to_pylist()
+
+
+def _odo_records(h_spec, h_rows, d_amounts):
+    from hadoop_fixedlengthinputformat_spark.sources.layout import (
+        encode_rows,
+        parse_layout,
+    )
+
+    h = parse_layout("rt:0:1:string," + h_spec, ODO_RL)
+    d = parse_layout("rt:0:1:string,amt:1:5:int", ODO_RL)
+    return b"".join(
+        [encode_rows([dict(r, rt="H")], h, ODO_RL) for r in h_rows]
+        + [encode_rows([{"rt": "D", "amt": a}], d, ODO_RL) for a in d_amounts]
+    )
+
+
+def test_multitype_odo_trims_lists_to_the_counter():
+    """Each tag decodes through the single-layout field loop, so an ODO
+    field gets its counter's per-row count (not the max OCCURS)."""
+    h_spec = "cnt:1:1:int,vals:2:2:int[3->cnt]"
+    data = _odo_records(h_spec, [{"cnt": 1, "vals": [7]}, {"cnt": 3, "vals": [1, 2, 3]},
+                                 {"cnt": 0, "vals": []}], [5])
+    rows = _odo_decode(f"H={h_spec};D=amt:1:5:int", data)
+    assert [(r["record_type"], r["cnt"], r["vals"], r["amt"]) for r in rows] == [
+        ("H", 1, [7], None), ("H", 3, [1, 2, 3], None), ("H", 0, [], None),
+        ("D", None, None, 5),
+    ]
+
+
+def test_multitype_odo_with_max_count_one_is_a_list():
+    """An ODO with max count 1 is an array column (0..1 elements)."""
+    h_spec = "cnt:1:1:int,vals:2:2:int[1->cnt]"
+    data = _odo_records(h_spec, [{"cnt": 1, "vals": [4]}, {"cnt": 0, "vals": []}], [6])
+    rows = _odo_decode(f"H={h_spec};D=amt:1:5:int", data)
+    assert [(r["vals"], r["amt"]) for r in rows] == [([4], None), ([], None), (None, 6)]
+
+
+def test_multitype_odo_bad_counter_failfast_and_corrupt_column():
+    h_spec = "cnt:1:1:int,vals:2:2:int[3->cnt]"
+    good = _odo_records(h_spec, [{"cnt": 2, "vals": [8, 9]}], [5])
+    bad = bytearray(good)
+    bad[1:2] = b"5"  # counter 5 > max 3
+    with pytest.raises(ValueError, match="OCCURS DEPENDING ON counter 'cnt' out of range"):
+        _odo_decode(f"H={h_spec};D=amt:1:5:int", bytes(bad))
+    rows = _odo_decode(f"H={h_spec};D=amt:1:5:int", bytes(bad),
+                       permissive=True, corrupt_column=True)
+    assert rows[0]["cnt"] == 5 and rows[0]["vals"] is None
+    assert rows[0]["_bad"] == bytes(bad[:ODO_RL])
+    assert rows[1]["amt"] == 5 and rows[1]["_bad"] is None
+
+
+def test_multitype_shared_name_decodes_each_tags_own_bytes():
+    """A column two tags share is read at each tag's own position."""
+    data = _odo_records("x:1:3:int,y:4:3:int", [{"x": 11, "y": 22}], []) + \
+        b"D" + b"  " + b"00033" + b" " * 4
+    rows = _odo_decode("H=x:1:3:int,y:4:3:int;D=x:3:5:int", data)
+    assert [(r["record_type"], r["x"], r["y"]) for r in rows] == [
+        ("H", 11, 22), ("D", 33, None),
+    ]
+
+
+def test_multitype_odo_through_the_reader(spark, tmp_path):
+    h_spec = "cnt:1:1:int,vals:2:2:int[3->cnt]"
+    path = tmp_path / "odo.fixed"
+    path.write_bytes(_odo_records(h_spec, [{"cnt": 1, "vals": [7]}], [5]))
+    fixedlen.register(spark)
+    rows = (
+        spark.read.format("fixedlen")
+        .option("recordLength", str(ODO_RL))
+        .option("layouts", f"H={h_spec};D=amt:1:5:int")
+        .option("typeStart", "0").option("typeLen", "1")
+        .option("includeOffset", "true")
+        .load(str(path))
+        .orderBy("record_offset")
+        .collect()
+    )
+    assert [(r.record_type, r.vals, r.amt) for r in rows] == [("H", [7], None), ("D", None, 5)]
+
+
+def test_multitype_rejects_scalar_and_odo_under_one_name():
+    """An ODO with max count 1 is a list: it cannot share a union column
+    with another tag's scalar of the same type."""
+    from hadoop_fixedlengthinputformat_spark.sources.layout import parse_multitype
+
+    with pytest.raises(ValueError, match="conflicting types"):
+        parse_multitype("A=x:1:2:int;B=c:1:1:int,x:2:2:int[1->c]", 4, 0, 1)

@@ -2,17 +2,21 @@
 
 Mirrors the reference's seeded-random strategy (TestFixedLengthInputFormat
 TEST:183-345) for the layouts dispatch: random record length, random
-per-tag layouts, random interleaving — decode must reproduce every
-field, null the other types' columns, and preserve file order."""
+per-tag layouts whose field types come from the layout type table (tag A
+also carries an OCCURS DEPENDING ON field and its counter), random
+interleaving — decode must reproduce every field, null the other types'
+columns, and preserve file order."""
 
 from __future__ import annotations
 
-import string
-
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
+from test_field_types import TYPES, typed_field
 
 from hadoop_fixedlengthinputformat_spark.sources import fixedlen
 from hadoop_fixedlengthinputformat_spark.sources.layout import (
+    FieldSpec,
+    decode_chunk,
     encode_rows,
     parse_layout,
 )
@@ -20,52 +24,82 @@ from hadoop_fixedlengthinputformat_spark.sources.layout import (
 TAGS = ("A", "B", "C")
 
 
+def _filler_reads(base: str) -> bool:
+    """Does the type's filler — what an unused ODO slot holds — decode in
+    failfast mode?  A blank date is malformed, so a short date ODO list
+    reads back only in permissive mode."""
+    scaled, widths, _ = TYPES[base]
+    ftype = f"{base}(0)" if scaled else base
+    f = next(g for g in (FieldSpec("v", 0, w, ftype) for w in widths(0))
+             if g.kind.width(g) is None)
+    payload = encode_rows([{"v": f.kind.filler}], [f], f.length)
+    schema = pa.schema([pa.field("v", f.arrow_type())])
+    try:
+        decode_chunk(payload, f.length, [f], 0, False, None, schema)
+    except Exception:  # noqa: BLE001 - any decode failure
+        return False
+    return True
+
+
+FILLER_READS = sorted(b for b in TYPES if _filler_reads(b))
+
+
+def _spec(f: FieldSpec) -> str:
+    suffix = f"[{f.occurs}->{f.depends_on}]" if f.depends_on else ""
+    return f"{f.name}:{f.start}:{f.length}:{f.ftype}{suffix}"
+
+
 @st.composite
 def multitype_spec(draw):
-    # record: tag byte at 0, then up to 3 int/string fields per tag laid
-    # out left-to-right with random widths (no overlaps within a tag)
-    rl = draw(st.integers(min_value=20, max_value=60))
+    # record: tag byte at 0, then up to 3 table-typed fields per tag laid
+    # out left-to-right at widths their rules allow (no overlaps within
+    # a tag); tag A starts with a counter and an ODO field
+    mode = draw(st.sampled_from(["failfast", "permissive"]))
     n_tags = draw(st.integers(min_value=1, max_value=3))
-    layouts = {}
+    layouts: dict[str, list[FieldSpec]] = {}
+    values = {}
     for t in TAGS[:n_tags]:
         pos = 1
         fields = []
-        n_fields = draw(st.integers(min_value=1, max_value=3))
-        for i in range(n_fields):
-            width = draw(st.integers(min_value=3, max_value=8))
-            if pos + width > rl:
-                break
-            ftype = draw(st.sampled_from(["int", "string"]))
-            fields.append(f"f{t}{i}:{pos}:{width}:{ftype}")
-            pos += width
-        if not fields:
-            fields = [f"f{t}0:1:3:int"]
-        layouts[t] = ",".join(fields)
+        if t == "A":
+            odo_base = draw(st.sampled_from(
+                FILLER_READS if mode == "failfast" else sorted(TYPES)
+            ))
+            odo, values["odoA"] = draw(typed_field(
+                "odoA", 2, odo_base, draw(st.integers(1, 3)), "cntA"
+            ))
+            fields += [FieldSpec("cntA", 1, 1, "int"), odo]
+            pos = 2 + odo.span
+        for i in range(draw(st.integers(min_value=1, max_value=3))):
+            f, values[f"f{t}{i}"] = draw(typed_field(f"f{t}{i}", pos))
+            fields.append(f)
+            pos += f.span
+        layouts[t] = fields
+    rl = max(f.start + f.span for fs in layouts.values() for f in fs)
+    rl += draw(st.integers(min_value=0, max_value=4))
     rows = []
     for _ in range(draw(st.integers(min_value=1, max_value=30))):
         t = draw(st.sampled_from(sorted(layouts)))
         vals = {}
-        for part in layouts[t].split(","):
-            name, start, width, ftype = part.split(":")
-            if ftype == "int":
-                vals[name] = draw(
-                    st.integers(min_value=0, max_value=10 ** (int(width) - 1) - 1)
-                )
-            else:
-                vals[name] = draw(
-                    st.text(string.ascii_uppercase, min_size=0, max_size=int(width))
-                )
+        for f in layouts[t]:
+            if f.depends_on:
+                n = draw(st.integers(0, f.occurs))
+                vals[f.depends_on] = n
+                vals[f.name] = [values[f.name](draw, f.element(i)) for i in range(n)]
+            elif f.name in values:
+                vals[f.name] = values[f.name](draw, f)
         rows.append((t, vals))
-    return rl, layouts, rows
+    subs = {t: ",".join(_spec(f) for f in fs) for t, fs in layouts.items()}
+    return rl, subs, rows, mode
 
 
-@settings(max_examples=12, deadline=None)
+@settings(max_examples=15, deadline=None)
 @given(multitype_spec())
 def test_multitype_round_trip(spark, spec):
     import tempfile
 
     tmpdir = tempfile.mkdtemp(prefix="flif_mt_prop")
-    rl, layouts, rows = spec
+    rl, layouts, rows, mode = spec
     payload = bytearray()
     for t, vals in rows:
         fields = parse_layout(f"rt:0:1:string,{layouts[t]}", rl)
@@ -82,6 +116,7 @@ def test_multitype_round_trip(spark, spec):
         .option("layouts", spec_str)
         .option("typeStart", "0")
         .option("typeLen", "1")
+        .option("mode", mode)
         .load(path)
         .orderBy("record_offset")
         .collect()
@@ -96,9 +131,6 @@ def test_multitype_round_trip(spark, spec):
         assert out.record_type == t
         for name in union_names:
             if name in vals:
-                want = vals[name]
-                if isinstance(want, str):
-                    want = want.rstrip(" ")  # space padding is lossy by contract
-                assert out[name] == want, (name, out[name], want)
+                assert out[name] == vals[name], (name, out[name], vals[name])
             else:
                 assert out[name] is None
