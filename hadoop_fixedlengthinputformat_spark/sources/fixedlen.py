@@ -351,8 +351,7 @@ class _Options:
                     "fixedlen: sortedBy requires a 'layout' (the sort "
                     "field must be a decodable layout field)"
                 )
-            scalar = {f.name for f in fields if f.occurs == 1}
-            if sorted_by not in scalar:
+            if sorted_by not in stats.scalar_fields(fields):
                 raise ValueError(
                     f"fixedlen: sortedBy field {sorted_by!r} is not a "
                     "scalar layout field"
@@ -745,235 +744,40 @@ class FixedLengthReader(DataSourceReader):
         self.pushed = []  # Filters fully handled here (not re-checked by Spark)
 
     def pushFilters(self, filters):
-        from pyspark.sql.datasource import (
-            EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull,
-            LessThan, LessThanOrEqual, StringContains, StringEndsWith,
-            StringStartsWith,
-        )
-
-        supported = (
-            EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
-            LessThanOrEqual, In, IsNull, IsNotNull, StringStartsWith,
-            StringEndsWith, StringContains,
-        )
-        # array (OCCURS) columns never receive scalar predicates
-        decodable = {f.name for f in (self.opts.fields or []) if f.occurs == 1}
+        # scalar layout fields, record_offset, and the partition columns
+        # (constant per file: pushed filters on them prune whole
+        # DIRECTORIES at planning time, and the row mask still applies)
+        decodable = set(stats.scalar_fields(self.opts.fields))
         if self.opts.with_offset:
             decodable.add("record_offset")
-        # partition columns: constant per file — pushed filters on them
-        # prune whole DIRECTORIES at planning time (and the generic row
-        # mask still applies, since they are ordinary batch columns)
         decodable.update(self.opts.partition_cols)
         for flt in filters:
-            attr = getattr(flt, "attribute", None)
-            if (
-                isinstance(flt, supported)
-                and attr is not None
-                and len(attr) == 1
-                and attr[0] in decodable
-            ):
+            if stats.column_of(flt) in decodable:
                 self.pushed.append(flt)
             else:
                 yield flt  # unsupported -> Spark evaluates post-scan
 
-    def _apply_pushed(self, batch: pa.RecordBatch) -> pa.RecordBatch:
-        if not self.pushed:
-            return batch
-        import pyarrow.compute as pc
-        from pyspark.sql.datasource import (
-            EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull,
-            LessThan, LessThanOrEqual, StringContains, StringEndsWith,
-            StringStartsWith,
+    def _hive_may_match(self, vals: dict) -> bool:
+        """May a file whose directory values are ``vals`` match?"""
+        return all(
+            stats.may_match(flt, vals[c], vals[c])
+            for flt in self.pushed
+            if (c := stats.column_of(flt)) in vals
         )
-
-        import math
-
-        def _is_nan(v) -> bool:
-            return isinstance(v, float) and math.isnan(v)
-
-        mask = None
-        for flt in self.pushed:
-            col = batch.column(flt.attribute[0])
-            # Spark's float semantics diverge from Arrow's IEEE: NaN is
-            # GREATER than every other value and NaN = NaN is true
-            # (verified on this Spark build).  A fully-handled pushed
-            # filter is never re-checked by Spark, so the mask must
-            # reproduce that total order exactly on float columns.
-            fp = pa.types.is_floating(col.type)
-            col_nan = pc.is_nan(col) if fp else None
-            if isinstance(flt, EqualTo):
-                if fp and _is_nan(flt.value):
-                    m = col_nan  # NaN = NaN is true in Spark
-                else:
-                    m = pc.equal(col, flt.value)
-            elif isinstance(flt, GreaterThan):
-                if fp and _is_nan(flt.value):
-                    # nothing exceeds NaN; null stays null (-> dropped)
-                    m = pc.less(col, float("-inf"))
-                elif fp:
-                    m = pc.or_kleene(pc.greater(col, flt.value), col_nan)
-                else:
-                    m = pc.greater(col, flt.value)
-            elif isinstance(flt, GreaterThanOrEqual):
-                if fp and _is_nan(flt.value):
-                    m = col_nan  # only NaN >= NaN
-                elif fp:
-                    m = pc.or_kleene(pc.greater_equal(col, flt.value), col_nan)
-                else:
-                    m = pc.greater_equal(col, flt.value)
-            elif isinstance(flt, LessThan):
-                if fp and _is_nan(flt.value):
-                    m = pc.invert(col_nan)  # everything but NaN < NaN
-                else:
-                    m = pc.less(col, flt.value)  # NaN < v false: matches
-            elif isinstance(flt, LessThanOrEqual):
-                if fp and _is_nan(flt.value):
-                    m = pc.is_valid(col)  # every non-null value <= NaN
-                else:
-                    m = pc.less_equal(col, flt.value)
-            elif isinstance(flt, In):
-                # SQL IN: NULL never matches (x IN (... NULL) is NULL ->
-                # dropped by WHERE); pc.is_in would match null-to-null
-                vals = [v for v in flt.value if v is not None]
-                nan_sought = fp and any(_is_nan(v) for v in vals)
-                vals = [v for v in vals if not _is_nan(v)]
-                m = pc.and_kleene(
-                    pc.is_in(col, value_set=pa.array(vals, col.type)),
-                    pc.is_valid(col),
-                )
-                if nan_sought:
-                    m = pc.or_kleene(m, col_nan)  # NaN IN (... NaN) is true
-            elif isinstance(flt, IsNull):
-                m = pc.is_null(col)
-            elif isinstance(flt, IsNotNull):
-                m = pc.is_valid(col)
-            elif isinstance(flt, StringStartsWith):
-                m = pc.starts_with(col, flt.value)
-            elif isinstance(flt, StringEndsWith):
-                m = pc.ends_with(col, flt.value)
-            else:  # StringContains
-                m = pc.match_substring(col, flt.value)
-            mask = m if mask is None else pc.and_kleene(mask, m)
-        # null mask entries drop the row — SQL WHERE semantics
-        return batch.filter(mask)
-
-    def _offset_bounds(self) -> tuple[int, float]:
-        """[lo, hi) interval the pushed record_offset predicates allow —
-        offsets ARE file positions, so this prunes BYTE RANGES (real IO
-        skipping, the one index a fixed-width file inherently has)."""
-        from pyspark.sql.datasource import (
-            EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
-            LessThanOrEqual,
-        )
-
-        lo, hi = 0, float("inf")
-        for flt in self.pushed:
-            if flt.attribute != ("record_offset",):
-                continue
-            v = flt.value
-            if isinstance(flt, EqualTo):
-                lo, hi = max(lo, v), min(hi, v + 1)
-            elif isinstance(flt, GreaterThanOrEqual):
-                lo = max(lo, v)
-            elif isinstance(flt, GreaterThan):
-                lo = max(lo, v + 1)
-            elif isinstance(flt, LessThan):
-                hi = min(hi, v)
-            elif isinstance(flt, LessThanOrEqual):
-                hi = min(hi, v + 1)
-        return lo, hi
-
-    def _partvals_may_match(self, vals: dict) -> bool:
-        """Conservative file-level test of pushed PARTITION-column
-        predicates (string compares on the directory values); anything
-        unprovable keeps the file — the row mask still runs."""
-        from pyspark.sql.datasource import (
-            EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull,
-            IsNull, LessThan, LessThanOrEqual, StringStartsWith,
-        )
-
-        for flt in self.pushed:
-            attr = getattr(flt, "attribute", None)
-            if not attr or len(attr) != 1 or attr[0] not in vals:
-                continue
-            v = vals[attr[0]]
-            try:
-                if isinstance(flt, EqualTo) and not v == flt.value:
-                    return False
-                if isinstance(flt, In) and v not in set(flt.value):
-                    return False
-                if isinstance(flt, IsNull):
-                    return False  # directory values are never null
-                if isinstance(flt, IsNotNull):
-                    continue
-                if isinstance(flt, GreaterThan) and not v > flt.value:
-                    return False
-                if isinstance(flt, GreaterThanOrEqual) and not v >= flt.value:
-                    return False
-                if isinstance(flt, LessThan) and not v < flt.value:
-                    return False
-                if isinstance(flt, LessThanOrEqual) and not v <= flt.value:
-                    return False
-                if isinstance(flt, StringStartsWith) and not v.startswith(flt.value):
-                    return False
-            except TypeError:
-                continue  # incomparable: keep the file
-        return True
-
-    def _sorted_value_bounds(self):
-        """(lo_val, lo_strict, hi_val, hi_strict) from pushed range
-        predicates on the declared sort field, or None when no usable
-        bound was pushed."""
-        from pyspark.sql.datasource import (
-            EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
-            LessThanOrEqual,
-        )
-
-        if not self.opts.sorted_by:
-            return None
-        lo_val = hi_val = None
-        lo_strict = hi_strict = False
-        for flt in self.pushed:
-            if getattr(flt, "attribute", None) != (self.opts.sorted_by,):
-                continue
-            v = getattr(flt, "value", None)
-            if v is None:
-                continue
-            if isinstance(flt, EqualTo):
-                if lo_val is None or v > lo_val:
-                    lo_val, lo_strict = v, False
-                if hi_val is None or v < hi_val:
-                    hi_val, hi_strict = v, False
-            elif isinstance(flt, GreaterThanOrEqual):
-                if lo_val is None or v > lo_val:
-                    lo_val, lo_strict = v, False
-            elif isinstance(flt, GreaterThan):
-                if lo_val is None or v >= lo_val:
-                    lo_val, lo_strict = v, True
-            elif isinstance(flt, LessThanOrEqual):
-                if hi_val is None or v < hi_val:
-                    hi_val, hi_strict = v, False
-            elif isinstance(flt, LessThan):
-                if hi_val is None or v <= hi_val:
-                    hi_val, hi_strict = v, True
-        if lo_val is None and hi_val is None:
-            return None
-        return lo_val, lo_strict, hi_val, hi_strict
 
     def _sorted_byte_bounds(self, path: str) -> tuple[int, int] | None:
         """[lo_byte, hi_byte) a sorted file can possibly match, found by
-        BINARY SEARCH over record boundaries: ~2·log2(n) single-record
-        seeks replace reading the whole file — the planning-time index
-        a SORTED fixed-width file inherently is (record ordinal ->
-        byte offset is exact arithmetic, FLIF:276-298).  Conservative:
-        any decode/compare failure keeps the full range; the row-level
-        Arrow mask still runs either way."""
-        bounds = self._sorted_value_bounds()
-        if bounds is None or _codec_of(path):
-            return None
+        BINARY SEARCH over record boundaries in Spark's value order:
+        ~2·log2(n) single-record seeks replace reading the whole file —
+        the planning-time index a SORTED fixed-width file inherently is
+        (record ordinal -> byte offset is exact arithmetic, FLIF:276-298).
+        Conservative: any decode/compare failure keeps the full range;
+        the row-level Arrow mask still runs either way."""
         o = self.opts
-        field = next(f for f in o.fields if f.name == o.sorted_by)
-        lo_val, lo_strict, hi_val, hi_strict = bounds
+        rng = stats.allowed_range(self.pushed, o.sorted_by) if o.sorted_by else None
+        if rng is None or _codec_of(path):
+            return None
+        field = stats.scalar_fields(o.fields)[o.sorted_by]
         rl = o.stride
         size = os.path.getsize(path)
         usable = size - (size % rl)
@@ -983,10 +787,12 @@ class FixedLengthReader(DataSourceReader):
         if n == 0:
             return base, base
         sub_schema = pa.schema([pa.field(field.name, field.arrow_type())])
+        above_lo = stats.Interval(rng.lo, rng.lo_strict)
+        below_hi = stats.Interval(hi=rng.hi, hi_strict=rng.hi_strict)
         try:
             with open(path, "rb") as f:
 
-                def key(i: int):
+                def key(i: int) -> tuple:
                     f.seek(base + i * rl)
                     rec = f.read(o.record_length)
                     batch = decode_chunk(
@@ -996,11 +802,11 @@ class FixedLengthReader(DataSourceReader):
                     k = batch.column(0)[0].as_py()
                     if k is None:
                         # a NULL sort key makes the bisect predicate
-                        # non-monotone (ADVICE r6: treating it as
-                        # below-range can clamp away matching bytes);
-                        # unprovable -> the except keeps the whole file
+                        # non-monotone (treating it as below-range can
+                        # clamp away matching bytes); unprovable -> the
+                        # except keeps the whole file
                         raise ValueError("NULL sort key mid-file")
-                    return k
+                    return stats.order_key(k)
 
                 def bisect(pred) -> int:
                     """First index i in [0, n] with pred(key(i)) true
@@ -1014,75 +820,49 @@ class FixedLengthReader(DataSourceReader):
                             lo_i = mid + 1
                     return lo_i
 
-                first = 0
-                if lo_val is not None:
-                    first = bisect(
-                        (lambda k: k > lo_val)
-                        if lo_strict
-                        else (lambda k: k >= lo_val)
-                    )
-                last = n
-                if hi_val is not None:
-                    last = bisect(
-                        (lambda k: k >= hi_val)
-                        if hi_strict
-                        else (lambda k: k > hi_val)
-                    )
+                first = 0 if rng.lo is None else bisect(lambda k: above_lo.meets(k, k))
+                last = n if rng.hi is None else bisect(lambda k: not below_hi.meets(k, k))
         except (TypeError, ValueError, OSError):
             return None  # unprovable: keep the whole file
-        if last < first:
-            last = first
-        return base + first * rl, base + last * rl
+        return base + first * rl, base + max(first, last) * rl
 
     def partitions(self):
-        lo, hi = self._offset_bounds()
-        fields_by_name = {
-            f.name: f for f in (self.opts.fields or []) if f.occurs == 1
-        }
-        stats_filters = [
-            flt
-            for flt in self.pushed
-            if getattr(flt, "attribute", None)
-            and len(flt.attribute) == 1
-            and flt.attribute[0] in fields_by_name
-        ]
-        files, _cols = _discover(self.path)
+        """Record-aligned partitions of every input file, minus what the
+        pushed filters prove empty: hive directory values, the sorted
+        bisect, record offsets and stats sidecar blocks, in that order."""
+        o = self.opts
+        fields_by_name = stats.scalar_fields(o.fields)
+        offsets = stats.allowed_range(self.pushed, "record_offset")
+        on_fields = any(stats.column_of(flt) in fields_by_name for flt in self.pushed)
         parts: list[FixedLenPartition] = []
-        for p, vals in files:
-            # hive partition pruning: a pushed predicate on a partition
-            # column drops the whole file (directory) at planning time
-            if vals and not self._partvals_may_match(vals):
+        for p, vals in _discover(self.path)[0]:
+            if not self._hive_may_match(vals):
                 continue
-            # min/max sidecar pruning (parquet-row-group analog): drop
-            # byte ranges proven to exclude every pushed predicate —
-            # planning-time, so the bytes are never read
-            payload = stats.load_sidecar(p) if stats_filters else None
-            # sorted-file pruning: bisect the byte range the declared
-            # sort order allows, then CLAMP partitions to it (bounds are
-            # record-aligned, so clamped partitions stay aligned)
-            sb = self._sorted_byte_bounds(p) if self.opts.sorted_by else None
-            for part in _plan_file(p, self.opts):
-                if sb is not None and part.end != _WHOLE_FILE:
-                    s = max(part.start, sb[0])
-                    e = min(part.end, sb[1])
-                    if e <= s:
-                        continue
-                    part = FixedLenPartition(part.path, s, e)
-                if part.end == _WHOLE_FILE or (part.end > lo and part.start < hi):
-                    if payload is not None and not stats.partition_may_match(
-                        payload,
-                        self.opts.stride,  # byte->record ordinal mapping
-                        part.start,
-                        # gzip: compressed size says nothing about record
-                        # count — test every block (whole-file partition)
-                        2**62 if part.end == _WHOLE_FILE else part.end,
-                        stats_filters,
-                        fields_by_name,
-                        skip_records=self.opts.skip_header,
-                    ):
-                        continue
-                    part.partvals = vals
-                    parts.append(part)
+            sb = self._sorted_byte_bounds(p)
+            payload = stats.load_sidecar(p) if on_fields else None
+            for part in _plan_file(p, o):
+                whole = part.end == _WHOLE_FILE
+                if sb is not None and not whole:
+                    part.start, part.end = max(part.start, sb[0]), min(part.end, sb[1])
+                if not whole and (
+                    part.end <= part.start
+                    or not stats.range_may_match(offsets, part.start, part.end - 1)
+                ):
+                    continue
+                if payload is not None and not stats.partition_may_match(
+                    payload,
+                    o.stride,  # byte->record ordinal mapping
+                    part.start,
+                    # gzip: compressed size says nothing about record
+                    # count — test every block (whole-file partition)
+                    2**62 if whole else part.end,
+                    self.pushed,
+                    fields_by_name,
+                    skip_records=o.skip_header,
+                ):
+                    continue
+                part.partvals = vals
+                parts.append(part)
         # zero-record dataset still needs one (empty) partition for Spark
         return parts or [FixedLenPartition("", 0, 0)]
 
@@ -1178,7 +958,7 @@ class FixedLengthReader(DataSourceReader):
                         offset_stride=stride,
                     )
                 offset += raw_len
-                yield self._apply_pushed(add_partvals(batch))
+                yield stats.apply(self.pushed, add_partvals(batch))
 
         if partition.end == _WHOLE_FILE:
             return decode(

@@ -663,9 +663,10 @@ class _FieldType:
     filler: object = 0  # for a NULL or an unused ODO slot: blank or zero
 
 
-# digit bounds keep the int64 parse overflow-free (18 digits < 2^63);
-# '+' excluded — Arrow's string->int cast rejects it, so it's malformed
-_INT_RE = r"^-?[0-9]{1,18}$"
+# leading zeros, then at most 18 digits: the int64 parse cannot overflow
+# (18 digits < 2^63); '+' excluded — Arrow's string->int cast rejects
+# it, so it's malformed
+_INT_RE = r"^-?0*[0-9]{1,18}$"
 _DOUBLE_RE = r"^-?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$"
 _DATE_RE = r"^[0-9]{4}-(0[1-9]|1[0-2])-(0[1-9]|[12][0-9]|3[01])$"
 _ZONED = _digits("zoned", lambda w: w)
@@ -759,54 +760,47 @@ def decode_occurs_field(
     """COBOL OCCURS n decode: each element slot decodes through the
     normal vectorized scalar path (n cheap column ops, never per-record
     Python), then the slot columns interleave row-major into one
-    ListArray of fixed length n per row.  The interleave is a single
-    Arrow take() with computed indices — O(rows x n) pointer moves,
-    no value re-parsing.
+    ListArray per row.  The interleave is a single Arrow take() with
+    computed indices — O(rows x n) pointer moves, no value re-parsing.
 
-    ``counts`` (OCCURS DEPENDING ON) trims each row's list to the
-    counter field's value: the record still reserves all n slots (fixed
-    LRECL), only the first count are data.  A counter that is null /
-    negative / > n is corruption: failfast raises, permissive nulls the
-    whole list (the quarantine convention)."""
+    ``counts`` (OCCURS DEPENDING ON) gives each row's list length: the
+    record still reserves all n slots (fixed LRECL), only the first
+    count are data, and a slot is decoded only on the rows that use it
+    (unused slots hold filler, which need not be a valid value).  A
+    counter that is null / negative / > n is corruption: failfast
+    raises, permissive nulls the whole list (the quarantine
+    convention)."""
     n_elem = f.occurs
-    slots = [
-        _decode_one(mat, fmat, f.element(i), permissive)
-        for i in range(n_elem)
-    ]
-    n_rows = len(slots[0])
+    n_rows = mat.shape[0]
+    lengths = np.full(n_rows, n_elem, dtype=np.int64)
+    bad = np.zeros(n_rows, dtype=bool)
+    if counts is not None:
+        cnt = np.asarray(counts.cast(pa.float64()))  # nulls -> NaN
+        bad = ~np.isfinite(cnt) | (cnt < 0) | (cnt > n_elem)
+        if bad.any() and not permissive:
+            i = int(np.argmax(bad))
+            raise ValueError(
+                f"OCCURS DEPENDING ON counter {f.depends_on!r} out of range "
+                f"[0, {n_elem}] for field {f.name!r} (row {i}: "
+                f"{counts[i].as_py()!r})"
+            )
+        lengths = np.where(bad, 0, cnt).astype(np.int64)
+    used = np.arange(n_elem)[None, :] < lengths[:, None]  # (rows, slots)
+    slots = []
+    for j in range(n_elem):
+        rows = slice(None) if used[:, j].all() else used[:, j]
+        col = _decode_one(mat[rows], fmat[rows], f.element(j), permissive)
+        slots.append(col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col)
     # slot-major concat -> row-major order via take(): element j of row i
-    # sits at slot-array j position i, i.e. concat index j*n_rows + i
-    values = pa.concat_arrays([s.combine_chunks() if isinstance(s, pa.ChunkedArray) else s for s in slots])
-    idx = (
-        np.arange(n_elem, dtype=np.int64)[None, :] * n_rows
-        + np.arange(n_rows, dtype=np.int64)[:, None]
-    ).ravel()
-    row_major = values.take(pa.array(idx))
-    if counts is None:
-        offsets = pa.array(
-            np.arange(0, (n_rows + 1) * n_elem, n_elem, dtype=np.int32)
-        )
-        return pa.ListArray.from_arrays(offsets, row_major)
-    cnt = np.asarray(counts.cast(pa.float64()))  # nulls -> NaN
-    bad = ~np.isfinite(cnt) | (cnt < 0) | (cnt > n_elem)
-    if bad.any() and not permissive:
-        i = int(np.argmax(bad))
-        raise ValueError(
-            f"OCCURS DEPENDING ON counter {f.depends_on!r} out of range "
-            f"[0, {n_elem}] for field {f.name!r} (row {i}: "
-            f"{counts[i].as_py()!r})"
-        )
-    lengths = np.where(bad, 0, cnt).astype(np.int64)
-    offsets = np.concatenate([[0], np.cumsum(lengths)]).astype(np.int64)
-    starts = np.arange(n_rows, dtype=np.int64) * n_elem
-    pos_in_row = np.arange(offsets[-1], dtype=np.int64) - np.repeat(
-        offsets[:-1], lengths
-    )
-    taken = row_major.take(pa.array(np.repeat(starts, lengths) + pos_in_row))
+    # sits at its rank among slot j's rows, after the earlier slots
+    slot_starts = np.concatenate([[0], np.cumsum(used.sum(axis=0))[:-1]])
+    idx = (np.cumsum(used, axis=0) - 1 + slot_starts)[used]
+    values = pa.concat_arrays(slots).take(pa.array(idx, type=pa.int64()))
+    offsets = np.concatenate([[0], np.cumsum(lengths)]).astype(np.int32)
     if bad.any():  # permissive: null list per corrupt counter
         offsets = [None if i < n_rows and bad[i] else int(o)
                    for i, o in enumerate(offsets)]
-    return pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), taken)
+    return pa.ListArray.from_arrays(pa.array(offsets, type=pa.int32()), values)
 
 
 def _decode_fields(

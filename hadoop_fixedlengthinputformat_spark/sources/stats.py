@@ -1,26 +1,30 @@
-"""Min/max stats sidecars for fixed-width part files.
+"""Pushed-predicate semantics and min/max stats sidecars for fixed-width
+part files.
 
-Parquet can skip row groups because the footer carries per-column
-min/max; a raw fixed-width file has no such thing — every selective
-scan reads every byte.  The engine closes that gap with an OPTIONAL
-sidecar written next to each part file (``<part>.stats.json``): per
+This module owns what each pushed filter kind means.  ``PREDICATES``
+holds one entry per supported ``pyspark.sql.datasource`` filter class:
+its Arrow row mask and its interval test.  Everything else reads it:
+``FixedLengthReader.pushFilters`` pushes exactly its kinds, ``apply``
+ANDs the row masks, and the four planning-time prunes ask the interval
+test — hive directory values as points, stats blocks as ranges, and
+``record_offset`` and the declared sort field through
+``allowed_range``.  Every test compares in Spark's order
+(``order_key``): NaN is greater than every number and equal to
+itself, as in the row masks, so a prune can never drop a row the row
+mask keeps.
+
+Sidecars: parquet can skip row groups because the footer carries
+per-column min/max; a raw fixed-width file has no such thing.  The
+writer's OPTIONAL sidecar (``<part>.stats.json``) closes that gap: per
 block of ``STATS_BLOCK_RECORDS`` records, the min/max of every scalar
-layout field.
-
-Planning-time use: ``FixedLengthReader.partitions()`` maps each
-byte-range partition to its record range, finds the overlapping stats
-blocks, and DROPS the partition when no overlapping block can satisfy
-the pushed predicates — whole byte ranges are never read, the same IO
-win parquet gets from row-group pruning.  At 100 TB a selective
-predicate on a roughly-sorted field (time, increasing keys) skips most
-of the file; worst case (value everywhere) prunes nothing and costs one
-tiny JSON read per file at planning time.
+layout field.  ``FixedLengthReader.partitions()`` maps each byte-range
+partition to its record range and DROPS it when no overlapping block
+can satisfy the pushed predicates, so those bytes are never read.
 
 Everything is CONSERVATIVE: unknown fields, missing sidecars, array
-(OCCURS) fields, NaN-containing double blocks, and unsupported
-predicate shapes all fall back to "may match" — pruning can only drop
-partitions proven empty of matches.  The row-level Arrow mask still
-runs afterwards, so results are identical with or without sidecars.
+(OCCURS) fields, incomparable values and undecidable shapes all answer
+"may match".  The row mask still runs afterwards, so results are
+identical with or without any prune.
 """
 
 from __future__ import annotations
@@ -29,13 +33,235 @@ import datetime as _dt
 import json
 import math
 import os
-from typing import Any
+from dataclasses import dataclass
+from typing import Any, Callable, NamedTuple
+
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    IsNotNull,
+    IsNull,
+    LessThan,
+    LessThanOrEqual,
+    StringContains,
+    StringEndsWith,
+    StringStartsWith,
+)
 
 from hadoop_fixedlengthinputformat_spark.sources.layout import FieldSpec
 
 STATS_BLOCK_RECORDS = 8192
 _SUFFIX = ".stats.json"
 _VERSION = 1
+
+
+def scalar_fields(fields: list[FieldSpec] | None) -> dict[str, FieldSpec]:
+    """The layout fields that hold one value per row, by name: the only
+    ones a pushed filter, a sort claim or a stats block can speak of (an
+    OCCURS field is an array even at count 1)."""
+    return {f.name: f for f in fields or [] if not f.is_array}
+
+
+# ---------------------------------------------------------------------------
+# Spark's value order
+
+
+def order_key(v: Any) -> tuple:
+    """Sort key of ``v`` in Spark's order: NaN is greater than every
+    number and equal to itself, and a datetime compares with dates as
+    Spark and Arrow compare them (a date is its midnight).  Comparing
+    the keys of incomparable values (NaN with a string, too) raises
+    TypeError."""
+    if isinstance(v, float) and math.isnan(v):
+        return (math.inf, 1)
+    if isinstance(v, _dt.datetime):
+        d, t = v.date(), v.time()
+        return (d, 0) if t == _dt.time() else (d, 1, t)
+    return (v, 0)
+
+
+class Interval(NamedTuple):
+    """An interval of order keys; a None end is unbounded and a strict
+    end excludes its own key."""
+
+    lo: tuple | None = None
+    lo_strict: bool = False
+    hi: tuple | None = None
+    hi_strict: bool = False
+
+    def meets(self, a: tuple, b: tuple) -> bool:
+        """Does it share a key with the closed key interval [a, b]?"""
+        return (self.lo is None or (b > self.lo if self.lo_strict else b >= self.lo)) and (
+            self.hi is None or (a < self.hi if self.hi_strict else a <= self.hi)
+        )
+
+    def __and__(self, other: "Interval") -> "Interval":
+        lo = self if other.lo is None or (
+            self.lo is not None and (self.lo, self.lo_strict) > (other.lo, other.lo_strict)
+        ) else other
+        hi = self if other.hi is None or (
+            self.hi is not None and (self.hi, not self.hi_strict) < (other.hi, not other.hi_strict)
+        ) else other
+        return Interval(lo.lo, lo.lo_strict, hi.hi, hi.hi_strict)
+
+
+# ---------------------------------------------------------------------------
+# The predicate table
+
+
+def _nan_on_float(col: pa.Array, v: Any) -> bool:
+    return pa.types.is_floating(col.type) and isinstance(v, float) and math.isnan(v)
+
+
+def _or_nan(col: pa.Array, m: pa.Array) -> pa.Array:
+    """``m`` or the row is NaN (NaN exceeds every value)."""
+    return pc.or_kleene(m, pc.is_nan(col)) if pa.types.is_floating(col.type) else m
+
+
+def _in_mask(col: pa.Array, values: list) -> pa.Array:
+    # SQL IN: NULL never matches (x IN (... NULL) is NULL -> dropped by
+    # WHERE); pc.is_in alone would match null-to-null
+    vals = [v for v in values if v is not None]
+    nan_sought = any(_nan_on_float(col, v) for v in vals)
+    vals = [v for v in vals if not (isinstance(v, float) and math.isnan(v))]
+    m = pc.and_kleene(pc.is_in(col, value_set=pa.array(vals, col.type)), pc.is_valid(col))
+    return pc.or_kleene(m, pc.is_nan(col)) if nan_sought else m  # NaN IN (NaN) is true
+
+
+def _at(k: tuple) -> Interval:
+    return Interval(k, False, k, False)
+
+
+def _point_only(test: Callable[[str, str], bool]):
+    """String predicates decide a single value only (a range of strings
+    can hold any suffix or substring)."""
+    return lambda lo, hi, v: lo != hi or test(lo, v)
+
+
+@dataclass(frozen=True)
+class Predicate:
+    """What one pushed filter kind means."""
+
+    # (column, filter value) -> boolean row mask.  Spark never re-checks
+    # a pushed filter, so the mask keeps Spark's semantics where Arrow's
+    # IEEE compares differ: NaN is greater than every value and NaN = NaN
+    # is true.  A null entry drops the row (SQL WHERE).
+    mask: Callable[[pa.Array, Any], pa.Array]
+    # filter value's key -> the Interval a range kind allows, else None
+    interval: Callable[[tuple], Interval] | None = None
+    # (lo, hi, filter value) -> may a value in [lo, hi] satisfy it;
+    # defaults to the interval's test
+    test: Callable[[Any, Any, Any], bool] | None = None
+    nulls_match: bool = False  # does a NULL satisfy it (IsNull)
+
+
+PREDICATES: dict[type, Predicate] = {
+    EqualTo: Predicate(
+        # NaN = NaN is true in Spark
+        lambda c, v: pc.is_nan(c) if _nan_on_float(c, v) else pc.equal(c, v),
+        _at,
+    ),
+    GreaterThan: Predicate(
+        # nothing exceeds NaN; a null row stays null (dropped)
+        lambda c, v: pc.less(c, float("-inf")) if _nan_on_float(c, v)
+        else _or_nan(c, pc.greater(c, v)),
+        lambda k: Interval(lo=k, lo_strict=True),
+    ),
+    GreaterThanOrEqual: Predicate(
+        lambda c, v: pc.is_nan(c) if _nan_on_float(c, v)  # only NaN >= NaN
+        else _or_nan(c, pc.greater_equal(c, v)),
+        lambda k: Interval(lo=k),
+    ),
+    LessThan: Predicate(
+        # every number < NaN; a NaN row fails pc.less, as in Spark
+        lambda c, v: pc.invert(pc.is_nan(c)) if _nan_on_float(c, v) else pc.less(c, v),
+        lambda k: Interval(hi=k, hi_strict=True),
+    ),
+    LessThanOrEqual: Predicate(
+        # every non-null value <= NaN
+        lambda c, v: pc.is_valid(c) if _nan_on_float(c, v) else pc.less_equal(c, v),
+        lambda k: Interval(hi=k),
+    ),
+    In: Predicate(
+        _in_mask,
+        test=lambda lo, hi, vals: any(
+            _at(order_key(v)).meets(order_key(lo), order_key(hi)) for v in vals if v is not None
+        ),
+    ),
+    IsNull: Predicate(lambda c, v: pc.is_null(c), test=lambda lo, hi, v: False, nulls_match=True),
+    IsNotNull: Predicate(lambda c, v: pc.is_valid(c), test=lambda lo, hi, v: True),
+    StringStartsWith: Predicate(
+        lambda c, v: pc.starts_with(c, v), test=_point_only(str.startswith)
+    ),
+    StringEndsWith: Predicate(lambda c, v: pc.ends_with(c, v), test=_point_only(str.endswith)),
+    StringContains: Predicate(
+        lambda c, v: pc.match_substring(c, v), test=_point_only(lambda s, v: v in s)
+    ),
+}
+
+
+def column_of(flt) -> str | None:
+    """The one top-level column a table kind filters, else None."""
+    if type(flt) in PREDICATES and len(flt.attribute) == 1:
+        return flt.attribute[0]
+    return None
+
+
+def may_match(flt, lo: Any, hi: Any, nulls: bool = False) -> bool:
+    """May some value in [lo, hi] (a point when ``lo == hi``), or a NULL
+    when ``nulls``, satisfy ``flt``?  True for incomparable values."""
+    p = PREDICATES[type(flt)]
+    if nulls and p.nulls_match:
+        return True
+    v = getattr(flt, "value", None)
+    try:
+        if p.test is not None:
+            return p.test(lo, hi, v)
+        return p.interval(order_key(v)).meets(order_key(lo), order_key(hi))
+    except (TypeError, AttributeError):
+        return True
+
+
+def apply(filters: list, batch: pa.RecordBatch) -> pa.RecordBatch:
+    """The rows of ``batch`` that satisfy every filter."""
+    if not filters:
+        return batch
+    mask = None
+    for flt in filters:
+        m = PREDICATES[type(flt)].mask(batch.column(flt.attribute[0]), getattr(flt, "value", None))
+        mask = m if mask is None else pc.and_kleene(mask, m)
+    return batch.filter(mask)
+
+
+def allowed_range(filters: list, column: str) -> Interval | None:
+    """The key Interval the range filters on ``column`` allow together,
+    or None when none bounds it or their values are incomparable."""
+    rng = None
+    try:
+        for flt in filters:
+            interval = PREDICATES[type(flt)].interval if column_of(flt) == column else None
+            if interval is not None and flt.value is not None:
+                bound = interval(order_key(flt.value))
+                rng = bound if rng is None else rng & bound
+    except TypeError:
+        return None
+    return rng
+
+
+def range_may_match(rng: Interval | None, lo: Any, hi: Any) -> bool:
+    """May a value in [lo, hi] fall in ``rng`` (None: unbounded)?"""
+    try:
+        return rng is None or rng.meets(order_key(lo), order_key(hi))
+    except TypeError:
+        return True
+
+
+# ---------------------------------------------------------------------------
+# Stats sidecars
 
 
 def sidecar_path(part_path: str) -> str:
@@ -57,7 +283,7 @@ class StatsCollector:
     writer encodes rows (values are in hand anyway — zero extra IO)."""
 
     def __init__(self, fields: list[FieldSpec], block_records: int = STATS_BLOCK_RECORDS):
-        self.fields = [f for f in fields if f.occurs == 1]
+        self.fields = list(scalar_fields(fields).values())
         self.block_records = block_records
         self.blocks: list[dict] = []
         self._cur: dict[str, list] | None = None
@@ -86,9 +312,11 @@ class StatsCollector:
             self._open_block()
         for f in self.fields:
             v = row[f.name]
+            if isinstance(v, str):
+                v = v.rstrip(" ")  # the value as it reads back
             slot = self._cur[f.name]
             if isinstance(v, float) and math.isnan(v):
-                slot[2] = True  # NaN present: block unprunable for field
+                slot[2] = True
                 continue
             if slot[0] is None or v < slot[0]:
                 slot[0] = v
@@ -126,56 +354,16 @@ def load_sidecar(part_path: str) -> dict | None:
         return None
 
 
-def _de(v: Any, f: FieldSpec) -> Any:
-    if v is None:
-        return None
-    if f.base_type == "date" and isinstance(v, str):
-        return _dt.date.fromisoformat(v)
-    return v
-
-
-def _norm_filter_value(v: Any) -> Any:
-    if isinstance(v, _dt.datetime):
-        return v.date()
-    return v
-
-
-def _block_may_match(col: dict, f: FieldSpec, flt) -> bool:
-    """Conservative per-block interval test for one pushed filter."""
-    from pyspark.sql.datasource import (
-        EqualTo, GreaterThan, GreaterThanOrEqual, In,
-        LessThan, LessThanOrEqual,
-    )
-
+def _block_range(col: dict, f: FieldSpec) -> tuple[Any, Any] | None:
+    """A block's [min, max] for field ``f`` in Spark's order (a NaN is
+    its maximum), or None when the sidecar gives none."""
+    lo, hi = col.get("min"), col.get("max")
+    if f.base_type == "date":
+        lo, hi = (_dt.date.fromisoformat(v) if isinstance(v, str) else v for v in (lo, hi))
     if col.get("nan"):
-        return True  # NaN breaks the total order; don't prune
-    lo, hi = _de(col.get("min"), f), _de(col.get("max"), f)
-    if lo is None or hi is None:
-        return True
-    if not isinstance(
-        flt, (In, EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual)
-    ):
-        return True  # IsNull/IsNotNull/string predicates: no interval test
-    try:
-        if isinstance(flt, In):
-            vals = [_norm_filter_value(v) for v in flt.value if v is not None]
-            return any(lo <= v <= hi for v in vals)
-        v = _norm_filter_value(flt.value)
-        if isinstance(v, float) and math.isnan(v):
-            return True  # NaN predicate: leave to the row-level mask
-        if isinstance(flt, EqualTo):
-            return lo <= v <= hi
-        if isinstance(flt, GreaterThan):
-            return hi > v
-        if isinstance(flt, GreaterThanOrEqual):
-            return hi >= v
-        if isinstance(flt, LessThan):
-            return lo < v
-        if isinstance(flt, LessThanOrEqual):
-            return lo <= v
-    except TypeError:
-        return True  # incomparable types: never prune on a guess
-    return True  # unsupported shape: may match
+        hi = math.nan
+        lo = hi if lo is None else lo
+    return None if lo is None or hi is None else (lo, hi)
 
 
 def partition_may_match(
@@ -199,17 +387,14 @@ def partition_may_match(
     blocks = payload.get("blocks") or []
     if not blocks:
         return True
-    per_block = payload.get("block_records", STATS_BLOCK_RECORDS)
     rec_lo = max(0, start // record_length - skip_records)
     rec_hi = (end + record_length - 1) // record_length - skip_records
     if rec_hi <= rec_lo:
         return True  # header-only range: no stats evidence, keep it
     testable = [
-        (flt, fields_by_name[flt.attribute[0]])
+        (flt, fields_by_name[column_of(flt)])
         for flt in filters
-        if getattr(flt, "attribute", None)
-        and len(flt.attribute) == 1
-        and flt.attribute[0] in fields_by_name
+        if column_of(flt) in fields_by_name
     ]
     if not testable:
         return True
@@ -223,7 +408,9 @@ def partition_may_match(
         overlapped = True
         cols = blk.get("cols", {})
         if all(
-            _block_may_match(cols.get(f.name, {}), f, flt)
+            (rng := _block_range(cols.get(f.name, {}), f)) is None
+            # min/max say nothing of NULL rows
+            or may_match(flt, *rng, nulls=True)
             for flt, f in testable
         ):
             return True

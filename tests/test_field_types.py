@@ -63,18 +63,18 @@ def _bin(draw, f):
 
 
 # base type -> (scaled?, candidate widths for a scale, value strategy).
-# Candidate widths are filtered through the entry's own width rule.  The
-# text numerics stop at 18 characters: their permissive pattern reads at
-# most 18 digits (leading zeros included).
+# Candidate widths are filtered through the entry's own width rule.  A
+# long holds at most 18 significant digits: the permissive pattern's
+# bound, which keeps its int64 parse from overflowing.
 TYPES = {
-    "int": (False, lambda s: range(1, 19), _ints(-(2**31), 2**31 - 1)),
-    "long": (False, lambda s: range(1, 19), _ints(-(2**63), 2**63 - 1)),
+    "int": (False, lambda s: range(1, 25), _ints(-(2**31), 2**31 - 1)),
+    "long": (False, lambda s: range(1, 25), _ints(1 - 10**18, 10**18 - 1)),
     "double": (True, lambda s: range(s + 3, 19), _decimals(lambda w: w - 2)),
     "string": (False, lambda s: range(1, 21), _text),
     "date": (False, lambda s: range(10, 13), lambda draw, f: draw(
         st.dates(datetime.date(1600, 1, 1), datetime.date(2400, 12, 31)))),
     "julian": (False, lambda s: range(1, 10), _julian),
-    "implied": (True, lambda s: range(1, 19), _decimals(lambda w: w - 1)),
+    "implied": (True, lambda s: range(1, 25), _decimals(lambda w: w - 1)),
     "packed": (True, lambda s: range(1, 12), _decimals(lambda w: 2 * w - 1)),
     "zoned": (True, lambda s: range(1, 21), _decimals(lambda w: w)),
     "zonedl": (True, lambda s: range(1, 21), _decimals(lambda w: w)),
@@ -144,6 +144,37 @@ def test_table_entry_round_trips(base, data):
     )
     assert [_bits(v) for v in permissive.column(0).to_pylist()] == want
     assert permissive.column(1).null_count == n
+
+
+@pytest.mark.parametrize("base", sorted(TYPES))
+@settings(max_examples=20, deadline=None)
+@given(data=st.data())
+def test_odo_round_trips_in_both_modes(base, data):
+    """Unused OCCURS DEPENDING ON slots hold the type's filler, which
+    need not be a valid value (a blank date): only the slots the counter
+    uses are decoded, in failfast as in permissive mode."""
+    occurs = data.draw(st.integers(1, 3), label="occurs")
+    f, value = data.draw(typed_field("v", 1, base, occurs, "c"), label="field")
+    fields = [FieldSpec("c", 0, 1, "int"), f]
+    rl = 1 + f.span
+    rows = []
+    for _ in range(data.draw(st.integers(1, 6), label="rows")):
+        n = data.draw(st.integers(0, occurs))
+        rows.append({"c": n, "v": [value(data.draw, f.element(i)) for i in range(n)]})
+    payload = encode_rows(rows, fields, rl)
+    schema = pa.schema([pa.field(g.name, g.arrow_type()) for g in fields])
+    for permissive in (False, True):
+        got = decode_chunk(payload, rl, fields, 0, False, None, schema, permissive=permissive)
+        assert [_bits(v) for v in got.column(1).to_pylist()] == [_bits(r["v"]) for r in rows]
+
+
+@pytest.mark.parametrize("ftype", ["int", "long", "implied(0)"])
+def test_text_numerics_read_leading_zeros_past_18_digits(ftype):
+    f = parse_layout(f"v:0:20:{ftype}", 20)
+    schema = pa.schema([pa.field("v", f[0].arrow_type())])
+    for permissive in (False, True):
+        got = decode_chunk(b"0" * 19 + b"5", 20, f, 0, False, None, schema, permissive=permissive)
+        assert got.column(0).to_pylist() == [5]
 
 
 @pytest.mark.parametrize(

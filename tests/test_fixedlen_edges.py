@@ -503,12 +503,21 @@ def test_columns_rejected_on_write(spark, tmp_path):
         )
 
 
-def test_pushed_filters_match_spark_nan_semantics(spark, tmp_path):
+@pytest.mark.parametrize(
+    "vals, opts",
+    [
+        (["  5.0", "  nan", " -3.5", "  9.9", "  nan"], {}),
+        # written in Spark's order (NaN last) and declared sorted: the
+        # bisect must place NaN above every value, as the row mask does
+        ([" -3.5", "  5.0", "  9.9", "  nan", "  nan"], {"sortedBy": "v"}),
+    ],
+    ids=["unsorted", "sortedBy"],
+)
+def test_pushed_filters_match_spark_nan_semantics(spark, tmp_path, vals, opts):
     """Pushed comparisons on a double field must reproduce Spark's float
     total order (NaN greatest, NaN = NaN true), not Arrow's IEEE (all
     NaN comparisons false).  Compare every pushed predicate against the
     same predicate evaluated by Spark AFTER a pushdown-free scan."""
-    vals = ["  5.0", "  nan", " -3.5", "  9.9", "  nan"]
     recs = b"".join(f"{i:02d}".encode() + v.encode() for i, v in enumerate(vals))
     path = _write(tmp_path, "nan.bin", recs)
     layout = "k:0:2:int,v:2:5:double"
@@ -520,13 +529,13 @@ def test_pushed_filters_match_spark_nan_semantics(spark, tmp_path):
     def spark_side(pred):
         # includeOffset row keeps schema aligned; filter AFTER scan via a
         # non-pushable disguise (abs() wrapper defeats pushdown)
-        df = _read(spark, path, 7, layout=layout, includeOffset="false")
+        df = _read(spark, path, 7, layout=layout, includeOffset="false", **opts)
         return sorted(
             r["k"] for r in df.filter(pred(F.col("v") + 0)).collect()
         )
 
     def pushed_side(pred):
-        df = _read(spark, path, 7, layout=layout, includeOffset="false")
+        df = _read(spark, path, 7, layout=layout, includeOffset="false", **opts)
         out = df.filter(pred(F.col("v")))
         plan = out._jdf.queryExecution().executedPlan().toString()
         rows = sorted(r["k"] for r in out.collect())
