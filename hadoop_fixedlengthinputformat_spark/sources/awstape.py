@@ -24,12 +24,14 @@ re-wrap of U would be byte-identical to RECFM=V, which sources/varlen.py
 already reads; the tape container is the genuinely distinct on-disk
 form.)
 
-Engine contract mirrors ``varlen``:
+The record contract is the one ``varlen`` reads, kept once in
+``sources/framed.py`` (options, schema, batches, the tail stream reader
+and the source shell); this module holds the tape framing:
 
   * ``recfm=U`` (default): block = record; ``layout``/``prefixLength``
-    decode the fixed prefix, the remainder lands in ``record_tail``,
-    ``record_offset`` is the byte position of the record's first chunk
-    header in the image.
+    (or ``copybook``) decode the fixed prefix, the remainder lands in
+    ``record_tail``, ``record_offset`` is the byte position of the
+    record's first chunk header in the image.
   * ``recfm=F``/``FB``: ``recordLength`` records tile every block (a
     non-multiple block raises, the reference's planning-time error
     carried to tape); the full layout decodes like ``fixedlen`` and
@@ -64,42 +66,26 @@ import codecs
 import os
 import struct
 from dataclasses import dataclass
+from functools import partial
 from typing import Iterator
 
-import pyarrow as pa
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.datasource import DataSourceReader, InputPartition
+from pyspark.sql.types import StructType
 
+from hadoop_fixedlengthinputformat_spark.sources import framed
 from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
     _CommitMessage,
-    _clear_parts,
     _list_files,
     _part_paths,
-    _promote,
+    _PartWriter,
     _remove_tmps,
-    _single_byte_encoding,
     _visible,
 )
-from hadoop_fixedlengthinputformat_spark.sources.layout import (
-    FieldSpec,
-    check_user_schema,
-    decode_framed,
-    encode_framed,
-    layout_schema,
-    parse_layout,
+from hadoop_fixedlengthinputformat_spark.sources.framed import (
+    FramedDataSource,
+    FramedOptions,
+    FramedStreamReader,
+    framed_batches,
 )
 
 HDR_LEN = 6
@@ -111,16 +97,9 @@ BATCH_TARGET = 1 << 22  # block bytes per emitted Arrow batch / stream read
 
 
 @dataclass
-class _TOptions:
+class _TOptions(FramedOptions):
     recfm: str  # "U" | "F" (FB treated identically)
     record_length: int  # F mode only
-    prefix_length: int  # U mode fixed-prefix data bytes (0 = raw)
-    fields: list[FieldSpec] | None
-    with_offset: bool
-    with_file: bool
-    with_tail: bool
-    tail_column: str
-    encoding: str
     chunk_size: int  # writer data bytes per chunk
     block_size: int  # F-mode writer block bytes (multiple of record_length)
     labels: str = "NONE"  # "NONE" | "SL" (IBM standard labels)
@@ -128,6 +107,13 @@ class _TOptions:
     file_seq: int | None = None  # SL: 1-based dataset position on volume
     volser: str = "SPARK1"  # SL writer volume serial
     label_encoding: str = "cp037"  # SL labels are EBCDIC on real volumes
+
+    SOURCE = "awstape"
+    INITIAL_OFFSET = {"pos": 0, "prev": 0, "tf": 0, "mark": False}
+
+    @property
+    def batch_target(self) -> int:
+        return BATCH_TARGET
 
     @classmethod
     def parse(cls, options) -> "_TOptions":
@@ -139,11 +125,10 @@ class _TOptions:
             raise ValueError(
                 f"awstape: recfm must be U, F or FB, got {recfm!r}"
             )
-        layout_raw = options.get("layout")
-        fields = None
         record_length = 0
-        prefix_length = 0
         if recfm == "F":
+            # F records are whole-layout: the layout spans recordLength
+            # bytes and the contract's prefix is the whole record
             rl_raw = options.get("recordlength")
             if rl_raw is None:
                 raise ValueError(
@@ -159,51 +144,30 @@ class _TOptions:
                 raise ValueError(
                     f"awstape: recordLength must be > 0, got {record_length}"
                 )
-            if options.get("prefixlength") is not None:
-                raise ValueError(
-                    "awstape: 'prefixLength' applies to recfm=U only "
-                    "(F records are whole-layout, there is no tail)"
-                )
+            for opt in ("prefixLength", "copybook"):
+                if options.get(opt.lower()) is not None:
+                    raise ValueError(
+                        f"awstape: {opt!r} applies to recfm=U only "
+                        "(F records are whole-layout, there is no tail)"
+                    )
+            layout_raw = options.get("layout")
             if layout_raw is None:
                 raise ValueError(
                     "awstape: option 'layout' is required with recfm=F"
                 )
-            fields = parse_layout(layout_raw, record_length)
+            contract = cls.framed_options(
+                options, layout_raw, record_length, files=True, tiled=True
+            )
         else:
-            pl_raw = options.get("prefixlength")
-            if layout_raw is not None:
-                if pl_raw is None:
-                    raise ValueError(
-                        "awstape: option 'prefixLength' is required with "
-                        "'layout' (the fixed data bytes every record carries)"
-                    )
-                prefix_length = int(pl_raw)
-                if prefix_length <= 0:
-                    raise ValueError(
-                        f"awstape: prefixLength must be > 0, got {prefix_length}"
-                    )
-                fields = parse_layout(layout_raw, prefix_length)
-            elif pl_raw is not None:
-                raise ValueError(
-                    "awstape: option 'prefixLength' requires 'layout' (raw "
-                    "mode emits the whole block as 'value')"
-                )
+            layout_raw, prefix_length = cls.parse_prefix(options)
             if options.get("recordlength") is not None:
                 raise ValueError(
                     "awstape: 'recordLength' applies to recfm=F only (U "
                     "records are whole blocks of undefined length)"
                 )
-        with_offset = options.get("includeoffset", "true").lower() == "true"
-        with_file = options.get("includefile", "false").lower() == "true"
-        with_tail = options.get("includetail", "true").lower() == "true"
-        tail_column = options.get("tailcolumn", "record_tail")
-        if fields is not None and tail_column in {f.name for f in fields}:
-            raise ValueError(
-                f"awstape: tailColumn {tail_column!r} clashes with a layout field"
+            contract = cls.framed_options(
+                options, layout_raw, prefix_length, files=True
             )
-        encoding = _single_byte_encoding(
-            options.get("encoding", "utf-8"), "awstape"
-        )
         chunk_size = int(options.get("chunksize", "4096"))
         if not (1 <= chunk_size <= _MAX_CHUNK):
             raise ValueError(
@@ -258,56 +222,22 @@ class _TOptions:
                 f"awstape: unknown labelEncoding {label_encoding!r}"
             )
         return cls(
-            recfm, record_length, prefix_length, fields, with_offset,
-            with_file, with_tail, tail_column, encoding, chunk_size,
-            block_size, labels, dataset, file_seq, volser, label_encoding,
+            **contract, recfm=recfm, record_length=record_length,
+            chunk_size=chunk_size, block_size=block_size, labels=labels,
+            dataset=dataset, file_seq=file_seq, volser=volser,
+            label_encoding=label_encoding,
         )
 
-    def spark_schema(self) -> StructType:
-        out: list[StructField] = []
-        if self.with_file:
-            out.append(StructField("tape_file", IntegerType(), False))
-        if self.with_offset:
-            out.append(StructField("record_offset", LongType(), False))
-        if self.fields is None:
-            out.append(StructField("value", BinaryType(), False))
-        else:
-            out.extend(layout_schema(self.fields).fields)
-            if self.recfm == "U" and self.with_tail:
-                out.append(StructField(self.tail_column, BinaryType(), False))
-        return StructType(out)
-
-    def layout_arrow_schema(self) -> pa.Schema:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(layout_schema(self.fields))
-
-    def arrow_schema(self) -> pa.Schema:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(self.spark_schema())
-
-    def framed_batch(
-        self, files: list[int], offsets: list[int], fixed: bytearray,
-        tails: list[bytes],
-    ) -> pa.RecordBatch:
-        """The Arrow batch of the records a read loop collected: U
-        records as prefix + tail, F records whole in ``fixed``."""
-        return decode_framed(
-            offsets, fixed, tails,
-            prefix_length=(
-                self.record_length if self.recfm == "F" else self.prefix_length
-            ),
-            fields=self.fields,
-            layout_arrow=(
-                self.layout_arrow_schema() if self.fields is not None else None
-            ),
-            arrow_schema=self.arrow_schema(),
-            encoding=self.encoding,
-            with_offset=self.with_offset,
-            with_tail=self.recfm == "U" and self.with_tail,
-            files=files if self.with_file else None,
-        )
+    def tail(self, fobj, path, lo, hi, stop_on_partial):
+        for tf, off, block, (pos, prev, tf_next, mark) in iter_blocks(
+            fobj, path,
+            start=(lo["pos"], lo["prev"], lo["tf"], lo["mark"]),
+            stop_on_partial=stop_on_partial,
+            end_pos=None if hi is None else hi["pos"],
+        ):
+            yield tf, off, block, {
+                "pos": pos, "prev": prev, "tf": tf_next, "mark": mark,
+            }
 
 
 def iter_blocks(
@@ -649,155 +579,51 @@ class AwsTapeReader(DataSourceReader):
             return iter(())
 
         def gen():
-            files: list[int] = []
-            offsets: list[int] = []
-            fixed = bytearray()
-            tails: list[bytes] = []
-            pending = 0
-            data_pos = 0  # F mode: deblocked byte offset
             with open(partition.path, "rb") as f:
                 walk = (
                     iter_labeled_blocks(f, partition.path, o)
                     if o.labels == "SL"
                     else iter_blocks(f, partition.path)
                 )
-                for tf, boff, block, _resume in walk:
-                    if o.recfm == "F":
-                        if len(block) % o.record_length != 0:
-                            raise ValueError(
-                                f"awstape: block at offset {boff} in "
-                                f"{partition.path!r} is {len(block)} bytes, "
-                                f"not a multiple of recordLength "
-                                f"{o.record_length}"
-                            )
-                        nrec = len(block) // o.record_length
-                        files.extend([tf] * nrec)
-                        offsets.extend(
-                            data_pos + i * o.record_length for i in range(nrec)
-                        )
-                        fixed.extend(block)
-                        data_pos += len(block)
-                    else:
-                        if len(block) < o.prefix_length:
-                            raise ValueError(
-                                f"awstape: block at offset {boff} in "
-                                f"{partition.path!r} is {len(block)} bytes, "
-                                f"shorter than the declared prefix "
-                                f"({o.prefix_length})"
-                            )
-                        files.append(tf)
-                        offsets.append(boff)
-                        if o.fields is None:
-                            tails.append(block)
-                        else:
-                            fixed.extend(block[: o.prefix_length])
-                            tails.append(block[o.prefix_length :])
-                    pending += len(block)
-                    if pending >= BATCH_TARGET:
-                        yield o.framed_batch(files, offsets, fixed, tails)
-                        files, offsets, fixed, tails = [], [], bytearray(), []
-                        pending = 0
-            if offsets:
-                yield o.framed_batch(files, offsets, fixed, tails)
+                units = (
+                    _deblocked(walk, partition.path, o.record_length)
+                    if o.recfm == "F"
+                    else ((tf, boff, block, len(block)) for tf, boff, block, _r in walk)
+                )
+                yield from framed_batches(o, partition.path, units, o.batch_target)
 
         return gen()
 
 
-class AwsTapeStreamReader(SimpleDataSourceStreamReader):
-    """Tail ONE growing AWS image (recfm=U, unlabeled).  An offset is
-    the full walk state ``(pos, prev, tf, mark)`` — the byte position
-    of the next unread chunk header plus the backspace-chain value and
-    tape-file counters needed to re-enter there, so restart replays
-    re-validate the exact chain they first walked.  Only WHOLE blocks
-    are admitted: a half-written chunk chain at EOF is growth in
-    flight and its entire chain stays unread until the ENDREC chunk
-    lands (the whole-record invariant carried to chunked tape blocks).
-    A closed tape (double mark) simply stops yielding new rows."""
-
-    def __init__(self, opts: _TOptions, path: str):
-        self.opts = opts
-        self.path = path
-
-    def initialOffset(self):
-        return {"pos": 0, "prev": 0, "tf": 0, "mark": False}
-
-    def _rows(self, lo: dict, hi: dict | None, stop_on_partial: bool,
-              max_bytes: int | None = None):
-        o = self.opts
-        if not os.path.exists(self.path):
-            return [], lo
-        recs: list[tuple[int, int, bytes]] = []
-        end = lo
-        with open(self.path, "rb") as f:
-            f.seek(lo["pos"])
-            for tf, off, block, resume in iter_blocks(
-                f, self.path,
-                start=(lo["pos"], lo["prev"], lo["tf"], lo["mark"]),
-                stop_on_partial=stop_on_partial,
-                end_pos=hi["pos"] if hi is not None else None,
-            ):
-                if len(block) < o.prefix_length:
-                    raise ValueError(
-                        f"awstape: block at offset {off} in {self.path!r} "
-                        f"is {len(block)} bytes, shorter than the declared "
-                        f"prefix ({o.prefix_length})"
-                    )
-                recs.append((tf, off, block))
-                end = {
-                    "pos": resume[0], "prev": resume[1],
-                    "tf": resume[2], "mark": resume[3],
-                }
-                if max_bytes is not None and resume[0] - lo["pos"] >= max_bytes:
-                    break
-        if not recs:
-            return [], lo
-        files = [tf for tf, _off, _b in recs]
-        offsets = [off for _tf, off, _b in recs]
-        prefixes = bytearray()
-        tails: list[bytes] = []
-        for _tf, _off, block in recs:
-            if o.fields is None:
-                tails.append(block)
-            else:
-                prefixes.extend(block[: o.prefix_length])
-                tails.append(block[o.prefix_length :])
-        batch = o.framed_batch(files, offsets, prefixes, tails)
-        return [tuple(r.values()) for r in batch.to_pylist()], end
-
-    def read(self, start: dict):
-        # cap the per-batch span so a large backlog drains across
-        # micro-batches instead of materializing at once (ADVICE r3)
-        rows, pos = self._rows(
-            start, None, stop_on_partial=True, max_bytes=BATCH_TARGET
-        )
-        return iter(rows), pos
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        if end["pos"] <= start["pos"]:
-            return iter(())
-        rows, _pos = self._rows(start, end, stop_on_partial=False)
-        return iter(rows)
-
-    def commit(self, end: dict):
-        pass
+def _deblocked(walk, path: str, record_length: int):
+    """recfm=F units: each block at its offset in the DEBLOCKED byte
+    stream, checked to hold whole records."""
+    data_pos = 0
+    for tf, boff, block, _resume in walk:
+        if len(block) % record_length != 0:
+            raise ValueError(
+                f"awstape: block at offset {boff} in {path!r} is "
+                f"{len(block)} bytes, not a multiple of recordLength "
+                f"{record_length}"
+            )
+        yield tf, data_pos, block, len(block)
+        data_pos += len(block)
 
 
-class AwsTapeWriter(DataSourceWriter):
+# Tail ONE growing AWS image (recfm=U, unlabeled): an offset is the full
+# walk state ``{"pos", "prev", "tf", "mark"}`` — the next chunk header's
+# position plus the backspace-chain value and tape-file counters needed
+# to re-enter there, so restart replays re-validate the exact chain they
+# first walked.  A half-written chunk chain at EOF stays unread until
+# its ENDREC chunk lands; a closed tape (double mark) yields no new rows.
+AwsTapeStreamReader = FramedStreamReader
+
+
+class AwsTapeWriter(_PartWriter):
     """One ``.aws`` image per input partition, each a complete tape:
-    data blocks, tapemark, end-of-tape tapemark.
+    data blocks, tapemark, end-of-tape tapemark."""
 
-    ``stream_mode`` (set by :class:`AwsTapeStreamWriter`) defers final
-    naming to commit time (see ``fixedlen._part_paths``)."""
-
-    stream_mode = False
-
-    def __init__(self, opts: _TOptions, path: str, overwrite: bool):
-        self.opts = opts
-        self.path = path
-        self.overwrite = overwrite
-        import uuid
-
-        self.token = uuid.uuid4().hex[:10]
+    _PART_SUFFIXES = (".aws",)
 
     def write(self, iterator) -> _CommitMessage:
         os.makedirs(self.path, exist_ok=True)
@@ -829,17 +655,6 @@ class AwsTapeWriter(DataSourceWriter):
                 if last:
                     break
 
-        def payload_bytes(row) -> bytes:
-            if o.recfm == "F":
-                return encode_framed(
-                    row, o.fields, o.record_length, encoding=o.encoding,
-                    tail_column=None,
-                )
-            return encode_framed(
-                row, o.fields, o.prefix_length, encoding=o.encoding,
-                tail_column=o.tail_column if o.with_tail else None,
-            )
-
         def tapemark() -> None:
             nonlocal prev_len
             out.append(struct.pack("<HHBB", 0, prev_len, _F1_TAPEMARK, 0))
@@ -867,7 +682,7 @@ class AwsTapeWriter(DataSourceWriter):
 
         block = bytearray()
         for row in iterator:
-            payload = payload_bytes(row)
+            payload = o.framed_payload(row)
             if o.recfm == "F":
                 block.extend(payload)
                 if len(block) >= o.block_size:
@@ -916,65 +731,13 @@ class AwsTapeWriter(DataSourceWriter):
             raise
         return msg
 
-    def commit(self, messages):
-        if self.overwrite:
-            _clear_parts(self.path, self.token, (".aws",), recursive=False)
-        _promote(messages)
 
-    def abort(self, messages):
-        _remove_tmps(messages)
+class AwsTapeDataSource(FramedDataSource):
+    OPTIONS = _TOptions
+    READER = AwsTapeReader
+    WRITER = AwsTapeWriter
 
-
-class AwsTapeStreamWriter(DataSourceStreamWriter):
-    """Streaming AWS-tape SINK: the batch writer in ``stream_mode``, so
-    each micro-batch partition encodes a complete tape image (data
-    blocks, labels if requested, tapemarks), committed by the sink
-    protocol the three fixed-width sources share (``fixedlen._promote``
-    with the micro-batch id, so images land as
-    ``batch-{id}-part-{p}.aws``)."""
-
-    def __init__(self, opts: _TOptions, path: str):
-        self._inner = AwsTapeWriter(opts, path, overwrite=False)
-        self._inner.stream_mode = True
-
-    def write(self, iterator) -> _CommitMessage:
-        return self._inner.write(iterator)
-
-    def commit(self, messages, batchId: int) -> None:
-        _promote(messages, batchId)
-
-    def abort(self, messages, batchId: int) -> None:
-        _remove_tmps(messages)
-
-
-class AwsTapeDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "awstape"
-
-    def __init__(self, options):
-        super().__init__(options)
-        self.opts = _TOptions.parse(options)
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("awstape: a path is required (.load(path))")
-
-    def schema(self) -> StructType:
-        return self.opts.spark_schema()
-
-    def reader(self, schema: StructType) -> AwsTapeReader:
-        check_user_schema("awstape", schema, self.opts.spark_schema())
-        return AwsTapeReader(self.opts, self.path)
-
-    def writer(self, schema: StructType, overwrite: bool) -> AwsTapeWriter:
-        return AwsTapeWriter(self.opts, self.path, overwrite)
-
-    def streamWriter(
-        self, schema: StructType, overwrite: bool
-    ) -> AwsTapeStreamWriter:
-        return AwsTapeStreamWriter(self.opts, self.path)
-
-    def simpleStreamReader(self, schema: StructType) -> AwsTapeStreamReader:
+    def simpleStreamReader(self, schema: StructType) -> FramedStreamReader:
         if os.path.isdir(self.path):
             raise ValueError("awstape streaming tails a single image file")
         if self.opts.labels != "NONE":
@@ -987,12 +750,7 @@ class AwsTapeDataSource(DataSource):
                 "awstape streaming supports recfm=U (deblocked F offsets "
                 "are not stable across growing batches)"
             )
-        return AwsTapeStreamReader(self.opts, self.path)
+        return super().simpleStreamReader(schema)
 
 
-def register(spark) -> None:
-    """Idempotent per-session registration."""
-    if getattr(spark, "_awstape_registered", False):
-        return
-    spark.dataSource.register(AwsTapeDataSource)
-    spark._awstape_registered = True
+register = partial(framed.register, source=AwsTapeDataSource)

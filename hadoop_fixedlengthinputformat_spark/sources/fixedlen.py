@@ -137,6 +137,8 @@ class _Options:
     # still runs, so a true claim gives identical results with pruned
     # IO; the claim itself is the user's (like bucketed tables).
     sorted_by: str | None = None
+    # executor-parallel streaming (``partitionedStream=true``)
+    partitioned_stream: bool = False
 
     @property
     def stride(self) -> int:
@@ -259,7 +261,7 @@ class _Options:
             fields = [f for f in fields if f.name in keep]
             pruned = True
 
-        with_offset = options.get("includeoffset", "true").lower() == "true"
+        with_offset = _flag(options, "includeOffset", True, "fixedlen")
         malformed = options.get("malformedtail", "fail").lower()
         if malformed not in ("fail", "drop"):
             raise ValueError("fixedlen: malformedTail must be 'fail' or 'drop'")
@@ -292,9 +294,7 @@ class _Options:
             raise ValueError(
                 "fixedlen: skipHeaderRecords/skipTrailerRecords must be >= 0"
             )
-        stats_sidecar = (
-            options.get("statssidecar", "false").lower() == "true"
-        )
+        stats_sidecar = _flag(options, "statsSidecar", False, "fixedlen")
         stats_block = int(
             options.get("statsblockrecords", str(stats.STATS_BLOCK_RECORDS))
         )
@@ -364,6 +364,9 @@ class _Options:
             corrupt_col, line_sep, (), partition_by,
             max_bytes_per_trigger=mbt,
             sorted_by=sorted_by,
+            partitioned_stream=_flag(
+                options, "partitionedStream", False, "fixedlen"
+            ),
         )
 
     def trigger_budget(self) -> int | None:
@@ -395,6 +398,20 @@ class _Options:
 
     def arrow_schema(self) -> pa.Schema:
         return to_arrow_schema(self.spark_schema())
+
+
+def _flag(options, name: str, default: bool, source: str) -> bool:
+    """Boolean option ``name``: 'true' or 'false' in any case; any other
+    value raises instead of silently reading as false."""
+    raw = options.get(name.lower())
+    if raw is None:
+        return default
+    value = str(raw).lower()
+    if value not in ("true", "false"):
+        raise ValueError(
+            f"{source}: option {name!r} must be 'true' or 'false', got {raw!r}"
+        )
+    return value == "true"
 
 
 def _single_byte_encoding(enc_raw: str, source: str) -> str:
@@ -1069,19 +1086,70 @@ def _remove_tmps(messages) -> None:
                     os.remove(p)
 
 
-class FixedLengthWriter(DataSourceWriter):
+class _PartWriter(DataSourceWriter):
+    """The batch sink shell of the three fixed-width sources: a subclass
+    writes one set of parts per task (``write``); the job token, the
+    overwrite-clear of earlier jobs' parts and the commit/abort of the
+    shared protocol live here.
+
+    ``stream_mode`` (set by :class:`_StreamSink`) defers final naming to
+    commit time (see ``_part_paths``)."""
+
+    stream_mode = False
+    # overwrite clears earlier ``part-*`` files ending in these (data
+    # parts and their sidecars); ``_CLEAR_RECURSIVE`` also clears
+    # partitionBy subdirectories
+    _PART_SUFFIXES: tuple[str, ...] = ()
+    _CLEAR_RECURSIVE = False
+
+    def __init__(self, opts, path: str, overwrite: bool):
+        import uuid
+
+        self.opts = opts
+        self.path = path
+        self.overwrite = overwrite
+        self.token = uuid.uuid4().hex[:10]
+
+    def commit(self, messages):
+        if self.overwrite:
+            _clear_parts(
+                self.path, self.token, self._PART_SUFFIXES,
+                recursive=self._CLEAR_RECURSIVE,
+            )
+        _promote(messages)
+
+    def abort(self, messages):
+        _remove_tmps(messages)
+
+
+class _StreamSink(DataSourceStreamWriter):
+    """Any source's part writer as a streaming sink: the batch writer in
+    ``stream_mode``, so a stream takes every write option the batch sink
+    takes, committed by the shared protocol with the micro-batch id (parts
+    land as ``batch-{id}-part-{p}{ext}``)."""
+
+    def __init__(self, writer: _PartWriter):
+        writer.stream_mode = True
+        self._inner = writer
+
+    def write(self, iterator) -> _CommitMessage:
+        return self._inner.write(iterator)
+
+    def commit(self, messages, batchId: int) -> None:
+        _promote(messages, batchId)
+
+    def abort(self, messages, batchId: int) -> None:
+        _remove_tmps(messages)
+
+
+class FixedLengthWriter(_PartWriter):
     """Engine extension: the reference has no OutputFormat at all
     (SURVEY.md §2.2) — this sink closes the round-trip.  One file per
-    input partition, records encoded via the layout.
-
-    ``stream_mode`` (set by :class:`FixedLengthStreamWriter`) defers
-    final naming to commit time (see ``_part_paths``)."""
+    input partition, records encoded via the layout."""
 
     # rows encoded + flushed per slice of this size so the worker never
     # holds a whole partition's rows AND its encoded bytes at once
     WRITE_BATCH_ROWS = 10_000
-
-    stream_mode = False
 
     # overwrite clears data parts, codec members and stats sidecars
     _PART_SUFFIXES = (
@@ -1089,6 +1157,7 @@ class FixedLengthWriter(DataSourceWriter):
         *(".fixed" + e for e in _CODEC_EXTS.values()),
         stats.sidecar_path(""),
     )
+    _CLEAR_RECURSIVE = True
 
     def __init__(self, opts: _Options, path: str, overwrite: bool):
         # no layout => RAW mode: rows carry a 'value' binary column of
@@ -1100,12 +1169,7 @@ class FixedLengthWriter(DataSourceWriter):
             raise ValueError(
                 "fixedlen write does not accept 'columns' — write the full layout"
             )
-        self.opts = opts
-        self.path = path
-        self.overwrite = overwrite
-        import uuid
-
-        self.token = uuid.uuid4().hex[:10]
+        super().__init__(opts, path, overwrite)
 
     def write(self, iterator) -> _CommitMessage:
         from urllib.parse import quote
@@ -1249,35 +1313,6 @@ class FixedLengthWriter(DataSourceWriter):
                     for s2 in sinks.values()
                 ])])
         return _CommitMessage(outputs)
-
-    def commit(self, messages):
-        if self.overwrite:
-            _clear_parts(
-                self.path, self.token, self._PART_SUFFIXES, recursive=True
-            )
-        _promote(messages)
-
-    def abort(self, messages):
-        _remove_tmps(messages)
-
-
-class FixedLengthStreamWriter(DataSourceStreamWriter):
-    """Streaming fixed-width SINK: the batch writer in ``stream_mode``,
-    so it takes every write option the batch sink takes, committed by
-    the shared protocol (``_promote`` with the micro-batch id)."""
-
-    def __init__(self, opts: _Options, path: str):
-        self._inner = FixedLengthWriter(opts, path, overwrite=False)
-        self._inner.stream_mode = True
-
-    def write(self, iterator) -> _CommitMessage:
-        return self._inner.write(iterator)
-
-    def commit(self, messages, batchId: int) -> None:
-        _promote(messages, batchId)
-
-    def abort(self, messages, batchId: int) -> None:
-        _remove_tmps(messages)
 
 
 class FixedLenStreamReader(SimpleDataSourceStreamReader):
@@ -1532,16 +1567,16 @@ class FixedLengthDataSource(DataSource):
             raise ValueError("fixedlen: save(path) is required")
         return FixedLengthWriter(self.opts, self.path, overwrite)
 
-    def streamWriter(self, schema: StructType, overwrite: bool) -> FixedLengthStreamWriter:
+    def streamWriter(self, schema: StructType, overwrite: bool) -> _StreamSink:
         if not self.path:
             raise ValueError("fixedlen: streaming write requires a path")
-        return FixedLengthStreamWriter(self.opts, self.path)
+        return _StreamSink(FixedLengthWriter(self.opts, self.path, overwrite=False))
 
     def streamReader(self, schema: StructType) -> FixedLenPartitionedStreamReader:
         # opt-in executor-parallel streaming; Spark's _streamReader falls
         # back to simpleStreamReader only on PySparkNotImplementedError
         # (the builtin NotImplementedError crashes the source runner)
-        if self.options.get("partitionedstream", "false").lower() != "true":
+        if not self.opts.partitioned_stream:
             from pyspark.errors import PySparkNotImplementedError
 
             raise PySparkNotImplementedError(

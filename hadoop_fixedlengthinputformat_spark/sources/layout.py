@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import codecs
 import datetime
+import math
 import re
 import struct
 from dataclasses import dataclass
@@ -253,6 +254,7 @@ def _slice_binary(mat: np.ndarray, start: int, length: int) -> pa.Array:
 # Text decoders: the charset-transcoded matrix, cast to UTF-8 strings
 
 _I32_MIN, _I32_MAX = -(2**31), 2**31 - 1
+_I64_MIN, _I64_MAX = -(2**63), 2**63 - 1
 
 
 def _text(mat: np.ndarray, f: FieldSpec, permissive: bool):
@@ -295,8 +297,20 @@ def _decode_string(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
 
 def _decode_long(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
     # failfast: Arrow raises on garbage, '+' signs, and overflow;
-    # permissive: the pattern bounds digits to 18 => the parse cannot raise
-    return pc.cast(_trimmed(mat, f, permissive), pa.int64())
+    # permissive: the pattern bounds digits to 19 and a 19-digit value
+    # past the int64 range is nulled => the parse cannot raise
+    text = _trimmed(mat, f, permissive)
+    if permissive and f.length >= 19:
+        digits = pc.utf8_ltrim(pc.utf8_ltrim(text, characters="-"), characters="0")
+        limit = pc.if_else(
+            pc.starts_with(text, "-"), str(-_I64_MIN), str(_I64_MAX)
+        )
+        # equal-length digit strings compare in numeric order
+        over = pc.and_(
+            pc.equal(pc.utf8_length(digits), 19), pc.greater(digits, limit)
+        )
+        text = pc.if_else(over, pa.scalar(None, pa.string()), text)
+    return pc.cast(text, pa.int64())
 
 
 def _decode_int(mat: np.ndarray, f: FieldSpec, permissive: bool) -> pa.Array:
@@ -663,11 +677,16 @@ class _FieldType:
     filler: object = 0  # for a NULL or an unused ODO slot: blank or zero
 
 
-# leading zeros, then at most 18 digits: the int64 parse cannot overflow
-# (18 digits < 2^63); '+' excluded — Arrow's string->int cast rejects
-# it, so it's malformed
-_INT_RE = r"^-?0*[0-9]{1,18}$"
-_DOUBLE_RE = r"^-?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$"
+# leading zeros, then at most 19 digits (the decoder nulls the 19-digit
+# values past the int64 range); '+' excluded — Arrow's string->int cast
+# rejects it, so it's malformed
+_INT_RE = r"^-?0*[0-9]{1,19}$"
+# exactly the text Arrow's string->double cast reads: a signed decimal
+# or exponent form, or nan / inf / infinity in any case
+_DOUBLE_RE = (
+    r"^(?i:[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)(e[+-]?[0-9]+)?"
+    r"|[+-]?(nan|inf|infinity))$"
+)
 _DATE_RE = r"^[0-9]{4}-(0[1-9]|1[0-2])-(0[1-9]|[12][0-9]|3[01])$"
 _ZONED = _digits("zoned", lambda w: w)
 _SIGNSEP = _digits("sign-separate", lambda w: w - 1)
@@ -677,12 +696,18 @@ def _int_text(v, f: FieldSpec) -> str:
     return f"{int(v):0{f.length}d}"
 
 
+def _double_text(v, f: FieldSpec) -> str:
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v:0{f.length}.{f.scale}f}"
+    return str(v).rjust(f.length)  # 'nan' / 'inf' / '-inf', blank-padded
+
+
 _FIELD_TYPES: dict[str, _FieldType] = {
     "int": _FieldType(IntegerType(), _decode_int, _int_text, valid_re=_INT_RE),
     "long": _FieldType(LongType(), _decode_long, _int_text, valid_re=_INT_RE),
     "double": _FieldType(
-        DoubleType(), _decode_double,
-        lambda v, f: f"{float(v):0{f.length}.{f.scale}f}", valid_re=_DOUBLE_RE,
+        DoubleType(), _decode_double, _double_text, valid_re=_DOUBLE_RE,
     ),
     "string": _FieldType(
         StringType(), _decode_string, lambda v, f: str(v).ljust(f.length), filler=""
@@ -923,73 +948,6 @@ def decode_chunk(
             raw = _slice_binary(mat, 0, record_length)
             cols.append(pc.if_else(pa.array(bad), raw, pa.scalar(None, pa.binary())))
     return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-
-
-def decode_framed(
-    offsets: list[int],
-    prefixes: bytearray,
-    tails: list[bytes],
-    *,
-    prefix_length: int,
-    fields: list[FieldSpec] | None,
-    layout_arrow: pa.Schema | None,
-    arrow_schema: pa.Schema,
-    encoding: str,
-    with_offset: bool,
-    with_tail: bool,
-    files: list[int] | None = None,
-) -> pa.RecordBatch:
-    """One Arrow batch of framed records (the varlen and awstape readers)
-    from the per-record pieces a read loop collected: ``offsets``, the
-    concatenated fixed ``prefixes`` (``prefix_length`` bytes each) and
-    the variable ``tails``.  With no layout, ``tails`` holds each whole
-    payload and becomes the ``value`` column.
-
-    Column order matches ``arrow_schema``: [``tape_file`` from ``files``]
-    [``record_offset``?] then ``value``, or the layout columns decoded
-    by :func:`decode_chunk` and the tail column (``with_tail``).  A
-    reader of whole fixed-length records (awstape's recfm=F) passes them
-    as ``prefixes`` with ``with_tail=False``."""
-    cols: list[pa.Array] = []
-    if files is not None:
-        cols.append(pa.array(files, type=pa.int32()))
-    if with_offset:
-        cols.append(pa.array(offsets, type=pa.int64()))
-    if fields is None:
-        cols.append(pa.array(tails, type=pa.binary()))
-    else:
-        layout_batch = decode_chunk(
-            bytes(prefixes), prefix_length, fields, 0, False, None,
-            layout_arrow, encoding=encoding,
-        )
-        cols.extend(layout_batch.columns)
-        if with_tail:
-            cols.append(pa.array(tails, type=pa.binary()))
-    return pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
-
-
-def encode_framed(
-    row,
-    fields: list[FieldSpec] | None,
-    prefix_length: int,
-    *,
-    encoding: str,
-    tail_column: str | None,
-) -> bytes:
-    """One record's payload for a framed sink (varlen, awstape), the
-    inverse of :func:`decode_framed`: the raw ``value`` column with no
-    layout, else the encoded prefix followed by ``tail_column`` (None:
-    no tail; a NULL tail is empty, a string tail is UTF-8)."""
-    if fields is None:
-        return bytes(row["value"])
-    d = row.asDict()
-    prefix = encode_rows([d], fields, prefix_length, encoding=encoding)
-    tail = d.get(tail_column) if tail_column is not None else None
-    if tail is None:
-        return prefix
-    if isinstance(tail, str):
-        return prefix + tail.encode("utf-8")
-    return prefix + bytes(tail)
 
 
 # ---------------------------------------------------------------------------

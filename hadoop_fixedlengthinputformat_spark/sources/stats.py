@@ -56,7 +56,10 @@ from hadoop_fixedlengthinputformat_spark.sources.layout import FieldSpec
 
 STATS_BLOCK_RECORDS = 8192
 _SUFFIX = ".stats.json"
-_VERSION = 1
+# 2: string min/max are stored rtrimmed, as the values read back; a v1
+# sidecar (min/max with trailing blanks) could prune a matching block,
+# so it is ignored and its file read unpruned
+_VERSION = 2
 
 
 def scalar_fields(fields: list[FieldSpec] | None) -> dict[str, FieldSpec]:

@@ -18,8 +18,9 @@ X3.27's sibling of the RDW, 9999-byte ceiling) and ``DB`` (D records
 packed into blocks behind a 4-digit decimal block prefix).  Each RECFM
 is one entry of the ``_RECFMS`` framing table, from which the reader,
 the tail reader, ``build_index``, the writer and the option bounds all
-derive.  This module closes that family gap with the same engine
-contract as ``fixedlen``:
+derive.  This module closes that family gap with the framed-record
+contract it shares with ``awstape`` (options, schema, batches, the tail
+stream reader and the source shell live in ``sources/framed.py``):
 
   * a typed ``layout`` decodes the fixed PREFIX every record must carry
     (the COBOL fixed part before any OCCURS DEPENDING ON tail), reusing
@@ -55,43 +56,29 @@ from dataclasses import dataclass
 from functools import partial
 from typing import Iterator
 
-import pyarrow as pa
 from pyspark.sql.datasource import (
-    DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
-from pyspark.sql.types import (
-    BinaryType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructType
 
-from hadoop_fixedlengthinputformat_spark.sources import fixedlen
+from hadoop_fixedlengthinputformat_spark.sources import fixedlen, framed
 from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
     READ_CHUNK_TARGET,
     _codec_of,
     _codec_open_read,
     _CommitMessage,
-    _clear_parts,
     _part_paths,
-    _promote,
+    _PartWriter,
     _remove_tmps,
-    _single_byte_encoding,
     _visible,
 )
-from hadoop_fixedlengthinputformat_spark.sources.layout import (
-    FieldSpec,
-    check_user_schema,
-    decode_framed,
-    encode_framed,
-    layout_schema,
-    parse_layout,
+from hadoop_fixedlengthinputformat_spark.sources.framed import (
+    FramedDataSource,
+    FramedOptions,
+    FramedStreamReader,
+    framed_batches,
 )
 
 WORD_LEN = 4  # every descriptor word: RDW/SDW/BDW, ANSI count or block prefix
@@ -104,41 +91,27 @@ _INDEX_SUFFIX = ".rdx.json"
 
 
 @dataclass
-class _VOptions:
-    prefix_length: int  # fixed prefix data bytes (0 in raw mode)
-    fields: list[FieldSpec] | None  # None = raw mode ('value' = payload)
-    with_offset: bool
-    with_tail: bool
-    tail_column: str
-    encoding: str
+class _VOptions(FramedOptions):
     max_partition_bytes: int
     index_every: int  # writer sidecar stride; 0 disables
     recfm: str  # a key of _RECFMS
     block_size: int  # blocked writer target block bytes (incl. block word)
     segment_size: int = _MAX_RECORD  # VS/VBS max segment bytes incl. SDW
 
+    SOURCE = "varlen"
+    INITIAL_OFFSET = {"pos": 0}
+
     @property
     def framing(self) -> "_Framing":
         return _RECFMS[self.recfm]
 
+    @property
+    def batch_target(self) -> int:
+        return READ_CHUNK_TARGET
+
     @classmethod
     def parse(cls, options) -> "_VOptions":
-        layout_raw = options.get("layout")
         options = dict(options.items()) if hasattr(options, "items") else dict(options)
-        # COBOL on-ramp: the copybook describes the fixed PREFIX every
-        # record carries; prefixLength derives from its span
-        cpy_raw = options.get("copybook")
-        if cpy_raw is not None:
-            if layout_raw is not None:
-                raise ValueError(
-                    "varlen: 'copybook' and 'layout' are mutually exclusive"
-                )
-            from hadoop_fixedlengthinputformat_spark.sources.copybook import (
-                copybook_to_layout,
-            )
-
-            layout_raw, cpy_pl = copybook_to_layout(cpy_raw)
-            options.setdefault("prefixlength", str(cpy_pl))
         recfm = options.get("recfm", "v").upper()
         framing = _RECFMS.get(recfm)
         if framing is None:
@@ -147,45 +120,13 @@ class _VOptions:
                 f"got {recfm!r}"
             )
         rw, bw = framing.record_word, framing.block_word
-        fields = None
-        prefix_length = 0
-        if layout_raw is None and options.get("prefixlength") is not None:
-            # mirror of the layout-without-prefixLength check below: a
-            # prefixLength in raw mode would be silently ignored and the
-            # user would get undecoded 'value' rows with no signal
+        layout_raw, prefix_length = cls.parse_prefix(options)
+        if WORD_LEN + prefix_length > rw.ceiling:
             raise ValueError(
-                "varlen: option 'prefixLength' requires 'layout' (raw mode "
-                "emits the whole payload as 'value'; there is no prefix to "
-                "decode)"
+                f"varlen: prefixLength {prefix_length} cannot fit a "
+                f"{rw.ceiling}-byte RECFM={recfm} record"
             )
-        if layout_raw is not None:
-            pl_raw = options.get("prefixlength")
-            if pl_raw is None:
-                raise ValueError(
-                    "varlen: option 'prefixLength' is required with 'layout' "
-                    "(the fixed data bytes every record must carry)"
-                )
-            prefix_length = int(pl_raw)
-            if prefix_length <= 0:
-                raise ValueError(
-                    f"varlen: prefixLength must be > 0, got {prefix_length}"
-                )
-            if WORD_LEN + prefix_length > rw.ceiling:
-                raise ValueError(
-                    f"varlen: prefixLength {prefix_length} cannot fit a "
-                    f"{rw.ceiling}-byte RECFM={recfm} record"
-                )
-            fields = parse_layout(layout_raw, prefix_length)
-        with_offset = options.get("includeoffset", "true").lower() == "true"
-        with_tail = options.get("includetail", "true").lower() == "true"
-        tail_column = options.get("tailcolumn", "record_tail")
-        if fields is not None and tail_column in {f.name for f in fields}:
-            raise ValueError(
-                f"varlen: tailColumn {tail_column!r} clashes with a layout field"
-            )
-        encoding = _single_byte_encoding(
-            options.get("encoding", "utf-8"), "varlen"
-        )
+        contract = cls.framed_options(options, layout_raw, prefix_length)
         mpb = int(options.get("maxpartitionbytes", 128 * 1024 * 1024))
         index_every = int(options.get("indexevery", "4096"))
         if index_every < 0:
@@ -208,57 +149,16 @@ class _VOptions:
                 f"{WORD_LEN + 1}..{rw.ceiling} (SDW + at least 1 data byte)"
             )
         return cls(
-            prefix_length, fields, with_offset, with_tail, tail_column,
-            encoding, mpb, index_every, recfm, block_size, segment_size,
+            **contract, max_partition_bytes=mpb, index_every=index_every,
+            recfm=recfm, block_size=block_size, segment_size=segment_size,
         )
 
-    def spark_schema(self) -> StructType:
-        out: list[StructField] = []
-        if self.with_offset:
-            out.append(StructField("record_offset", LongType(), False))
-        if self.fields is None:
-            out.append(StructField("value", BinaryType(), False))
-        else:
-            out.extend(layout_schema(self.fields).fields)
-            if self.with_tail:
-                out.append(StructField(self.tail_column, BinaryType(), False))
-        return StructType(out)
-
-    def layout_arrow_schema(self) -> pa.Schema:
-        """Arrow schema for JUST the layout columns (decode_chunk's
-        contract); offset/tail are assembled around it."""
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(layout_schema(self.fields))
-
-    def arrow_schema(self) -> pa.Schema:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        return to_arrow_schema(self.spark_schema())
-
-    def framed_batch(
-        self, offsets: list[int], prefixes: bytearray, tails: list[bytes]
-    ) -> pa.RecordBatch:
-        """The Arrow batch of the records a read loop collected."""
-        return decode_framed(
-            offsets, prefixes, tails,
-            prefix_length=self.prefix_length,
-            fields=self.fields,
-            layout_arrow=(
-                self.layout_arrow_schema() if self.fields is not None else None
-            ),
-            arrow_schema=self.arrow_schema(),
-            encoding=self.encoding,
-            with_offset=self.with_offset,
-            with_tail=self.with_tail,
-        )
-
-    def framed_payload(self, row) -> bytes:
-        """One row's record payload for the sink."""
-        return encode_framed(
-            row, self.fields, self.prefix_length, encoding=self.encoding,
-            tail_column=self.tail_column if self.with_tail else None,
-        )
+    def tail(self, fobj, path, lo, hi, stop_on_partial):
+        for off, payload, resume in self.framing.walk(
+            fobj, lo["pos"], None if hi is None else hi["pos"],
+            self.prefix_length, path, stop_on_partial=stop_on_partial,
+        ):
+            yield None, off, payload, None if resume == -1 else {"pos": resume}
 
 
 def _index_path(data_path: str) -> str:
@@ -362,9 +262,8 @@ class _SegmentAssembler:
     (first/complete while a record is open, middle/last with none) are
     corruption and raise."""
 
-    def __init__(self, path: str, prefix_min: int):
+    def __init__(self, path: str):
         self.path = path
-        self.prefix_min = prefix_min
         self.first_off: int | None = None
         self.parts: list[bytes] = []
         self.size = 0
@@ -377,12 +276,6 @@ class _SegmentAssembler:
         payload = b"".join(self.parts)
         first = self.first_off
         self.first_off, self.parts, self.size = None, [], 0
-        if len(payload) < self.prefix_min:
-            raise ValueError(
-                f"varlen: spanned record at offset {first} in {self.path!r} "
-                f"assembles to {len(payload)} bytes, shorter than the "
-                f"declared prefix ({self.prefix_min})"
-            )
         return first, payload
 
     def feed(self, pos: int, code: int, payload: bytes):
@@ -438,7 +331,6 @@ class _Framing:
         prefix_min: int,
         path: str,
         stop_on_partial: bool = False,
-        max_bytes: int | None = None,
         headers_only: bool = False,
     ) -> Iterator[tuple[int, bytes, int]]:
         """Walk block → frame → (spanned) assembly from ``start``; yield
@@ -451,18 +343,18 @@ class _Framing:
 
         ``end`` is an exclusive bound that MUST be a safe re-entry point
         (sidecar offsets); ``None`` reads to EOF (compressed streams).
-        ``max_bytes`` stops at the first safe re-entry point at or past
-        ``start + max_bytes``.  ``stop_on_partial`` turns a truncated
-        word, frame or block at EOF into a clean stop — the tailing
-        stream, where a half-written unit is growth in flight and an
-        open spanned record stays unread until its last segment lands;
-        inside a complete block a malformed frame is always corruption.
+        ``stop_on_partial`` turns a truncated word, frame or block at EOF
+        into a clean stop — the tailing stream, where a half-written unit
+        is growth in flight and an open spanned record stays unread until
+        its last segment lands; inside a complete block a malformed frame
+        is always corruption.
         ``headers_only`` (``build_index``) yields empty payloads and
         seeks past every unblocked payload its read-ahead does not hold.
-        A record shorter than ``prefix_min`` data bytes raises: the
-        fixedlen contract."""
+        An unspanned frame shorter than its word plus ``prefix_min`` data
+        bytes raises; an assembled spanned record is checked against the
+        prefix by ``framed.framed_batches``."""
         rw, bw = self.record_word, self.block_word
-        asm = _SegmentAssembler(path, prefix_min) if self.spanned else None
+        asm = _SegmentAssembler(path) if self.spanned else None
         floor = WORD_LEN if asm is not None else WORD_LEN + prefix_min
         size = os.fstat(fobj.fileno()).st_size if headers_only else 0
         chunk = 1 << 16 if headers_only else 1 << 22
@@ -490,8 +382,6 @@ class _Framing:
                 if end is not None and pos >= end:
                     if not idle:
                         raise _open_record_error(path, pos, asm)
-                    return
-                if max_bytes is not None and pos - start >= max_bytes and idle:
                     return
                 if len(buf) - cur < WORD_LEN:
                     fill(WORD_LEN)
@@ -743,113 +633,22 @@ class VarLenReader(DataSourceReader):
                 fobj.seek(partition.start)
                 start, end = partition.start, partition.end
             try:
-                offsets: list[int] = []
-                prefixes = bytearray()
-                tails: list[bytes] = []
-                pending = 0
-                for off, payload, _resume in o.framing.walk(
-                    fobj, start, end, o.prefix_length, partition.path
-                ):
-                    offsets.append(off)
-                    if o.fields is None:
-                        tails.append(payload)
-                    else:
-                        prefixes.extend(payload[: o.prefix_length])
-                        tails.append(payload[o.prefix_length :])
-                    pending += WORD_LEN + len(payload)
-                    if pending >= READ_CHUNK_TARGET:
-                        yield o.framed_batch(offsets, prefixes, tails)
-                        offsets, prefixes, tails = [], bytearray(), []
-                        pending = 0
-                if offsets:
-                    yield o.framed_batch(offsets, prefixes, tails)
+                yield from framed_batches(o, partition.path, (
+                    (None, off, payload, WORD_LEN + len(payload))
+                    for off, payload, _resume in o.framing.walk(
+                        fobj, start, end, o.prefix_length, partition.path
+                    )
+                ), o.batch_target)
             finally:
                 fobj.close()
 
         return gen()
 
 
-class VarLenStreamReader(SimpleDataSourceStreamReader):
-    """Tail ONE growing RDW file; an offset is the byte position of the
-    next unread record.  Only WHOLE records are admitted — a
-    half-written RDW or payload at EOF is growth in flight and stays
-    unread until complete (the fixed-length whole-record invariant
-    carried to variable strides).  Offsets are only ever safe re-entry
-    points (record starts; block starts in blocked formats, never inside
-    a spanned record), so restart replays (`readBetweenOffsets`) re-walk
-    exactly the committed span."""
-
-    def __init__(self, opts: _VOptions, path: str):
-        self.opts = opts
-        self.path = path
-
-    def initialOffset(self):
-        return {"pos": 0}
-
-    def _rows(
-        self,
-        lo: int,
-        hi: int | None,
-        stop_on_partial: bool,
-        max_bytes: int | None = None,
-    ):
-        """Decode records in [lo, hi) (hi=None: all complete records, up
-        to ``max_bytes`` of file span when given); returns
-        (rows, end_pos)."""
-        o = self.opts
-        if not os.path.exists(self.path):
-            return [], lo
-        with open(self.path, "rb") as f:
-            f.seek(lo)
-            recs = list(o.framing.walk(
-                f, lo, hi, o.prefix_length, self.path,
-                stop_on_partial=stop_on_partial, max_bytes=max_bytes,
-            ))
-        # admit rows only up to the LAST safe resume point: a record
-        # whose resume is -1 ends mid-block and replays from the previous
-        # block boundary next batch (emitting it now would double-read it
-        # after a restart)
-        while recs and recs[-1][2] == -1:
-            recs.pop()
-        if not recs:
-            return [], lo
-        pos = recs[-1][2]
-        offsets: list[int] = []
-        prefixes = bytearray()
-        tails: list[bytes] = []
-        for off, payload, _resume in recs:
-            offsets.append(off)
-            if o.fields is None:
-                tails.append(payload)
-            else:
-                prefixes.extend(payload[: o.prefix_length])
-                tails.append(payload[o.prefix_length :])
-        batch = o.framed_batch(offsets, prefixes, tails)
-        return [tuple(r.values()) for r in batch.to_pylist()], pos
-
-    def read(self, start: dict):
-        # cap the per-batch span (ADVICE r3): a large backlog on stream
-        # start would otherwise materialize the ENTIRE file into one
-        # Python list / micro-batch on the driver; capping at
-        # READ_CHUNK_TARGET drains it across micro-batches instead (the
-        # returned offset is always a record start, so the next batch
-        # resumes exactly where this one stopped).
-        rows, pos = self._rows(
-            start["pos"], None, stop_on_partial=True,
-            max_bytes=READ_CHUNK_TARGET,
-        )
-        return iter(rows), {"pos": pos}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # replay after restart: honor END exactly — the file may have
-        # grown since the batch was planned
-        if end["pos"] <= start["pos"]:
-            return iter(())
-        rows, _pos = self._rows(start["pos"], end["pos"], stop_on_partial=False)
-        return iter(rows)
-
-    def commit(self, end: dict):
-        pass
+# Tail ONE growing varlen file: an offset ``{"pos"}`` is a safe re-entry
+# point (a record start; a block start in blocked formats, never inside
+# a spanned record), the tail reader of every framed source.
+VarLenStreamReader = FramedStreamReader
 
 
 def build_index(path: str, every: int = 4096, recfm: str = "v") -> dict:
@@ -963,23 +762,12 @@ class VarLenDirectoryStreamReader(DataSourceStreamReader):
         pass
 
 
-class VarLenWriter(DataSourceWriter):
+class VarLenWriter(_PartWriter):
     """One ``.rdw`` part file per input partition plus (when
     ``indexEvery`` > 0) the record-index sidecar that makes the output
-    splittable — the property foreign V-format files lack.
+    splittable — the property foreign V-format files lack."""
 
-    ``stream_mode`` (set by :class:`VarLenStreamWriter`) defers final
-    naming to commit time (see ``fixedlen._part_paths``)."""
-
-    stream_mode = False
-
-    def __init__(self, opts: _VOptions, path: str, overwrite: bool):
-        self.opts = opts
-        self.path = path
-        self.overwrite = overwrite
-        import uuid
-
-        self.token = uuid.uuid4().hex[:10]
+    _PART_SUFFIXES = (".rdw", ".rdw" + _INDEX_SUFFIX)
 
     def write(self, iterator) -> _CommitMessage:
         os.makedirs(self.path, exist_ok=True)
@@ -1017,71 +805,17 @@ class VarLenWriter(DataSourceWriter):
                 _remove_tmps([msg])
         return msg
 
-    def commit(self, messages):
-        if self.overwrite:
-            _clear_parts(
-                self.path, self.token, (".rdw", ".rdw" + _INDEX_SUFFIX),
-                recursive=False,
-            )
-        _promote(messages)
 
-    def abort(self, messages):
-        _remove_tmps(messages)
-
-
-class VarLenStreamWriter(DataSourceStreamWriter):
-    """Streaming RDW/variable-length SINK: the batch writer in
-    ``stream_mode`` (every recfm variant and the splittability index
-    sidecar), committed by the sink protocol the three fixed-width
-    sources share (``fixedlen._promote`` with the micro-batch id, so
-    parts land as ``batch-{id}-part-{p}.rdw``)."""
-
-    def __init__(self, opts: _VOptions, path: str):
-        self._inner = VarLenWriter(opts, path, overwrite=False)
-        self._inner.stream_mode = True
-
-    def write(self, iterator) -> _CommitMessage:
-        return self._inner.write(iterator)
-
-    def commit(self, messages, batchId: int) -> None:
-        _promote(messages, batchId)
-
-    def abort(self, messages, batchId: int) -> None:
-        _remove_tmps(messages)
-
-
-class VarLenDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "varlen"
-
-    def __init__(self, options):
-        super().__init__(options)
-        self.opts = _VOptions.parse(options)
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("varlen: a path is required (.load(path))")
-
-    def schema(self) -> StructType:
-        return self.opts.spark_schema()
-
-    def reader(self, schema: StructType) -> VarLenReader:
-        check_user_schema("varlen", schema, self.opts.spark_schema())
-        return VarLenReader(self.opts, self.path)
-
-    def writer(self, schema: StructType, overwrite: bool) -> VarLenWriter:
-        return VarLenWriter(self.opts, self.path, overwrite)
-
-    def streamWriter(
-        self, schema: StructType, overwrite: bool
-    ) -> VarLenStreamWriter:
-        return VarLenStreamWriter(self.opts, self.path)
+class VarLenDataSource(FramedDataSource):
+    OPTIONS = _VOptions
+    READER = VarLenReader
+    WRITER = VarLenWriter
 
     def streamReader(self, schema: StructType) -> VarLenDirectoryStreamReader:
         # a DIRECTORY streams with immutable-part file-source semantics
         # (executor-parallel, sidecar-splittable); a single file falls
-        # back to the record-walking tail reader below — Spark only
-        # falls back on PySparkNotImplementedError
+        # back to the record-walking tail reader — Spark only falls back
+        # on PySparkNotImplementedError
         if not os.path.isdir(self.path):
             from pyspark.errors import PySparkNotImplementedError
 
@@ -1093,17 +827,12 @@ class VarLenDataSource(DataSource):
             )
         return VarLenDirectoryStreamReader(self.opts, self.path)
 
-    def simpleStreamReader(self, schema: StructType) -> VarLenStreamReader:
+    def simpleStreamReader(self, schema: StructType) -> FramedStreamReader:
         if os.path.isdir(self.path) or _codec_of(self.path):
             raise ValueError(
                 "varlen streaming tails a single uncompressed file"
             )
-        return VarLenStreamReader(self.opts, self.path)
+        return super().simpleStreamReader(schema)
 
 
-def register(spark) -> None:
-    """Idempotent per-session registration."""
-    if getattr(spark, "_varlen_registered", False):
-        return
-    spark.dataSource.register(VarLenDataSource)
-    spark._varlen_registered = True
+register = partial(framed.register, source=VarLenDataSource)

@@ -10,6 +10,7 @@ test_multitype_property.py."""
 from __future__ import annotations
 
 import datetime
+import math
 import string
 import struct
 
@@ -45,6 +46,15 @@ def _decimals(digits):
     return value
 
 
+def _doubles(draw, f):
+    """Text doubles: NaN and +-inf where their text fits, else decimals
+    of at most width - 2 digits."""
+    special = [v for v in (math.nan, math.inf, -math.inf) if len(str(v)) <= f.length]
+    if special and draw(st.booleans()):
+        return draw(st.sampled_from(special))
+    return _decimals(lambda w: w - 2)(draw, f)
+
+
 def _julian(draw, f):
     if f.length == 5:  # YYDDD: the 1970-2069 century window
         return draw(st.dates(datetime.date(1970, 1, 1), datetime.date(2069, 12, 31)))
@@ -63,13 +73,11 @@ def _bin(draw, f):
 
 
 # base type -> (scaled?, candidate widths for a scale, value strategy).
-# Candidate widths are filtered through the entry's own width rule.  A
-# long holds at most 18 significant digits: the permissive pattern's
-# bound, which keeps its int64 parse from overflowing.
+# Candidate widths are filtered through the entry's own width rule.
 TYPES = {
     "int": (False, lambda s: range(1, 25), _ints(-(2**31), 2**31 - 1)),
-    "long": (False, lambda s: range(1, 25), _ints(1 - 10**18, 10**18 - 1)),
-    "double": (True, lambda s: range(s + 3, 19), _decimals(lambda w: w - 2)),
+    "long": (False, lambda s: range(1, 25), _ints(-(2**63), 2**63 - 1)),
+    "double": (True, lambda s: range(s + 3, 19), _doubles),
     "string": (False, lambda s: range(1, 21), _text),
     "date": (False, lambda s: range(10, 13), lambda draw, f: draw(
         st.dates(datetime.date(1600, 1, 1), datetime.date(2400, 12, 31)))),

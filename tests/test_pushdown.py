@@ -214,3 +214,30 @@ def test_stats_hold_strings_as_they_read_back(tmp_path):
         str(tmp_path), 8, layout, [EqualTo(("x",), "a")], maxpartitionbytes="8"
     )
     assert got == masked == [0]
+
+
+def test_version_1_sidecar_is_ignored(tmp_path):
+    """A version-1 sidecar stored string bounds with their trailing
+    blanks ('a '), which would prune the block holding 'a ' for x = 'a';
+    it is ignored, so the file reads unpruned."""
+    layout = "r:0:4:int,x:4:4:string"
+    fields = parse_layout(layout, 8)
+    rows = [{"r": 0, "x": "a "}, {"r": 1, "x": "b"}]
+    path = tmp_path / "part-00000.fixed"
+    path.write_bytes(encode_rows(rows, fields, 8))
+    blocks = [
+        {"n": 1, "cols": {
+            "r": {"min": r["r"], "max": r["r"], "nan": False},
+            "x": {"min": r["x"], "max": r["x"], "nan": False},
+        }}
+        for r in rows
+    ]
+    stats.write_sidecar(
+        stats.sidecar_path(str(path)),
+        {"version": 1, "block_records": 1, "blocks": blocks},
+    )
+    assert stats.load_sidecar(str(path)) is None
+    got, masked = _pruned_and_masked(
+        str(tmp_path), 8, layout, [EqualTo(("x",), "a")], maxpartitionbytes="8"
+    )
+    assert got == masked == [0]

@@ -712,12 +712,14 @@ def test_vbs_stream_holds_open_records_until_block_close(tmp_path):
     # closes the block -> NOTHING is admitted (no safe resume point yet)
     with open(p, "wb") as f:
         f.write(_bdw(_sdw(0, b"0001xx") + _sdw(1, b"0002yy")))
-    rows, off = rd._rows(0, None, stop_on_partial=True, max_bytes=1 << 20)
+    rows, end = rd._rows({"pos": 0}, None, stop_on_partial=True, max_bytes=1 << 20)
+    off = end["pos"]
     assert rows == [] and off == 0
     # block 2 closes record 2 and adds record 3 -> all three admitted
     with open(p, "ab") as f:
         f.write(_bdw(_sdw(2, b"zz") + _sdw(0, b"0003ww")))
-    rows, off = rd._rows(0, None, stop_on_partial=True, max_bytes=1 << 20)
+    rows, end = rd._rows({"pos": 0}, None, stop_on_partial=True, max_bytes=1 << 20)
+    off = end["pos"]
     assert [r[1] for r in rows] == [1, 2, 3]
     assert bytes(rows[1][2]) == b"yyzz"  # assembled across blocks
     assert off == os.path.getsize(p)
