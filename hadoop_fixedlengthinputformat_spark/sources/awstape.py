@@ -74,6 +74,7 @@ from pyspark.sql.types import StructType
 
 from hadoop_fixedlengthinputformat_spark.sources import framed
 from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
+    TailStreamReader,
     _CommitMessage,
     _list_files,
     _part_paths,
@@ -84,7 +85,6 @@ from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
 from hadoop_fixedlengthinputformat_spark.sources.framed import (
     FramedDataSource,
     FramedOptions,
-    FramedStreamReader,
     framed_batches,
 )
 
@@ -616,7 +616,7 @@ def _deblocked(walk, path: str, record_length: int):
 # to re-enter there, so restart replays re-validate the exact chain they
 # first walked.  A half-written chunk chain at EOF stays unread until
 # its ENDREC chunk lands; a closed tape (double mark) yields no new rows.
-AwsTapeStreamReader = FramedStreamReader
+AwsTapeStreamReader = TailStreamReader
 
 
 class AwsTapeWriter(_PartWriter):
@@ -737,7 +737,7 @@ class AwsTapeDataSource(FramedDataSource):
     READER = AwsTapeReader
     WRITER = AwsTapeWriter
 
-    def simpleStreamReader(self, schema: StructType) -> FramedStreamReader:
+    def simpleStreamReader(self, schema: StructType) -> TailStreamReader:
         if os.path.isdir(self.path):
             raise ValueError("awstape streaming tails a single image file")
         if self.opts.labels != "NONE":

@@ -399,6 +399,53 @@ class _Options:
     def arrow_schema(self) -> pa.Schema:
         return to_arrow_schema(self.spark_schema())
 
+    # the stream hooks of PartitionedStreamReader and TailStreamReader
+
+    @property
+    def INITIAL_OFFSET(self) -> dict:
+        # the tail skips header records once, at the start of the stream
+        return {"pos": self.skip_header * self.record_length}
+
+    def list_files(self, path: str) -> list[str]:
+        return _list_files(path)
+
+    def batch_reader(self, path: str) -> "FixedLengthReader":
+        return FixedLengthReader(self, path)
+
+    def usable_end(self, path: str) -> int:
+        """The end of a member's last whole record; a compressed member
+        is ``_CODEC_DONE`` (read whole once, when it appears)."""
+        if _codec_of(path):
+            return _CODEC_DONE
+        size = os.path.getsize(path)
+        return size - size % self.stride
+
+    def plan(self, path: str, seen: int | None, hi: int) -> list["FixedLenPartition"]:
+        if _codec_of(path):
+            return [] if seen else [FixedLenPartition(path, 0, _WHOLE_FILE)]
+        # floor at the header region even for already-seen files: a file
+        # first observed while shorter than the header (e.g. 0 bytes)
+        # checkpoints a truncated offset, and resuming from it would emit
+        # banner records as data once the file grows
+        lo = max(seen or 0, self.skip_header * self.stride)
+        return _split_range(path, lo, hi, self.stride, self.max_partition_bytes)
+
+    def tail_batches(self, path, lo, hi, stop_on_partial, max_bytes):
+        # the size is floored to whole records, so a record cut short
+        # at EOF is never read
+        pos = lo["pos"]
+        if hi is None:
+            size = os.path.getsize(path)
+            end = size - size % self.record_length
+            if max_bytes is not None:
+                end = min(end, pos + max_bytes)
+        else:
+            end = hi["pos"]
+        if end <= pos:
+            return [], lo
+        part = FixedLenPartition(path, pos, end)
+        return self.batch_reader(path).read(part), {"pos": end}
+
 
 def _flag(options, name: str, default: bool, source: str) -> bool:
     """Boolean option ``name``: 'true' or 'false' in any case; any other
@@ -541,6 +588,7 @@ def _discover(path: str) -> tuple[list[tuple[str, dict]], tuple[str, ...]]:
 
 
 _WHOLE_FILE = -1  # partition.end sentinel: compressed stream, read to EOF
+_CODEC_DONE = 1  # stream offset of a compressed member: emitted whole
 
 # Stream codecs (the reference defers to Hadoop's CompressionCodecFactory,
 # so gzip/bzip2/xz files are all inputs its users have; the stdlib covers
@@ -1142,6 +1190,146 @@ class _StreamSink(DataSourceStreamWriter):
         _remove_tmps(messages)
 
 
+def _simple_stream_fallback(feature: str):
+    """Send Spark to the source's ``simpleStreamReader``: its
+    ``_streamReader`` falls back only on PySparkNotImplementedError (the
+    builtin NotImplementedError crashes the source runner)."""
+    from pyspark.errors import PySparkNotImplementedError
+
+    raise PySparkNotImplementedError(
+        errorClass="NOT_IMPLEMENTED", messageParameters={"feature": feature}
+    )
+
+
+class PartitionedStreamReader(DataSourceStreamReader):
+    """The partitioned stream of every source: each micro-batch's new
+    ranges are planned once and decoded on executors by the source's
+    batch ``read(partition)``.
+
+    An offset is ``{"files": {path: usable end}}`` over a directory or
+    glob: each micro-batch picks up newly appeared members and the new
+    bytes of known ones.  A single file (``start`` given) keeps the
+    offset ``{"pos": usable end}``, beginning at ``start``.  Only whole
+    records up to a safe resume point are exposed — the split-alignment
+    invariant (FixedLengthInputFormat.java:276-298) carried into
+    streaming.  The source's options supply the hooks:
+
+      * ``list_files(path)``: the members under the stream path;
+      * ``usable_end(path)``: a member's offset, its last safe resume
+        point (fixedlen: the size floored to the stride; varlen: the
+        size of an immutable part);
+      * ``plan(path, seen, hi)``: the partitions of a member from its
+        previous offset ``seen`` (None when new) to ``hi``;
+      * ``batch_reader(path)``: the batch reader that reads them."""
+
+    def __init__(self, opts, path: str, start: int | None = None):
+        self.opts = opts
+        self.path = path
+        self.start = start
+
+    def _files(self, offset: dict) -> dict:
+        if self.start is None:
+            return offset.get("files", {})
+        return {self.path: offset["pos"]}
+
+    def initialOffset(self) -> dict:
+        return {"files": {}} if self.start is None else {"pos": self.start}
+
+    def latestOffset(self) -> dict:
+        files: dict[str, int] = {}
+        try:
+            names = self.opts.list_files(self.path)
+        except FileNotFoundError:
+            names = []
+        for p in names:
+            try:
+                files[p] = self.opts.usable_end(p)
+            except FileNotFoundError:
+                # listed, then deleted before stat: skip this batch rather
+                # than kill the stream (ADVICE r13); a later listing picks
+                # it up if it reappears
+                continue
+        if self.start is None:
+            return {"files": files}
+        return {"pos": files.get(self.path, 0)}
+
+    def partitions(self, start: dict, end: dict):
+        seen = self._files(start)
+        parts = [
+            part
+            for p, hi in self._files(end).items()
+            for part in self.opts.plan(p, seen.get(p), hi)
+        ]
+        # an empty micro-batch still needs one (empty) partition
+        return parts or [FixedLenPartition("", 0, 0)]
+
+    def read(self, partition: FixedLenPartition):
+        # executor-side; a batch reader reads an empty range as no rows
+        return self.opts.batch_reader(self.path).read(partition)
+
+    def commit(self, end: dict) -> None:
+        pass
+
+    def stop(self) -> None:
+        pass
+
+
+class TailStreamReader(SimpleDataSourceStreamReader):
+    """Tail ONE growing file with Spark's simple stream reader, which
+    reads where it plans, not on executors.  An offset is the source's resume state
+    (``opts.INITIAL_OFFSET``'s keys; ``pos`` is the byte position of the
+    next unread unit) — the replayable-source contract: only safe
+    re-entry points are returned, so a restart replay
+    (``readBetweenOffsets``) re-reads exactly the committed span.
+
+    ``opts.tail_batches(path, lo, hi, stop_on_partial, max_bytes)``
+    returns the Arrow batches of the whole units from ``lo`` up to the
+    resume offset ``hi`` (None: the last safe resume point on disk, or
+    the first one ``max_bytes`` of file span past ``lo``) and the offset
+    after them.  ``read`` caps a micro-batch at ``opts.trigger_budget()``
+    bytes, so a backlog drains across micro-batches.
+
+    This reader is the one ``maxBytesPerTrigger`` needs: ``read`` gets
+    the batch's start offset, which a ``DataSourceStreamReader``'s
+    ``latestOffset`` does not.  The executor-parallel path is
+    :class:`PartitionedStreamReader`."""
+
+    def __init__(self, opts, path: str):
+        self.opts = opts
+        self.path = path
+
+    def initialOffset(self) -> dict:
+        return dict(self.opts.INITIAL_OFFSET)
+
+    def _rows(
+        self, lo: dict, hi: dict | None, stop_on_partial: bool, max_bytes=None
+    ) -> tuple[list[tuple], dict]:
+        batches, end = self.opts.tail_batches(
+            self.path, lo, hi, stop_on_partial, max_bytes
+        )
+        return [tuple(r.values()) for b in batches for r in b.to_pylist()], end
+
+    def read(self, start: dict):
+        # a file not created yet has nothing to admit; a replay of a
+        # committed span whose file has gone raises instead
+        if not os.path.exists(self.path):
+            return iter(()), start
+        rows, end = self._rows(
+            start, None, stop_on_partial=True, max_bytes=self.opts.trigger_budget()
+        )
+        return iter(rows), end
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        # replay after restart: honor END exactly — the file may have
+        # grown since the batch was planned
+        if end["pos"] <= start["pos"]:
+            return iter(())
+        return iter(self._rows(start, end, stop_on_partial=False)[0])
+
+    def commit(self, end: dict) -> None:
+        pass
+
+
 class FixedLengthWriter(_PartWriter):
     """Engine extension: the reference has no OutputFormat at all
     (SURVEY.md §2.2) — this sink closes the round-trip.  One file per
@@ -1315,204 +1503,6 @@ class FixedLengthWriter(_PartWriter):
         return _CommitMessage(outputs)
 
 
-class FixedLenStreamReader(SimpleDataSourceStreamReader):
-    """Streaming variant: tails ONE growing fixed-length file; an offset is
-    the byte position of the next unread record.  Only whole records are
-    consumed (the split-alignment invariant carried into streaming).
-
-    Scale path: for production rates implement DataSourceStreamReader with
-    per-range partitions (same _plan_file math between start/end offsets);
-    the Simple reader is driver-side by design.
-    """
-
-    def __init__(self, opts: _Options, path: str):
-        if opts.skip_trailer:
-            # a growing file has no final record yet — "last N records"
-            # is unknowable until the stream ends
-            raise ValueError(
-                "fixedlen: skipTrailerRecords is not supported for streaming"
-            )
-        self.opts = opts
-        self.path = path
-
-    def initialOffset(self):
-        # header records are skipped once, at the start of the stream
-        return {"pos": self.opts.skip_header * self.opts.record_length}
-
-    def _rows(self, lo: int, hi: int):
-        rl = self.opts.record_length
-        with open(self.path, "rb") as f:
-            chunks = list(
-                _read_aligned(f, lo, hi, max(1, READ_CHUNK_TARGET // rl), rl)
-            )
-        schema = self.opts.arrow_schema()
-        rows: list[tuple] = []
-        offset = lo
-        for chunk in chunks:
-            batch = decode_chunk(
-                chunk, rl, self.opts.fields, offset,
-                self.opts.with_offset, self.opts.key_bounds, schema,
-                permissive=self.opts.decode_mode == "permissive",
-                encoding=self.opts.encoding,
-                corrupt_column=self.opts.corrupt_col is not None,
-            )
-            rows.extend(tuple(r.values()) for r in batch.to_pylist())
-            offset += len(chunk)
-        return iter(rows)
-
-    def read(self, start: dict):
-        pos = start["pos"]
-        rl = self.opts.record_length
-        size = os.path.getsize(self.path) if os.path.exists(self.path) else 0
-        usable = size - (size % rl)
-        budget = self.opts.trigger_budget()
-        if budget is not None:
-            # admission control: each micro-batch consumes at most the
-            # budget; the remainder arrives in later triggers
-            usable = min(usable, pos + budget)
-        if usable <= pos:
-            return iter(()), {"pos": pos}
-        return self._rows(pos, usable), {"pos": usable}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # replay path after a restart: must honor END, not the file's
-        # current size — the file may have grown since the batch was
-        # planned, and re-emitting the growth here would duplicate it in
-        # the next batch
-        lo, hi = start["pos"], end["pos"]
-        if hi <= lo:
-            return iter(())
-        return self._rows(lo, hi)
-
-    def commit(self, end: dict):
-        pass
-
-
-class FixedLenPartitionedStreamReader(DataSourceStreamReader):
-    """Partitioned streaming variant (option ``partitionedStream=true``):
-    executors read the new byte ranges in parallel, unlike the Simple
-    reader whose reads run on the driver.
-
-    An offset is ``{"pos": byte position of the next unread record}``
-    over the uncompressed logical stream of ONE growing file; each
-    micro-batch covers ``[start.pos, end.pos)`` split into record-aligned
-    ranges by the same ``_plan_file`` arithmetic as the batch reader
-    (FixedLengthInputFormat.java:276-298).  Only whole records are ever
-    exposed — the split-alignment invariant carried into streaming."""
-
-    def __init__(self, opts: _Options, path: str):
-        if _codec_of(path):
-            raise ValueError(
-                "fixedlen: streaming does not support compressed input"
-            )
-        if opts.skip_trailer:
-            raise ValueError(
-                "fixedlen: skipTrailerRecords is not supported for streaming"
-            )
-        self.opts = opts
-        self.path = path
-
-    def initialOffset(self) -> dict:
-        # stride, not record_length: with lineSep the header region spans
-        # skip_header * (record + sep) bytes; latestOffset/partitions are
-        # stride-based, so a record_length start would misalign every
-        # subsequent chunk reshape
-        return {"pos": self.opts.skip_header * self.opts.stride}
-
-    def latestOffset(self) -> dict:
-        rl = self.opts.stride
-        size = os.path.getsize(self.path) if os.path.exists(self.path) else 0
-        return {"pos": size - (size % rl)}
-
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start["pos"], end["pos"]
-        if hi <= lo:
-            return [FixedLenPartition("", 0, 0)]
-        return _split_range(
-            self.path, lo, hi, self.opts.stride, self.opts.max_partition_bytes
-        )
-
-    def read(self, partition: FixedLenPartition):
-        # executor-side: identical decode path to the batch reader
-        return FixedLengthReader(self.opts, self.path).read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    def stop(self) -> None:
-        pass
-
-
-class FixedLenDirectoryStreamReader(DataSourceStreamReader):
-    """Streaming over a DIRECTORY of fixed-width files — Spark's
-    file-source semantics for a format Spark doesn't know: each
-    micro-batch picks up (a) newly appeared files and (b) new
-    record-aligned bytes appended to known files.  An offset is
-    ``{"files": {path: usable_byte_position}}``; gzip members are
-    immutable whole-file units (position 0 -> 1 sentinel) read in one
-    partition when they appear.  Ranges split with the same
-    ``_plan_file`` arithmetic as the batch reader, read on executors."""
-
-    _GZ_DONE = 1  # sentinel offset: the compressed member has been emitted
-
-    def __init__(self, opts: _Options, path: str):
-        if opts.skip_trailer:
-            raise ValueError(
-                "fixedlen: skipTrailerRecords is not supported for streaming"
-            )
-        self.opts = opts
-        self.path = path
-
-    def initialOffset(self) -> dict:
-        return {"files": {}}
-
-    def latestOffset(self) -> dict:
-        rl = self.opts.stride
-        files: dict[str, int] = {}
-        try:
-            names = _list_files(self.path)
-        except FileNotFoundError:
-            names = []
-        for p in names:
-            if _codec_of(p):
-                files[p] = self._GZ_DONE
-            else:
-                try:
-                    size = os.path.getsize(p)
-                except FileNotFoundError:
-                    # listed, then deleted before stat: skip this batch
-                    # rather than kill the stream (ADVICE r13)
-                    continue
-                files[p] = size - (size % rl)
-        return {"files": files}
-
-    def partitions(self, start: dict, end: dict):
-        rl = self.opts.stride
-        seen = start.get("files", {})
-        parts: list[FixedLenPartition] = []
-        for p, hi in end.get("files", {}).items():
-            if _codec_of(p):
-                if seen.get(p, 0) < self._GZ_DONE <= hi:
-                    parts.append(FixedLenPartition(p, 0, _WHOLE_FILE))
-                continue
-            # floor at the header region even for already-seen files: a file
-            # first observed while shorter than the header (e.g. 0 bytes)
-            # checkpoints a truncated offset, and resuming from it would emit
-            # banner records as data once the file grows
-            lo = max(seen.get(p, 0), self.opts.skip_header * rl)
-            parts += _split_range(p, lo, hi, rl, self.opts.max_partition_bytes)
-        return parts or [FixedLenPartition("", 0, 0)]
-
-    def read(self, partition: FixedLenPartition):
-        return FixedLengthReader(self.opts, self.path).read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    def stop(self) -> None:
-        pass
-
-
 class FixedLengthDataSource(DataSource):
     """spark.read.format("fixedlen") — see module docstring for options."""
 
@@ -1572,17 +1562,19 @@ class FixedLengthDataSource(DataSource):
             raise ValueError("fixedlen: streaming write requires a path")
         return _StreamSink(FixedLengthWriter(self.opts, self.path, overwrite=False))
 
-    def streamReader(self, schema: StructType) -> FixedLenPartitionedStreamReader:
-        # opt-in executor-parallel streaming; Spark's _streamReader falls
-        # back to simpleStreamReader only on PySparkNotImplementedError
-        # (the builtin NotImplementedError crashes the source runner)
-        if not self.opts.partitioned_stream:
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "partitionedStream not requested"},
+    def _stream_opts(self) -> _Options:
+        if self.opts.skip_trailer:
+            # a growing file has no final record yet — "last N records"
+            # is unknowable until the stream ends
+            raise ValueError(
+                "fixedlen: skipTrailerRecords is not supported for streaming"
             )
+        return self.opts
+
+    def streamReader(self, schema: StructType) -> PartitionedStreamReader:
+        # opt-in executor-parallel streaming
+        if not self.opts.partitioned_stream:
+            _simple_stream_fallback("partitionedStream not requested")
         if not self.path:
             raise ValueError("fixedlen: load(path) is required")
         if self.opts.max_bytes_per_trigger is not None:
@@ -1610,14 +1602,23 @@ class FixedLengthDataSource(DataSource):
                     "not streamable; stream a single partition directory "
                     "instead"
                 )
-            return FixedLenDirectoryStreamReader(self.opts, self.path)
-        return FixedLenPartitionedStreamReader(self.opts, self.path)
+            return PartitionedStreamReader(self._stream_opts(), self.path)
+        if _codec_of(self.path):
+            # a growing compressed file can't be tailed incrementally (no seek)
+            raise ValueError(
+                "fixedlen: streaming does not support compressed input"
+            )
+        # stride, not record_length: with lineSep the header region spans
+        # skip_header * (record + sep) bytes
+        return PartitionedStreamReader(
+            self._stream_opts(), self.path,
+            start=self.opts.skip_header * self.opts.stride,
+        )
 
-    def simpleStreamReader(self, schema: StructType) -> FixedLenStreamReader:
+    def simpleStreamReader(self, schema: StructType) -> TailStreamReader:
         if not self.path:
             raise ValueError("fixedlen: load(path) is required")
         if _codec_of(self.path):
-            # a growing compressed file can't be tailed incrementally (no seek)
             raise ValueError(
                 "fixedlen: streaming does not support compressed input"
             )
@@ -1634,7 +1635,12 @@ class FixedLengthDataSource(DataSource):
                 "fixedlen: 'layouts' needs partitionedStream=true when "
                 "streaming (the simple driver-side reader is single-layout)"
             )
-        return FixedLenStreamReader(self.opts, self.path)
+        return TailStreamReader(self._stream_opts(), self.path)
+
+
+# the stream readers as the fixedlen source builds them
+FixedLenStreamReader = TailStreamReader
+FixedLenDirectoryStreamReader = PartitionedStreamReader
 
 
 def register(spark) -> None:

@@ -13,10 +13,10 @@ constant stride, and both expose such a record the same way:
     and awstape's ``tape_file`` (``includeFile``) leads the row;
   * ``encoding`` transcodes the prefix fields (single-byte charsets).
 
-This module holds that contract once: the options, schema, Arrow batch
-and sink payload (:class:`FramedOptions`), the batch accumulator of the
-read loops (:func:`framed_batches`), the tail stream reader
-(:class:`FramedStreamReader`) and the ``DataSource`` shell
+This module holds that contract once: the options, schema, Arrow batch,
+sink payload and tail hook of ``fixedlen.TailStreamReader``
+(:class:`FramedOptions`), the batch accumulator of the read loops
+(:func:`framed_batches`) and the ``DataSource`` shell
 (:class:`FramedDataSource`, :func:`register`).  A source supplies only
 its framing: a record walker, a tail walker over resume offsets, its
 own options and its part writer.
@@ -24,12 +24,11 @@ own options and its part writer.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import ClassVar, Iterator
 
 import pyarrow as pa
-from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
@@ -40,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
+    TailStreamReader,
     _flag,
     _single_byte_encoding,
     _StreamSink,
@@ -137,9 +137,10 @@ class FramedOptions:
         )
         with_offset = _flag(options, "includeOffset", True, source)
         with_file = files and _flag(options, "includeFile", False, source)
-        with_tail = _flag(options, "includeTail", True, source)
+        # a tiled payload has no tail; only a tail the schema carries clashes
+        with_tail = _flag(options, "includeTail", True, source) and not tiled
         tail_column = options.get("tailcolumn", "record_tail")
-        if fields is not None and tail_column in {f.name for f in fields}:
+        if with_tail and tail_column in {f.name for f in fields or ()}:
             raise ValueError(
                 f"{source}: tailColumn {tail_column!r} clashes with a layout field"
             )
@@ -147,7 +148,7 @@ class FramedOptions:
             prefix_length=prefix_length,
             fields=fields,
             with_offset=with_offset,
-            with_tail=with_tail and not tiled,
+            with_tail=with_tail,
             tail_column=tail_column,
             encoding=_single_byte_encoding(
                 options.get("encoding", "utf-8"), source
@@ -161,6 +162,10 @@ class FramedOptions:
         """Payload bytes per Arrow batch and per stream read."""
         raise NotImplementedError
 
+    def trigger_budget(self) -> int:
+        """File bytes a tail micro-batch may span."""
+        return self.batch_target
+
     def tail(
         self, fobj, path: str, lo: dict, hi: dict | None, stop_on_partial: bool
     ) -> Iterator[tuple[int | None, int, bytes, dict | None]]:
@@ -169,8 +174,36 @@ class FramedOptions:
         ``(file, offset, payload, resume)`` per record, where ``resume``
         is the offset right after the record when a walk may re-enter
         there, else None.  ``stop_on_partial`` turns a unit cut short at
-        EOF into a clean stop (see :class:`FramedStreamReader`)."""
+        EOF into a clean stop (see :meth:`tail_batches`)."""
         raise NotImplementedError
+
+    def tail_batches(self, path, lo, hi, stop_on_partial, max_bytes):
+        """The tail hook of ``fixedlen.TailStreamReader``: the batch of
+        the records from ``lo`` to ``hi`` (None: all complete records, up
+        to ``max_bytes`` of file span when given), and the offset after
+        the last admitted record (``lo`` when none).
+
+        Only WHOLE records are admitted: a unit cut short at EOF is
+        growth in flight and stays unread until complete, and records
+        after the last safe resume point (mid-block, or before an open
+        spanned record's last segment) wait for the next batch."""
+        units: list[tuple[int | None, int, bytes, int]] = []
+        end, admitted = lo, 0
+        with open(path, "rb") as f:
+            f.seek(lo["pos"])
+            for file, off, payload, resume in self.tail(
+                f, path, lo, hi, stop_on_partial
+            ):
+                units.append((file, off, payload, 0))
+                # admit records only up to the LAST safe resume point: one
+                # that ends mid-block replays from the block start next
+                # batch (emitting it now would double-read it on restart)
+                if resume is not None:
+                    end, admitted = resume, len(units)
+                    span = resume["pos"] - lo["pos"]
+                    if max_bytes is not None and span >= max_bytes:
+                        break
+        return framed_batches(self, path, units[:admitted], None), end
 
     def spark_schema(self) -> StructType:
         out: list[StructField] = []
@@ -284,82 +317,11 @@ def framed_batches(
         yield opts.framed_batch(files, offsets, prefixes, tails)
 
 
-class FramedStreamReader(SimpleDataSourceStreamReader):
-    """Tail ONE growing file of a framed source.  An offset is the
-    source's resume state (``INITIAL_OFFSET``'s keys; ``pos`` is the byte
-    position of the next unread unit) — the replayable-source contract:
-    only safe re-entry points are ever returned, so a restart replay
-    (``readBetweenOffsets``) re-walks exactly the committed span.
-
-    Only WHOLE records are admitted: a unit cut short at EOF is growth
-    in flight and stays unread until complete, and records after the
-    last safe resume point (mid-block, or before an open spanned
-    record's last segment) wait for the next batch.  A read spans at
-    most ``batch_target`` bytes, so a large backlog drains across
-    micro-batches instead of landing in one."""
-
-    def __init__(self, opts: FramedOptions, path: str):
-        self.opts = opts
-        self.path = path
-
-    def initialOffset(self) -> dict:
-        return dict(self.opts.INITIAL_OFFSET)
-
-    def _rows(
-        self,
-        lo: dict,
-        hi: dict | None,
-        stop_on_partial: bool,
-        max_bytes: int | None = None,
-    ) -> tuple[list[tuple], dict]:
-        """Rows of the records from ``lo`` to ``hi`` (None: all complete
-        records, up to ``max_bytes`` of file span when given), and the
-        offset after the last admitted record (``lo`` when none)."""
-        if not os.path.exists(self.path):
-            return [], lo
-        units: list[tuple[int | None, int, bytes, int]] = []
-        end, admitted = lo, 0
-        with open(self.path, "rb") as f:
-            f.seek(lo["pos"])
-            for file, off, payload, resume in self.opts.tail(
-                f, self.path, lo, hi, stop_on_partial
-            ):
-                units.append((file, off, payload, 0))
-                # admit records only up to the LAST safe resume point: one
-                # that ends mid-block replays from the block start next
-                # batch (emitting it now would double-read it on restart)
-                if resume is not None:
-                    end, admitted = resume, len(units)
-                    span = resume["pos"] - lo["pos"]
-                    if max_bytes is not None and span >= max_bytes:
-                        break
-        if not admitted:
-            return [], lo
-        (batch,) = framed_batches(self.opts, self.path, units[:admitted], None)
-        return [tuple(r.values()) for r in batch.to_pylist()], end
-
-    def read(self, start: dict):
-        rows, end = self._rows(
-            start, None, stop_on_partial=True, max_bytes=self.opts.batch_target
-        )
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # replay after restart: honor END exactly — the file may have
-        # grown since the batch was planned
-        if end["pos"] <= start["pos"]:
-            return iter(())
-        return iter(self._rows(start, end, stop_on_partial=False)[0])
-
-    def commit(self, end: dict):
-        pass
-
-
 class FramedDataSource(DataSource):
     """The ``DataSource`` shell of a framed source: ``OPTIONS`` parses
     the options, ``READER``/``WRITER`` are its batch reader and part
     writer; the stream sink is the writer behind ``fixedlen._StreamSink``
-    and the single-file stream is :class:`FramedStreamReader`."""
+    and the single-file stream is ``fixedlen.TailStreamReader``."""
 
     OPTIONS: ClassVar[type[FramedOptions]]
     READER: ClassVar[type]
@@ -389,8 +351,8 @@ class FramedDataSource(DataSource):
     def streamWriter(self, schema: StructType, overwrite: bool) -> _StreamSink:
         return _StreamSink(self.WRITER(self.opts, self.path, overwrite=False))
 
-    def simpleStreamReader(self, schema: StructType) -> FramedStreamReader:
-        return FramedStreamReader(self.opts, self.path)
+    def simpleStreamReader(self, schema: StructType) -> TailStreamReader:
+        return TailStreamReader(self.opts, self.path)
 
 
 def register(spark, source: type[FramedDataSource]) -> None:

@@ -56,28 +56,28 @@ from dataclasses import dataclass
 from functools import partial
 from typing import Iterator
 
-from pyspark.sql.datasource import (
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSourceReader
 from pyspark.sql.types import StructType
 
 from hadoop_fixedlengthinputformat_spark.sources import fixedlen, framed
 from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
     READ_CHUNK_TARGET,
+    FixedLenPartition,
+    PartitionedStreamReader,
+    TailStreamReader,
     _codec_of,
     _codec_open_read,
     _CommitMessage,
     _part_paths,
     _PartWriter,
     _remove_tmps,
+    _simple_stream_fallback,
     _visible,
+    _WHOLE_FILE,
 )
 from hadoop_fixedlengthinputformat_spark.sources.framed import (
     FramedDataSource,
     FramedOptions,
-    FramedStreamReader,
     framed_batches,
 )
 
@@ -86,7 +86,6 @@ _HBB = struct.Struct(">HBB")
 _MAX_RECORD = 0xFFFF  # RDW length field is an unsigned 16-bit total
 _MAX_D_RECORD = 9999  # ANSI D count field is 4 decimal ASCII digits
 _WRITE_BATCH_BYTES = 1 << 22  # sink bytes gathered per write
-_WHOLE_FILE = -1  # partition.end sentinel: compressed stream, read to EOF
 _INDEX_SUFFIX = ".rdx.json"
 
 
@@ -155,10 +154,36 @@ class _VOptions(FramedOptions):
 
     def tail(self, fobj, path, lo, hi, stop_on_partial):
         for off, payload, resume in self.framing.walk(
-            fobj, lo["pos"], None if hi is None else hi["pos"],
-            self.prefix_length, path, stop_on_partial=stop_on_partial,
+            fobj, lo["pos"], None if hi is None else hi["pos"], path,
+            stop_on_partial=stop_on_partial,
         ):
             yield None, off, payload, None if resume == -1 else {"pos": resume}
+
+    # the hooks of the directory stream (fixedlen.PartitionedStreamReader):
+    # members are immutable parts, admitted whole when they appear
+
+    def list_files(self, path: str) -> list[str]:
+        return _list_files(path)
+
+    def batch_reader(self, path: str) -> "VarLenReader":
+        return VarLenReader(self, path)
+
+    def usable_end(self, path: str) -> int:
+        return os.path.getsize(path)
+
+    def plan(self, path: str, seen: int | None, hi: int) -> list[FixedLenPartition]:
+        # a new member plans with the batch splitter, so sidecar-indexed
+        # parts split record-aligned
+        if seen is None:
+            return _plan_file(path, self)
+        if seen != hi:
+            raise ValueError(
+                f"varlen: directory stream member {path!r} changed "
+                f"size ({seen} -> {hi} bytes); directory "
+                "streaming admits immutable whole files — tail a "
+                "growing file with .load(file) instead"
+            )
+        return []
 
 
 def _index_path(data_path: str) -> str:
@@ -174,41 +199,34 @@ _list_files = partial(
 )
 
 
-class VarLenPartition(InputPartition):
-    def __init__(self, path: str, start: int, end: int):
-        self.path = path
-        self.start = start
-        self.end = end
-
-
-def _plan_file(path: str, opts: _VOptions) -> list[VarLenPartition]:
+def _plan_file(path: str, opts: _VOptions) -> list[FixedLenPartition]:
     """One whole-file partition unless a record-index sidecar proves
     record-aligned split points (see module docstring)."""
     if _codec_of(path):
-        return [VarLenPartition(path, 0, _WHOLE_FILE)]
+        return [FixedLenPartition(path, 0, _WHOLE_FILE)]
     size = os.path.getsize(path)
     if size == 0:
         return []
     idx = _index_path(path)
     if not os.path.exists(idx):
-        return [VarLenPartition(path, 0, size)]
+        return [FixedLenPartition(path, 0, size)]
     try:
         with open(idx) as f:
             payload = json.load(f)
         offsets = payload["offsets"]
         if payload.get("data_bytes") != size or not offsets or offsets[0] != 0:
             # stale / foreign sidecar: fall back to unsplit, never misread
-            return [VarLenPartition(path, 0, size)]
+            return [FixedLenPartition(path, 0, size)]
     except (OSError, ValueError, KeyError):
-        return [VarLenPartition(path, 0, size)]
-    parts: list[VarLenPartition] = []
+        return [FixedLenPartition(path, 0, size)]
+    parts: list[FixedLenPartition] = []
     cur = 0
     for off in offsets[1:]:
         if off - cur >= opts.max_partition_bytes:
-            parts.append(VarLenPartition(path, cur, off))
+            parts.append(FixedLenPartition(path, cur, off))
             cur = off
     if cur < size:
-        parts.append(VarLenPartition(path, cur, size))
+        parts.append(FixedLenPartition(path, cur, size))
     return parts
 
 
@@ -328,7 +346,6 @@ class _Framing:
         fobj,
         start: int,
         end: int | None,
-        prefix_min: int,
         path: str,
         stop_on_partial: bool = False,
         headers_only: bool = False,
@@ -350,12 +367,10 @@ class _Framing:
         is always corruption.
         ``headers_only`` (``build_index``) yields empty payloads and
         seeks past every unblocked payload its read-ahead does not hold.
-        An unspanned frame shorter than its word plus ``prefix_min`` data
-        bytes raises; an assembled spanned record is checked against the
-        prefix by ``framed.framed_batches``."""
+        A frame shorter than its word raises; a record shorter than the
+        layout prefix is checked by ``framed.framed_batches``."""
         rw, bw = self.record_word, self.block_word
         asm = _SegmentAssembler(path) if self.spanned else None
-        floor = WORD_LEN if asm is not None else WORD_LEN + prefix_min
         size = os.fstat(fobj.fileno()).st_size if headers_only else 0
         chunk = 1 << 16 if headers_only else 1 << 22
         buf = bytearray()
@@ -445,11 +460,10 @@ class _Framing:
                     f"varlen: invalid segment-control code {code} at offset "
                     f"{pos} in {path!r}"
                 )
-            if total < floor:
+            if total < WORD_LEN:
                 raise ValueError(
                     f"varlen: record at offset {pos} in {path!r} is {total} "
-                    f"bytes total, shorter than {rw.name}"
-                    f"{'' if asm is not None else '+prefix'} ({floor})"
+                    f"bytes total, shorter than {rw.name} ({WORD_LEN})"
                 )
             fend = pos + total
             if bend is not None:
@@ -612,13 +626,13 @@ class VarLenReader(DataSourceReader):
         self.path = path
 
     def partitions(self):
-        parts: list[VarLenPartition] = []
+        parts: list[FixedLenPartition] = []
         for p in _list_files(self.path):
             parts.extend(_plan_file(p, self.opts))
         # zero-record dataset still needs one (empty) partition for Spark
-        return parts or [VarLenPartition("", 0, 0)]
+        return parts or [FixedLenPartition("", 0, 0)]
 
-    def read(self, partition: VarLenPartition):
+    def read(self, partition: FixedLenPartition):
         o = self.opts
         if partition.end != _WHOLE_FILE and partition.end <= partition.start:
             return iter(())
@@ -636,7 +650,7 @@ class VarLenReader(DataSourceReader):
                 yield from framed_batches(o, partition.path, (
                     (None, off, payload, WORD_LEN + len(payload))
                     for off, payload, _resume in o.framing.walk(
-                        fobj, start, end, o.prefix_length, partition.path
+                        fobj, start, end, partition.path
                     )
                 ), o.batch_target)
             finally:
@@ -647,8 +661,17 @@ class VarLenReader(DataSourceReader):
 
 # Tail ONE growing varlen file: an offset ``{"pos"}`` is a safe re-entry
 # point (a record start; a block start in blocked formats, never inside
-# a spanned record), the tail reader of every framed source.
-VarLenStreamReader = FramedStreamReader
+# a spanned record).
+VarLenStreamReader = TailStreamReader
+
+# Stream a DIRECTORY of varlen files with IMMUTABLE-part semantics: each
+# micro-batch admits files that newly APPEARED — the atomic-rename
+# producer contract our own sinks follow, and the landing-zone pattern
+# object stores enforce.  An offset is ``{"files": {path: size}}``; a
+# known file that CHANGED SIZE fails loudly instead of silently
+# misreading, because a byte size alone cannot name a record boundary
+# the way fixed-width's ``size − size % rl`` can (see ``_VOptions.plan``).
+VarLenDirectoryStreamReader = PartitionedStreamReader
 
 
 def build_index(path: str, every: int = 4096, recfm: str = "v") -> dict:
@@ -671,7 +694,7 @@ def build_index(path: str, every: int = 4096, recfm: str = "v") -> dict:
     n = 0
     with open(path, "rb") as f:
         for _off, _payload, resume in framing.walk(
-            f, 0, None, 0, path, headers_only=True
+            f, 0, None, path, headers_only=True
         ):
             n += 1
             if resume != -1 and resume < size and n // every > last_bucket:
@@ -690,76 +713,6 @@ def build_index(path: str, every: int = 4096, recfm: str = "v") -> dict:
         json.dump(payload, f)
     os.replace(tmp, _index_path(path))
     return payload
-
-
-class VarLenDirectoryStreamReader(DataSourceStreamReader):
-    """Streaming over a DIRECTORY of varlen files with IMMUTABLE-part
-    semantics: each micro-batch admits files that newly APPEARED — the
-    atomic-rename producer contract our own sinks follow (batch and
-    streaming parts are renamed into place complete, never appended),
-    and the landing-zone pattern object stores enforce naturally.  An
-    offset is ``{"files": {path: size-at-admission}}``.  A known file
-    that CHANGED SIZE fails loudly instead of silently misreading: append
-    tailing a varlen container requires the descriptor-word walk the
-    single-file tail readers own (``.load(file)``), because a byte
-    size alone cannot name a record boundary the way fixed-width's
-    ``size − size % rl`` can.  New files plan with the batch splitter
-    (``_plan_file``), so sidecar-indexed parts split record-aligned
-    and decode on executors; compressed members are whole-file units.
-    """
-
-    def __init__(self, opts: _VOptions, path: str):
-        self.opts = opts
-        self.path = path
-
-    def initialOffset(self) -> dict:
-        return {"files": {}}
-
-    def latestOffset(self) -> dict:
-        files: dict[str, int] = {}
-        try:
-            names = _list_files(self.path)
-        except FileNotFoundError:
-            names = []
-        for p in names:
-            try:
-                files[p] = os.path.getsize(p)
-            except FileNotFoundError:
-                # listed, then deleted before stat (ADVICE r13): skip —
-                # a vanished file simply isn't admitted this batch; if
-                # it reappears a later listing picks it up
-                continue
-        return {"files": files}
-
-    def partitions(self, start: dict, end: dict):
-        seen = start.get("files", {})
-        parts: list[VarLenPartition] = []
-        for p, size in end.get("files", {}).items():
-            if p in seen:
-                if size != seen[p]:
-                    raise ValueError(
-                        f"varlen: directory stream member {p!r} changed "
-                        f"size ({seen[p]} -> {size} bytes); directory "
-                        "streaming admits immutable whole files — tail a "
-                        "growing file with .load(file) instead"
-                    )
-                continue
-            parts.append(VarLenPartition(p, 0, size))
-        planned: list[VarLenPartition] = []
-        for part in parts:
-            planned.extend(_plan_file(part.path, self.opts))
-        return planned or [VarLenPartition("", 0, 0)]
-
-    def read(self, partition: VarLenPartition):
-        if not partition.path:
-            return iter(())
-        return VarLenReader(self.opts, self.path).read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-    def stop(self) -> None:
-        pass
 
 
 class VarLenWriter(_PartWriter):
@@ -811,23 +764,15 @@ class VarLenDataSource(FramedDataSource):
     READER = VarLenReader
     WRITER = VarLenWriter
 
-    def streamReader(self, schema: StructType) -> VarLenDirectoryStreamReader:
+    def streamReader(self, schema: StructType) -> PartitionedStreamReader:
         # a DIRECTORY streams with immutable-part file-source semantics
         # (executor-parallel, sidecar-splittable); a single file falls
-        # back to the record-walking tail reader — Spark only falls back
-        # on PySparkNotImplementedError
+        # back to the record-walking tail reader
         if not os.path.isdir(self.path):
-            from pyspark.errors import PySparkNotImplementedError
+            _simple_stream_fallback("varlen partitioned stream (single file)")
+        return PartitionedStreamReader(self.opts, self.path)
 
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={
-                    "feature": "varlen partitioned stream (single file)"
-                },
-            )
-        return VarLenDirectoryStreamReader(self.opts, self.path)
-
-    def simpleStreamReader(self, schema: StructType) -> FramedStreamReader:
+    def simpleStreamReader(self, schema: StructType) -> TailStreamReader:
         if os.path.isdir(self.path) or _codec_of(self.path):
             raise ValueError(
                 "varlen streaming tails a single uncompressed file"

@@ -132,6 +132,42 @@ def test_directory_stream_header_floor_covers_truncated_first_sight():
         )
 
 
+@pytest.mark.parametrize("sep", ["", "\n"])
+@pytest.mark.parametrize("first_sight", ["whole", "empty"])
+def test_partitioned_single_file_offsets_stay_on_stride(tmp_path, sep, first_sight):
+    """ADVICE 2 and 3 on one file: with lineSep and skipHeaderRecords a
+    single-file partitioned stream's offsets stay {"pos"} on stride
+    multiples, and a file first seen empty does not leak its header
+    records once it grows."""
+    from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
+        FixedLengthDataSource,
+    )
+
+    p = tmp_path / "single.fixed"
+    stride = 5 + len(sep)
+    recs = [b"HDR00", b"HDR01"] + [f"{i:05d}".encode() for i in range(10)]
+    body = b"".join(r + sep.encode() for r in recs)
+    opts = {
+        "path": str(p), "recordlength": "5", "layout": "v:0:5:int",
+        "skipheaderrecords": "2", "partitionedstream": "true",
+        "maxpartitionbytes": str(3 * stride),
+    }
+    if sep:
+        opts["linesep"] = sep
+    r = FixedLengthDataSource(opts).streamReader(None)
+    start, rows = r.initialOffset(), []
+    assert start == {"pos": 2 * stride}
+    # the last write ends in a partial record
+    for data in ([b""] if first_sight == "empty" else []) + [body + b"123"]:
+        p.write_bytes(data)
+        end = r.latestOffset()
+        assert set(end) == {"pos"} and end["pos"] % stride == 0
+        for part in r.partitions(start, end):
+            rows += [v for b in r.read(part) for v in b.column("v").to_pylist()]
+        start = end
+    assert rows == list(range(10)) and start == {"pos": len(body)}
+
+
 def test_sidecar_pruning_shifts_ordinals_by_skip_header():
     """ADVICE 4: sidecar blocks count data records only; byte offsets
     include header records.  Without the shift, a partition whose data

@@ -139,8 +139,7 @@ def _same_apart_from_source(texts: dict[str, str]) -> set[str]:
 
 def test_short_record_errors_read_alike(tmp_path):
     """A record shorter than the prefix raises the shared text for an
-    assembled spanned record and for a tape block.  An unspanned varlen
-    frame fails first in the framing walk, against its word plus prefix."""
+    unspanned or assembled spanned varlen record and for a tape block."""
     files = _files(tmp_path, _payloads(short=True))
     texts = {
         label: _error(lambda: _read(source, path, {**extra, **MODES["prefix_tail"]}))
@@ -149,7 +148,19 @@ def test_short_record_errors_read_alike(tmp_path):
     assert len(_same_apart_from_source({k: texts[k] for k in ("VBS", "U")})) == 1
     assert "shorter than the declared prefix (8)" in texts["U"]
     for label in ("V", "VB"):
-        assert "shorter than RDW+prefix" in texts[label]
+        assert "shorter than the declared prefix (8)" in texts[label]
+
+
+@pytest.mark.parametrize("parse, opts", [
+    (_TOptions.parse, {"recfm": "f", "recordlength": "4", "layout": "record_tail:0:4:int"}),
+    (_VOptions.parse, {"layout": "k:0:4:int", "prefixlength": "4", "tailcolumn": "k",
+                       "includetail": "false"}),
+], ids=["awstape_recfm_f", "varlen_no_tail"])
+def test_tail_column_clash_only_when_the_tail_is_emitted(parse, opts):
+    """recfm=F rows and includeTail=false carry no tail column, so its
+    name cannot clash with a layout field."""
+    names = parse(opts).spark_schema().fieldNames()
+    assert len(names) == len(set(names))
 
 
 @pytest.mark.parametrize("opts", [

@@ -73,17 +73,6 @@ def _spark_order(v):
     return (0, v.rstrip(" ") if isinstance(v, str) else v)
 
 
-def _encode(rows, fields, rl) -> bytes:
-    """Records of ``rows``; a text double NaN is written as ``nan``."""
-    out = b""
-    for row in rows:
-        rec = encode_rows([row], fields, rl)
-        if fields[1].base_type == "double" and _spark_order(row["x"]) == (1,):
-            rec = rec[:4] + b"nan".rjust(rl - 4)
-        out += rec
-    return out
-
-
 @st.composite
 def _filter(draw, column: str, values, with_offset: int | None):
     if with_offset is not None and draw(st.booleans()):
@@ -140,7 +129,7 @@ def test_pruning_never_drops_a_matching_row(scan):
         path = os.path.join(d, "part-00000.fixed")
         with open(path, "wb") as f:
             # header records do not decode: reading one fails the test
-            f.write(b"#" * (rl * header) + _encode(rows, fields, rl))
+            f.write(b"#" * (rl * header) + encode_rows(rows, fields, rl))
         if block is not None:
             coll = stats.StatsCollector(fields, block)
             for row in rows:

@@ -7,6 +7,7 @@ import gzip
 import json
 import os
 import random
+import re
 import struct
 
 import pytest
@@ -209,7 +210,10 @@ def test_rejects_truncated_record_and_rdw(spark, tmp_path):
 def test_rejects_record_shorter_than_prefix(spark, tmp_path):
     p = str(tmp_path / "short.rdw")
     _write_file(p, [struct.pack(">HH", 4 + 5, 0) + b"12345"])
-    with pytest.raises(Exception, match="shorter than RDW\\+prefix"):
+    with pytest.raises(Exception, match=re.escape(
+        f"varlen: record at offset 0 in {p!r} is 5 bytes, shorter than the "
+        f"declared prefix ({PFX_LEN})"
+    )):
         _read(spark, p).collect()
 
 
@@ -658,7 +662,7 @@ def test_spanned_build_index_foreign_file(tmp_path, recfm):
         with open(p, "rb") as f:
             f.seek(lo)
             for _off, _payload, _res in opts.framing.walk(
-                f, lo, hi, 8, p
+                f, lo, hi, p
             ):
                 n += 1
     assert n == len(rows)

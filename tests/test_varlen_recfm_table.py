@@ -78,7 +78,7 @@ def test_sidecar_matches_build_index_and_walks_back(tmp_path, monkeypatch, recfm
         with open(final, "rb") as f:
             f.seek(lo)
             return [
-                p for _off, p, _res in opts.framing.walk(f, lo, hi, 8, final)
+                p for _off, p, _res in opts.framing.walk(f, lo, hi, final)
             ]
 
     # split by split: the partitions a sidecar plans tile the rows

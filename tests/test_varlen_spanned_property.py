@@ -191,17 +191,17 @@ def test_ansi_d_walk_and_truncation(payloads, cut):
     _iter_records_d = _RECFMS["D"].walk
 
     img = b"".join(_d_rec(p) for p in payloads)
-    got = list(_iter_records_d(io.BytesIO(img), 0, None, 0, "prop.d"))
+    got = list(_iter_records_d(io.BytesIO(img), 0, None, "prop.d"))
     assert [p for _, p, _ in got] == payloads
     for i, (_off, _p, resume) in enumerate(got):
         bio = io.BytesIO(img)
         bio.seek(resume)
-        rest = list(_iter_records_d(bio, resume, None, 0, "prop.d"))
+        rest = list(_iter_records_d(bio, resume, None, "prop.d"))
         assert [p for _, p, _ in rest] == payloads[i + 1 :]
     cut = min(cut, len(img))
     part = list(
         _iter_records_d(
-            io.BytesIO(img[:cut]), 0, None, 0, "prop.d",
+            io.BytesIO(img[:cut]), 0, None, "prop.d",
             stop_on_partial=True,
         )
     )
@@ -250,7 +250,7 @@ def test_unspanned_walk_any_packing(recfm, payloads, block_size, cut):
     of the records — never a partial record, never an error."""
     walk = _RECFMS[recfm].walk
     img, starts = _unspanned_image(recfm, payloads, block_size)
-    got = list(walk(io.BytesIO(img), 0, None, 0, "prop"))
+    got = list(walk(io.BytesIO(img), 0, None, "prop"))
     assert [p for _, p, _ in got] == payloads
     assert [o for o, _, _ in got] == starts
     for i, (_off, _p, resume) in enumerate(got):
@@ -259,10 +259,10 @@ def test_unspanned_walk_any_packing(recfm, payloads, block_size, cut):
             continue
         bio = io.BytesIO(img)
         bio.seek(resume)
-        rest = list(walk(bio, resume, None, 0, "prop"))
+        rest = list(walk(bio, resume, None, "prop"))
         assert [p for _, p, _ in rest] == payloads[i + 1 :]
     cut = min(cut, len(img))
     part = list(
-        walk(io.BytesIO(img[:cut]), 0, None, 0, "prop", stop_on_partial=True)
+        walk(io.BytesIO(img[:cut]), 0, None, "prop", stop_on_partial=True)
     )
     assert [p for _, p, _ in part] == payloads[: len(part)]
