@@ -63,6 +63,7 @@ mid-chunk all raise with the image offset.
 from __future__ import annotations
 
 import codecs
+import glob
 import os
 import struct
 from dataclasses import dataclass
@@ -681,8 +682,7 @@ class AwsTapeWriter(_PartWriter):
             n_blocks = 0  # EOF1 counts DATA blocks only
 
         block = bytearray()
-        for row in iterator:
-            payload = o.framed_payload(row)
+        for payload in (p for batch in iterator for p in o.framed_payloads(batch)):
             if o.recfm == "F":
                 block.extend(payload)
                 if len(block) >= o.block_size:
@@ -738,7 +738,8 @@ class AwsTapeDataSource(FramedDataSource):
     WRITER = AwsTapeWriter
 
     def simpleStreamReader(self, schema: StructType) -> TailStreamReader:
-        if os.path.isdir(self.path):
+        # no partitioned stream: a directory or glob cannot be tailed
+        if os.path.isdir(self.path) or glob.has_magic(self.path):
             raise ValueError("awstape streaming tails a single image file")
         if self.opts.labels != "NONE":
             raise ValueError(

@@ -43,13 +43,15 @@ import re
 from dataclasses import dataclass
 from typing import Iterator
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
@@ -69,10 +71,12 @@ from hadoop_fixedlengthinputformat_spark.sources.layout import (
     check_user_schema,
     decode_chunk,
     decode_chunk_multitype,
-    encode_rows,
+    encode_batch,
+    fixed_width_view,
     layout_schema,
     parse_layout,
     parse_multitype,
+    row_values,
 )
 
 DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
@@ -1134,7 +1138,7 @@ def _remove_tmps(messages) -> None:
                     os.remove(p)
 
 
-class _PartWriter(DataSourceWriter):
+class _PartWriter(DataSourceArrowWriter):
     """The batch sink shell of the three fixed-width sources: a subclass
     writes one set of parts per task (``write``); the job token, the
     overwrite-clear of earlier jobs' parts and the commit/abort of the
@@ -1170,7 +1174,7 @@ class _PartWriter(DataSourceWriter):
         _remove_tmps(messages)
 
 
-class _StreamSink(DataSourceStreamWriter):
+class _StreamSink(DataSourceStreamArrowWriter):
     """Any source's part writer as a streaming sink: the batch writer in
     ``stream_mode``, so a stream takes every write option the batch sink
     takes, committed by the shared protocol with the micro-batch id (parts
@@ -1330,14 +1334,46 @@ class TailStreamReader(SimpleDataSourceStreamReader):
         pass
 
 
+def _raw_records(col: pa.Array, rl: int) -> np.ndarray:
+    """Raw mode: the (n, rl) records of the ``value`` column, each value
+    exactly recordLength bytes (else the first bad row's error)."""
+    if (
+        (pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type))
+        and col.null_count == 0
+        and pc.all(pc.equal(pc.binary_length(col), rl)).as_py()
+    ):
+        return fixed_width_view(col, rl)
+    values = [bytes(v) for v in row_values(col)]
+    for b in values:
+        if len(b) != rl:
+            raise ValueError(
+                f"fixedlen raw write: 'value' is {len(b)} bytes, "
+                f"expected recordLength={rl}"
+            )
+    return np.frombuffer(b"".join(values), dtype=np.uint8).reshape(-1, rl)
+
+
+def _partition_groups(batch: pa.RecordBatch, cols: tuple[str, ...]):
+    """``(values, rows)`` per distinct partitionBy value combination of
+    ``batch``, in order of first appearance; the partition columns are
+    consumed by the path, so ``rows`` lacks them."""
+    keys = list(zip(*(row_values(batch.column(c)) for c in cols)))
+    if any(v is None for key in keys for v in key):
+        raise ValueError("fixedlen: partitionBy column values cannot be NULL")
+    groups: dict[tuple, list[int]] = {}
+    for i, key in enumerate(keys):
+        groups.setdefault(key, []).append(i)
+    rest = batch.select([c for c in batch.schema.names if c not in cols])
+    if len(groups) == 1:
+        return [(next(iter(groups)), rest)]
+    return [(key, rest.take(pa.array(idx))) for key, idx in groups.items()]
+
+
 class FixedLengthWriter(_PartWriter):
     """Engine extension: the reference has no OutputFormat at all
     (SURVEY.md §2.2) — this sink closes the round-trip.  One file per
-    input partition, records encoded via the layout."""
-
-    # rows encoded + flushed per slice of this size so the worker never
-    # holds a whole partition's rows AND its encoded bytes at once
-    WRITE_BATCH_ROWS = 10_000
+    input partition, each Arrow batch encoded via the layout into one
+    record matrix."""
 
     # overwrite clears data parts, codec members and stats sidecars
     _PART_SUFFIXES = (
@@ -1365,7 +1401,7 @@ class FixedLengthWriter(_PartWriter):
         os.makedirs(self.path, exist_ok=True)
         o = self.opts
         ext = ".fixed" + _CODEC_EXTS.get(o.compression, "")
-        rl, sep = o.record_length, o.line_sep
+        rl, sep = o.record_length, np.frombuffer(o.line_sep, dtype=np.uint8)
 
         def open_sink(tmp: str):
             """Raw or compressed file handle for a tmp path.  Gzip gets
@@ -1392,20 +1428,6 @@ class FixedLengthWriter(_PartWriter):
                 return _zstd_module().open(raw, "wb"), raw
             return raw, raw
 
-        def with_sep(data: bytes) -> bytes:
-            """Interleave the line terminator after every record (one
-            numpy scatter, no per-record Python)."""
-            if not sep:
-                return data
-            import numpy as _np
-
-            nrec = len(data) // rl
-            m = _np.frombuffer(data, dtype=_np.uint8).reshape(nrec, rl)
-            out = _np.empty((nrec, rl + len(sep)), dtype=_np.uint8)
-            out[:, :rl] = m
-            out[:, rl:] = _np.frombuffer(sep, dtype=_np.uint8)
-            return out.tobytes()
-
         # one sink per partitionBy value combination (a single sink with
         # key () when unpartitioned)
         sinks: dict[tuple, dict] = {}
@@ -1425,7 +1447,6 @@ class FixedLengthWriter(_PartWriter):
                 f, raw = open_sink(tmp)
                 s = {
                     "final": final, "tmp": tmp, "f": f, "raw": raw,
-                    "batch": [],
                     "coll": (
                         stats.StatsCollector(o.fields, o.stats_block_records)
                         if o.stats_sidecar and o.fields is not None
@@ -1435,54 +1456,32 @@ class FixedLengthWriter(_PartWriter):
                 sinks[vals] = s
             return s
 
-        def flush(s: dict) -> None:
-            if s["batch"]:
-                s["f"].write(
-                    with_sep(encode_rows(
-                        s["batch"], o.fields, rl, encoding=o.encoding,
-                    ))
-                )
-                s["batch"] = []
+        def write_to(s: dict, batch: pa.RecordBatch) -> None:
+            if o.fields is None:
+                mat = _raw_records(batch.column("value"), rl)
+            else:
+                mat = encode_batch(batch, o.fields, rl, encoding=o.encoding)
+            if sep.size:
+                # the line terminator after every record
+                mat = np.hstack([mat, np.broadcast_to(sep, (len(mat), sep.size))])
+            s["f"].write(mat.tobytes())
+            if s["coll"] is not None:
+                s["coll"].add(batch)
 
         outputs: list[tuple[str, str, str | None, str | None]] = []
         try:
-            if o.fields is None:
-                s = sink_for(())
-                for row in iterator:
-                    b = bytes(row["value"])
-                    if len(b) != rl:
-                        raise ValueError(
-                            f"fixedlen raw write: 'value' is {len(b)} bytes, "
-                            f"expected recordLength={rl}"
-                        )
-                    s["f"].write(b + sep)
-            else:
+            if not o.partition_by:
+                # eager default sink: a task with an empty iterator must
+                # still emit its (empty) part file — otherwise writing an
+                # empty DataFrame leaves a fileless directory and a later
+                # read raises instead of returning an empty result
+                sink_for(())
+            for batch in iterator:
                 if not o.partition_by:
-                    # eager default sink: a task with an empty iterator must
-                    # still emit its (empty) part file, like the raw branch —
-                    # otherwise writing an empty DataFrame leaves a fileless
-                    # directory and a later read raises instead of returning
-                    # an empty result
-                    sink_for(())
-                pending = 0
-                for row in iterator:
-                    d = row.asDict()
-                    vals = tuple(d.pop(c) for c in o.partition_by)
-                    if any(v is None for v in vals):
-                        raise ValueError(
-                            "fixedlen: partitionBy column values cannot be NULL"
-                        )
-                    s = sink_for(vals)
-                    s["batch"].append(d)
-                    if s["coll"] is not None:
-                        s["coll"].update(d)
-                    pending += 1
-                    if pending >= self.WRITE_BATCH_ROWS:
-                        for s2 in sinks.values():
-                            flush(s2)
-                        pending = 0
-                for s2 in sinks.values():
-                    flush(s2)
+                    write_to(sinks[()], batch)
+                    continue
+                for vals, rows in _partition_groups(batch, o.partition_by):
+                    write_to(sink_for(vals), rows)
             for s2 in sinks.values():
                 stats_tmp = stats_final = None
                 if s2["coll"] is not None:

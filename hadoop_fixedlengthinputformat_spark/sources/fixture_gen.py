@@ -220,6 +220,23 @@ def rdw_coalesce(r: dict) -> dict:
     }
 
 
+def _doc_prefixes(
+    sf_dir: str, layout: str, prefix_len: int, cc: bool = False
+) -> list[tuple[dict, bytes]]:
+    """The coalesced ``documents`` rows in fixture order, each with its
+    encoded ``layout`` prefix (one encode over all rows); ``cc`` adds
+    each row's ASA carriage-control character first."""
+    tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
+    rows = [rdw_coalesce(r) for r in sorted(tbl.to_pylist(), key=rdw_doc_sort_key)]
+    if cc:
+        for rn, r in enumerate(rows):
+            r["cc"] = asa_cc(rn)
+    flat = encode_rows(rows, parse_layout(layout, prefix_len), prefix_len)
+    return [
+        (r, flat[i * prefix_len : (i + 1) * prefix_len]) for i, r in enumerate(rows)
+    ]
+
+
 def rdw_file_for(sf_dir: str, index_every: int = 0) -> str:
     """Path of the RDW (variable-length) serialization of
     ``sf_dir/documents.parquet``; ``index_every`` > 0 also writes the
@@ -234,16 +251,12 @@ def rdw_file_for(sf_dir: str, index_every: int = 0) -> str:
     out = os.path.join(fixture_dir(), f"documents-{tag}.rdw")
     if os.path.exists(out):
         return out
-    tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-    fields = parse_layout(RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN)
     offsets: list[int] = []
     written = 0
     n = 0
     payload = bytearray()
-    for r in sorted(tbl.to_pylist(), key=rdw_doc_sort_key):
-        r = rdw_coalesce(r)
+    for r, prefix in _doc_prefixes(sf_dir, RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN):
         tail = r["text"].encode("utf-8")
-        prefix = encode_rows([r], fields, RDW_PREFIX_LEN)
         total = 4 + RDW_PREFIX_LEN + len(tail)
         if index_every and n % index_every == 0:
             offsets.append(written)
@@ -286,8 +299,6 @@ def vb_file_for(sf_dir: str, block_size: int = 8192) -> str:
     out = os.path.join(fixture_dir(), f"documents-{tag}.vb.rdw")
     if os.path.exists(out):
         return out
-    tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-    fields = parse_layout(RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN)
     payload = bytearray()
     block = bytearray()
 
@@ -297,10 +308,8 @@ def vb_file_for(sf_dir: str, block_size: int = 8192) -> str:
             payload.extend(block)
             block.clear()
 
-    for r in sorted(tbl.to_pylist(), key=rdw_doc_sort_key):
-        r = rdw_coalesce(r)
+    for r, prefix in _doc_prefixes(sf_dir, RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN):
         tail = r["text"].encode("utf-8")
-        prefix = encode_rows([r], fields, RDW_PREFIX_LEN)
         rec = struct.pack(">HH", 4 + RDW_PREFIX_LEN + len(tail), 0) + prefix + tail
         if block and 4 + len(block) + len(rec) > block_size:
             flush()
@@ -332,8 +341,6 @@ def vbs_file_for(
     out = os.path.join(fixture_dir(), f"documents-{tag}.vbs.rdw")
     if os.path.exists(out):
         return out
-    tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-    fields = parse_layout(RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN)
     payload_out = bytearray()
     block = bytearray()
 
@@ -344,10 +351,9 @@ def vbs_file_for(
             block.clear()
 
     seg_cap = segment_size - 4
-    for r in sorted(tbl.to_pylist(), key=rdw_doc_sort_key):
-        r = rdw_coalesce(r)
+    for r, prefix in _doc_prefixes(sf_dir, RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN):
         tail = r["text"].encode("utf-8")
-        payload = encode_rows([r], fields, RDW_PREFIX_LEN) + tail
+        payload = prefix + tail
         view = memoryview(payload)
         seg_idx = 0
         while True:
@@ -450,14 +456,9 @@ def vba_file_for(sf_dir: str) -> str:
     out = os.path.join(fixture_dir(), f"documents-{tag}.vba.rdw")
     if os.path.exists(out):
         return out
-    tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-    fields = parse_layout(VBA_PREFIX_LAYOUT, VBA_PREFIX_LEN)
     payload = bytearray()
-    for rn, r in enumerate(sorted(tbl.to_pylist(), key=rdw_doc_sort_key)):
-        r = rdw_coalesce(r)
-        r["cc"] = asa_cc(rn)
+    for r, prefix in _doc_prefixes(sf_dir, VBA_PREFIX_LAYOUT, VBA_PREFIX_LEN, cc=True):
         tail = r["text"].encode("utf-8")
-        prefix = encode_rows([r], fields, VBA_PREFIX_LEN)
         total = 4 + VBA_PREFIX_LEN + len(tail)
         payload += struct.pack(">HH", total, 0) + prefix + tail
     tmp = out + f".tmp{os.getpid()}"
@@ -580,16 +581,10 @@ def aws_u_file_for(sf_dir: str, chunk: int = AWS_CHUNK) -> str:
     out_path = os.path.join(fixture_dir(), f"documents-{tag}.aws")
     if os.path.exists(out_path):
         return out_path
-    tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-    fields = parse_layout(RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN)
     out = bytearray()
     prev_len = 0
-    for r in sorted(tbl.to_pylist(), key=rdw_doc_sort_key):
-        r = rdw_coalesce(r)
-        block = (
-            encode_rows([r], fields, RDW_PREFIX_LEN)
-            + r["text"].encode("utf-8")
-        )
+    for r, prefix in _doc_prefixes(sf_dir, RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN):
+        block = prefix + r["text"].encode("utf-8")
         prev_len = _aws_emit(out, block, prev_len, chunk)
     _aws_close(out, prev_len)
     tmp = out_path + f".tmp{os.getpid()}"
@@ -682,14 +677,10 @@ def d_file_for(sf_dir: str) -> str:
     out = os.path.join(fixture_dir(), f"documents-{tag}.ansid")
     if os.path.exists(out):
         return out
-    tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-    fields = parse_layout(RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN)
     cap = 9999 - 4 - RDW_PREFIX_LEN
     payload = bytearray()
-    for r in sorted(tbl.to_pylist(), key=rdw_doc_sort_key):
-        r = rdw_coalesce(r)
+    for r, prefix in _doc_prefixes(sf_dir, RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN):
         tail = r["text"].encode("utf-8")[:cap]
-        prefix = encode_rows([r], fields, RDW_PREFIX_LEN)
         total = 4 + RDW_PREFIX_LEN + len(tail)
         payload += f"{total:04d}".encode("ascii") + prefix + tail
     tmp = out + f".tmp{os.getpid()}"
@@ -718,8 +709,6 @@ def db_file_for(sf_dir: str, block_size: int = DB_BLOCK_SIZE) -> str:
     out = os.path.join(fixture_dir(), f"documents-{tag}.ansidb")
     if os.path.exists(out):
         return out
-    tbl = pq.read_table(os.path.join(sf_dir, "documents.parquet"))
-    fields = parse_layout(RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN)
     cap = block_size - 8 - RDW_PREFIX_LEN
     payload = bytearray()
     block = bytearray()
@@ -730,10 +719,8 @@ def db_file_for(sf_dir: str, block_size: int = DB_BLOCK_SIZE) -> str:
             payload.extend(block)
             block.clear()
 
-    for r in sorted(tbl.to_pylist(), key=rdw_doc_sort_key):
-        r = rdw_coalesce(r)
+    for r, prefix in _doc_prefixes(sf_dir, RDW_PREFIX_LAYOUT, RDW_PREFIX_LEN):
         tail = r["text"].encode("utf-8")[:cap]
-        prefix = encode_rows([r], fields, RDW_PREFIX_LEN)
         total = 4 + RDW_PREFIX_LEN + len(tail)
         rec = f"{total:04d}".encode("ascii") + prefix + tail
         if block and 4 + len(block) + len(rec) > block_size:

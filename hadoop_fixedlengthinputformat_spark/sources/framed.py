@@ -48,9 +48,10 @@ from hadoop_fixedlengthinputformat_spark.sources.layout import (
     FieldSpec,
     check_user_schema,
     decode_chunk,
-    encode_rows,
+    encode_batch,
     layout_schema,
     parse_layout,
+    row_values,
 )
 
 
@@ -252,23 +253,23 @@ class FramedOptions:
             cols, schema=to_arrow_schema(self.spark_schema())
         )
 
-    def framed_payload(self, row) -> bytes:
-        """One row's record payload for the sink, the inverse of
+    def framed_payloads(self, batch: pa.RecordBatch) -> list[bytes]:
+        """Each row's record payload for the sink, the inverse of
         :meth:`framed_batch`: the raw ``value`` column with no layout,
-        else the encoded prefix followed by the tail column (a NULL tail
-        is empty, a string tail is UTF-8)."""
+        else the prefix (one :func:`encode_batch` record matrix) followed
+        by the tail column (a NULL tail is empty, a string tail is
+        UTF-8)."""
         if self.fields is None:
-            return bytes(row["value"])
-        d = row.asDict()
-        prefix = encode_rows(
-            [d], self.fields, self.prefix_length, encoding=self.encoding
-        )
-        tail = d.get(self.tail_column) if self.with_tail else None
-        if tail is None:
-            return prefix
-        if isinstance(tail, str):
-            return prefix + tail.encode("utf-8")
-        return prefix + bytes(tail)
+            return [bytes(v) for v in row_values(batch.column("value"))]
+        pl = self.prefix_length
+        flat = encode_batch(batch, self.fields, pl, encoding=self.encoding).tobytes()
+        prefixes = [flat[i : i + pl] for i in range(0, len(flat), pl)]
+        if not (self.with_tail and self.tail_column in batch.schema.names):
+            return prefixes
+        return [
+            p if t is None else p + (t.encode("utf-8") if isinstance(t, str) else bytes(t))
+            for p, t in zip(prefixes, row_values(batch.column(self.tail_column)))
+        ]
 
 
 def framed_batches(

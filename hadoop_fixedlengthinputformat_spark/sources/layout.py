@@ -556,8 +556,14 @@ def decode_float_field(
 
 
 # ---------------------------------------------------------------------------
-# Encoders: one value -> its field's text (charset-encoded by the caller)
-# or, for the raw types, its bytes.  ``format_value`` rejects NULL first.
+# Encoders.  A scalar encoder takes one value to its field's text
+# (charset-encoded by the caller) or, for the raw types, its bytes;
+# ``format_value`` rejects NULL first.  A column encoder takes a whole
+# Arrow column to an (n, width) uint8 matrix, text or raw bytes, plus a
+# mask of the rows it cannot prove byte-identical to the scalar encoder
+# (NULLs, values that do not fit, rounding ties, out-of-range years, a
+# column of a foreign Arrow type); ``encode_batch`` sends exactly those
+# rows through the scalar encoder.
 
 
 def _format_date(v, f: FieldSpec) -> str:
@@ -639,6 +645,275 @@ def _encode_float(fmt: str):
     return lambda value, f: struct.pack(fmt, float(value))
 
 
+# (n,) masks and digit matrices shared by the column encoders
+
+
+def _nulls(col: pa.Array) -> np.ndarray:
+    if col.null_count == 0:
+        return np.zeros(len(col), dtype=bool)
+    return np.asarray(col.is_null())
+
+
+def _values(col: pa.Array, to: pa.DataType, null) -> np.ndarray:
+    """The column cast to ``to`` as a numpy array, NULL as ``null``."""
+    col = col if col.type == to else pc.cast(col, to)
+    return np.asarray(col if col.null_count == 0 else col.fill_null(null))
+
+
+def _ints_of(col: pa.Array) -> "tuple[np.ndarray, np.ndarray] | None":
+    """An integer column's int64 values (NULL as 0) and NULL mask; None
+    for any other Arrow type."""
+    t = col.type
+    if not (pa.types.is_signed_integer(t) or t in (pa.uint8(), pa.uint16(), pa.uint32())):
+        return None
+    return _values(col, pa.int64(), 0), _nulls(col)
+
+
+def _floats_of(col: pa.Array) -> "tuple[np.ndarray, np.ndarray] | None":
+    """A float column's float64 values (NULL as 0) and NULL mask; None
+    for any other Arrow type."""
+    if not (pa.types.is_float32(col.type) or pa.types.is_float64(col.type)):
+        return None
+    return _values(col, pa.float64(), 0.0), _nulls(col)
+
+
+# the four ASCII digits of 0..9999, as one little-endian uint32 each
+_QUADS = np.array(
+    [int.from_bytes(b"%04d" % i, "little") for i in range(10_000)], dtype="<u4"
+)
+
+
+def _ascii_digits(mag: np.ndarray, width: int) -> np.ndarray:
+    """(n, width) ASCII decimal digits of the non-negative int64 ``mag``,
+    zero-padded on the left (high digits past ``width`` are dropped):
+    four digits per pass, one table lookup each."""
+    quads = -(-width // 4)
+    buf = np.empty((mag.shape[0], quads), dtype="<u4")
+    q = mag
+    for j in range(quads - 1, -1, -1):
+        q, r = np.divmod(q, 10_000)
+        buf[:, j] = _QUADS[r]
+    return buf.view(np.uint8)[:, 4 * quads - width :]
+
+
+def _below(mag: np.ndarray, digits: int) -> np.ndarray:
+    """``mag < 10**digits`` (no row fits in fewer than one digit)."""
+    if digits < 1:
+        return np.zeros(mag.shape[0], dtype=bool)
+    if digits >= 19:
+        return np.ones(mag.shape[0], dtype=bool)
+    return mag < 10**digits
+
+
+def _int_block(v: np.ndarray, bad: np.ndarray, width: int):
+    """``f"{v:0{width}d}"`` of int64 ``v``: '-' takes the first digit
+    slot; a value wider than the field is left to the scalar encoder."""
+    neg = v < 0
+    mag = np.abs(v)  # -2^63 stays negative: unprovable
+    bad = bad | (mag < 0) | np.where(neg, ~_below(mag, width - 1), ~_below(mag, width))
+    out = _ascii_digits(np.where(bad, 0, mag), width)
+    out[neg & ~bad, 0] = ord("-")
+    return out, bad
+
+
+def _scaled_ints(col: pa.Array, f: FieldSpec):
+    """``round(float(v) * 10**scale)`` per row as int64 (numpy's rint is
+    Python's round-half-even on the same float product) and the rows it
+    cannot prove: NULLs, NaN/inf and products past 2^50."""
+    got = _floats_of(col)
+    if got is None or not 0 <= f.scale <= 15:
+        return None
+    x, bad = got
+    y = x * float(10**f.scale)
+    bad = bad | ~(np.abs(y) < 2.0**50)
+    return np.rint(np.where(bad, 0.0, y)).astype(np.int64), bad
+
+
+def _enc_int(col: pa.Array, f: FieldSpec):
+    ints = _ints_of(col)
+    return None if ints is None else _int_block(*ints, f.length)
+
+
+def _enc_implied(col: pa.Array, f: FieldSpec):
+    got = _scaled_ints(col, f)
+    return None if got is None else _int_block(*got, f.length)
+
+
+def _enc_double(col: pa.Array, f: FieldSpec):
+    """``f"{v:0{width}.{scale}f}"``: Python rounds the exact binary value,
+    so a scaled value within 2^-50 of it of a half (a possible tie) and
+    non-finite values are left to the scalar encoder."""
+    got = _floats_of(col)
+    s, width = f.scale, f.length
+    int_slots = width - s - (1 if s else 0)
+    if got is None or not 0 <= s <= 15 or int_slots < 1:
+        return None
+    x, bad = got
+    y = np.abs(x) * float(10**s)
+    bad = bad | ~(y < 2.0**50)
+    y[bad] = 0.0
+    bad |= np.abs(y - np.floor(y) - 0.5) <= y * 2.0**-50
+    mag = np.rint(y).astype(np.int64)
+    neg = np.signbit(x)  # '-0.00' keeps its sign, as in Python
+    # the integer part fits its slots, one fewer behind a '-'
+    fits = _below(mag, int_slots + s)
+    fits_neg = _below(mag, int_slots - 1 + s) if int_slots > 1 else np.zeros_like(fits)
+    bad |= np.where(neg, ~fits_neg, ~fits)
+    digits = _ascii_digits(np.where(bad, 0, mag), width - (1 if s else 0))
+    if s:
+        out = np.empty((len(x), width), dtype=np.uint8)
+        out[:, :int_slots] = digits[:, :int_slots]
+        out[:, int_slots] = ord(".")
+        out[:, int_slots + 1 :] = digits[:, int_slots:]
+    else:
+        out = digits
+    out[neg & ~bad, 0] = ord("-")
+    return out, bad
+
+
+def fixed_width_view(arr: pa.Array, width: int) -> np.ndarray:
+    """The (n, width) bytes of a string or binary array whose every
+    value is exactly ``width`` bytes long (a read-only view)."""
+    n = len(arr)
+    if n == 0:
+        return np.zeros((0, width), dtype=np.uint8)
+    _validity, offsets, data = arr.buffers()
+    large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    ot = np.int64 if large else np.int32
+    lo = int(np.frombuffer(offsets, dtype=ot, count=1, offset=arr.offset * np.dtype(ot).itemsize)[0])
+    return np.frombuffer(data, dtype=np.uint8, count=n * width, offset=lo).reshape(n, width)
+
+
+def _enc_string(col: pa.Array, f: FieldSpec):
+    """``str(v).ljust(width)``: ASCII values up to the width are
+    ``utf8_rpad``-ed and viewed as fixed-width bytes; other text (whose
+    encoded width depends on the charset) is the scalar encoder's."""
+    if not (pa.types.is_string(col.type) or pa.types.is_large_string(col.type)):
+        return None
+    chars = np.asarray(pc.utf8_length(col).fill_null(0))
+    bad = _nulls(col) | (chars != np.asarray(pc.binary_length(col).fill_null(0)))
+    bad |= chars > f.length
+    if bad.any():
+        col = pc.if_else(pa.array(~bad), col, pa.scalar("", col.type))
+    return fixed_width_view(pc.utf8_rpad(col, width=f.length, padding=" "), f.length), bad
+
+
+def _civil(col: pa.Array):
+    """(year, month, day, day-of-year) of a date32 column (NULL as the
+    epoch) and its NULL mask, by civil-from-days arithmetic on the
+    proleptic Gregorian calendar; None for any other Arrow type."""
+    if not pa.types.is_date32(col.type):
+        return None
+    z = _values(col.cast(pa.int32()), pa.int32(), 0).astype(np.int64) + 719468
+    era = z // 146097
+    doe = z - era * 146097  # day of the 400-year era
+    yoe = (doe - doe // 1460 + doe // 36524 - doe // 146096) // 365
+    doy = doe - (365 * yoe + yoe // 4 - yoe // 100)  # from March 1
+    mp = (5 * doy + 2) // 153
+    day = doy - (153 * mp + 2) // 5 + 1
+    month = np.where(mp < 10, mp + 3, mp - 9)
+    year = yoe + era * 400 + (month <= 2)
+    leap = (year % 4 == 0) & ((year % 100 != 0) | (year % 400 == 0))
+    jday = np.where(mp >= 10, doy - 305, doy + 60 + leap)
+    return year, month, day, jday, _nulls(col)
+
+
+def _enc_date(col: pa.Array, f: FieldSpec):
+    """``YYYY-MM-DD`` blank-padded; a year outside 1000-9999 (strftime
+    does not pad it to four digits) is the scalar encoder's."""
+    got = _civil(col)
+    if got is None or f.length < 10:
+        return None
+    year, month, day, _jday, bad = got
+    bad = bad | (year < 1000) | (year > 9999)
+    ymd = _ascii_digits(np.where(bad, 0, year * 10_000 + month * 100 + day), 8)
+    out = np.full((len(col), f.length), ord(" "), dtype=np.uint8)
+    out[:, [0, 1, 2, 3, 5, 6, 8, 9]] = ymd
+    out[:, [4, 7]] = ord("-")
+    return out, bad
+
+
+def _enc_julian(col: pa.Array, f: FieldSpec):
+    """YYYYDDD, or YYDDD inside its 1970-2069 window (a year outside it
+    raises in the scalar encoder)."""
+    got = _civil(col)
+    if got is None:
+        return None
+    year, _month, _day, jday, bad = got
+    lo, hi = (1970, 2069) if f.length == 5 else (1000, 9999)
+    bad = bad | (year < lo) | (year > hi)
+    # YYDDD keeps the year's last two digits: _ascii_digits drops the rest
+    return _ascii_digits(np.where(bad, 0, year * 1000 + jday), f.length), bad
+
+
+def _enc_decimal(col: pa.Array, f: FieldSpec, n_digits: int):
+    """The inverse of ``_scaled_digits``: the scaled value's magnitude
+    as ``n_digits`` ASCII digits, its sign and the unprovable rows."""
+    got = _scaled_ints(col, f)
+    if got is None:
+        return None
+    n, bad = got
+    mag = np.abs(n)
+    bad = bad | ~_below(mag, n_digits)
+    return _ascii_digits(np.where(bad, 0, mag), n_digits), n < 0, bad
+
+
+def _enc_packed(col: pa.Array, f: FieldSpec):
+    got = _enc_decimal(col, f, 2 * f.length - 1)
+    if got is None:
+        return None
+    digits, neg, bad = got
+    nib = np.empty((len(col), 2 * f.length), dtype=np.uint8)
+    nib[:, :-1] = digits & 0x0F
+    nib[:, -1] = np.where(neg, 0xD, 0xC)
+    return (nib[:, 0::2] << 4) | nib[:, 1::2], bad
+
+
+def _enc_zoned(col: pa.Array, f: FieldSpec, leading: bool = False):
+    got = _enc_decimal(col, f, f.length)
+    if got is None:
+        return None
+    digits, neg, bad = got
+    out = digits | 0xF0  # an ASCII digit's low nibble is the digit
+    at = 0 if leading else -1
+    out[:, at] = np.where(neg, 0xD0, 0xC0) | (digits[:, at] & 0x0F)
+    return out, bad
+
+
+def _enc_signsep(col: pa.Array, f: FieldSpec, leading: bool):
+    got = _enc_decimal(col, f, f.length - 1)
+    if got is None:
+        return None
+    digits, neg, bad = got
+    sign = np.where(neg, ord("-"), ord("+")).astype(np.uint8)[:, None]
+    return np.hstack([sign, digits] if leading else [digits, sign]), bad
+
+
+def _enc_bin(col: pa.Array, f: FieldSpec):
+    ints = _ints_of(col)
+    if ints is None:
+        return None
+    v, bad = ints
+    if f.length < 8:
+        half = 2 ** (8 * f.length - 1)
+        bad = bad | (v < -half) | (v >= half)
+    be = np.where(bad, 0, v).astype(f">i{f.length}")
+    return be.view(np.uint8).reshape(-1, f.length), bad
+
+
+def _enc_float(col: pa.Array, f: FieldSpec):
+    """Big-endian IEEE bytes; a double that overflows float32 (struct
+    raises) is the scalar encoder's."""
+    got = _floats_of(col)
+    if got is None:
+        return None
+    x, bad = got
+    with np.errstate(over="ignore"):
+        be = x.astype(f">f{f.length}")
+    bad = bad | (np.isinf(be) & np.isfinite(x))
+    return be.view(np.uint8).reshape(-1, f.length), bad
+
+
 def _widths(allowed: tuple[int, ...], what: str):
     """Width rule: the field must be one of ``allowed`` bytes wide."""
     return lambda f: (
@@ -670,6 +945,9 @@ class _FieldType:
     decode: Callable[[np.ndarray, FieldSpec, bool], pa.Array]
     # (value, field) -> bytes when ``raw``, else text for the charset
     encode: Callable[[object, FieldSpec], "bytes | str"]
+    # (column, field) -> ((n, width) raw bytes or ASCII text, rows left
+    # to ``encode``), or None for a column of a foreign Arrow type
+    encode_col: Callable[[pa.Array, FieldSpec], "tuple[np.ndarray, np.ndarray] | None"]
     raw: bool = False
     # field -> error text for a width the type cannot hold, else None
     width: Callable[[FieldSpec], "str | None"] = lambda f: None
@@ -704,21 +982,22 @@ def _double_text(v, f: FieldSpec) -> str:
 
 
 _FIELD_TYPES: dict[str, _FieldType] = {
-    "int": _FieldType(IntegerType(), _decode_int, _int_text, valid_re=_INT_RE),
-    "long": _FieldType(LongType(), _decode_long, _int_text, valid_re=_INT_RE),
+    "int": _FieldType(IntegerType(), _decode_int, _int_text, _enc_int, valid_re=_INT_RE),
+    "long": _FieldType(LongType(), _decode_long, _int_text, _enc_int, valid_re=_INT_RE),
     "double": _FieldType(
-        DoubleType(), _decode_double, _double_text, valid_re=_DOUBLE_RE,
+        DoubleType(), _decode_double, _double_text, _enc_double, valid_re=_DOUBLE_RE,
     ),
     "string": _FieldType(
-        StringType(), _decode_string, lambda v, f: str(v).ljust(f.length), filler=""
+        StringType(), _decode_string, lambda v, f: str(v).ljust(f.length), _enc_string,
+        filler="",
     ),
     "date": _FieldType(
-        DateType(), _decode_date, _format_date, valid_re=_DATE_RE, filler=""
+        DateType(), _decode_date, _format_date, _enc_date, valid_re=_DATE_RE, filler=""
     ),
     # mainframe Julian date: YYDDD (5, windowed century) or YYYYDDD (7);
     # the pattern admits both, the decoder re-checks the field's width
     "julian": _FieldType(
-        DateType(), _decode_julian, _format_julian, filler="",
+        DateType(), _decode_julian, _format_julian, _enc_julian, filler="",
         width=_widths(
             (5, 7), "layout field {f.name!r}: julian is 5 (YYDDD) or 7 (YYYYDDD) bytes"
         ),
@@ -728,40 +1007,45 @@ _FIELD_TYPES: dict[str, _FieldType] = {
     "implied": _FieldType(
         DoubleType(), _decode_implied,
         lambda v, f: f"{round(float(v) * (10 ** f.scale)):0{f.length}d}",
-        valid_re=_INT_RE,
+        _enc_implied, valid_re=_INT_RE,
     ),
     # COMP-3 BCD, scaled by 10^-scale
     "packed": _FieldType(
-        DoubleType(), decode_packed_field, encode_packed, raw=True,
+        DoubleType(), decode_packed_field, encode_packed, _enc_packed, raw=True,
         width=_digits("packed", lambda w: 2 * w - 1),
     ),
     # PIC S9 DISPLAY, sign overpunch in the last / (SIGN LEADING) first byte
-    "zoned": _FieldType(DoubleType(), decode_zoned_field, encode_zoned, True, _ZONED),
+    "zoned": _FieldType(
+        DoubleType(), decode_zoned_field, encode_zoned, _enc_zoned, True, _ZONED
+    ),
     "zonedl": _FieldType(
         DoubleType(), partial(decode_zoned_field, leading=True),
-        partial(encode_zoned, leading=True), True, _ZONED,
+        partial(encode_zoned, leading=True), partial(_enc_zoned, leading=True),
+        True, _ZONED,
     ),
     # SIGN LEADING/TRAILING SEPARATE: explicit '+'/'-' first / last byte
     "signl": _FieldType(
         DoubleType(), partial(decode_signsep_field, leading=True),
-        partial(encode_signsep, leading=True), width=_SIGNSEP,
+        partial(encode_signsep, leading=True), partial(_enc_signsep, leading=True),
+        width=_SIGNSEP,
     ),
     "signt": _FieldType(
         DoubleType(), decode_signsep_field,
-        partial(encode_signsep, leading=False), width=_SIGNSEP,
+        partial(encode_signsep, leading=False), partial(_enc_signsep, leading=False),
+        width=_SIGNSEP,
     ),
     # COMP-4: big-endian two's-complement binary
     "bin": _FieldType(
-        LongType(), decode_bin_field, encode_bin, True,
+        LongType(), decode_bin_field, encode_bin, _enc_bin, True,
         _widths((1, 2, 4, 8), "bin field {f.name!r}: width must be 1/2/4/8"),
     ),
     # COMP-1 / COMP-2: big-endian IEEE float32 (widened exactly) / float64
     "comp1": _FieldType(
-        DoubleType(), decode_float_field, _encode_float(">f"), True,
+        DoubleType(), decode_float_field, _encode_float(">f"), _enc_float, True,
         _widths((4,), "layout field {f.name!r}: type {f.ftype!r} is exactly 4 bytes"),
     ),
     "comp2": _FieldType(
-        DoubleType(), decode_float_field, _encode_float(">d"), True,
+        DoubleType(), decode_float_field, _encode_float(">d"), _enc_float, True,
         _widths((8,), "layout field {f.name!r}: type {f.ftype!r} is exactly 8 bytes"),
     ),
 }
@@ -967,21 +1251,10 @@ def format_value(v, f: FieldSpec) -> "str | bytes":
     return s
 
 
-def encode_rows(
-    rows,
-    fields: list[FieldSpec],
-    record_length: int,
-    encoding: str = "utf-8",
-) -> bytes:
-    """Encode an iterable of dict-like rows to back-to-back fixed-width
-    records — no delimiters, no newlines (FixedLengthInputFormat.java:38-43).
-    ``encoding`` produces single-byte charset output (e.g. EBCDIC cp037)
-    symmetric with the reader's decode transcoding; the raw types
-    (``packed`` BCD etc.) emit bytes untouched by the charset."""
-    pad = " ".encode(encoding)
-    out = bytearray()
-
-    def enc_scalar(v, f: FieldSpec) -> bytes:
+def _encode_value(v, f: FieldSpec, encoding: str) -> bytes:
+    """One field of one row through the scalar encoders: its ``f.span``
+    bytes, or the error of its first bad value."""
+    if not f.is_array:
         b = format_value(v, f)
         if isinstance(b, str):
             b = b.encode(encoding)
@@ -991,32 +1264,149 @@ def encode_rows(
                 f"{f.length} (non-ASCII content in a string field?)"
             )
         return b
+    if f.depends_on is not None:
+        # ODO: up to `occurs` data elements; unused slots hold the
+        # type's filler (the record reserves them all)
+        if v is None or len(v) > f.occurs:
+            raise ValueError(
+                f"OCCURS DEPENDING ON field {f.name} takes at "
+                f"most {f.occurs} elements, got {v!r}"
+            )
+        v = list(v) + [f.kind.filler] * (f.occurs - len(v))
+    elif v is None or len(v) != f.occurs:
+        raise ValueError(
+            f"OCCURS field {f.name} needs exactly {f.occurs} "
+            f"elements, got {v!r}"
+        )
+    return b"".join(_encode_value(x, f.element(i), encoding) for i, x in enumerate(v))
 
-    for row in rows:
-        rec = bytearray(pad * record_length)
-        for f in fields:
-            if f.is_array:
-                vals = row[f.name]
-                if f.depends_on is not None:
-                    # ODO: up to `occurs` data elements; unused slots hold
-                    # the type's filler (the record reserves them all)
-                    if vals is None or len(vals) > f.occurs:
-                        raise ValueError(
-                            f"OCCURS DEPENDING ON field {f.name} takes at "
-                            f"most {f.occurs} elements, got {vals!r}"
-                        )
-                    vals = list(vals) + [f.kind.filler] * (f.occurs - len(vals))
-                elif vals is None or len(vals) != f.occurs:
-                    raise ValueError(
-                        f"OCCURS field {f.name} needs exactly {f.occurs} "
-                        f"elements, got {vals!r}"
-                    )
-                b = b"".join(enc_scalar(v, f.element(i)) for i, v in enumerate(vals))
-            else:
-                b = enc_scalar(row[f.name], f)
-            rec[f.start : f.start + f.span] = b
-        out += rec
-    return bytes(out)
+
+@lru_cache(maxsize=8)
+def _charset_encoder(encoding: str) -> np.ndarray | None:
+    """ASCII byte -> its one byte in ``encoding`` (-1 when it has none),
+    or None when ASCII encodes as itself: the column encoders' text is
+    ASCII, so this is the whole charset step of a text column."""
+    tbl = np.full(256, -1, dtype=np.int16)
+    for c in range(128):
+        try:
+            b = chr(c).encode(encoding)
+        except UnicodeEncodeError:
+            continue
+        if len(b) == 1:
+            tbl[c] = b[0]
+    return None if (tbl[:128] == np.arange(128)).all() else tbl
+
+
+def _encode_scalar_column(col: pa.Array, f: FieldSpec, encoding: str):
+    """(n, f.length) bytes of a scalar field's column and the rows left
+    to the scalar encoder."""
+    got = f.kind.encode_col(col, f)
+    if got is None:  # a foreign Arrow type: every row is the scalar encoder's
+        return np.zeros((len(col), f.length), dtype=np.uint8), np.ones(len(col), dtype=bool)
+    block, bad = got
+    tbl = None if f.kind.raw else _charset_encoder(encoding)
+    if tbl is not None:
+        mapped = tbl[block]
+        bad = bad | (mapped < 0).any(axis=1)
+        block = mapped.astype(np.uint8)
+    return block, bad
+
+
+def _encode_array_column(col: pa.Array, f: FieldSpec, encoding: str):
+    """OCCURS / ODO: slot j of every row is one scalar column (a take of
+    each list's j-th element); a slot past an ODO row's count holds the
+    filler.  A row with a NULL list or a count the field cannot hold is
+    left to the scalar encoder whole."""
+    n = len(col)
+    bad = _nulls(col)
+    block = np.empty((n, f.span), dtype=np.uint8)
+    if not (pa.types.is_list(col.type) or pa.types.is_large_list(col.type)):
+        return block, np.ones(n, dtype=bool)
+    offsets = np.asarray(col.offsets).astype(np.int64)
+    starts, counts = offsets[:-1], np.diff(offsets)
+    bad |= counts > f.occurs if f.depends_on is not None else counts != f.occurs
+    el = f.element(0)
+    filler = None
+    for j in range(f.occurs):
+        used = (counts > j) & ~bad
+        slot = col.values.take(pa.array(starts + j, mask=~used))
+        b, slot_bad = _encode_scalar_column(slot, el, encoding)
+        if not used.all():
+            if filler is None:
+                filler = np.frombuffer(_encode_value(f.kind.filler, el, encoding), dtype=np.uint8)
+            b[~used] = filler
+        bad |= slot_bad & used
+        block[:, j * f.length : (j + 1) * f.length] = b
+    return block, bad
+
+
+def row_values(col: pa.Array) -> list:
+    """The column's values as a row writer receives them: Arrow's Python
+    values through Spark's own Arrow-to-Row converters."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    conv = ArrowTableToRowsConversion._create_converter(
+        from_arrow_type(col.type), none_on_identity=False, binary_as_bytes=True
+    )
+    return [conv(v) for v in col.to_pylist()]
+
+
+def encode_batch(
+    batch: pa.RecordBatch,
+    fields: list[FieldSpec],
+    record_length: int,
+    encoding: str = "utf-8",
+) -> np.ndarray:
+    """Encode a RecordBatch (one column per layout field, by name; other
+    columns are ignored) to its (n, record_length) uint8 record matrix —
+    back-to-back fixed-width records once flattened, no delimiters
+    (FixedLengthInputFormat.java:38-43).  Bytes no field covers are
+    blanks; later fields overwrite earlier ones where they overlap.
+    ``encoding`` produces single-byte charset text (e.g. EBCDIC cp037)
+    symmetric with the reader's decode; the raw types (``packed`` BCD
+    etc.) emit bytes untouched by the charset.
+
+    Each field's column encoder fills its slice; the rows it cannot
+    prove go, in row-major order, through the scalar encoders, so the
+    bytes, and the error of the first bad (row, field), are theirs."""
+    n = batch.num_rows
+    mat = np.full((n, record_length), " ".encode(encoding)[0], dtype=np.uint8)
+    encoded = []
+    for f in fields:
+        col = batch.column(f.name)
+        enc = _encode_array_column if f.is_array else _encode_scalar_column
+        encoded.append((f, col, *enc(col, f, encoding)))
+    values: dict[str, list] = {}
+    bad_rows = np.flatnonzero(np.logical_or.reduce([e[3] for e in encoded])) if encoded else ()
+    for i in bad_rows:
+        for k, (f, col, block, bad) in enumerate(encoded):
+            if not bad[i]:
+                continue
+            if f.name not in values:
+                values[f.name] = row_values(col)
+            if not block.flags.writeable:
+                block = block.copy()
+                encoded[k] = (f, col, block, bad)
+            block[i] = np.frombuffer(_encode_value(values[f.name][i], f, encoding), dtype=np.uint8)
+    for f, _col, block, _bad in encoded:
+        mat[:, f.start : f.start + f.span] = block
+    return mat
+
+
+def encode_rows(
+    rows,
+    fields: list[FieldSpec],
+    record_length: int,
+    encoding: str = "utf-8",
+) -> bytes:
+    """Encode an iterable of dict rows to back-to-back fixed-width
+    records: :func:`encode_batch` over ``RecordBatch.from_pylist``."""
+    rows = list(rows)
+    if not rows:
+        return b""
+    batch = pa.RecordBatch.from_pylist(rows)
+    return encode_batch(batch, fields, record_length, encoding).tobytes()
 
 
 def parse_multitype(

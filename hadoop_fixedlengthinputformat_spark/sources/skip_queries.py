@@ -41,6 +41,20 @@ def _stats_pruned_dir(sf_dir: str) -> str:
         f"_{fixture_gen.source_stamp(sf_dir)}",
     )
 
+def _hive_dir(sf_dir: str) -> str:
+    """The cached hive-partitioned dataset of
+    ``scan_fixedlen_hive_partitioned``; the source stamp in the key
+    rebuilds it when a dataset is regenerated under the same name."""
+    import os
+    import tempfile
+
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"flif_hive_{os.path.basename(os.path.abspath(sf_dir))}"
+        f"_{fixture_gen.source_stamp(sf_dir)}",
+    )
+
+
 _NATION_SQL = "SELECT n_nationkey, n_name, n_regionkey FROM nation"
 
 
@@ -502,10 +516,7 @@ def scan_fixedlen_hive_partitioned(spark: SparkSession, sf_dir: str) -> DataFram
         "c_custkey:0:10:long,c_name:10:30:string,"
         "c_nationkey:40:5:int,c_acctbal:45:12:double(2)"
     )
-    out = _os.path.join(
-        tempfile.gettempdir(),
-        f"flif_hive_{_os.path.basename(_os.path.abspath(sf_dir))}",
-    )
+    out = _hive_dir(sf_dir)
     marker = _os.path.join(out, "_SUCCESS_LOCAL")
     if not _os.path.exists(marker):
         c = load_table(spark, sf_dir, "customer")

@@ -52,7 +52,7 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
-from hadoop_fixedlengthinputformat_spark.sources.layout import FieldSpec
+from hadoop_fixedlengthinputformat_spark.sources.layout import FieldSpec, row_values
 
 STATS_BLOCK_RECORDS = 8192
 _SUFFIX = ".stats.json"
@@ -281,9 +281,41 @@ def _ser(v: Any) -> Any:
     return v
 
 
+def _bounds(col: pa.Array) -> tuple[Any, Any, bool]:
+    """``(min, max, has NaN)`` of one block's slice of a column, as the
+    values read back: strings rtrimmed, NaN flagged and left out, NULLs
+    ignored.  Of equal values (0.0 and -0.0) the first in row order is
+    kept, as a running comparison keeps it.  A column of another Arrow
+    type is taken through the values a row writer receives."""
+    t = col.type
+    if not (
+        pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_date32(t)
+        or pa.types.is_string(t) or pa.types.is_large_string(t)
+    ):
+        col = pa.array(row_values(col))
+        t = col.type
+    nan = False
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        col = pc.utf8_rtrim(col, characters=" ")
+    elif pa.types.is_floating(t) and col.null_count < len(col):
+        is_nan = pc.is_nan(col)
+        nan = bool(pc.any(is_nan).as_py())
+        if nan:
+            col = col.filter(pc.invert(is_nan))
+    mm = pc.min_max(col)
+    lo, hi = mm["min"].as_py(), mm["max"].as_py()
+    if pa.types.is_floating(t) and 0 in (lo, hi):
+        first = col.filter(pc.equal(col, 0.0))[0].as_py()
+        lo, hi = (first if v == 0 else v for v in (lo, hi))
+    return lo, hi, nan
+
+
 class StatsCollector:
-    """Accumulates per-block min/max for scalar layout fields as the
-    writer encodes rows (values are in hand anyway — zero extra IO)."""
+    """Per-block min/max for the scalar layout fields of the batches a
+    writer encodes (values in hand anyway — zero extra IO).  A block of
+    ``block_records`` records takes its bounds from ``pc.min_max`` over
+    its slice of each batch; a block that spans batches merges them in
+    row order."""
 
     def __init__(self, fields: list[FieldSpec], block_records: int = STATS_BLOCK_RECORDS):
         self.fields = list(scalar_fields(fields).values())
@@ -291,10 +323,7 @@ class StatsCollector:
         self.blocks: list[dict] = []
         self._cur: dict[str, list] | None = None
         self._cur_n = 0
-
-    def _open_block(self) -> None:
-        self._cur = {f.name: [None, None, False] for f in self.fields}
-        self._cur_n = 0
+        self._rows: list[dict] = []  # given one at a time to ``update``
 
     def _close_block(self) -> None:
         if self._cur is None or self._cur_n == 0:
@@ -310,26 +339,40 @@ class StatsCollector:
         )
         self._cur = None
 
+    def add(self, batch: pa.RecordBatch) -> None:
+        """Account the rows of ``batch``, after every earlier row."""
+        self._add_rows()
+        pos = 0
+        while pos < batch.num_rows:
+            if self._cur is None:
+                self._cur = {f.name: [None, None, False] for f in self.fields}
+                self._cur_n = 0
+            take = min(self.block_records - self._cur_n, batch.num_rows - pos)
+            for f in self.fields:
+                lo, hi, nan = _bounds(batch.column(f.name).slice(pos, take))
+                slot = self._cur[f.name]
+                slot[2] = slot[2] or nan
+                if lo is not None:
+                    if slot[0] is None or lo < slot[0]:
+                        slot[0] = lo
+                    if slot[1] is None or hi > slot[1]:
+                        slot[1] = hi
+            self._cur_n += take
+            pos += take
+            if self._cur_n >= self.block_records:
+                self._close_block()
+
     def update(self, row: dict) -> None:
-        if self._cur is None:
-            self._open_block()
-        for f in self.fields:
-            v = row[f.name]
-            if isinstance(v, str):
-                v = v.rstrip(" ")  # the value as it reads back
-            slot = self._cur[f.name]
-            if isinstance(v, float) and math.isnan(v):
-                slot[2] = True
-                continue
-            if slot[0] is None or v < slot[0]:
-                slot[0] = v
-            if slot[1] is None or v > slot[1]:
-                slot[1] = v
-        self._cur_n += 1
-        if self._cur_n >= self.block_records:
-            self._close_block()
+        """Account one row, a dict by field name (rows are batched)."""
+        self._rows.append(row)
+
+    def _add_rows(self) -> None:
+        if self._rows:
+            rows, self._rows = self._rows, []
+            self.add(pa.RecordBatch.from_pylist(rows))
 
     def payload(self) -> dict:
+        self._add_rows()
         self._close_block()
         return {
             "version": _VERSION,

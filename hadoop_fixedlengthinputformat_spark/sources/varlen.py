@@ -49,6 +49,7 @@ the fixedlen source.  Writer output is always uncompressed + indexed.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import struct
@@ -734,7 +735,7 @@ class VarLenWriter(_PartWriter):
         try:
             with open(tmp, "wb") as f:
                 index, n, written = o.framing.pack(
-                    f, (o.framed_payload(row) for row in iterator),
+                    f, (p for batch in iterator for p in o.framed_payloads(batch)),
                     block_size=o.block_size,
                     segment_size=o.segment_size,
                     index_every=o.index_every,
@@ -765,15 +766,15 @@ class VarLenDataSource(FramedDataSource):
     WRITER = VarLenWriter
 
     def streamReader(self, schema: StructType) -> PartitionedStreamReader:
-        # a DIRECTORY streams with immutable-part file-source semantics
-        # (executor-parallel, sidecar-splittable); a single file falls
-        # back to the record-walking tail reader
-        if not os.path.isdir(self.path):
+        # a DIRECTORY or glob streams with immutable-part file-source
+        # semantics (executor-parallel, sidecar-splittable); a single
+        # file falls back to the record-walking tail reader
+        if not (os.path.isdir(self.path) or glob.has_magic(self.path)):
             _simple_stream_fallback("varlen partitioned stream (single file)")
         return PartitionedStreamReader(self.opts, self.path)
 
     def simpleStreamReader(self, schema: StructType) -> TailStreamReader:
-        if os.path.isdir(self.path) or _codec_of(self.path):
+        if os.path.isdir(self.path) or glob.has_magic(self.path) or _codec_of(self.path):
             raise ValueError(
                 "varlen streaming tails a single uncompressed file"
             )

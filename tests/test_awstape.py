@@ -432,6 +432,13 @@ def test_stream_reader_option_guards(tmp_path):
     )
     with pytest.raises(ValueError, match="recfm=U"):
         ds.simpleStreamReader(None)
+    # no partitioned stream: a glob is refused when the stream is planned
+    ds = AwsTapeDataSource(
+        {"path": str(tmp_path / "*.aws"), "prefixlength": str(PFX_LEN),
+         "layout": PFX_LAYOUT}
+    )
+    with pytest.raises(ValueError, match="single image file"):
+        ds.simpleStreamReader(None)
 
 
 def _sl_multi(datasets: list[tuple[str, str, int, list[bytes]]],

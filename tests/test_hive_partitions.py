@@ -179,3 +179,18 @@ def test_partitionby_with_stats_sidecar(spark, tmp_path):
         (F.col("p") == "1") & (F.col("k") >= 35)
     ).collect()
     assert sorted(r.k for r in got) == [35, 37, 39]
+
+
+def test_hive_query_cache_follows_a_regenerated_source(tmp_path):
+    """``scan_fixedlen_hive_partitioned`` caches the dataset it writes;
+    a source regenerated under the same directory name must get a new
+    cache path, or the query reads the earlier source's rows."""
+    from hadoop_fixedlengthinputformat_spark.sources.skip_queries import _hive_dir
+
+    roll = tmp_path / "roll_ties"
+    roll.mkdir()
+    (roll / "customer.parquet").write_bytes(b"first roll")
+    first = _hive_dir(str(roll))
+    assert os.path.basename(first).startswith("flif_hive_roll_ties_")
+    (roll / "customer.parquet").write_bytes(b"second, longer roll")
+    assert _hive_dir(str(roll)) != first

@@ -12,10 +12,10 @@ from __future__ import annotations
 import errno
 import os
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 from pyspark import TaskContext
-from pyspark.sql import Row
 
 
 def _files(root: str) -> list[str]:
@@ -185,7 +185,7 @@ def test_failed_write_task_leaves_no_tmp(spark, tmp_path, monkeypatch, fmt):
         monkeypatch.setattr(awstape, "open", full_disk_open, raising=False)
         writer = awstape.AwsTapeDataSource({"path": out}).writer(None, False)
         with pytest.raises(OSError, match="No space left"):
-            writer.write(iter([Row(value=b"abc"), Row(value=b"defg")]))
+            writer.write(iter([pa.RecordBatch.from_pylist([{"value": b"abc"}, {"value": b"defg"}])]))
         assert len(opened) == 1 and ".tmp-" in opened[0], opened
         assert os.listdir(out) == []
         return

@@ -882,3 +882,38 @@ def test_varlen_directory_stream_new_parts_only_and_growth_raises(
 
     with pytest.raises(Exception, match="changed size|immutable|StreamingQuery"):
         run()
+
+
+def test_varlen_glob_stream_reads_every_row(spark, tmp_path):
+    """A glob path streams through the partitioned reader, as a
+    directory does: every row of every matching part, none of the
+    others.  The tail reader refuses a glob instead of tailing the
+    literal pattern."""
+    from hadoop_fixedlengthinputformat_spark.sources import varlen
+    from hadoop_fixedlengthinputformat_spark.sources.fixture_gen import (
+        RDW_PREFIX_LAYOUT,
+        RDW_PREFIX_LEN,
+    )
+
+    varlen.register(spark)
+    src = tmp_path / "vglob"
+    src.mkdir()
+    (src / "a.rdw").write_bytes(_rdw_append([(i, b"T" * (3 + i % 7)) for i in range(12)]))
+    (src / "b.rdw").write_bytes(_rdw_append([(i, b"U") for i in range(100, 105)]))
+    (src / "c.other").write_bytes(_rdw_append([(999, b"V")]))
+    pattern = str(src / "*.rdw")
+    opts = {"prefixLength": str(RDW_PREFIX_LEN), "layout": RDW_PREFIX_LAYOUT}
+    with pytest.raises(ValueError, match="single uncompressed file"):
+        varlen.VarLenDataSource(
+            {"path": pattern, **{k.lower(): v for k, v in opts.items()}}
+        ).simpleStreamReader(None)
+    out, ckpt = str(tmp_path / "gout"), str(tmp_path / "gckpt")
+    q = (
+        spark.readStream.format("varlen").options(includeOffset="false", **opts)
+        .load(pattern).select("doc_id")
+        .writeStream.format("parquet").option("checkpointLocation", ckpt)
+        .option("path", out).trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
+    assert got == list(range(12)) + list(range(100, 105))

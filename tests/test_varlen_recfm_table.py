@@ -13,6 +13,7 @@ import json
 import os
 import random
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import Row
 
@@ -59,7 +60,8 @@ def test_sidecar_matches_build_index_and_walks_back(tmp_path, monkeypatch, recfm
     rows = _rows(recfm, largest)
     tmp, final = str(tmp_path / "part.tmp"), str(tmp_path / "part.rdw")
     monkeypatch.setattr(varlen, "_part_paths", lambda *a: (tmp, final))
-    VarLenWriter(opts, str(tmp_path), overwrite=False).write(iter(rows))
+    batch = pa.RecordBatch.from_pylist([r.asDict() for r in rows])
+    VarLenWriter(opts, str(tmp_path), overwrite=False).write(iter([batch]))
     with open(tmp + ".rdx.json") as f:
         sidecar = json.load(f)
     os.replace(tmp, final)
