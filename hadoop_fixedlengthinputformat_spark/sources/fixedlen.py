@@ -1343,13 +1343,15 @@ def _raw_records(col: pa.Array, rl: int) -> np.ndarray:
         and pc.all(pc.equal(pc.binary_length(col), rl)).as_py()
     ):
         return fixed_width_view(col, rl)
-    values = [bytes(v) for v in row_values(col)]
-    for b in values:
+    values = []
+    for v in row_values(col):  # row by row: a short value before a NULL raises first
+        b = bytes(v)
         if len(b) != rl:
             raise ValueError(
                 f"fixedlen raw write: 'value' is {len(b)} bytes, "
                 f"expected recordLength={rl}"
             )
+        values.append(b)
     return np.frombuffer(b"".join(values), dtype=np.uint8).reshape(-1, rl)
 
 

@@ -253,23 +253,33 @@ class FramedOptions:
             cols, schema=to_arrow_schema(self.spark_schema())
         )
 
-    def framed_payloads(self, batch: pa.RecordBatch) -> list[bytes]:
+    def framed_payloads(self, batch: pa.RecordBatch) -> Iterator[bytes]:
         """Each row's record payload for the sink, the inverse of
-        :meth:`framed_batch`: the raw ``value`` column with no layout,
-        else the prefix (one :func:`encode_batch` record matrix) followed
-        by the tail column (a NULL tail is empty, a string tail is
-        UTF-8)."""
+        :meth:`framed_batch`, yielded in row order so the framer sees
+        (and rejects) each one before the next is made: the raw
+        ``value`` column with no layout, else the prefix (one
+        :func:`encode_batch` record matrix) followed by the tail column
+        (a NULL tail is empty, a string tail is UTF-8).  A batch the
+        encoder rejects is encoded row by row, so the rows before the
+        bad one reach the framer first."""
         if self.fields is None:
-            return [bytes(v) for v in row_values(batch.column("value"))]
-        pl = self.prefix_length
-        flat = encode_batch(batch, self.fields, pl, encoding=self.encoding).tobytes()
-        prefixes = [flat[i : i + pl] for i in range(0, len(flat), pl)]
+            for v in row_values(batch.column("value")):
+                yield bytes(v)
+            return
+        pl, n = self.prefix_length, batch.num_rows
+        try:
+            flat = encode_batch(batch, self.fields, pl, encoding=self.encoding).tobytes()
+            prefixes = (flat[i * pl : (i + 1) * pl] for i in range(n))
+        except (ValueError, TypeError, ArithmeticError):  # the scalar encoders' errors
+            prefixes = (
+                encode_batch(batch.slice(i, 1), self.fields, pl, encoding=self.encoding).tobytes()
+                for i in range(n)
+            )
         if not (self.with_tail and self.tail_column in batch.schema.names):
-            return prefixes
-        return [
-            p if t is None else p + (t.encode("utf-8") if isinstance(t, str) else bytes(t))
-            for p, t in zip(prefixes, row_values(batch.column(self.tail_column)))
-        ]
+            yield from prefixes
+            return
+        for p, t in zip(prefixes, row_values(batch.column(self.tail_column))):
+            yield p if t is None else p + (t.encode("utf-8") if isinstance(t, str) else bytes(t))
 
 
 def framed_batches(

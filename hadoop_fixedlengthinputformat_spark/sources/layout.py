@@ -558,12 +558,12 @@ def decode_float_field(
 # ---------------------------------------------------------------------------
 # Encoders.  A scalar encoder takes one value to its field's text
 # (charset-encoded by the caller) or, for the raw types, its bytes;
-# ``format_value`` rejects NULL first.  A column encoder takes a whole
-# Arrow column to an (n, width) uint8 matrix, text or raw bytes, plus a
-# mask of the rows it cannot prove byte-identical to the scalar encoder
-# (NULLs, values that do not fit, rounding ties, out-of-range years, a
-# column of a foreign Arrow type); ``encode_batch`` sends exactly those
-# rows through the scalar encoder.
+# ``format_value`` rejects NULL first.  The int, long, double, string
+# and date types also have a column encoder: a whole Arrow column to
+# its (n, width) ASCII text, plus a mask of the rows it cannot prove
+# byte-identical to the scalar encoder (NULLs, values that do not fit,
+# rounding ties, out-of-range years, non-ASCII text);
+# ``encode_batch`` sends exactly those rows through the scalar encoder.
 
 
 def _format_date(v, f: FieldSpec) -> str:
@@ -660,23 +660,6 @@ def _values(col: pa.Array, to: pa.DataType, null) -> np.ndarray:
     return np.asarray(col if col.null_count == 0 else col.fill_null(null))
 
 
-def _ints_of(col: pa.Array) -> "tuple[np.ndarray, np.ndarray] | None":
-    """An integer column's int64 values (NULL as 0) and NULL mask; None
-    for any other Arrow type."""
-    t = col.type
-    if not (pa.types.is_signed_integer(t) or t in (pa.uint8(), pa.uint16(), pa.uint32())):
-        return None
-    return _values(col, pa.int64(), 0), _nulls(col)
-
-
-def _floats_of(col: pa.Array) -> "tuple[np.ndarray, np.ndarray] | None":
-    """A float column's float64 values (NULL as 0) and NULL mask; None
-    for any other Arrow type."""
-    if not (pa.types.is_float32(col.type) or pa.types.is_float64(col.type)):
-        return None
-    return _values(col, pa.float64(), 0.0), _nulls(col)
-
-
 # the four ASCII digits of 0..9999, as one little-endian uint32 each
 _QUADS = np.array(
     [int.from_bytes(b"%04d" % i, "little") for i in range(10_000)], dtype="<u4"
@@ -705,50 +688,31 @@ def _below(mag: np.ndarray, digits: int) -> np.ndarray:
     return mag < 10**digits
 
 
-def _int_block(v: np.ndarray, bad: np.ndarray, width: int):
-    """``f"{v:0{width}d}"`` of int64 ``v``: '-' takes the first digit
-    slot; a value wider than the field is left to the scalar encoder."""
+def _enc_int(col: pa.Array, f: FieldSpec):
+    """``f"{v:0{width}d}"``: '-' takes the first digit slot; a value
+    wider than the field is the scalar encoder's."""
+    t = col.type
+    if not (pa.types.is_signed_integer(t) or t in (pa.uint8(), pa.uint16(), pa.uint32())):
+        return None
+    v, bad = _values(col, pa.int64(), 0), _nulls(col)
     neg = v < 0
     mag = np.abs(v)  # -2^63 stays negative: unprovable
-    bad = bad | (mag < 0) | np.where(neg, ~_below(mag, width - 1), ~_below(mag, width))
-    out = _ascii_digits(np.where(bad, 0, mag), width)
+    w = f.length
+    bad = bad | (mag < 0) | np.where(neg, ~_below(mag, w - 1), ~_below(mag, w))
+    out = _ascii_digits(np.where(bad, 0, mag), w)
     out[neg & ~bad, 0] = ord("-")
     return out, bad
-
-
-def _scaled_ints(col: pa.Array, f: FieldSpec):
-    """``round(float(v) * 10**scale)`` per row as int64 (numpy's rint is
-    Python's round-half-even on the same float product) and the rows it
-    cannot prove: NULLs, NaN/inf and products past 2^50."""
-    got = _floats_of(col)
-    if got is None or not 0 <= f.scale <= 15:
-        return None
-    x, bad = got
-    y = x * float(10**f.scale)
-    bad = bad | ~(np.abs(y) < 2.0**50)
-    return np.rint(np.where(bad, 0.0, y)).astype(np.int64), bad
-
-
-def _enc_int(col: pa.Array, f: FieldSpec):
-    ints = _ints_of(col)
-    return None if ints is None else _int_block(*ints, f.length)
-
-
-def _enc_implied(col: pa.Array, f: FieldSpec):
-    got = _scaled_ints(col, f)
-    return None if got is None else _int_block(*got, f.length)
 
 
 def _enc_double(col: pa.Array, f: FieldSpec):
     """``f"{v:0{width}.{scale}f}"``: Python rounds the exact binary value,
     so a scaled value within 2^-50 of it of a half (a possible tie) and
     non-finite values are left to the scalar encoder."""
-    got = _floats_of(col)
     s, width = f.scale, f.length
     int_slots = width - s - (1 if s else 0)
-    if got is None or not 0 <= s <= 15 or int_slots < 1:
+    if not (col.type in (pa.float32(), pa.float64()) and 0 <= s <= 15 and int_slots >= 1):
         return None
-    x, bad = got
+    x, bad = _values(col, pa.float64(), 0.0), _nulls(col)
     y = np.abs(x) * float(10**s)
     bad = bad | ~(y < 2.0**50)
     y[bad] = 0.0
@@ -798,11 +762,11 @@ def _enc_string(col: pa.Array, f: FieldSpec):
     return fixed_width_view(pc.utf8_rpad(col, width=f.length, padding=" "), f.length), bad
 
 
-def _civil(col: pa.Array):
-    """(year, month, day, day-of-year) of a date32 column (NULL as the
-    epoch) and its NULL mask, by civil-from-days arithmetic on the
-    proleptic Gregorian calendar; None for any other Arrow type."""
-    if not pa.types.is_date32(col.type):
+def _enc_date(col: pa.Array, f: FieldSpec):
+    """``YYYY-MM-DD`` blank-padded, by civil-from-days arithmetic on the
+    proleptic Gregorian calendar; a year outside 1000-9999 (strftime
+    does not pad it to four digits) is the scalar encoder's."""
+    if not pa.types.is_date32(col.type) or f.length < 10:
         return None
     z = _values(col.cast(pa.int32()), pa.int32(), 0).astype(np.int64) + 719468
     era = z // 146097
@@ -813,105 +777,12 @@ def _civil(col: pa.Array):
     day = doy - (153 * mp + 2) // 5 + 1
     month = np.where(mp < 10, mp + 3, mp - 9)
     year = yoe + era * 400 + (month <= 2)
-    leap = (year % 4 == 0) & ((year % 100 != 0) | (year % 400 == 0))
-    jday = np.where(mp >= 10, doy - 305, doy + 60 + leap)
-    return year, month, day, jday, _nulls(col)
-
-
-def _enc_date(col: pa.Array, f: FieldSpec):
-    """``YYYY-MM-DD`` blank-padded; a year outside 1000-9999 (strftime
-    does not pad it to four digits) is the scalar encoder's."""
-    got = _civil(col)
-    if got is None or f.length < 10:
-        return None
-    year, month, day, _jday, bad = got
-    bad = bad | (year < 1000) | (year > 9999)
+    bad = _nulls(col) | (year < 1000) | (year > 9999)
     ymd = _ascii_digits(np.where(bad, 0, year * 10_000 + month * 100 + day), 8)
     out = np.full((len(col), f.length), ord(" "), dtype=np.uint8)
     out[:, [0, 1, 2, 3, 5, 6, 8, 9]] = ymd
     out[:, [4, 7]] = ord("-")
     return out, bad
-
-
-def _enc_julian(col: pa.Array, f: FieldSpec):
-    """YYYYDDD, or YYDDD inside its 1970-2069 window (a year outside it
-    raises in the scalar encoder)."""
-    got = _civil(col)
-    if got is None:
-        return None
-    year, _month, _day, jday, bad = got
-    lo, hi = (1970, 2069) if f.length == 5 else (1000, 9999)
-    bad = bad | (year < lo) | (year > hi)
-    # YYDDD keeps the year's last two digits: _ascii_digits drops the rest
-    return _ascii_digits(np.where(bad, 0, year * 1000 + jday), f.length), bad
-
-
-def _enc_decimal(col: pa.Array, f: FieldSpec, n_digits: int):
-    """The inverse of ``_scaled_digits``: the scaled value's magnitude
-    as ``n_digits`` ASCII digits, its sign and the unprovable rows."""
-    got = _scaled_ints(col, f)
-    if got is None:
-        return None
-    n, bad = got
-    mag = np.abs(n)
-    bad = bad | ~_below(mag, n_digits)
-    return _ascii_digits(np.where(bad, 0, mag), n_digits), n < 0, bad
-
-
-def _enc_packed(col: pa.Array, f: FieldSpec):
-    got = _enc_decimal(col, f, 2 * f.length - 1)
-    if got is None:
-        return None
-    digits, neg, bad = got
-    nib = np.empty((len(col), 2 * f.length), dtype=np.uint8)
-    nib[:, :-1] = digits & 0x0F
-    nib[:, -1] = np.where(neg, 0xD, 0xC)
-    return (nib[:, 0::2] << 4) | nib[:, 1::2], bad
-
-
-def _enc_zoned(col: pa.Array, f: FieldSpec, leading: bool = False):
-    got = _enc_decimal(col, f, f.length)
-    if got is None:
-        return None
-    digits, neg, bad = got
-    out = digits | 0xF0  # an ASCII digit's low nibble is the digit
-    at = 0 if leading else -1
-    out[:, at] = np.where(neg, 0xD0, 0xC0) | (digits[:, at] & 0x0F)
-    return out, bad
-
-
-def _enc_signsep(col: pa.Array, f: FieldSpec, leading: bool):
-    got = _enc_decimal(col, f, f.length - 1)
-    if got is None:
-        return None
-    digits, neg, bad = got
-    sign = np.where(neg, ord("-"), ord("+")).astype(np.uint8)[:, None]
-    return np.hstack([sign, digits] if leading else [digits, sign]), bad
-
-
-def _enc_bin(col: pa.Array, f: FieldSpec):
-    ints = _ints_of(col)
-    if ints is None:
-        return None
-    v, bad = ints
-    if f.length < 8:
-        half = 2 ** (8 * f.length - 1)
-        bad = bad | (v < -half) | (v >= half)
-    be = np.where(bad, 0, v).astype(f">i{f.length}")
-    return be.view(np.uint8).reshape(-1, f.length), bad
-
-
-def _enc_float(col: pa.Array, f: FieldSpec):
-    """Big-endian IEEE bytes; a double that overflows float32 (struct
-    raises) is the scalar encoder's."""
-    got = _floats_of(col)
-    if got is None:
-        return None
-    x, bad = got
-    with np.errstate(over="ignore"):
-        be = x.astype(f">f{f.length}")
-    bad = bad | (np.isinf(be) & np.isfinite(x))
-    return be.view(np.uint8).reshape(-1, f.length), bad
 
 
 def _widths(allowed: tuple[int, ...], what: str):
@@ -945,14 +816,15 @@ class _FieldType:
     decode: Callable[[np.ndarray, FieldSpec, bool], pa.Array]
     # (value, field) -> bytes when ``raw``, else text for the charset
     encode: Callable[[object, FieldSpec], "bytes | str"]
-    # (column, field) -> ((n, width) raw bytes or ASCII text, rows left
-    # to ``encode``), or None for a column of a foreign Arrow type
-    encode_col: Callable[[pa.Array, FieldSpec], "tuple[np.ndarray, np.ndarray] | None"]
     raw: bool = False
     # field -> error text for a width the type cannot hold, else None
     width: Callable[[FieldSpec], "str | None"] = lambda f: None
     valid_re: str | None = None  # permissive decode nulls non-matching text
     filler: object = 0  # for a NULL or an unused ODO slot: blank or zero
+    # (column, field) -> ((n, width) ASCII text, rows left to
+    # ``encode``), or None for a column of a foreign Arrow type; a type
+    # without one is written by ``encode`` alone
+    encode_col: "Callable[[pa.Array, FieldSpec], tuple | None] | None" = None
 
 
 # leading zeros, then at most 19 digits (the decoder nulls the 19-digit
@@ -982,22 +854,24 @@ def _double_text(v, f: FieldSpec) -> str:
 
 
 _FIELD_TYPES: dict[str, _FieldType] = {
-    "int": _FieldType(IntegerType(), _decode_int, _int_text, _enc_int, valid_re=_INT_RE),
-    "long": _FieldType(LongType(), _decode_long, _int_text, _enc_int, valid_re=_INT_RE),
+    "int": _FieldType(IntegerType(), _decode_int, _int_text, valid_re=_INT_RE, encode_col=_enc_int),
+    "long": _FieldType(LongType(), _decode_long, _int_text, valid_re=_INT_RE, encode_col=_enc_int),
     "double": _FieldType(
-        DoubleType(), _decode_double, _double_text, _enc_double, valid_re=_DOUBLE_RE,
+        DoubleType(), _decode_double, _double_text, valid_re=_DOUBLE_RE,
+        encode_col=_enc_double,
     ),
     "string": _FieldType(
-        StringType(), _decode_string, lambda v, f: str(v).ljust(f.length), _enc_string,
-        filler="",
+        StringType(), _decode_string, lambda v, f: str(v).ljust(f.length), filler="",
+        encode_col=_enc_string,
     ),
     "date": _FieldType(
-        DateType(), _decode_date, _format_date, _enc_date, valid_re=_DATE_RE, filler=""
+        DateType(), _decode_date, _format_date, valid_re=_DATE_RE, filler="",
+        encode_col=_enc_date,
     ),
     # mainframe Julian date: YYDDD (5, windowed century) or YYYYDDD (7);
     # the pattern admits both, the decoder re-checks the field's width
     "julian": _FieldType(
-        DateType(), _decode_julian, _format_julian, _enc_julian, filler="",
+        DateType(), _decode_julian, _format_julian, filler="",
         width=_widths(
             (5, 7), "layout field {f.name!r}: julian is 5 (YYDDD) or 7 (YYYYDDD) bytes"
         ),
@@ -1007,45 +881,40 @@ _FIELD_TYPES: dict[str, _FieldType] = {
     "implied": _FieldType(
         DoubleType(), _decode_implied,
         lambda v, f: f"{round(float(v) * (10 ** f.scale)):0{f.length}d}",
-        _enc_implied, valid_re=_INT_RE,
+        valid_re=_INT_RE,
     ),
     # COMP-3 BCD, scaled by 10^-scale
     "packed": _FieldType(
-        DoubleType(), decode_packed_field, encode_packed, _enc_packed, raw=True,
+        DoubleType(), decode_packed_field, encode_packed, raw=True,
         width=_digits("packed", lambda w: 2 * w - 1),
     ),
     # PIC S9 DISPLAY, sign overpunch in the last / (SIGN LEADING) first byte
-    "zoned": _FieldType(
-        DoubleType(), decode_zoned_field, encode_zoned, _enc_zoned, True, _ZONED
-    ),
+    "zoned": _FieldType(DoubleType(), decode_zoned_field, encode_zoned, True, _ZONED),
     "zonedl": _FieldType(
         DoubleType(), partial(decode_zoned_field, leading=True),
-        partial(encode_zoned, leading=True), partial(_enc_zoned, leading=True),
-        True, _ZONED,
+        partial(encode_zoned, leading=True), True, _ZONED,
     ),
     # SIGN LEADING/TRAILING SEPARATE: explicit '+'/'-' first / last byte
     "signl": _FieldType(
         DoubleType(), partial(decode_signsep_field, leading=True),
-        partial(encode_signsep, leading=True), partial(_enc_signsep, leading=True),
-        width=_SIGNSEP,
+        partial(encode_signsep, leading=True), width=_SIGNSEP,
     ),
     "signt": _FieldType(
         DoubleType(), decode_signsep_field,
-        partial(encode_signsep, leading=False), partial(_enc_signsep, leading=False),
-        width=_SIGNSEP,
+        partial(encode_signsep, leading=False), width=_SIGNSEP,
     ),
     # COMP-4: big-endian two's-complement binary
     "bin": _FieldType(
-        LongType(), decode_bin_field, encode_bin, _enc_bin, True,
+        LongType(), decode_bin_field, encode_bin, True,
         _widths((1, 2, 4, 8), "bin field {f.name!r}: width must be 1/2/4/8"),
     ),
     # COMP-1 / COMP-2: big-endian IEEE float32 (widened exactly) / float64
     "comp1": _FieldType(
-        DoubleType(), decode_float_field, _encode_float(">f"), _enc_float, True,
+        DoubleType(), decode_float_field, _encode_float(">f"), True,
         _widths((4,), "layout field {f.name!r}: type {f.ftype!r} is exactly 4 bytes"),
     ),
     "comp2": _FieldType(
-        DoubleType(), decode_float_field, _encode_float(">d"), _enc_float, True,
+        DoubleType(), decode_float_field, _encode_float(">d"), True,
         _widths((8,), "layout field {f.name!r}: type {f.ftype!r} is exactly 8 bytes"),
     ),
 }
@@ -1281,65 +1150,6 @@ def _encode_value(v, f: FieldSpec, encoding: str) -> bytes:
     return b"".join(_encode_value(x, f.element(i), encoding) for i, x in enumerate(v))
 
 
-@lru_cache(maxsize=8)
-def _charset_encoder(encoding: str) -> np.ndarray | None:
-    """ASCII byte -> its one byte in ``encoding`` (-1 when it has none),
-    or None when ASCII encodes as itself: the column encoders' text is
-    ASCII, so this is the whole charset step of a text column."""
-    tbl = np.full(256, -1, dtype=np.int16)
-    for c in range(128):
-        try:
-            b = chr(c).encode(encoding)
-        except UnicodeEncodeError:
-            continue
-        if len(b) == 1:
-            tbl[c] = b[0]
-    return None if (tbl[:128] == np.arange(128)).all() else tbl
-
-
-def _encode_scalar_column(col: pa.Array, f: FieldSpec, encoding: str):
-    """(n, f.length) bytes of a scalar field's column and the rows left
-    to the scalar encoder."""
-    got = f.kind.encode_col(col, f)
-    if got is None:  # a foreign Arrow type: every row is the scalar encoder's
-        return np.zeros((len(col), f.length), dtype=np.uint8), np.ones(len(col), dtype=bool)
-    block, bad = got
-    tbl = None if f.kind.raw else _charset_encoder(encoding)
-    if tbl is not None:
-        mapped = tbl[block]
-        bad = bad | (mapped < 0).any(axis=1)
-        block = mapped.astype(np.uint8)
-    return block, bad
-
-
-def _encode_array_column(col: pa.Array, f: FieldSpec, encoding: str):
-    """OCCURS / ODO: slot j of every row is one scalar column (a take of
-    each list's j-th element); a slot past an ODO row's count holds the
-    filler.  A row with a NULL list or a count the field cannot hold is
-    left to the scalar encoder whole."""
-    n = len(col)
-    bad = _nulls(col)
-    block = np.empty((n, f.span), dtype=np.uint8)
-    if not (pa.types.is_list(col.type) or pa.types.is_large_list(col.type)):
-        return block, np.ones(n, dtype=bool)
-    offsets = np.asarray(col.offsets).astype(np.int64)
-    starts, counts = offsets[:-1], np.diff(offsets)
-    bad |= counts > f.occurs if f.depends_on is not None else counts != f.occurs
-    el = f.element(0)
-    filler = None
-    for j in range(f.occurs):
-        used = (counts > j) & ~bad
-        slot = col.values.take(pa.array(starts + j, mask=~used))
-        b, slot_bad = _encode_scalar_column(slot, el, encoding)
-        if not used.all():
-            if filler is None:
-                filler = np.frombuffer(_encode_value(f.kind.filler, el, encoding), dtype=np.uint8)
-            b[~used] = filler
-        bad |= slot_bad & used
-        block[:, j * f.length : (j + 1) * f.length] = b
-    return block, bad
-
-
 def row_values(col: pa.Array) -> list:
     """The column's values as a row writer receives them: Arrow's Python
     values through Spark's own Arrow-to-Row converters."""
@@ -1367,32 +1177,40 @@ def encode_batch(
     symmetric with the reader's decode; the raw types (``packed`` BCD
     etc.) emit bytes untouched by the charset.
 
-    Each field's column encoder fills its slice; the rows it cannot
-    prove go, in row-major order, through the scalar encoders, so the
+    A field whose type has a column encoder, under a charset that
+    writes ASCII as itself, gets its slice from it; every other cell
+    (a row the column encoder cannot prove, a type without one, an
+    OCCURS field, a column of a foreign Arrow type, another charset)
+    goes, in row-major order, through the scalar encoders, so the
     bytes, and the error of the first bad (row, field), are theirs."""
     n = batch.num_rows
     mat = np.full((n, record_length), " ".encode(encoding)[0], dtype=np.uint8)
+    ascii_text = codecs.lookup(encoding).name in ("utf-8", "ascii")
     encoded = []
     for f in fields:
         col = batch.column(f.name)
-        enc = _encode_array_column if f.is_array else _encode_scalar_column
-        encoded.append((f, col, *enc(col, f, encoding)))
+        got = None
+        if f.kind.encode_col is not None and not f.is_array and ascii_text:
+            got = f.kind.encode_col(col, f)
+        encoded.append((f, col, *(got or (None, np.ones(n, dtype=bool)))))
+    # the scalar encoder's cells, per field: their rows and bytes
+    fixes: list[tuple[list, list]] = [([], []) for _ in encoded]
     values: dict[str, list] = {}
     bad_rows = np.flatnonzero(np.logical_or.reduce([e[3] for e in encoded])) if encoded else ()
     for i in bad_rows:
-        for k, (f, col, block, bad) in enumerate(encoded):
-            if not bad[i]:
-                continue
-            if f.name not in values:
-                values[f.name] = row_values(col)
-            if not block.flags.writeable:
-                block = block.copy()
-                encoded[k] = (f, col, block, bad)
-            block[i] = np.frombuffer(_encode_value(values[f.name][i], f, encoding), dtype=np.uint8)
-    for f, _col, block, _bad in encoded:
-        mat[:, f.start : f.start + f.span] = block
+        for (f, col, _block, bad), (rows, cells) in zip(encoded, fixes):
+            if bad[i]:
+                if f.name not in values:
+                    values[f.name] = row_values(col)
+                cells.append(_encode_value(values[f.name][i], f, encoding))
+                rows.append(i)
+    for (f, _col, block, _bad), (rows, cells) in zip(encoded, fixes):
+        span = mat[:, f.start : f.start + f.span]
+        if block is not None:
+            span[:] = block
+        if rows:
+            span[rows] = np.frombuffer(b"".join(cells), dtype=np.uint8).reshape(-1, f.span)
     return mat
-
 
 def encode_rows(
     rows,

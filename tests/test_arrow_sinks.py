@@ -9,6 +9,10 @@
 * Stream sink: the fixedlen stream sink is a
   ``DataSourceStreamArrowWriter``, and a micro-batch replayed after a
   lost commit rewrites its own ``batch-{id}-part-{p}`` files.
+* Error order: a sink rejects the first bad record in row order, as a
+  row-at-a-time sink would, even when a later row of the same batch is
+  bad in another way (a raw ``value`` of the wrong length before a NULL
+  one; a record over the RDW limit before a prefix that does not fit).
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql.datasource import DataSourceArrowWriter, DataSourceStreamArrowWriter
 
-from hadoop_fixedlengthinputformat_spark.sources import fixedlen, stats
+from hadoop_fixedlengthinputformat_spark.sources import fixedlen, stats, varlen
 
 LAYOUT = "x:0:8:comp2,s:8:4:string,d:12:10:date,k:22:6:long"
 RL = 28
@@ -162,3 +166,34 @@ def test_stream_replay_rewrites_its_own_parts(spark, tmp_path):
     got = sorted(r.v for r in spark.read.format("fixedlen").options(
         recordLength="10", layout="v:0:10:long", includeOffset="false").load(out).collect())
     assert got == list(range(45))
+
+
+def test_raw_value_length_fires_before_a_later_null(tmp_path, monkeypatch):
+    tmp, final = str(tmp_path / "part.tmp"), str(tmp_path / "part.fixed")
+    monkeypatch.setattr(fixedlen, "_part_paths", lambda *a: (tmp, final))
+    opts = fixedlen._Options.parse({"recordlength": "6"})
+    writer = fixedlen.FixedLengthWriter(opts, str(tmp_path), overwrite=False)
+    batch = pa.RecordBatch.from_pydict({"value": pa.array([b"abcdef", b"abc", None], pa.binary())})
+    with pytest.raises(ValueError, match="'value' is 3 bytes, expected recordLength=6"):
+        writer.write(iter([batch]))
+
+
+@pytest.mark.parametrize("layout", [None, "k:0:2:int"])
+def test_framing_error_fires_before_a_later_bad_row(tmp_path, monkeypatch, layout):
+    """Row 1 is over the 16-bit RDW limit; row 2 is a NULL raw value or
+    a prefix that does not fit its field."""
+    tmp, final = str(tmp_path / "part.tmp"), str(tmp_path / "part.rdw")
+    monkeypatch.setattr(varlen, "_part_paths", lambda *a: (tmp, final))
+    big, small = b"z" * 70_000, b"y" * 5
+    if layout is None:
+        opts = varlen._VOptions.parse({"recfm": "v"})
+        batch = pa.RecordBatch.from_pydict({"value": pa.array([small, big, None], pa.binary())})
+    else:
+        opts = varlen._VOptions.parse({"recfm": "v", "prefixlength": "2", "layout": layout})
+        batch = pa.RecordBatch.from_pylist([
+            {"k": 1, "record_tail": small}, {"k": 2, "record_tail": big},
+            {"k": 123, "record_tail": small},
+        ])
+    writer = varlen.VarLenWriter(opts, str(tmp_path), overwrite=False)
+    with pytest.raises(ValueError, match="16-bit"):
+        writer.write(iter([batch]))
