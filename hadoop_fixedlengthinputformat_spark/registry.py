@@ -42,81 +42,15 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryF
 # each round.  Registration order is therefore an explicit, versioned
 # artifact: after importing every module, ``load_all`` rebuilds QUERIES in
 # GRADE_ORDER — priority names first (in order), everything else after in
-# original registration order.  Rotate by editing GRADE_ORDER each round.
+# original registration order.
 #
-# Grading history: r1 greened the relational families (projection/filter,
-# joins, aggregates, windows, sort/setops, subqueries); r2 greened
-# scans/sinks (17) + scalar fns (22) + the LLM head (11), with 3 red rows.
-#
-# Grading history: r4 greened 44/50; its 6 reds all shared the DuckDB
-# HUGEINT output-type root cause (VERDICT r4), fixed this round by
-# CASTing the oracle sums AS BIGINT + the tests/test_oracle_types.py
-# gate.
-#
-# ROUND 10 WINDOW (this list's first 50), per VERDICT r9 #1 and the
-# r9 ADVICE.  Composition: (a) the 7 round-9 additions that have never
-# been driver-graded lead the window (ADVICE: they are the new
-# never-graded backlog and must come ahead of vintage re-grades);
-# (b) the 3 remaining r1-vintage names (win_ntile_first_last,
-# win_cume_dist, win_range_interval) close the r1 ladder; (c) 40 of the
-# 46 r2-vintage stale greens fill the rest — the fn_* scalar family
-# (20), the r2 scans/sinks (17), and the dedup core of the r2 LLM head
-# (llm_exact_dedup, llm_minhash_near_dedup, llm_dup_clusters).
-#
-# ROUND 11 WINDOW (this list's first 50), per VERDICT r10 #1 — the
-# composition planned last round, applied verbatim: (a) the 19
-# round-10 additions that have never been driver-graded lead (the
-# ADVICE r9 #2 rule: never-graded backlog ahead of vintage re-grades);
-# (b) the 6 deferred r2 LLM names close the r2 ladder; (c) 25
-# r3-vintage stale greens fill the rest — the 20 r3 TPC-H queries
-# (q12 is r6 vintage and stays out) plus the 5-query UDF surface.
-# After r11, ever-driver-graded coverage closes to 366/366.
-#
-# ROUND 12 WINDOW (this list's first 50), per VERDICT r11 #1 — the
-# composition planned last round, applied verbatim:
-# the never-graded backlog leads — the 16 round-11 additions
-# (graph_kcore_converged, agg_trimmed_mean, agg_geometric_mean,
-# agg_bowley_skew, agg_bartlett, agg_brown_forsythe,
-# graph_assortativity, graph_local_clustering, ts_turning_points,
-# ts_vwap, ts_atr, ts_obv, llm_type_token_ratio,
-# llm_hapax_ratio, dq_referential, agg_coeff_variation) — then the
-# remaining 23 r3-vintage names — tpch_q12_priority_shipping is r6,
-# so the r3 tail is: fn_epoch, fn_math, join_interval_bucketed,
-# maintain_fixedlen_analyze, maintain_fixedlen_compact, merge_scd2,
-# pipeline_fixedlen_composite, scan_fixedlen_binint,
-# scan_fixedlen_corrupt_quarantine, scan_fixedlen_ebcdic,
-# scan_fixedlen_hive_partitioned, scan_fixedlen_implied,
-# scan_fixedlen_linesep, scan_fixedlen_multitype,
-# scan_fixedlen_observed, scan_fixedlen_occurs, scan_fixedlen_packed,
-# scan_fixedlen_skiprecs, scan_fixedlen_stats_pruned,
-# scan_fixedlen_zoned, sink_fixedlen_ebcdic, sql_fixedlen_view,
-# stream_fixedlen_directory (23) — then r4-vintage names (44 total,
-# oldest-first) fill the remaining 11 slots; the r4 tail (33) plus
-# the r6 vintage (stale at r13 since 13-6 >= 5) compose r13.
-# Staleness rule (enforced by tests/test_registry_order.py::
+# Rotation rule: each round's window leads with the never-driver-graded
+# additions, then re-grades the oldest vintage oldest-first (the
+# CORRECTNESS_r*.json key order of that round).  Staleness rule (enforced
+# by tests/test_registry_order.py::
 # test_window_regrades_only_known_reds_or_stale_greens): a green may
 # re-enter the window once its last grade is >= 5 rounds behind the
-# upcoming round.
-# ROUND 14 WINDOW (this list's first 50), per VERDICT r13 #1 — the
-# composition planned last round, applied verbatim: the 11 never-
-# driver-graded round-13 additions lead (all 9-roll parity-green at
-# r13 HEAD, PARITY_ALL_r13.json, sf1-soaked both sides, and
-# independently re-verified 11/11 by the r13 judge), then the 46-name
-# r6 tail fills the remaining 39 slots oldest-first (CORRECTNESS_r06
-# key order, minus the 3 heads graded r13 and minus
-# llm_embedding_quantize, which was re-graded r7 and is r7-vintage —
-# it re-enters with the r7 block at r15).  After r14, ever-driver-
-# graded coverage closes to 407/407 of the r13 contract.
-# ROUND 15 WINDOW (this list's first 50), per VERDICT r14 #9 — the
-# composition planned last round, applied verbatim: the 5 never-
-# driver-graded round-14 additions lead (all parity-green at
-# sf0.001+sf0.01 and sf1-soaked, plans/NOTES.md round-14), then the
-# last 7 of the 46-name r6 tail close the r6 ladder, then r7-vintage
-# names oldest-first (CORRECTNESS_r07.json key order, including
-# llm_embedding_quantize, which was re-graded r7 and skipped the r14
-# window for exactly this slot) fill the remaining 38 slots; the
-# whole r7 block was sf1-soaked 50/50 clean during r13
-# (plans/NOTES.md "Round-13: r7-vintage oracle soak").
+# upcoming round.  The window's history is in git and VERDICT.md.
 GRADE_ORDER: tuple[str, ...] = (
     # --- never-driver-graded r14 additions (VERDICT r14 #9) ---
     "mm_audio_fingerprint",

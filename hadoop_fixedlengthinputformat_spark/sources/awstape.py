@@ -25,8 +25,9 @@ already reads; the tape container is the genuinely distinct on-disk
 form.)
 
 The record contract is the one ``varlen`` reads, kept once in
-``sources/framed.py`` (options, schema, batches, the tail stream reader
-and the source shell); this module holds the tape framing:
+``sources/framed.py`` (options, schema, batches; the file layer, the
+tail stream reader and the source shell are ``sources/filesource.py``);
+this module holds the tape framing:
 
   * ``recfm=U`` (default): block = record; ``layout``/``prefixLength``
     (or ``copybook``) decode the fixed prefix, the remainder lands in
@@ -70,21 +71,19 @@ from dataclasses import dataclass
 from functools import partial
 from typing import Iterator
 
-from pyspark.sql.datasource import DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSourceReader
 from pyspark.sql.types import StructType
 
-from hadoop_fixedlengthinputformat_spark.sources import framed
-from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
+from hadoop_fixedlengthinputformat_spark.sources import filesource
+from hadoop_fixedlengthinputformat_spark.sources.filesource import (
+    FileDataSource,
+    FixedLenPartition,
     TailStreamReader,
-    _CommitMessage,
     _list_files,
-    _part_paths,
     _PartWriter,
-    _remove_tmps,
-    _visible,
+    _WHOLE_FILE,
 )
 from hadoop_fixedlengthinputformat_spark.sources.framed import (
-    FramedDataSource,
     FramedOptions,
     framed_batches,
 )
@@ -557,11 +556,6 @@ def iter_labeled_blocks(
         )
 
 
-class TapePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
 class AwsTapeReader(DataSourceReader):
     """One partition per image (chunk headers chain — no random entry);
     fleets of images parallelize across tasks."""
@@ -571,10 +565,12 @@ class AwsTapeReader(DataSourceReader):
         self.path = path
 
     def partitions(self):
-        files = _list_files(self.path, _visible, "awstape")
-        return [TapePartition(p) for p in files] or [TapePartition("")]
+        files = _list_files(self.path, "awstape")
+        return [FixedLenPartition(p, 0, _WHOLE_FILE) for p in files] or [
+            FixedLenPartition("", 0, 0)
+        ]
 
-    def read(self, partition: TapePartition):
+    def read(self, partition: FixedLenPartition):
         o = self.opts
         if not partition.path:
             return iter(())
@@ -626,10 +622,8 @@ class AwsTapeWriter(_PartWriter):
 
     _PART_SUFFIXES = (".aws",)
 
-    def write(self, iterator) -> _CommitMessage:
-        os.makedirs(self.path, exist_ok=True)
+    def write_parts(self, iterator, open_part) -> None:
         o = self.opts
-        tmp, final = _part_paths(self.path, ".aws", self.token, self.stream_mode)
         n_blocks = 0
         prev_len = 0
         out: list[bytes] = []
@@ -722,17 +716,11 @@ class AwsTapeWriter(_PartWriter):
         # tapemark after the file + end-of-tape mark
         tapemark()
         tapemark()
-        msg = _CommitMessage([(tmp, final, None, None)])
-        try:
-            with open(tmp, "wb") as f:
-                f.write(b"".join(out))
-        except BaseException:
-            _remove_tmps([msg])  # a failed task leaves no hidden tmp behind
-            raise
-        return msg
+        f, _ = open_part(self.path, ".aws")
+        f.write(b"".join(out))
 
 
-class AwsTapeDataSource(FramedDataSource):
+class AwsTapeDataSource(FileDataSource):
     OPTIONS = _TOptions
     READER = AwsTapeReader
     WRITER = AwsTapeWriter
@@ -754,4 +742,4 @@ class AwsTapeDataSource(FramedDataSource):
         return super().simpleStreamReader(schema)
 
 
-register = partial(framed.register, source=AwsTapeDataSource)
+register = partial(filesource.register, source=AwsTapeDataSource)

@@ -14,12 +14,12 @@ constant stride, and both expose such a record the same way:
   * ``encoding`` transcodes the prefix fields (single-byte charsets).
 
 This module holds that contract once: the options, schema, Arrow batch,
-sink payload and tail hook of ``fixedlen.TailStreamReader``
-(:class:`FramedOptions`), the batch accumulator of the read loops
-(:func:`framed_batches`) and the ``DataSource`` shell
-(:class:`FramedDataSource`, :func:`register`).  A source supplies only
-its framing: a record walker, a tail walker over resume offsets, its
-own options and its part writer.
+sink payload and tail hook of ``filesource.TailStreamReader``
+(:class:`FramedOptions`) and the batch accumulator of the read loops
+(:func:`framed_batches`).  A source supplies only its framing: a record
+walker, a tail walker over resume offsets, its own options and its part
+writer; the file layer and the ``DataSource`` shell are
+``sources/filesource.py``.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ from dataclasses import dataclass
 from typing import ClassVar, Iterator
 
 import pyarrow as pa
-from pyspark.sql.datasource import DataSource
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
@@ -38,15 +37,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
-    TailStreamReader,
+from hadoop_fixedlengthinputformat_spark.sources.filesource import (
     _flag,
     _single_byte_encoding,
-    _StreamSink,
 )
 from hadoop_fixedlengthinputformat_spark.sources.layout import (
     FieldSpec,
-    check_user_schema,
     decode_chunk,
     encode_batch,
     layout_schema,
@@ -179,7 +175,7 @@ class FramedOptions:
         raise NotImplementedError
 
     def tail_batches(self, path, lo, hi, stop_on_partial, max_bytes):
-        """The tail hook of ``fixedlen.TailStreamReader``: the batch of
+        """The tail hook of ``filesource.TailStreamReader``: the batch of
         the records from ``lo`` to ``hi`` (None: all complete records, up
         to ``max_bytes`` of file span when given), and the offset after
         the last admitted record (``lo`` when none).
@@ -326,50 +322,3 @@ def framed_batches(
             pending = 0
     if offsets:
         yield opts.framed_batch(files, offsets, prefixes, tails)
-
-
-class FramedDataSource(DataSource):
-    """The ``DataSource`` shell of a framed source: ``OPTIONS`` parses
-    the options, ``READER``/``WRITER`` are its batch reader and part
-    writer; the stream sink is the writer behind ``fixedlen._StreamSink``
-    and the single-file stream is ``fixedlen.TailStreamReader``."""
-
-    OPTIONS: ClassVar[type[FramedOptions]]
-    READER: ClassVar[type]
-    WRITER: ClassVar[type]
-
-    @classmethod
-    def name(cls) -> str:
-        return cls.OPTIONS.SOURCE
-
-    def __init__(self, options):
-        super().__init__(options)
-        self.opts = self.OPTIONS.parse(options)
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError(f"{self.name()}: a path is required (.load(path))")
-
-    def schema(self) -> StructType:
-        return self.opts.spark_schema()
-
-    def reader(self, schema: StructType):
-        check_user_schema(self.name(), schema, self.opts.spark_schema())
-        return self.READER(self.opts, self.path)
-
-    def writer(self, schema: StructType, overwrite: bool):
-        return self.WRITER(self.opts, self.path, overwrite)
-
-    def streamWriter(self, schema: StructType, overwrite: bool) -> _StreamSink:
-        return _StreamSink(self.WRITER(self.opts, self.path, overwrite=False))
-
-    def simpleStreamReader(self, schema: StructType) -> TailStreamReader:
-        return TailStreamReader(self.opts, self.path)
-
-
-def register(spark, source: type[FramedDataSource]) -> None:
-    """Idempotent registration of ``source`` with ``spark``."""
-    flag = f"_{source.name()}_registered"
-    if getattr(spark, flag, False):
-        return
-    spark.dataSource.register(source)
-    setattr(spark, flag, True)

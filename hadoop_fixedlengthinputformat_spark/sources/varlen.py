@@ -19,8 +19,9 @@ packed into blocks behind a 4-digit decimal block prefix).  Each RECFM
 is one entry of the ``_RECFMS`` framing table, from which the reader,
 the tail reader, ``build_index``, the writer and the option bounds all
 derive.  This module closes that family gap with the framed-record
-contract it shares with ``awstape`` (options, schema, batches, the tail
-stream reader and the source shell live in ``sources/framed.py``):
+contract it shares with ``awstape`` (options, schema and batches live in
+``sources/framed.py``; listing, codecs, the part commit, the stream
+readers and the source shell in ``sources/filesource.py``):
 
   * a typed ``layout`` decodes the fixed PREFIX every record must carry
     (the COBOL fixed part before any OCCURS DEPENDING ON tail), reusing
@@ -60,24 +61,21 @@ from typing import Iterator
 from pyspark.sql.datasource import DataSourceReader
 from pyspark.sql.types import StructType
 
-from hadoop_fixedlengthinputformat_spark.sources import fixedlen, framed
-from hadoop_fixedlengthinputformat_spark.sources.fixedlen import (
+from hadoop_fixedlengthinputformat_spark.sources import filesource
+from hadoop_fixedlengthinputformat_spark.sources.filesource import (
     READ_CHUNK_TARGET,
+    FileDataSource,
     FixedLenPartition,
     PartitionedStreamReader,
     TailStreamReader,
     _codec_of,
-    _codec_open_read,
-    _CommitMessage,
-    _part_paths,
+    _open_read,
     _PartWriter,
-    _remove_tmps,
     _simple_stream_fallback,
     _visible,
     _WHOLE_FILE,
 )
 from hadoop_fixedlengthinputformat_spark.sources.framed import (
-    FramedDataSource,
     FramedOptions,
     framed_batches,
 )
@@ -160,7 +158,7 @@ class _VOptions(FramedOptions):
         ):
             yield None, off, payload, None if resume == -1 else {"pos": resume}
 
-    # the hooks of the directory stream (fixedlen.PartitionedStreamReader):
+    # the hooks of the directory stream (filesource.PartitionedStreamReader):
     # members are immutable parts, admitted whole when they appear
 
     def list_files(self, path: str) -> list[str]:
@@ -196,7 +194,7 @@ def _v_visible(p: str) -> bool:
 
 
 _list_files = partial(
-    fixedlen._list_files, visible=_v_visible, source="varlen"
+    filesource._list_files, visible=_v_visible, source="varlen"
 )
 
 
@@ -639,23 +637,18 @@ class VarLenReader(DataSourceReader):
             return iter(())
 
         def gen():
-            codec = _codec_of(partition.path)
-            if codec:
-                fobj = _codec_open_read(partition.path, codec)
-                start, end = 0, None
-            else:
-                fobj = open(partition.path, "rb")
-                fobj.seek(partition.start)
-                start, end = partition.start, partition.end
-            try:
+            # a compressed member streams whole from its start
+            whole = partition.end == _WHOLE_FILE
+            start, end = (0, None) if whole else (partition.start, partition.end)
+            with _open_read(partition.path) as fobj:
+                if start:
+                    fobj.seek(start)
                 yield from framed_batches(o, partition.path, (
                     (None, off, payload, WORD_LEN + len(payload))
                     for off, payload, _resume in o.framing.walk(
                         fobj, start, end, partition.path
                     )
                 ), o.batch_target)
-            finally:
-                fobj.close()
 
         return gen()
 
@@ -673,6 +666,24 @@ VarLenStreamReader = TailStreamReader
 # misreading, because a byte size alone cannot name a record boundary
 # the way fixed-width's ``size − size % rl`` can (see ``_VOptions.plan``).
 VarLenDirectoryStreamReader = PartitionedStreamReader
+
+
+def _write_index(
+    path: str, every: int, prefix_length: int, offsets: list[int],
+    n_records: int, data_bytes: int,
+) -> dict:
+    """Write a record-index sidecar payload to ``path``; returns it."""
+    payload = {
+        "version": 1,
+        "every": every,
+        "prefix_length": prefix_length,
+        "offsets": offsets,
+        "n_records": n_records,
+        "data_bytes": data_bytes,
+    }
+    with open(path, "w") as f:
+        json.dump(payload, f)
+    return payload
 
 
 def build_index(path: str, every: int = 4096, recfm: str = "v") -> dict:
@@ -701,17 +712,8 @@ def build_index(path: str, every: int = 4096, recfm: str = "v") -> dict:
             if resume != -1 and resume < size and n // every > last_bucket:
                 offsets.append(resume)
                 last_bucket = n // every
-    payload = {
-        "version": 1,
-        "every": every,
-        "prefix_length": 0,
-        "offsets": offsets,
-        "n_records": n,
-        "data_bytes": size,
-    }
     tmp = _index_path(path) + f".tmp{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
+    payload = _write_index(tmp, every, 0, offsets, n, size)
     os.replace(tmp, _index_path(path))
     return payload
 
@@ -723,44 +725,22 @@ class VarLenWriter(_PartWriter):
 
     _PART_SUFFIXES = (".rdw", ".rdw" + _INDEX_SUFFIX)
 
-    def write(self, iterator) -> _CommitMessage:
-        os.makedirs(self.path, exist_ok=True)
+    def write_parts(self, iterator, open_part) -> None:
         o = self.opts
-        tmp, final = _part_paths(self.path, ".rdw", self.token, self.stream_mode)
-        idx_tmp = idx_final = None
-        if o.index_every:
-            idx_tmp, idx_final = _index_path(tmp), _index_path(final)
-        msg = _CommitMessage([(tmp, final, idx_tmp, idx_final)])
-        done = False
-        try:
-            with open(tmp, "wb") as f:
-                index, n, written = o.framing.pack(
-                    f, (p for batch in iterator for p in o.framed_payloads(batch)),
-                    block_size=o.block_size,
-                    segment_size=o.segment_size,
-                    index_every=o.index_every,
-                )
-            if idx_tmp is not None:
-                with open(idx_tmp, "w") as f:
-                    json.dump(
-                        {
-                            "version": 1,
-                            "every": o.index_every,
-                            "prefix_length": o.prefix_length,
-                            "offsets": index,
-                            "n_records": n,
-                            "data_bytes": written,
-                        },
-                        f,
-                    )
-            done = True
-        finally:
-            if not done:  # a failed task leaves no hidden tmp behind
-                _remove_tmps([msg])
-        return msg
+        f, idx_tmp = open_part(
+            self.path, ".rdw", _index_path if o.index_every else None
+        )
+        index, n, written = o.framing.pack(
+            f, (p for batch in iterator for p in o.framed_payloads(batch)),
+            block_size=o.block_size,
+            segment_size=o.segment_size,
+            index_every=o.index_every,
+        )
+        if idx_tmp is not None:
+            _write_index(idx_tmp, o.index_every, o.prefix_length, index, n, written)
 
 
-class VarLenDataSource(FramedDataSource):
+class VarLenDataSource(FileDataSource):
     OPTIONS = _VOptions
     READER = VarLenReader
     WRITER = VarLenWriter
@@ -781,4 +761,4 @@ class VarLenDataSource(FramedDataSource):
         return super().simpleStreamReader(schema)
 
 
-register = partial(framed.register, source=VarLenDataSource)
+register = partial(filesource.register, source=VarLenDataSource)

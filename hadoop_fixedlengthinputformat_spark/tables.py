@@ -11,6 +11,7 @@ Handles the two environment quirks (FIXTURES.md §B caveats):
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -32,6 +33,37 @@ TABLES = (
 )
 
 
+def _package_zip(pkg_dir: str) -> str:
+    """A zip of the package's ``.py`` files in the temp dir, named by a
+    digest of their paths and bytes and written (tmp + rename) only when
+    absent: drivers started from different checkouts never overwrite each
+    other's zip, and identical copies share one file."""
+    pkg_name = os.path.basename(pkg_dir)
+    files: list[tuple[str, str]] = []  # (archive name, path)
+    for root, dirs, names in os.walk(pkg_dir):
+        dirs.sort()
+        for fn in sorted(names):
+            if fn.endswith(".py"):
+                full = os.path.join(root, fn)
+                files.append((os.path.join(pkg_name, os.path.relpath(full, pkg_dir)), full))
+    digest = hashlib.sha256()
+    for arc, full in files:
+        with open(full, "rb") as f:
+            data = f.read()
+        digest.update(f"{arc}\0{len(data)}\0".encode())
+        digest.update(data)
+    zpath = os.path.join(
+        tempfile.gettempdir(), f"{pkg_name}-{digest.hexdigest()[:16]}.zip"
+    )
+    if not os.path.exists(zpath):
+        tmp = zpath + f".tmp{os.getpid()}"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for arc, full in files:
+                zf.write(full, arc)
+        os.replace(tmp, zpath)
+    return zpath
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make this package importable in Spark's Python workers regardless of
     the driver's cwd: the Python Data Source / UDF classes are cloudpickled
@@ -40,18 +72,7 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_flif_pkg_shipped", False):
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    zpath = os.path.join(tempfile.gettempdir(), f"{pkg_name}-pyfiles.zip")
-    tmp = zpath + f".tmp{os.getpid()}"
-    with zipfile.ZipFile(tmp, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    arc = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                    zf.write(full, arc)
-    os.replace(tmp, zpath)
+    zpath = _package_zip(os.path.dirname(os.path.abspath(__file__)))
     sc.addPyFile(zpath)
     # addPyFile covers executor-side task workers and the batch planner
     # runner, but the STREAMING source runner (python_streaming_source_

@@ -26,7 +26,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql.datasource import DataSourceArrowWriter, DataSourceStreamArrowWriter
 
-from hadoop_fixedlengthinputformat_spark.sources import fixedlen, stats, varlen
+from hadoop_fixedlengthinputformat_spark.sources import filesource, fixedlen, stats, varlen
 
 LAYOUT = "x:0:8:comp2,s:8:4:string,d:12:10:date,k:22:6:long"
 RL = 28
@@ -56,7 +56,7 @@ def _write(tmp_path, monkeypatch, batches) -> tuple[bytes, dict]:
     """Run the fixedlen writer in process on ``batches``; the part's
     bytes and its sidecar."""
     tmp, final = str(tmp_path / "part.tmp"), str(tmp_path / "part.fixed")
-    monkeypatch.setattr(fixedlen, "_part_paths", lambda *a: (tmp, final))
+    monkeypatch.setattr(filesource, "_part_paths", lambda *a: (tmp, final))
     opts = fixedlen._Options.parse({
         "recordlength": str(RL), "layout": LAYOUT,
         "statssidecar": "true", "statsblockrecords": str(BLOCK),
@@ -170,7 +170,7 @@ def test_stream_replay_rewrites_its_own_parts(spark, tmp_path):
 
 def test_raw_value_length_fires_before_a_later_null(tmp_path, monkeypatch):
     tmp, final = str(tmp_path / "part.tmp"), str(tmp_path / "part.fixed")
-    monkeypatch.setattr(fixedlen, "_part_paths", lambda *a: (tmp, final))
+    monkeypatch.setattr(filesource, "_part_paths", lambda *a: (tmp, final))
     opts = fixedlen._Options.parse({"recordlength": "6"})
     writer = fixedlen.FixedLengthWriter(opts, str(tmp_path), overwrite=False)
     batch = pa.RecordBatch.from_pydict({"value": pa.array([b"abcdef", b"abc", None], pa.binary())})
@@ -183,7 +183,7 @@ def test_framing_error_fires_before_a_later_bad_row(tmp_path, monkeypatch, layou
     """Row 1 is over the 16-bit RDW limit; row 2 is a NULL raw value or
     a prefix that does not fit its field."""
     tmp, final = str(tmp_path / "part.tmp"), str(tmp_path / "part.rdw")
-    monkeypatch.setattr(varlen, "_part_paths", lambda *a: (tmp, final))
+    monkeypatch.setattr(filesource, "_part_paths", lambda *a: (tmp, final))
     big, small = b"z" * 70_000, b"y" * 5
     if layout is None:
         opts = varlen._VOptions.parse({"recfm": "v"})
@@ -197,3 +197,29 @@ def test_framing_error_fires_before_a_later_bad_row(tmp_path, monkeypatch, layou
     writer = varlen.VarLenWriter(opts, str(tmp_path), overwrite=False)
     with pytest.raises(ValueError, match="16-bit"):
         writer.write(iter([batch]))
+
+
+def test_partition_by_nan_rows_share_one_part(spark, tmp_path):
+    """partitionBy sinks are keyed by their directory, so every NaN row
+    (NaN != NaN) lands in the one ``g=nan`` part instead of reopening,
+    and truncating, that part's tmp once per row."""
+    fixedlen.register(spark)
+    out = str(tmp_path / "out")
+    opts = {"recordLength": "4", "layout": "k:0:4:int"}
+    df = spark.createDataFrame([(1, math.nan), (2, math.nan), (3, 1.0)], "k long, g double")
+    df.coalesce(1).write.format("fixedlen").mode("append").options(partitionBy="g", **opts).save(out)
+    back = spark.read.format("fixedlen").options(includeOffset="false", **opts).load(out)
+    assert sorted((r.k, r.g) for r in back.collect()) == [(1, "nan"), (2, "nan"), (3, "1.0")]
+
+
+def test_partition_groups_are_directories():
+    """One group per directory text, in order of first appearance:
+    -0.0 and 0.0 compare equal but name two directories."""
+    batch = pa.RecordBatch.from_pydict({
+        "k": [1, 2, 3, 4, 5, 6],
+        "g": [math.nan, -0.0, 0.0, math.nan, 1.0, -0.0],
+    })
+    groups = fixedlen._partition_groups(batch, ("g",))
+    assert [(sub, rows.column("k").to_pylist()) for sub, rows in groups] == [
+        ("g=nan", [1, 4]), ("g=-0.0", [2, 6]), ("g=0.0", [3]), ("g=1.0", [5]),
+    ]

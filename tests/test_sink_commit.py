@@ -152,13 +152,17 @@ class _FullDisk:
         raise OSError(errno.ENOSPC, "No space left on device")
 
 
-@pytest.mark.parametrize("fmt", ["fixedlen", "varlen", "awstape"])
+@pytest.mark.parametrize(
+    "fmt", ["fixedlen", "fixedlen-partitioned", "varlen", "awstape"]
+)
 def test_failed_write_task_leaves_no_tmp(spark, tmp_path, monkeypatch, fmt):
     """A task that raises after opening its tmp removes that tmp (and
     its sidecar tmp) itself: the job abort only sees the tmps of tasks
-    that reported, so a failing task is the one case it cannot clean."""
+    that reported, so a failing task is the one case it cannot clean.
+    A partitionBy task removes the parts of every directory it opened."""
     from hadoop_fixedlengthinputformat_spark.sources import (
         awstape,
+        filesource,
         fixedlen,
         varlen,
     )
@@ -182,7 +186,7 @@ def test_failed_write_task_leaves_no_tmp(spark, tmp_path, monkeypatch, fmt):
                 return 7
 
         monkeypatch.setattr(TaskContext, "get", staticmethod(_Task))
-        monkeypatch.setattr(awstape, "open", full_disk_open, raising=False)
+        monkeypatch.setattr(filesource, "open", full_disk_open, raising=False)
         writer = awstape.AwsTapeDataSource({"path": out}).writer(None, False)
         with pytest.raises(OSError, match="No space left"):
             writer.write(iter([pa.RecordBatch.from_pylist([{"value": b"abc"}, {"value": b"defg"}])]))
@@ -191,6 +195,20 @@ def test_failed_write_task_leaves_no_tmp(spark, tmp_path, monkeypatch, fmt):
         return
     fixedlen.register(spark)
     varlen.register(spark)
+    if fmt == "fixedlen-partitioned":
+        # one batch: directory g=0 is written, then the row routed to
+        # g=1 does not fit its field after g=1's part has opened
+        df = spark.createDataFrame(
+            [(1, 0), (2, 0), (12345678, 1)], "k long, g long"
+        )
+        with pytest.raises(Exception, match="does not fit field k"):
+            _write(df.coalesce(1), "fixedlen", {
+                "recordLength": "6", "layout": "k:0:6:long",
+                "partitionBy": "g", "statsSidecar": "true",
+            }, out)
+        assert sorted(os.listdir(out)) == ["g=0", "g=1"]
+        assert not [f for f in _files(out) if ".tmp-" in f], _files(out)
+        return
     if fmt == "fixedlen":
         # raw mode: the second record has the wrong length
         values = [b"abcdef", b"abc"]

@@ -17,7 +17,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import Row
 
-from hadoop_fixedlengthinputformat_spark.sources import varlen
+from hadoop_fixedlengthinputformat_spark.sources import filesource
 from hadoop_fixedlengthinputformat_spark.sources.varlen import (
     VarLenWriter,
     _VOptions,
@@ -59,7 +59,7 @@ def test_sidecar_matches_build_index_and_walks_back(tmp_path, monkeypatch, recfm
     )
     rows = _rows(recfm, largest)
     tmp, final = str(tmp_path / "part.tmp"), str(tmp_path / "part.rdw")
-    monkeypatch.setattr(varlen, "_part_paths", lambda *a: (tmp, final))
+    monkeypatch.setattr(filesource, "_part_paths", lambda *a: (tmp, final))
     batch = pa.RecordBatch.from_pylist([r.asDict() for r in rows])
     VarLenWriter(opts, str(tmp_path), overwrite=False).write(iter([batch]))
     with open(tmp + ".rdx.json") as f:
